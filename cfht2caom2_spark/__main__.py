@@ -80,8 +80,8 @@ def main(argv: list[str] | None = None) -> int:
     s.add_argument("--bookmark", required=True)
     s.add_argument("--history-dedup", action="store_true",
                    help="demote increment rows whose content an earlier "
-                        "tick already kept (bitmap-prefiltered exact check "
-                        "against the accumulated store)")
+                        "tick already kept (exact check against the "
+                        "accumulated store's kept hashes)")
 
     st = sub.add_parser("stream", help="structured-streaming mode")
     st.add_argument("--table", required=True)

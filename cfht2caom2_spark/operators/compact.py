@@ -93,88 +93,48 @@ def compact_decisions(spark: SparkSession, decisions_path: str,
 
 
 # ---------------------------------------------------------------------------
-# online cross-increment dedup (bitmap-prefiltered history check)
+# online cross-increment dedup (one left join against the history's shas)
+#
+# The increment is the tick's un-persisted pipeline output: every plan
+# branch that references it re-runs the fused MapInPandas pass.  So the
+# demotion references it once and never filters on ``keep`` — such a
+# filter is pushed below the pipeline's decision projection, where
+# PruneFilters then infers constraints over the whole inlined decision tree
+# (seconds of planning per tick).
 # ---------------------------------------------------------------------------
 
-def membership_bitmap(df: DataFrame, col: str,
-                      bits: int = 1 << 22) -> DataFrame:
-    """Fixed-size membership bitmap of ``xxhash64(col) mod bits`` packed as
-    (word_idx, word) longs — at most bits/64 rows (512 KiB at the default
-    2^22) no matter how large ``df`` grows, so broadcasting it is correct
-    by construction.  One-hash scheme => ZERO false negatives; false
-    positives (~n_distinct/bits) cost only exact-join work downstream.
-    Generalizes the decontamination prefilter (operators/decontam.py::
-    bench_gram_bitmap) from gram longs to any column."""
-    bkt = F.pmod(F.xxhash64(F.col(col)), F.lit(bits))
-    return (
-        df.filter(F.col(col).isNotNull())
-        .select(bkt.alias("_bkt"))
-        .select(
-            F.floor(F.col("_bkt") / 64).alias("word_idx"),
-            F.expr("shiftleft(1L, CAST(_bkt % 64 AS INT))").alias("_bit"),
-        )
-        .groupBy("word_idx")
-        .agg(F.bit_or("_bit").alias("word"))
-    )
-
-
-def demote_against_history(increment: DataFrame, history: DataFrame,
-                           id_col: str = "url",
-                           order_col: str = "warc_ts",
-                           bits: int = 1 << 22) -> DataFrame:
+def demote_against_history(increment: DataFrame,
+                           history: DataFrame) -> DataFrame:
     """Online cross-increment exact dedup: demote increment rows whose
     ``extracted_sha256`` already has a KEPT row in the accumulated history
     store — the streaming-tick complement of the offline compaction rewrite
     (history-wins ordering; within-increment dups are the pipeline's own
     exact-dedup stage's job).
 
-    Scale shape: the history is reduced to a FIXED-SIZE bitmap in one
-    column-pruned pass (no history shuffle); increment rows that miss the
-    bitmap are provably new and never join.  Only bitmap *candidates*
-    (true dups + ~n_history/bits false positives) reach the exact
-    confirmation semi-join, whose increment side is tick-sized — AQE
-    broadcasts it, so the history side is filtered map-side too.  Same
-    demotion contract as demote_cross_increment_duplicates: rules +=
-    exact_duplicate, keep flips, scrubbed_text nulls; non-contested rows
-    pass through untouched."""
-    hist_kept = history.filter(
-        F.coalesce(F.col("keep"), F.lit(False))
-        & F.col("extracted_sha256").isNotNull())
-    bitmap = membership_bitmap(hist_kept, "extracted_sha256", bits)
-
-    contested = F.coalesce(
-        F.col("keep") & F.col("extracted_sha256").isNotNull(), F.lit(False))
-    inc_c = increment.filter(contested)
-    h = F.pmod(F.xxhash64(F.col("extracted_sha256")), F.lit(bits))
-    probed = (
-        inc_c
-        .withColumn("_word_idx", F.floor(h / 64))
-        .withColumn("_bit", F.expr(
-            f"shiftleft(1L, CAST(pmod(xxhash64(extracted_sha256), {bits})"
-            " % 64 AS INT))"))
-        .join(F.broadcast(bitmap),
-              F.col("_word_idx") == F.col("word_idx"), "left")
-        .withColumn("_maybe_dup",
-                    F.coalesce(F.col("word").bitwiseAND(F.col("_bit")) != 0,
-                               F.lit(False)))
-        .drop("_word_idx", "_bit", "word_idx", "word")
+    Plan shape: the history's kept, non-null shas are read once (column
+    pruned), reduced with ``distinct()`` so several history copies of one
+    content never multiply increment rows, and left-joined to the
+    increment.  One projection applies the demotion contract of
+    demote_cross_increment_duplicates (rules += exact_duplicate, keep
+    flips, scrubbed_text nulls) to rows that are kept AND matched; every
+    other row, NULL-keep and NULL-hash rows included, passes through
+    unchanged.  The increment is referenced once, so its fused Python pass
+    runs once per tick."""
+    hist_shas = (
+        history.filter(F.col("keep") & F.col("extracted_sha256").isNotNull())
+        .select("extracted_sha256").distinct()
+        .withColumn("_hist", F.lit(True))
     )
-    definitely_new = probed.filter(~F.col("_maybe_dup")).drop("_maybe_dup")
-    candidates = probed.filter(F.col("_maybe_dup")).drop("_maybe_dup")
-    confirmed = candidates.join(
-        hist_kept.select("extracted_sha256").distinct(),
-        on="extracted_sha256", how="left_semi")
-    survivors = candidates.join(
-        hist_kept.select("extracted_sha256").distinct(),
-        on="extracted_sha256", how="left_anti")
-    demoted = (
-        confirmed
-        .withColumn("rules", F.array_sort(F.array_union(
-            F.col("rules"), F.array(F.lit("exact_duplicate")))))
-        .withColumn("keep", F.lit(False))
-        .withColumn("scrubbed_text", F.lit(None).cast("string"))
+    demote = F.coalesce(F.col("keep") & F.col("_hist"), F.lit(False))
+    return (
+        increment.join(hist_shas, "extracted_sha256", "left")
+        .withColumns({
+            "rules": F.when(demote, F.array_sort(F.array_union(
+                F.col("rules"), F.array(F.lit("exact_duplicate")))))
+            .otherwise(F.col("rules")),
+            "keep": F.when(demote, F.lit(False)).otherwise(F.col("keep")),
+            "scrubbed_text": F.when(demote, F.lit(None).cast("string"))
+            .otherwise(F.col("scrubbed_text")),
+        })
+        .select(*increment.columns)
     )
-    return (increment.filter(~contested)
-            .unionByName(definitely_new)
-            .unionByName(survivors)
-            .unionByName(demoted))

@@ -23,6 +23,7 @@ from __future__ import annotations
 import json
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -77,15 +78,22 @@ def process_increment(spark: SparkSession, table: SnapshotTable, out_dir: str,
     if history_dedup:
         # online cross-increment exact dedup: content already kept by a
         # PRIOR tick demotes now instead of waiting for the offline
-        # compaction rewrite.  The accumulated store never shuffles — it
-        # reduces to a fixed-size membership bitmap; only bitmap candidates
-        # reach the exact confirmation join (operators/compact.py).
+        # compaction rewrite.  The store's distinct kept shas left-join the
+        # tick's output once, so the fused pass still runs once
+        # (operators/compact.py).
         from ..operators.compact import demote_against_history
 
         try:
             history = spark.read.parquet(f"{out_dir}/decisions")
-        except Exception:
-            history = None     # first tick: nothing to dedup against
+        except AnalysisException as e:
+            # only "nothing written yet" means no history: a missing store
+            # (first tick), or one with no data file (a first tick that
+            # crashed mid-write leaves only the committer's _temporary).
+            # Anything else must not silently skip the dedup.
+            if e.getCondition() not in ("PATH_NOT_FOUND",
+                                        "UNABLE_TO_INFER_SCHEMA"):
+                raise
+            history = None
         if history is not None:
             decisions = demote_against_history(decisions, history)
     # metrics ride the write action — one execution per tick, not two

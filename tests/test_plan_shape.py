@@ -255,3 +255,32 @@ def test_fuzzy_decontam_no_mandatory_broadcast_default(spark):
     hinted = fuzzy_decontaminate(docs, bench, hint_broadcast=True)
     assert "ResolvedHint" in \
         hinted._jdf.queryExecution().analyzed().toString()
+
+
+def test_history_tick_is_single_python_pass_no_union(spark, tmp_path):
+    """A history-dedup tick references the un-persisted pipeline output
+    once: one fused Arrow crossing and no Union of per-branch copies (each
+    copy re-ran the fused pass, and each branch's ``keep`` filter sent
+    PruneFilters into constraint inference over the decision tree)."""
+    from pyspark.sql import functions as F
+
+    from cfht2caom2_spark.operators.compact import demote_against_history
+    from cfht2caom2_spark.plans.pipeline import build_pipeline
+    from cfht2caom2_spark.sources.pages import synth_pages
+    from cfht2caom2_spark.sources.table import SnapshotTable
+    from cfht2caom2_spark.streaming.incremental import process_increment
+
+    table = SnapshotTable(f"{tmp_path}/pages")
+    bm, out = str(tmp_path / "bm.json"), str(tmp_path / "out")
+    table.append(synth_pages(spark, 60))
+    process_increment(spark, table, out, bm, history_dedup=True)
+    table.append(synth_pages(spark, 60).withColumn(
+        "warc_ts", F.col("warc_ts") + F.expr("interval 30 days")))
+    process_increment(spark, table, out, bm, history_dedup=True)
+
+    inc = table.read(spark, table.current_snapshot()).drop("p_day")
+    history = spark.read.parquet(f"{out}/decisions")
+    plan = plan_of(demote_against_history(
+        build_pipeline(inc, spark, dedupe=False), history))
+    assert plan.count("MapInPandas") == 1
+    assert "Union" not in plan

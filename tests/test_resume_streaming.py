@@ -462,17 +462,20 @@ def _mini_decisions(spark, rows):
               "keep boolean, rules array<string>, scrubbed_text string")
 
 
-def test_demote_against_history_bitmap_semantics(spark):
+def test_demote_against_history_semantics(spark):
     """Online cross-increment dedup: an increment row whose content an
     earlier tick KEPT demotes (exact_duplicate, keep flips, artifact
-    nulls); new content, dropped rows, and null-hash rows pass through.
-    The fixed-size bitmap prefilter is FN-free: a pathologically tiny
-    bitmap (every row a candidate) yields the IDENTICAL result."""
+    nulls); new content, dropped rows, NULL-keep rows and null-hash rows
+    pass through unchanged.  Repeated kept history copies of one content
+    must not multiply increment rows (the history side is distinct), and a
+    NULL-keep history row is not a blocker."""
     from cfht2caom2_spark.operators.compact import demote_against_history
 
     hist = _mini_decisions(spark, [
         ("https://h/1", 0, "sha_A", True),
         ("https://h/2", 1, "sha_B", False),   # dropped: not a blocker
+        ("https://h/3", 2, "sha_A", True),    # second kept copy of sha_A
+        ("https://h/4", 3, "sha_D", None),    # NULL keep: not a blocker
     ])
     inc = _mini_decisions(spark, [
         ("https://i/1", 10, "sha_A", True),    # dup of kept history -> demote
@@ -480,15 +483,14 @@ def test_demote_against_history_bitmap_semantics(spark):
         ("https://i/3", 12, "sha_C", True),    # new content -> keep
         ("https://i/4", 13, "sha_A", False),   # already dropped -> untouched
         ("https://i/5", 14, None, True),       # null hash -> untouched
+        ("https://i/6", 15, "sha_A", None),    # NULL keep -> untouched
+        ("https://i/7", 16, "sha_D", True),    # hist keep was NULL -> keep
     ])
 
-    def run(bits):
-        out = {r["url"]: r for r in
-               demote_against_history(inc, hist, bits=bits).collect()}
-        return out
-
-    out = run(1 << 22)
-    assert len(out) == 5
+    rows = demote_against_history(inc, hist).collect()
+    assert len(rows) == inc.count()
+    out = {r["url"]: r for r in rows}
+    assert len(out) == 7
     assert out["https://i/1"]["keep"] is False
     assert "exact_duplicate" in out["https://i/1"]["rules"]
     assert out["https://i/1"]["scrubbed_text"] is None
@@ -497,11 +499,11 @@ def test_demote_against_history_bitmap_semantics(spark):
     assert out["https://i/4"]["keep"] is False
     assert "exact_duplicate" not in out["https://i/4"]["rules"]
     assert out["https://i/5"]["keep"] is True
-
-    tiny = run(64)   # every bucket collides -> all rows candidates
-    for u in out:
-        assert (tiny[u]["keep"], tiny[u]["rules"]) == (
-            out[u]["keep"], out[u]["rules"]), u
+    # every non-demoted row is the input row, column order included
+    before = {r["url"]: r for r in inc.collect()}
+    for u in before:
+        if u != "https://i/1":
+            assert out[u] == before[u], u
 
 
 def test_state_tick_history_dedup(spark, tmp_path):
@@ -529,6 +531,31 @@ def test_state_tick_history_dedup(spark, tmp_path):
     # tick-1 partition untouched: no exact_duplicate rules there
     assert spark.read.parquet(f"{out}/decisions/since_snapshot=-1") \
         .filter(F.array_contains("rules", "exact_duplicate")).count() == 0
+
+
+def test_state_tick_history_read_failure_raises(spark, tmp_path):
+    """Only an empty store means "no history yet".  A first tick that
+    crashed mid-write (only the committer's _temporary left) is retried
+    normally; a corrupt store raises instead of silently skipping history
+    dedup and keeping duplicates."""
+    from py4j.protocol import Py4JJavaError
+
+    table = SnapshotTable(f"{tmp_path}/pages")
+    table.append(synth_pages(spark, 20))
+    crashed = tmp_path / "crashed"
+    (crashed / "decisions" / "since_snapshot=-1" / "_temporary" / "0") \
+        .mkdir(parents=True)
+    res = process_increment(spark, table, str(crashed),
+                            str(tmp_path / "bm1.json"), history_dedup=True)
+    assert res["processed"] == 20
+
+    corrupt = tmp_path / "corrupt" / "decisions" / "since_snapshot=-1"
+    corrupt.mkdir(parents=True)
+    (corrupt / "part-00000.parquet").write_bytes(b"not parquet" * 16)
+    with pytest.raises(Py4JJavaError):
+        process_increment(spark, table, str(tmp_path / "corrupt"),
+                          str(tmp_path / "bm2.json"), history_dedup=True)
+    assert not (tmp_path / "bm2.json").exists()
 
 
 def test_pack_cli_lifecycle(spark, tmp_path, monkeypatch):
