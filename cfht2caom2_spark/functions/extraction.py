@@ -1,11 +1,11 @@
-"""Deterministic HTML -> text extraction as a single Arrow pass.
+"""Deterministic HTML -> text extraction kernels.
 
 Reference analogue: per-file header extraction cached by URI
 (reference cfht_name.py:525-548 ``set_local_preconditions``) with the HDF5
-attrs fallback (cfht_name.py:536-547).  Here: rows with an ``html`` payload go
-through the extractor; rows without fall back to the pre-extracted ``text``
-column — one vectorized branch, no per-row Python dispatch outside the Arrow
-batch.
+attrs fallback (cfht_name.py:536-547).  Here: the fused stage
+(functions/fused.py) sends rows with an ``html`` payload through
+``extract_html``; rows without fall back to the pre-extracted ``text``
+column — one vectorized branch inside the Arrow batch.
 
 Byte-identical contract (north_rule): ``extract_html`` is a pure function of
 the payload bytes built only on the Python stdlib (html.unescape + regexes with
@@ -23,12 +23,6 @@ from __future__ import annotations
 import hashlib
 import html as _html
 import re
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # Pinned regex pipeline.  Order matters and is part of the contract.
 _RE_DROP_BLOCKS = re.compile(
@@ -104,41 +98,3 @@ def sha256_text(text: str | None) -> str | None:
     if text is None:
         return None
     return hashlib.sha256(text.encode("utf-8")).hexdigest()
-
-
-_OUT_FIELDS = [
-    T.StructField("extracted_text", T.StringType()),
-    T.StructField("extracted_sha256", T.StringType()),
-]
-
-
-def with_extracted_text(df: DataFrame, html_col: str = "html",
-                        text_col: str = "text") -> DataFrame:
-    """Append ``extracted_text`` + ``extracted_sha256`` via one mapInPandas.
-
-    The single Arrow pass computes both extraction and the parity hash — the
-    analogue of the reference's single-visit fusion (composable.py:90-98):
-    payload bytes cross the Python boundary exactly once.
-    """
-    schema = T.StructType(list(df.schema.fields) + _OUT_FIELDS)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            extracted = [
-                extract_html(h) if h is not None and len(h) > 0 else t
-                for h, t in zip(pdf[html_col], pdf[text_col])
-            ]
-            pdf = pdf.copy()
-            pdf["extracted_text"] = pd.Series(extracted, index=pdf.index, dtype=object)
-            pdf["extracted_sha256"] = pdf["extracted_text"].map(sha256_text, na_action="ignore")
-            yield pdf
-
-    return df.mapInPandas(run, schema=schema)
-
-
-def with_extracted_text_passthrough(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Variant for already-extracted corpora (e.g. the testdata ``documents``
-    table): no html payload, so extraction is identity + hash, JVM-side."""
-    return df.withColumn("extracted_text", F.col(text_col)).withColumn(
-        "extracted_sha256", F.sha2(F.col(text_col).cast("binary"), 256)
-    )

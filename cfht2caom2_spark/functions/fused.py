@@ -11,21 +11,24 @@ across the Arrow boundary three times (mapInPandas + two pandas UDFs) pays
     payload bytes -> extracted_text, extracted_sha256,
                      lang_pred, lang_conf, ppl
 
-The per-stage modules (extraction/langid/perplexity) remain the unit-tested
-source of truth; this stage composes their pure kernels unchanged, so fused
-and unfused paths are result-identical (asserted in tests).
+The per-stage modules (extraction/langid/perplexity) and the word-shingle
+kernels (functions/kernels.py) are the unit-tested source of truth; this
+stage only composes their pure batch kernels.  It is the pipeline's only
+extraction + scoring path.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from zlib import crc32
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ..operators.dedup import MERSENNE_31, _perm_params
+from ..operators.dedup import _perm_params
 from .extraction import extract_html, sha256_text
+from .kernels import minhash_sig
 from .langid import TrigramLangID
 from .perplexity import BigramLM
 
@@ -41,42 +44,18 @@ _SIG_FIELD = T.StructField("minhash_sig", T.ArrayType(T.LongType()))
 
 
 def minhash_sig_py(text: str | None, A, B, k: int = 3):
-    """numpy-vectorized MinHash of word k-shingles — semantics identical to
-    operators.dedup.minhash_signature with shingle_hash_fast (crc32 base
-    hash), pinned by tests.  Runs here because Spark's higher-order array
-    functions are interpreted, not codegen'd: a JVM-side fold costs ~2 ms/doc
-    and dominates the whole pipeline, while one (n_shingles x n_perms) numpy
-    broadcast is ~30 us."""
-    import re
-    from zlib import crc32
+    """MinHash of word k-shingles under the crc32 base hash
+    (``kernels.minhash_sig``; the ``shingle_hash_fast`` family).  Runs
+    here because Spark's higher-order array functions are interpreted, not
+    codegen'd: a JVM-side fold costs ~2 ms/doc and dominates the whole
+    pipeline, while one (n_shingles x n_perms) numpy broadcast is ~30 us.
 
-    import numpy as np
-
+    Pinned NULL rule: NULL and ``""`` sign as None, so the dedup stage
+    skips those rows.  Whitespace-only text is not empty: it signs as the
+    single ``b""`` shingle, like the JVM path's ``word_shingles``."""
     if not text:
         return None
-    # split on the JVM's \s class (ASCII whitespace ONLY) — str.split()
-    # splits on Unicode whitespace too, so e.g. the U+00A0 that extract_html
-    # emits for &nbsp; would tokenize differently fused vs unfused
-    toks = [t for t in re.split(r"[ \t\n\x0b\f\r]+", text.lower()) if t]
-    # whitespace-only text: single empty shingle — IDENTICAL to the JVM path
-    # (word_shingles yields [array_join([], ' ')] = ['']); returning None here
-    # would silently exclude such rows from dedup on the fused path only
-    if len(toks) >= k:
-        # hot loop: encode each token ONCE (not once per shingle it appears
-        # in), skip shingle dedup (duplicates cannot change a min), and keep
-        # the MERSENNE mod out of python — utf-8 is byte-compositional, so
-        # crc32(b"a b c") == crc32 of the joined-string encoding exactly
-        enc = [t.encode("utf-8") for t in toks]
-        n = len(toks) - k + 1
-        sp = b" "
-        h = np.fromiter(
-            (crc32(sp.join(w)) for w in zip(*[enc[j:] for j in range(k)])),
-            dtype=np.int64, count=n)
-    else:
-        h = np.array([crc32(" ".join(toks).encode("utf-8"))], dtype=np.int64)
-    h %= MERSENNE_31
-    sig = (h[:, None] * A + B) % MERSENNE_31
-    return sig.min(axis=0).tolist()
+    return minhash_sig(text, A, B, k, crc32)
 
 
 def with_extract_and_scores(df: DataFrame, spark: SparkSession,

@@ -8,12 +8,12 @@ naive-Bayes over the seed corpora -> ``und`` sentinel below the confidence
 floor (the ``lang_conf`` drop-rule fires downstream, it is not an error).
 
 Execution contract (north_rule "no per-row Python"): the model is trained once
-on the driver, shipped via ``SparkContext.broadcast``, and applied with a
-scalar-iterator ``pandas_udf`` — the model deserializes once per task, then
-scores whole Arrow batches with vectorized pandas ops.  This is the Spark
-idiom replacing fastText in environments where the binary model/library is
-unavailable; the class is swappable for a fastText wrapper with the same
-``predict_series`` signature.
+on the driver, shipped via ``SparkContext.broadcast``, and applied inside the
+fused stage's ``mapInPandas`` pass (functions/fused.py) — the model
+deserializes once per task, then ``predict_batch`` scores whole Arrow batches
+with vectorized numpy ops.  This is the Spark idiom replacing fastText in
+environments where the binary model/library is unavailable; the class is
+swappable for a fastText wrapper with the same ``predict_batch`` signature.
 """
 
 from __future__ import annotations
@@ -21,12 +21,6 @@ from __future__ import annotations
 import math
 import re
 from collections import Counter
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import Column, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from ..corpora import CORPORA
 
@@ -241,17 +235,12 @@ class TrigramLangID:
                 confs_out[doc_idx[lo + k]] = float(conf[k])
         return langs_out, confs_out
 
-    def predict_series(self, texts: pd.Series) -> pd.DataFrame:
-        langs, confs = self.predict_batch(texts)
-        return pd.DataFrame({"lang": langs, "conf": confs}, index=texts.index)
-
 
 class FastTextLangID:
     """fastText drop-in for TrigramLangID — same broadcast + batch contract
-    (MODEL CONTRACT: ``predict_batch(texts) -> (list[lang], list[conf])``
-    and ``predict_series``; anything implementing it slots into
-    ``with_langid``, ``langid_udf`` and the fused stage unchanged —
-    exercised by tests/test_model_swap.py).
+    (MODEL CONTRACT: ``predict_batch(texts) -> (list[lang], list[conf])``;
+    anything implementing it slots into the fused stage and build_pipeline
+    unchanged — exercised by tests/test_model_swap.py).
 
     Construct with the path to a lid.176.bin / lid.176.ftz model; the
     instance pickles the raw model BYTES so ``SparkContext.broadcast``
@@ -307,32 +296,3 @@ class FastTextLangID:
                 langs[i] = labels[j][0].replace("__label__", "")
                 confs[i] = min(1.0, conf)
         return langs, confs
-
-    def predict_series(self, texts: pd.Series) -> pd.DataFrame:
-        langs, confs = self.predict_batch(texts)
-        return pd.DataFrame({"lang": langs, "conf": confs}, index=texts.index)
-
-
-def langid_udf(spark: SparkSession, model: TrigramLangID | None = None) -> Column:
-    """Returns a scalar-iterator pandas UDF column factory over broadcast model."""
-    bc = spark.sparkContext.broadcast(model or TrigramLangID())
-
-    @pandas_udf("struct<lang:string, conf:double>")
-    def _predict(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        m = bc.value  # deserialized once per task, reused across batches
-        for texts in batches:
-            yield m.predict_series(texts)
-
-    return _predict
-
-
-def with_langid(df, spark: SparkSession, text_col: str = "extracted_text",
-                model: TrigramLangID | None = None):
-    """Append lang_pred / lang_conf in one Arrow pass."""
-    udf = langid_udf(spark, model)
-    df = df.withColumn("_lid", udf(F.col(text_col)))
-    return (
-        df.withColumn("lang_pred", F.col("_lid.lang"))
-        .withColumn("lang_conf", F.col("_lid.conf"))
-        .drop("_lid")
-    )

@@ -5,8 +5,8 @@ a numeric score per record (espadons_energy_augmentation.py:139-153 reads the
 wavelength vector and reduces it to bounds) — a per-record numeric reduction
 over content, separate from the metadata rules.
 
-A KenLM 5-gram LM would slot in identically (same broadcast + iterator-UDF
-shape); the container has no kenlm, so the LM is a per-language add-one
+A KenLM 5-gram LM would slot in identically (same broadcast + batch
+contract); the container has no kenlm, so the LM is a per-language add-one
 character-bigram model trained on the embedded seed corpora.  Perplexity is
 ``2^H`` with H the average negative log2 probability of each character given
 its predecessor, under the model of ``lang`` (falling back to English for
@@ -19,12 +19,8 @@ from __future__ import annotations
 import math
 import re
 from collections import Counter
-from collections.abc import Iterator
 
-import pandas as pd
-from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from ..corpora import CORPORA
 
@@ -159,17 +155,12 @@ class BigramLM:
             out[[i for i, _ in rows]] = ppl
         return out
 
-    def perplexity_series(self, texts: pd.Series, langs: pd.Series) -> pd.Series:
-        return pd.Series(self.perplexity_batch(texts, langs),
-                         index=texts.index, dtype="float64")
-
 
 class KenLMModel:
     """KenLM drop-in for BigramLM — same broadcast + batch contract
-    (MODEL CONTRACT: ``perplexity_batch(texts, langs) -> float array`` and
-    ``perplexity_series``; anything implementing it slots into
-    ``with_perplexity``, ``perplexity_udf`` and the fused stage unchanged —
-    exercised by tests/test_model_swap.py).
+    (MODEL CONTRACT: ``perplexity_batch(texts, langs) -> float array``;
+    anything implementing it slots into the fused stage and build_pipeline
+    unchanged — exercised by tests/test_model_swap.py).
 
     Construct with {lang: path-to-arpa-or-binary}; model BYTES are pickled
     so broadcast ships them and each task loads once (kenlm.Model holds a
@@ -229,27 +220,6 @@ class KenLMModel:
             out[i] = 10.0 ** (-m.score(sent) / (n_words + 1))
         return out
 
-    def perplexity_series(self, texts: pd.Series, langs: pd.Series) -> pd.Series:
-        return pd.Series(self.perplexity_batch(texts, langs),
-                         index=texts.index, dtype="float64")
-
-
-def perplexity_udf(spark: SparkSession, model: BigramLM | None = None) -> Column:
-    bc = spark.sparkContext.broadcast(model or BigramLM())
-
-    @pandas_udf("double")
-    def _ppl(batches: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        m = bc.value
-        for texts, langs in batches:
-            yield m.perplexity_series(texts, langs)
-
-    return _ppl
-
-
-def with_perplexity(df, spark: SparkSession, text_col: str = "extracted_text",
-                    lang_col: str = "lang_pred", model: BigramLM | None = None):
-    udf = perplexity_udf(spark, model)
-    return df.withColumn("ppl", udf(F.col(text_col), F.col(lang_col)))
 
 
 # ---------------------------------------------------------------------------
@@ -278,15 +248,15 @@ def char_bigram_counts(df, text_col: str = "extracted_text",
     # pairs packed into int64 keys, doc boundaries masked exactly), and the
     # final groupBy sums per-task partials — the same map-side-combine
     # shape, with the per-row work two orders of magnitude cheaper.
-    # Semantics are unchanged: Python re.ASCII \s == Java default \s
+    # Semantics are unchanged: kernels.WS_RE is Java's default \s
     # ([ \t\n\x0B\f\r]) and str.lower matches UTF8String.toLowerCase on
     # this pipeline's text; equivalence vs the expression form is pinned by
     # the DuckDB oracle (tests/test_oracle_parity.py) and
     # tests/test_operators.py char-bigram parity.
-    import re
-
     import numpy as np
     import pandas as pd
+
+    from .kernels import WS_RE
 
     base = (df.filter(F.col(text_col).isNotNull()
                       & F.col(lang_col).isNotNull())
@@ -294,11 +264,10 @@ def char_bigram_counts(df, text_col: str = "extracted_text",
                     F.col(text_col).alias("_t")))
 
     def count_partition(batches):
-        ws = re.compile(r"\s+", re.ASCII)
         per_lang: dict[str, dict[int, int]] = {}
         for pdf in batches:
             for lang, grp in pdf.groupby("lang", sort=False):
-                texts = [" " + ws.sub(" ", t.lower()) + " "
+                texts = [" " + WS_RE.sub(" ", t.lower()) + " "
                          for t in grp["_t"]]
                 joined = "".join(texts)
                 codes = np.frombuffer(
@@ -354,7 +323,7 @@ def train_bigram_lm(df, text_col: str = "extracted_text",
     only the per-language count tables land on the driver, and the model
     construction reuses the seed-corpus smoothing verbatim, so a model
     trained on one document equals BigramLM(corpora={lang: doc}) exactly
-    (pytest-pinned).  The result drops into with_perplexity(model=...) /
+    (pytest-pinned).  The result drops into build_pipeline(ppl_model=...) /
     batch --lm-counts with no plan change."""
     return BigramLM(counts=corpus_lm_counts(df, text_col, lang_col))
 

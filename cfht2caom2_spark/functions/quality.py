@@ -270,20 +270,18 @@ def repetition_ladder_stats_fast(df: DataFrame, id_col: str = "doc_id",
     rungs propagate NULL — indistinguishable on this engine's tables (the
     testdata generator never emits NULL text; callers that might should
     filter first, as every other text operator here does)."""
-    import re
-
     import numpy as np
     import pandas as pd
+
+    from .kernels import word_tokens
 
     top_ns, dup_ns = REP_LADDER_TOP_NS, REP_LADDER_DUP_NS
     frac_cols = [f"top_{n}gram_char_frac" for n in top_ns] + \
                 [f"dup_{n}gram_char_frac" for n in dup_ns]
 
     def ladder_batches(batches):
-        ws = re.compile(r"\s+", re.ASCII)
-
         def doc_stats(text):
-            toks = [t for t in ws.split((text or "").strip(" ")) if t]
+            toks = word_tokens(text or "")
             T = len(toks)
             lens = np.fromiter((len(t) for t in toks), dtype="int64",
                                count=T)

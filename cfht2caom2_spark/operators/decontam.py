@@ -31,61 +31,38 @@ DuckDB parity check is exact.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import shingle_hash, word_shingles
-
-
-def gram_set(text: Column, k: int = 3, hash_fn=None) -> Column:
-    """Distinct hashed word k-grams of a text column (array<bigint>)."""
-    return F.array_distinct(
-        F.transform(word_shingles(text, k), hash_fn or shingle_hash))
+from .dedup import shingle_hash
 
 
 def gram_set_frame(docs: DataFrame, id_col: str, text_col: str,
                    k: int = 3, hash_fn=None,
-                   out_col: str = "_grams") -> DataFrame | None:
+                   out_col: str = "_grams") -> DataFrame:
     """(id, distinct hashed k-gram array) built in one vectorized Python
-    crossing — the batch twin of ``select(id, gram_set(text))`` for the
-    crc32/md5 hash families Python reproduces exactly (round 6, guide
-    §4.2; dedup._py_base_hash has the equivalence argument).  Returns None
-    for other hash_fns (callers fall back to the expression).  Semantics
-    matched to the expression path: distinct shingles of lower-cased
-    ASCII-whitespace tokens in first-occurrence order, < k tokens -> the
-    single whole-text shingle, NULL text -> a [NULL] single-element array
-    (word_shingles(NULL) folds that way), hashes reduced mod 2^31-1 and
-    de-duplicated again post-hash (collisions collapse)."""
-    import re
-
+    crossing (``kernels.gram_hashes``) for the md5 (default /
+    ``shingle_hash``) or crc32 (``shingle_hash_fast``) hash; any other
+    ``hash_fn`` raises ValueError.  Bit-identical to the expression
+    ``array_distinct(transform(word_shingles(text, k), hash))``
+    (tests/reference_impl.py ``gram_set``): first-occurrence order, hashes
+    reduced mod 2^31-1 and de-duplicated post-hash (collisions collapse).
+    Pinned NULL rule: NULL text gives a [NULL] single-element array
+    (word_shingles(NULL) folds that way)."""
     import pandas as pd
 
-    from .dedup import MERSENNE_31, _py_base_hash
+    from ..functions.kernels import base_hash, gram_hashes
 
-    base_hash = _py_base_hash(hash_fn or shingle_hash)
-    if base_hash is None:
-        return None
+    h = base_hash(hash_fn or shingle_hash)
     id_type = docs.select(id_col).schema.fields[0].dataType.simpleString()
-    ws = re.compile(r"[ \t\n\x0b\f\r]+")
-
-    def one(text):
-        if text is None:
-            return [None]
-        toks = [t for t in ws.split(text.lower()) if t]
-        if len(toks) >= k:
-            shingles = dict.fromkeys(
-                " ".join(toks[i:i + k]) for i in range(len(toks) - k + 1))
-        else:
-            shingles = {" ".join(toks): None}
-        return list(dict.fromkeys(
-            base_hash(s.encode("utf-8")) % MERSENNE_31 for s in shingles))
 
     def run(batches):
         for pdf in batches:
             yield pd.DataFrame({
                 id_col: pdf[id_col].to_numpy(),
-                out_col: pd.Series([one(t) for t in pdf[text_col]],
-                                   dtype=object),
+                out_col: pd.Series([[None] if t is None
+                                    else gram_hashes(t, k, h)
+                                    for t in pdf[text_col]], dtype=object),
             })
 
     return docs.select(id_col, text_col).mapInPandas(
@@ -94,41 +71,22 @@ def gram_set_frame(docs: DataFrame, id_col: str, text_col: str,
 
 def benchmark_grams(bench: DataFrame, text_col: str = "text", k: int = 3,
                     hash_fn=None) -> DataFrame:
-    """One-column distinct gram table of the whole eval suite.  For the
-    crc32/md5 hash families the grams come from one vectorized Python
-    crossing with a per-partition distinct (a set per task, so the
-    exchange carries partials); other hash_fns use the expression path.
-    NULL-text rows contribute nothing either way that any consumer can
-    see (a NULL gram is inert in every join and in the bitmap)."""
-    import re
-
+    """One-column distinct gram table of the whole eval suite, from one
+    vectorized Python crossing with a per-partition distinct (a set per
+    task, so the exchange carries partials).  NULL-text rows are skipped:
+    their [NULL] gram is inert in every join and in the bitmap."""
     import pandas as pd
 
-    from .dedup import MERSENNE_31, _py_base_hash
+    from ..functions.kernels import base_hash, gram_hashes
 
-    base_hash = _py_base_hash(hash_fn or shingle_hash)
-    if base_hash is None:
-        return (
-            bench.select(F.explode(gram_set(F.col(text_col), k, hash_fn))
-                         .alias("bench_gram"))
-            .distinct()
-        )
-    ws = re.compile(r"[ \t\n\x0b\f\r]+")
+    h = base_hash(hash_fn or shingle_hash)
 
     def run(batches):
         vals: set[int] = set()
         for pdf in batches:
             for t in pdf[text_col]:
-                if t is None:
-                    continue
-                toks = [x for x in ws.split(t.lower()) if x]
-                if len(toks) >= k:
-                    shingles = {" ".join(toks[i:i + k])
-                                for i in range(len(toks) - k + 1)}
-                else:
-                    shingles = {" ".join(toks)}
-                vals.update(base_hash(s.encode("utf-8")) % MERSENNE_31
-                            for s in shingles)
+                if t is not None:
+                    vals.update(gram_hashes(t, k, h))
         yield pd.DataFrame({"bench_gram": pd.Series(sorted(vals),
                                                     dtype="int64")})
 
@@ -189,11 +147,6 @@ def decontaminate(docs: DataFrame, bench: DataFrame,
     ``checkpoint=False`` keeps full lineage for plan inspection.
     """
     grams = gram_set_frame(docs, id_col, text_col, k, hash_fn)
-    if grams is None:   # unsupported custom hash_fn: expression path
-        grams = docs.select(
-            F.col(id_col),
-            gram_set(F.col(text_col), k, hash_fn).alias("_grams"),
-        )
     if checkpoint:
         grams = grams.localCheckpoint(eager=False)
     bench_g = benchmark_grams(bench, text_col=text_col, k=k, hash_fn=hash_fn)
@@ -268,24 +221,14 @@ def fuzzy_decontaminate(docs: DataFrame, bench: DataFrame,
     1/num_perms), exact-rational in both engines so the DuckDB twin matches
     bitwise.
     """
-    from .dedup import banded_keys, minhash_sig_frame, minhash_signature
+    from .dedup import banded_keys, minhash_sig_frame
 
     num_perms = bands * rows_per_band
-    sig_d = minhash_sig_frame(docs, id_col, text_col, num_perms, k, hash_fn)
-    if sig_d is None:   # unsupported custom hash_fn: expression fold
-        sig_d = docs.select(
-            F.col(id_col).alias("_id"),
-            minhash_signature(F.col(text_col), num_perms, k,
-                              hash_fn).alias("_sig"))
-    sig_d = sig_d.localCheckpoint(eager=False)
+    sig_d = minhash_sig_frame(docs, id_col, text_col, num_perms, k,
+                              hash_fn).localCheckpoint(eager=False)
     sig_b = minhash_sig_frame(bench, id_col, text_col, num_perms, k,
-                              hash_fn, out_id="_bid", out_sig="_bsig")
-    if sig_b is None:
-        sig_b = bench.select(
-            F.col(id_col).alias("_bid"),
-            minhash_signature(F.col(text_col), num_perms, k,
-                              hash_fn).alias("_bsig"))
-    sig_b = sig_b.localCheckpoint(eager=False)
+                              hash_fn, out_id="_bid", out_sig="_bsig"
+                              ).localCheckpoint(eager=False)
 
     band_d = banded_keys(sig_d, "_id", bands, rows_per_band)
     band_b = banded_keys(sig_b, "_bid", bands, rows_per_band, sig_col="_bsig")
@@ -329,19 +272,10 @@ def decontam_report(docs: DataFrame, bench: DataFrame,
     that surviving grams carry the bench id through the pair groupBy
     (bench-suite sized keys, bounded).
     """
-    doc_f = gram_set_frame(docs, id_col, text_col, k, hash_fn)
-    doc_g = (doc_f.select(id_col, F.explode("_grams").alias("_g"))
-             if doc_f is not None else docs.select(
-                 F.col(id_col),
-                 F.explode(gram_set(F.col(text_col), k, hash_fn))
-                 .alias("_g")))
-    bench_f = gram_set_frame(bench, id_col, text_col, k, hash_fn)
-    bench_gd = (bench_f.select(F.col(id_col).alias("_bid"),
-                               F.explode("_grams").alias("_g"))
-                if bench_f is not None else bench.select(
-                    F.col(id_col).alias("_bid"),
-                    F.explode(gram_set(F.col(text_col), k, hash_fn))
-                    .alias("_g")))
+    doc_g = gram_set_frame(docs, id_col, text_col, k, hash_fn).select(
+        id_col, F.explode("_grams").alias("_g"))
+    bench_gd = gram_set_frame(bench, id_col, text_col, k, hash_fn).select(
+        F.col(id_col).alias("_bid"), F.explode("_grams").alias("_g"))
     if checkpoint:
         # bench_gd feeds the bitmap AND the pair join (decontaminate's
         # recompute pattern); the corpus stream is consumed once, so only

@@ -8,8 +8,8 @@ published MinHash/LSH banding construction (Broder 1997; Lee et al. 2022
 "Deduplicating Training Data Makes Language Models Better").
 
 Scale notes (the part that matters at 10^12 docs):
-  * signatures are computed JVM-side from md5-derived shingle hashes — one
-    narrow projection, no Python, no shuffle;
+  * signatures are computed in one narrow vectorized Python crossing
+    (functions/kernels.py), no shuffle;
   * the ONLY wide op is the band-bucket self-join; band keys are high-entropy
     (md5-derived), so buckets are balanced by construction and AQE skew-join
     covers residual hot buckets (e.g. boilerplate-identical pages);
@@ -30,9 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.kernels import MERSENNE_31
 from ..functions.tokens import md5_fingerprint
-
-MERSENNE_31 = 2_147_483_647  # 2^31 - 1, the classic MinHash modulus
 
 
 # --- exact -------------------------------------------------------------------
@@ -95,101 +94,36 @@ def _perm_params(num_perms: int) -> list[tuple[int, int]]:
             for i in range(num_perms)]
 
 
-def minhash_signature(text: Column, num_perms: int, k: int = 3,
-                      hash_fn=None) -> Column:
-    """array<bigint> of num_perms minhashes.
-
-    ONE fold over the shingle-hash array computing all permutations per
-    element (zip_with least against the running minima) — the shingling and
-    md5 work happens exactly once per document.  (The naive form — num_perms
-    separate array_min(transform(...)) expressions — re-inlines the shingle
-    pipeline per permutation and is ~16x slower.)
-    """
-    hashes = F.transform(word_shingles(text, k), hash_fn or shingle_hash_fast)
-    perms = _perm_params(num_perms)
-    init = F.array_repeat(F.lit(MERSENNE_31).cast("bigint"), num_perms)
-
-    def step(acc: Column, x: Column) -> Column:
-        cand = F.array(*[(F.lit(a) * x + F.lit(b)) % MERSENNE_31 for a, b in perms])
-        return F.zip_with(acc, cand, lambda m, c: F.least(m, c))
-
-    return F.aggregate(hashes, init, step)
-
-
-def _py_base_hash(hash_fn):
-    """Python twin of a Column-level shingle hash, for the two families
-    Python reproduces exactly: crc32 (zlib, same polynomial as F.crc32 —
-    ``shingle_hash_fast`` and the default) and the md5-derived oracle hash
-    (hashlib md5 over UTF-8 == F.md5; first 15 hex chars as int, which the
-    caller reduces mod 2^31-1 where the Column form does).  Returns None
-    for any other hash_fn — callers fall back to the expression path.
-    NOTE: returns the UNREDUCED base value; apply ``% MERSENNE_31`` to
-    match shingle_hash/shingle_hash_fast."""
-    import hashlib
-    from zlib import crc32
-
-    if hash_fn is None or hash_fn is shingle_hash_fast:
-        return crc32
-    if hash_fn is shingle_hash:
-        return lambda data: int(hashlib.md5(data).hexdigest()[:15], 16)
-    return None
-
-
 def minhash_sig_frame(df: DataFrame, id_col: str, text_col: str,
                       num_perms: int, k: int = 3, hash_fn=None,
                       out_id: str = "_id",
-                      out_sig: str = "_sig") -> DataFrame | None:
+                      out_sig: str = "_sig") -> DataFrame:
     """(id, signature array<bigint>) built in one vectorized Python
-    crossing — the batch twin of ``minhash_signature`` for the two hash
-    families Python reproduces exactly: crc32 (``shingle_hash_fast`` /
-    default — zlib.crc32, same polynomial) and the md5-derived oracle hash
-    (hashlib md5 over UTF-8 == F.md5; first 15 hex chars mod 2^31-1).
-    Returns None for any other hash_fn (callers fall back to the
-    expression fold).  Semantics pinned against the expression path by the
-    DuckDB oracles and the fused-pipeline golden tests: word shingles of
-    lower-cased ASCII-whitespace tokens, < k tokens -> the single
-    whole-text shingle ('' for empty text), NULL text ->
-    [MERSENNE_31]*num_perms (the fold's least() SKIPS the [NULL] hash, so
-    the accumulator keeps its init — verified live; all NULL-text docs
-    therefore share a signature and band together, same as the fold).
-    The expression fold is interpreted (higher-order functions don't
-    codegen) at ~2 ms/doc; the numpy broadcast is ~30 us/doc
-    (fused.minhash_sig_py's measurement, same inner loop)."""
-    import re
-
+    crossing (``kernels.minhash_sig``) for the crc32 (default /
+    ``shingle_hash_fast``) or md5 (``shingle_hash``) base hash; any other
+    ``hash_fn`` raises ValueError (``kernels.base_hash``).  Bit-identical
+    to the expression fold over ``word_shingles`` (tests/reference_impl.py
+    ``minhash_signature``; pinned by tests/test_kernel_parity.py and the
+    DuckDB oracles).  Pinned NULL rule: NULL text signs as
+    [MERSENNE_31]*num_perms — the fold's least() SKIPS the [NULL] hash,
+    so the accumulator keeps its init, and all NULL-text docs share a
+    signature and band together, same as the fold.  ``""`` signs as its
+    single empty shingle.  The expression fold is interpreted
+    (higher-order functions don't codegen) at ~2 ms/doc; the numpy
+    broadcast is ~30 us/doc."""
     import numpy as np
     import pandas as pd
 
-    base_hash = _py_base_hash(hash_fn)
-    if base_hash is None:
-        return None
+    from ..functions.kernels import base_hash, minhash_sig
 
+    h = base_hash(hash_fn)
     perms = _perm_params(num_perms)
     A = np.array([a for a, _ in perms], dtype=np.int64)
     B = np.array([b for _, b in perms], dtype=np.int64)
-    ws = re.compile(r"[ \t\n\x0b\f\r]+")
-    sp = b" "
+    null_sig = [MERSENNE_31] * num_perms
 
     def one(text):
-        if text is None:
-            # the expression fold over word_shingles(NULL) folds [NULL]
-            # through least(), which SKIPS nulls — the accumulator keeps
-            # its init, so NULL text signs as [MERSENNE_31] * num_perms
-            # (verified against the fold; NOT a NULL signature)
-            return [MERSENNE_31] * num_perms
-        toks = [t for t in ws.split(text.lower()) if t]
-        if len(toks) >= k:
-            enc = [t.encode("utf-8") for t in toks]
-            n = len(toks) - k + 1
-            h = np.fromiter(
-                (base_hash(sp.join(w))
-                 for w in zip(*[enc[j:] for j in range(k)])),
-                dtype=np.int64, count=n)
-        else:
-            h = np.array([base_hash(" ".join(toks).encode("utf-8"))],
-                         dtype=np.int64)
-        h %= MERSENNE_31
-        return ((h[:, None] * A + B) % MERSENNE_31).min(axis=0).tolist()
+        return null_sig if text is None else minhash_sig(text, A, B, k, h)
 
     id_type = df.select(id_col).schema.fields[0].dataType.simpleString()
 
@@ -234,14 +168,8 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
     Band keys concatenate the band's minhashes; bucket join is the single
     shuffle of the dedup stage.
     """
-    num_perms = bands * rows_per_band
-    sig = minhash_sig_frame(df, id_col, text_col, num_perms, k, hash_fn)
-    if sig is None:   # unsupported custom hash_fn: expression fold
-        sig = df.select(
-            F.col(id_col).alias("_id"),
-            minhash_signature(F.col(text_col), num_perms, k,
-                              hash_fn).alias("_sig"),
-        )
+    sig = minhash_sig_frame(df, id_col, text_col, bands * rows_per_band, k,
+                            hash_fn)
     # both sides of the bucket self-join would re-run the shingle+minhash
     # work from the input otherwise — materialize the slim (id, 32-long)
     # signature frame once (same pay-once discipline as simhash_pairs)
@@ -343,12 +271,10 @@ def hash60(feature: Column) -> Column:
 
 
 def hash60_fast(feature: Column) -> Column:
-    """Production feature hash for simhash: xxhash64 (JVM intrinsic, no hex
-    round-trip / BigInteger) masked to the low 60 bits so band math stays in
-    non-negative BIGINT range.  Different hash family than hash60, so
-    borderline Hamming distances shift — the near-dup SET it finds is
-    equivalent, not bit-identical (pytest pins recall of the md5 path's
-    pairs at a margin below the cut)."""
+    """Production 60-bit hash: xxhash64 (JVM intrinsic, no hex round-trip /
+    BigInteger) masked to the low 60 bits so downstream math stays in
+    non-negative BIGINT range.  Different hash family than hash60 (no
+    Python twin), so values differ; the packing shuffle key uses it."""
     return F.xxhash64(feature).bitwiseAND(F.lit((1 << 60) - 1))
 
 
@@ -359,9 +285,10 @@ def simhash(text: Column, bits: int = 16, features_fn=None,
     (feature-hash bit j) is positive.
 
     Defaults keep the original q_simhash surface: features = distinct
-    words, hash = shingle_hash (31-bit — fine for bits <= 31).  The
-    near-dup pairs path passes shingle features + hash60 so ordering
-    matters and all 60 hash bits carry signal."""
+    words, hash = shingle_hash (31-bit — fine for bits <= 31).  With
+    shingle features + hash60 this is the expression reference of
+    ``_simhash_md5_frame`` (the signature ``simhash_pairs`` uses), where
+    ordering matters and all 60 hash bits carry signal."""
     if features_fn is None:
         def features_fn(t):
             return F.array_distinct(
@@ -398,50 +325,26 @@ def simhash(text: Column, bits: int = 16, features_fn=None,
 def _simhash_md5_frame(docs: DataFrame, id_col: str, text_col: str,
                        bits: int, k: int) -> DataFrame:
     """(_id, _sh) simhash signatures over md5-hashed word k-shingles via
-    one vectorized Python crossing — bit-identical to
-    ``simhash(features_fn=word_shingles(k), hash_fn=hash60)``: hashlib md5
-    over UTF-8 == F.md5, first 15 hex chars == the 60-bit hash, and the
+    one vectorized Python crossing (``kernels.simhash60``) — bit-identical
+    to ``simhash(features_fn=word_shingles(k), hash_fn=hash60)``: hashlib
+    md5 over UTF-8 == F.md5, first 15 hex chars == the 60-bit hash, and the
     per-bit ±1 sums / weighted reassembly are exact integer arithmetic.
-    NULL text signs as 0 — the expression fold hashes word_shingles(NULL)
-    = [NULL], whose per-bit contrib hits the otherwise(-1) branch for
-    every bit, so no count goes positive (verified live; NOT a NULL
-    signature — all NULL-text docs are hamming-0 pairs of each other and
-    of any doc whose simhash is within max_hamming of 0, and the fast
-    path reproduces that)."""
-    import hashlib
-    import re
-
-    import numpy as np
+    Pinned NULL rule: NULL text signs as 0 — the expression fold hashes
+    word_shingles(NULL) = [NULL], whose per-bit contrib hits the
+    otherwise(-1) branch for every bit, so no count goes positive (NOT a
+    NULL signature — all NULL-text docs are hamming-0 pairs of each other
+    and of any doc whose simhash is within max_hamming of 0)."""
     import pandas as pd
 
+    from ..functions.kernels import simhash60
+
     def sig_batches(batches):
-        ws = re.compile(r"\s+", re.ASCII)
-        weights = (np.int64(1) << np.arange(bits, dtype=np.int64))
-        shifts = np.arange(bits, dtype=np.int64)
-
-        def one(text):
-            if text is None:
-                return 0
-            toks = [t for t in ws.split(text.strip(" ").lower()) if t]
-            if len(toks) >= k:
-                shingles = {" ".join(toks[i:i + k])
-                            for i in range(len(toks) - k + 1)}
-            else:
-                shingles = {" ".join(toks)}
-            h = np.fromiter(
-                (int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
-                 for s in shingles), dtype=np.int64, count=len(shingles))
-            bitmat = (h[:, None] >> shifts[None, :]) & 1
-            counts = (2 * bitmat - 1).sum(axis=0)
-            return int(weights[counts > 0].sum())
-
         for pdf in batches:
             yield pd.DataFrame({
                 "_id": pdf[id_col].to_numpy(),
-                "_sh": [one(t) for t in pdf[text_col]],
-            }) if len(pdf) else pd.DataFrame(
-                {"_id": pd.Series(dtype="int64"),
-                 "_sh": pd.Series(dtype="int64")})
+                "_sh": pd.Series([0 if t is None else simhash60(t, bits, k)
+                                  for t in pdf[text_col]], dtype="int64"),
+            })
 
     id_type = docs.select(id_col).schema.fields[0].dataType.simpleString()
     return docs.select(id_col, text_col).mapInPandas(
@@ -451,7 +354,7 @@ def _simhash_md5_frame(docs: DataFrame, id_col: str, text_col: str,
 def simhash_pairs(docs: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", bits: int = 60,
                   n_bands: int = 4, max_hamming: int = 3,
-                  shingle_k: int = 3, hash_fn=None) -> DataFrame:
+                  shingle_k: int = 3) -> DataFrame:
     """SimHash near-dup pairs via banded Hamming LSH — the third member of
     the near-dup family (exact sha / MinHash Jaccard / SimHash Hamming).
 
@@ -484,22 +387,12 @@ def simhash_pairs(docs: DataFrame, id_col: str = "doc_id",
             "for exact banded recall")
     band_bits = bits // n_bands
     mask = (1 << band_bits) - 1
-    if hash_fn is None or hash_fn is hash60:
-        # md5-family fast path (round 6, guide §4.2): the expression form
-        # folds a `bits`-element contrib array per shingle per doc
-        # (~bits × shingles interpreted lambda evals); one mapInPandas
-        # crossing computes the identical signature with hashlib md5 +
-        # one numpy bit-matrix per doc — exact integer math, same distinct
-        # shingle set, pinned by the brute-force DuckDB oracle.  Custom
-        # hash_fn callers (e.g. hash60_fast/xxhash64, which Python cannot
-        # reproduce) keep the expression path.
-        sh = _simhash_md5_frame(docs, id_col, text_col, bits, shingle_k)
-    else:
-        sh = docs.select(
-            F.col(id_col).alias("_id"),
-            simhash(F.col(text_col), bits=bits,
-                    features_fn=lambda t: word_shingles(t, k=shingle_k),
-                    hash_fn=hash_fn).alias("_sh"))
+    # the expression form (simhash + hash60) folds a `bits`-element contrib
+    # array per shingle per doc (~bits × shingles interpreted lambda
+    # evals); one mapInPandas crossing computes the identical signature
+    # with hashlib md5 + one numpy bit-matrix per doc, pinned by the
+    # brute-force DuckDB oracle
+    sh = _simhash_md5_frame(docs, id_col, text_col, bits, shingle_k)
     # both sides of the banded self-join would otherwise re-run the whole
     # shingle+hash+fold signature from the scan (2x the dominant cost);
     # materialize the slim (id, 8-byte simhash) frame once — at corpus

@@ -173,10 +173,12 @@ def embedding_neardup_pairs(df: DataFrame, id_col: str = "vec_id",
         bucket = nearest_centroid(F.col(vec_col), centroids)
     else:
         bucket = sign_bucket(F.col(vec_col), n_planes)
+    # a NULL bucket (centroid mode: a vector whose dimension differs from
+    # the centroids') is no cell, so its vectors are nobody's neighbours
     b = df.select(
         F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"),
         bucket.alias("_bucket"),
-    )
+    ).filter(F.col("_bucket").isNotNull())
     thr = float(threshold)
 
     def score_cell(pdf: pd.DataFrame) -> pd.DataFrame:

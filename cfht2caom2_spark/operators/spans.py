@@ -104,12 +104,12 @@ def _window_stream(docs: DataFrame, id_col: str, text_col: str, k: int,
     its generated code was large enough to hit the per-JVM JIT lottery;
     a str.join per window is both faster and deterministic.  Carried
     columns (id, optional _ord) keep their input types."""
-    import re
-
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import (IntegerType, StringType, StructField,
                                    StructType)
+
+    from ..functions.kernels import word_tokens
 
     sel = [F.col(id_col)]
     if ord_expr is not None:
@@ -123,14 +123,13 @@ def _window_stream(docs: DataFrame, id_col: str, text_col: str, k: int,
     carry_names = [f.name for f in carry]
 
     def gen(batches):
-        ws = re.compile(r"\s+", re.ASCII)
         for pdf in batches:
             counts, keys = [], []
             for t in pdf[text_col]:
                 if t is None:
                     counts.append(0)
                     continue
-                toks = [x for x in ws.split(t.strip(" ").lower()) if x]
+                toks = word_tokens(t.lower())
                 n = len(toks)
                 if n < k:
                     counts.append(0)

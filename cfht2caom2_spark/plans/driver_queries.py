@@ -71,30 +71,28 @@ def _shingles_sql(toks: str = "toks", k: int = 3) -> str:
 def _with_toks_pandas(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Append ``_toks`` (the exact Q.tokens array: space-only-trimmed,
     ASCII-whitespace split, empties removed) via one vectorized Python
-    crossing.  Same split every vectorized operator in the engine uses
-    (spans/ladder/sig frames — equivalence pinned there and by this
-    query's DuckDB oracle); every downstream stat expression is unchanged.
+    crossing: ``kernels.word_tokens``, the split every vectorized operator
+    in the engine uses (equivalence pinned by this query's DuckDB oracle);
+    every downstream stat expression is unchanged.
     Also serves bench.py's documented warm-up intent: the suite warm-up
     materializes q_text_stats "so per-query numbers measure the plan, not
     interpreter startup" — with the engine's hot paths now Arrow-based,
     the warm-up query must itself start the Python workers, or the first
     timed pandas query pays the ~3 s worker+import cost instead."""
-    import re
-
     import pandas as pd
     from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+
+    from ..functions.kernels import word_tokens
 
     out_schema = StructType(list(docs.schema.fields)
                             + [StructField("_toks",
                                            ArrayType(StringType()))])
 
     def add_toks(batches):
-        ws = re.compile(r"\s+", re.ASCII)
         for pdf in batches:
             pdf = pdf.copy()
             pdf["_toks"] = pd.Series(
-                [None if t is None else
-                 [x for x in ws.split(t.strip(" ")) if x]
+                [None if t is None else word_tokens(t)
                  for t in pdf[text_col]], index=pdf.index, dtype=object)
             yield pdf
 
@@ -1415,12 +1413,6 @@ class _ConstLangID:
         return (["en" if t else "und" for t in texts],
                 [1.0 if t else 0.0 for t in texts])
 
-    def predict_series(self, texts):
-        import pandas as pd
-
-        langs, confs = self.predict_batch(texts)
-        return pd.DataFrame({"lang": langs, "conf": confs}, index=texts.index)
-
 
 class _ConstLM:
     """Deterministic drop-in for BigramLM (MODEL CONTRACT): ppl = 1.0."""
@@ -1429,12 +1421,6 @@ class _ConstLM:
         import numpy as np
 
         return np.array([1.0 if t else float("inf") for t in texts])
-
-    def perplexity_series(self, texts, langs):
-        import pandas as pd
-
-        return pd.Series(self.perplexity_batch(texts, langs),
-                         index=texts.index, dtype="float64")
 
 
 def _flagship_pages(spark: SparkSession, sf_dir: str) -> DataFrame:

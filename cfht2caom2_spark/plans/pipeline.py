@@ -6,10 +6,9 @@ visit_data -> write -> store), recast as ONE declarative DataFrame graph
 (SURVEY.md §3.1):
 
     read pages
-      -> extraction (mapInPandas, byte-identical; S4/S5)     [narrow]
-      -> language ID (iterator pandas UDF, broadcast model)  [narrow]
+      -> extraction + language ID + perplexity + MinHash signature
+         (one mapInPandas pass, broadcast models; S4/S5)     [narrow]
       -> heuristic stats (built-in exprs; P11)               [narrow]
-      -> perplexity (iterator pandas UDF)                    [narrow]
       -> scrub (regexp chains; P10)                          [narrow]
       -> minhash dedup flag (J8)                             [the one wide op]
       -> decision (P14)                                      [narrow]
@@ -17,8 +16,8 @@ visit_data -> write -> store), recast as ONE declarative DataFrame graph
 
 Everything upstream of dedup pipelines in one stage per partition (the
 single-visit fusion lesson, composable.py:90-98).  At 100 TB the plan's cost
-is: 1 scan + 3 Arrow passes + 1 band-bucket shuffle + 1 small agg; no other
-data movement.
+is: 1 scan + 1 fused Arrow pass + 1 band-bucket shuffle + 1 small agg; no
+other data movement.
 """
 
 from __future__ import annotations
@@ -27,13 +26,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_PROFILE, RuleProfile
-from ..functions.extraction import with_extracted_text, with_extracted_text_passthrough
-from ..functions.langid import TrigramLangID, with_langid
-from ..functions.perplexity import BigramLM, with_perplexity
+from ..functions.fused import with_extract_and_scores
+from ..functions.langid import TrigramLangID
+from ..functions.perplexity import BigramLM
 from ..functions.quality import with_quality_score, with_quality_stats
 from ..functions.scrub import scrub_rules_fired, scrubbed
 from ..operators.decision import with_decision
-from ..operators.dedup import minhash_dedup_losers
+from ..operators.dedup import minhash_losers_from_sig
 from ..operators.resume import lineage_rows, pending_work, read_lineage, write_lineage
 
 OUTPUT_COLUMNS = [
@@ -67,9 +66,7 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
                    id_col: str = "url",
                    order_col: str = "warc_ts",
                    has_html: bool = True,
-                   fused: bool = True,
                    persist_tracker: list | None = None,
-                   eager_persist: bool = True,
                    benchmark: DataFrame | None = None,
                    benchmark_text_col: str = "text",
                    quality_weights: dict | None = None) -> DataFrame:
@@ -77,10 +74,9 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
     streaming foreachBatch, pytest, and the driver entry — the same plan runs
     everywhere (the reference's SCRAPE-mode purity, SURVEY.md §3.3).
 
-    ``fused=True`` (default) runs extraction + langid + perplexity in ONE
-    Arrow pass (single-visit fusion, composable.py:90-98 analogue); the
-    unfused path keeps the three stages separate and is result-identical
-    (tests assert both).
+    Extraction + langid + perplexity (+ the MinHash signature when
+    ``dedupe``) run in ONE Arrow pass (functions/fused.py; single-visit
+    fusion, composable.py:90-98 analogue).
 
     ``persist_tracker``: optional list the builder appends every persisted
     DataFrame to, so the caller can unpersist after its terminal action
@@ -95,24 +91,14 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
         from ..functions.identity import canonical_url
 
         df = df.withColumn(id_col, canonical_url(F.col(id_col)))
-    if fused:
-        from ..functions.fused import with_extract_and_scores
-
-        df = with_extract_and_scores(
-            df, spark, langid_model, ppl_model, has_html=has_html,
-            # MinHash signatures ride the same Arrow pass (numpy-vectorized);
-            # the JVM then only bands + self-joins 32-long arrays
-            minhash_perms=(profile.minhash_bands * profile.minhash_rows_per_band
-                           if dedupe else 0),
-            shingle_k=profile.shingle_size,
-        )
-    else:
-        if has_html:
-            df = with_extracted_text(df)
-        else:
-            df = with_extracted_text_passthrough(df)
-        df = with_langid(df, spark, model=langid_model)
-        df = with_perplexity(df, spark, model=ppl_model)
+    df = with_extract_and_scores(
+        df, spark, langid_model, ppl_model, has_html=has_html,
+        # MinHash signatures ride the same Arrow pass (numpy-vectorized);
+        # the JVM then only bands + self-joins 32-long arrays
+        minhash_perms=(profile.minhash_bands * profile.minhash_rows_per_band
+                       if dedupe else 0),
+        shingle_k=profile.shingle_size,
+    )
     # quality stats + scrub are appended AFTER the optional boilerplate pass
     # below — they must describe the text the corpus actually trains on
 
@@ -135,15 +121,14 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
         if persist_tracker is not None:
             persist_tracker.append(df)
-        if eager_persist:
-            # materialize the cache NOW with one fully-parallel action.
-            # Left lazy, AQE launches the fan-out subtrees concurrently and
-            # their tasks serialize on the cache-population lock per
-            # partition (measured: 3 blocked 8-task stages, ~45% idle cores
-            # at 1M rows x 8 cores); a warm cache restores full parallelism
-            # downstream.  One count() pays one extra pass of NOTHING — the
-            # cache node materializes all columns regardless of projection.
-            df.count()
+        # materialize the cache NOW with one fully-parallel action.  Left
+        # lazy, AQE launches the fan-out subtrees concurrently and their
+        # tasks serialize on the cache-population lock per partition
+        # (measured: 3 blocked 8-task stages, ~45% idle cores at 1M rows x 8
+        # cores); a warm cache restores full parallelism downstream.  One
+        # count() pays one extra pass of NOTHING — the cache node
+        # materializes all columns regardless of projection.
+        df.count()
     # dedup keys/signatures and the boilerplate line frequencies read the
     # persisted pre-backfill frame
     base = df
@@ -387,9 +372,7 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
         # memory always.
         from pyspark.sql import Window as _W
 
-        sig_based = "minhash_sig" in base.columns
-        slim_cols = [id_col, order_col, "extracted_sha256",
-                     "minhash_sig" if sig_based else "extracted_text"]
+        slim_cols = [id_col, order_col, "extracted_sha256", "minhash_sig"]
         # exact-duplicate collapse FIRST (by extraction sha256): every
         # exact-dup group of size m would otherwise contribute m^2/2 pairs to
         # EVERY minhash band (the one join blow-up AQE can't fully save);
@@ -411,26 +394,14 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
         # the single wide dependency: banded minhash self-join over one
         # canonical doc per content hash
         candidates = ranked.filter(F.col("_sha_rn") == 1).drop("_sha_rn")
-        if sig_based:
-            from ..operators.dedup import minhash_losers_from_sig
-
-            losers = minhash_losers_from_sig(
-                candidates, id_col=id_col, order_col=order_col,
-                bands=profile.minhash_bands,
-                rows_per_band=profile.minhash_rows_per_band,
-                threshold=profile.dedup_jaccard,
-                persist_tracker=persist_tracker,
-                policy=profile.dedup_policy,
-            )
-        else:
-            losers = minhash_dedup_losers(
-                candidates, id_col=id_col, text_col="extracted_text",
-                order_col=order_col,
-                bands=profile.minhash_bands,
-                rows_per_band=profile.minhash_rows_per_band,
-                k=profile.shingle_size,
-                threshold=profile.dedup_jaccard,
-            )
+        losers = minhash_losers_from_sig(
+            candidates, id_col=id_col, order_col=order_col,
+            bands=profile.minhash_bands,
+            rows_per_band=profile.minhash_rows_per_band,
+            threshold=profile.dedup_jaccard,
+            persist_tracker=persist_tracker,
+            policy=profile.dedup_policy,
+        )
         near_losers = losers.select(
             F.col("loser_id").alias(id_col), F.lit("near").alias("_dup_kind"))
         # near losers were drawn from exact winners, so the two sets are

@@ -11,6 +11,11 @@ Shares ONLY the model classes (langid/perplexity) and the extractor with the
 engine — those are plain functions unit-tested separately; everything the
 Spark expression layer does (tokenization, stats, rules, minhash dedup) is
 re-derived here with independent code.
+
+The Spark expression references at the bottom (``minhash_signature``,
+``gram_set``) are not part of the labeler: they are the JVM side of the
+word-shingle kernel parity tests and build on the engine's Column-level
+``word_shingles`` and shingle hashes.
 """
 
 from __future__ import annotations
@@ -261,3 +266,44 @@ def reference_labels(n_rows: int, seed: int = 42,
     for url, res in results.items():
         res["keep"] = len(res["rules"]) == 0
     return results
+
+
+# --- Spark expression references of the word-shingle kernels ----------------
+# The engine signs documents only through functions/kernels.py (one Python
+# crossing per frame).  These are the JVM expression forms those frames must
+# reproduce bit for bit (tests/test_kernel_parity.py); they live here because
+# no shipped plan uses them.
+
+def minhash_signature(text, num_perms: int, k: int = 3, hash_fn=None):
+    """array<bigint> of num_perms minhashes of ``word_shingles(text, k)``:
+    ONE fold over the shingle-hash array computing all permutations per
+    element (zip_with least against the running minima).  NULL text folds
+    [NULL], which least() skips: [MERSENNE_31] * num_perms."""
+    from pyspark.sql import functions as F
+
+    from cfht2caom2_spark.functions.kernels import MERSENNE_31
+    from cfht2caom2_spark.operators.dedup import (_perm_params,
+                                                  shingle_hash_fast,
+                                                  word_shingles)
+
+    hashes = F.transform(word_shingles(text, k), hash_fn or shingle_hash_fast)
+    perms = _perm_params(num_perms)
+    init = F.array_repeat(F.lit(MERSENNE_31).cast("bigint"), num_perms)
+
+    def step(acc, x):
+        cand = F.array(*[(F.lit(a) * x + F.lit(b)) % MERSENNE_31
+                         for a, b in perms])
+        return F.zip_with(acc, cand, lambda m, c: F.least(m, c))
+
+    return F.aggregate(hashes, init, step)
+
+
+def gram_set(text, k: int = 3, hash_fn=None):
+    """Distinct hashed word k-grams of a text column (array<bigint>);
+    ``shingle_hash`` (md5) by default."""
+    from pyspark.sql import functions as F
+
+    from cfht2caom2_spark.operators.dedup import shingle_hash, word_shingles
+
+    return F.array_distinct(
+        F.transform(word_shingles(text, k), hash_fn or shingle_hash))

@@ -1,0 +1,171 @@
+"""Word-shingle kernel parity and single-home guards.
+
+Every Python crossing that signs word shingles goes through
+``functions/kernels.py``.  Here each signature frame is compared, bit for
+bit, with its Spark expression reference on hypothesis-drawn batches of
+adversarial text (NULL, empty, whitespace-only, non-ASCII whitespace,
+non-ASCII case), and static checks keep the tokenizer regex and the MinHash
+modulus from being re-forked into other modules.
+"""
+
+from __future__ import annotations
+
+import ast
+import re
+from functools import reduce
+from pathlib import Path
+
+import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from cfht2caom2_spark.operators.decontam import gram_set_frame
+from cfht2caom2_spark.operators.dedup import (_simhash_md5_frame, hash60,
+                                              hash60_fast, minhash_sig_frame,
+                                              shingle_hash, shingle_hash_fast,
+                                              simhash, word_shingles)
+
+from .reference_impl import gram_set, minhash_signature
+
+PKG = Path(__file__).resolve().parent.parent / "cfht2caom2_spark"
+KERNELS = PKG / "functions" / "kernels.py"
+
+# ASCII whitespace (Java's \s), the characters Java's \s does NOT match but
+# str.split() does (\x1c, NBSP, U+3000, U+2028), and non-ASCII case pairs
+_ALPHABET = list("aBc") + [" ", "\t", "\n", "\x0b", "\f", "\r", "\x1c",
+                           "\u00a0", "\u3000", "\u2028", "\u0130", "\u00df",
+                           "\u03a3", "\u00e9"]
+_TEXT = st.one_of(st.none(), st.text(alphabet=_ALPHABET, max_size=24))
+_ADVERSARIAL = [None, "", "   ", " \t\n\x0b\f\r ", "a b c\u3000d e",
+                "x\u00a0y z\u2028w", "one\x1ctwo three",
+                "\u0130STANBUL \u00df \u03a3 \u0391\u03a3",
+                "Same same SAME same", "a b",
+                # repeated shingles among distinct ones: the distinct-set
+                # rule of gram sets and simhash changes the result here
+                "spam spam spam spam eggs ham", "x y z x y z x y z w"]
+_PERMS = 8
+_BITS = 60
+
+
+def _as_json(name: str, value):
+    return F.to_json(F.struct(value.alias("v"))).alias(name)
+
+
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(texts=st.lists(_TEXT, min_size=1, max_size=16),
+       k=st.sampled_from([1, 3]))
+@example(texts=_ADVERSARIAL, k=3)
+@example(texts=_ADVERSARIAL, k=1)
+def test_signature_frames_match_expression_references(spark, texts, k):
+    """minhash_sig_frame (crc32, md5), gram_set_frame (md5, crc32) and
+    _simhash_md5_frame equal their expression references bit for bit,
+    NULL rules included.  Values are compared as JSON so each side is one
+    Spark job: the expressions in one select, the frames in one union."""
+    # two slices, not one per core: each Python task has a fixed cost
+    rows = spark.sparkContext.parallelize(list(enumerate(texts)), 2)
+    df = spark.createDataFrame(rows, "id bigint, t string")
+    t = F.col("t")
+    exprs = {
+        "mh_crc": minhash_signature(t, _PERMS, k, shingle_hash_fast),
+        "mh_md5": minhash_signature(t, _PERMS, k, shingle_hash),
+        "gs_md5": gram_set(t, k, shingle_hash),
+        "gs_crc": gram_set(t, k, shingle_hash_fast),
+        "sim": simhash(t, bits=_BITS,
+                       features_fn=lambda c: word_shingles(c, k),
+                       hash_fn=hash60),
+    }
+    frames = {
+        "mh_crc": minhash_sig_frame(df, "id", "t", _PERMS, k,
+                                    shingle_hash_fast, "id", "v"),
+        "mh_md5": minhash_sig_frame(df, "id", "t", _PERMS, k, shingle_hash,
+                                    "id", "v"),
+        "gs_md5": gram_set_frame(df, "id", "t", k, shingle_hash, "v"),
+        "gs_crc": gram_set_frame(df, "id", "t", k, shingle_hash_fast, "v"),
+        "sim": _simhash_md5_frame(df, "id", "t", _BITS, k).select(
+            F.col("_id").alias("id"), F.col("_sh").alias("v")),
+    }
+    want = {(name, r["id"]): r[name]
+            for r in df.select("id", *[_as_json(n, e)
+                                       for n, e in exprs.items()]).collect()
+            for name in exprs}
+    got = reduce(DataFrame.unionByName, [
+        f.select(F.lit(n).alias("name"), "id", _as_json("v", F.col("v")))
+        for n, f in frames.items()])
+    assert {(r["name"], r["id"]): r["v"] for r in got.collect()} == want, \
+        (k, texts)
+
+
+def test_unsupported_hash_raises(spark):
+    """Only the crc32 and md5 families have a Python kernel; any other
+    hash fails on the driver instead of silently changing the plan."""
+    df = spark.createDataFrame([(1, "a b c")], "id bigint, t string")
+    with pytest.raises(ValueError, match="no Python kernel"):
+        minhash_sig_frame(df, "id", "t", 4, 3, hash60_fast)
+    with pytest.raises(ValueError, match="no Python kernel"):
+        gram_set_frame(df, "id", "t", 3, hash60_fast)
+
+
+def _package_modules():
+    return [(p, ast.parse(p.read_text(), str(p)))
+            for p in sorted(PKG.rglob("*.py"))]
+
+
+def _is_ascii_ws_split(pattern: str, flags: int) -> bool:
+    """True iff the regex matches exactly Java's default \\s class:
+    each ASCII whitespace char, and none of \\x1c, NBSP or a letter."""
+    try:
+        rx = re.compile(pattern, flags)
+    except (re.error, TypeError):
+        return False
+    return (all(rx.fullmatch(c) for c in " \t\n\x0b\f\r")
+            and not any(rx.fullmatch(c) for c in "\x1c\u00a0a"))
+
+
+def _flags_value(node) -> int:
+    """Value of a flags expression built from ``re.X`` names and ``|``."""
+    if isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name) \
+            and node.value.id == "re":
+        return int(getattr(re, node.attr))
+    if isinstance(node, ast.BinOp) and isinstance(node.op, ast.BitOr):
+        return _flags_value(node.left) | _flags_value(node.right)
+    return 0
+
+
+def test_ascii_whitespace_tokenizer_lives_only_in_kernels():
+    """The ASCII-whitespace token regex is compiled in one module."""
+    homes = []
+    for path, tree in _package_modules():
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and isinstance(node.func.value, ast.Name)
+                    and node.func.value.id == "re"
+                    and node.args
+                    and isinstance(node.args[0], ast.Constant)
+                    and isinstance(node.args[0].value, str)):
+                continue
+            flags = next((kw.value for kw in node.keywords
+                          if kw.arg == "flags"), None)
+            if flags is None and node.func.attr == "compile" \
+                    and len(node.args) > 1:
+                flags = node.args[1]
+            if _is_ascii_ws_split(node.args[0].value, _flags_value(flags)):
+                homes.append(f"{path.relative_to(PKG)}:{node.lineno}")
+    assert homes and all(h.startswith("functions/kernels.py:")
+                         for h in homes), homes
+
+
+def test_mersenne_modulus_defined_only_in_kernels():
+    defs = []
+    for path, tree in _package_modules():
+        for node in ast.walk(tree):
+            targets = (node.targets if isinstance(node, ast.Assign)
+                       else [node.target] if isinstance(node, ast.AnnAssign)
+                       else [])
+            if any(isinstance(t, ast.Name) and t.id == "MERSENNE_31"
+                   for t in targets):
+                defs.append(path)
+    assert defs == [KERNELS], defs

@@ -4,9 +4,9 @@ Reference analogue: instrument detection is the reference's most defended
 function — a golden-tested fallback chain per instrument
 (/root/reference/cfht2caom2/tests/test_caom_gen_visit.py:101-171).  Here the
 swap surface is the MODEL CONTRACT documented in functions/langid.py and
-functions/perplexity.py: any object with ``predict_batch``/``predict_series``
-(langid) or ``perplexity_batch``/``perplexity_series`` (LM) slots into the
-fused stage, the pandas UDFs, and build_pipeline unchanged.
+functions/perplexity.py: any object with ``predict_batch`` (langid) or
+``perplexity_batch`` (LM) slots into the fused stage and build_pipeline
+unchanged.
 
 Two layers:
   * an always-running test drives the WHOLE pipeline with stub models that
@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import importlib.util
 
-import pandas as pd
 import pytest
 
 from cfht2caom2_spark.plans.pipeline import build_pipeline
@@ -40,10 +39,6 @@ class StubLangID:
         confs = [0.9 if t else 0.0 for t in texts]
         return langs, confs
 
-    def predict_series(self, texts: pd.Series) -> pd.DataFrame:
-        langs, confs = self.predict_batch(texts)
-        return pd.DataFrame({"lang": langs, "conf": confs}, index=texts.index)
-
 
 class StubLM:
     """Minimal contract implementation: ppl = 7.5 for text, inf for empty."""
@@ -53,16 +48,12 @@ class StubLM:
 
         return np.array([7.5 if t else float("inf") for t in texts])
 
-    def perplexity_series(self, texts: pd.Series, langs: pd.Series) -> pd.Series:
-        return pd.Series(self.perplexity_batch(texts, langs),
-                         index=texts.index, dtype="float64")
 
-
-@pytest.mark.parametrize("fused", [True, False])
-def test_contract_stub_models_drive_pipeline(spark, fused):
+@pytest.mark.parametrize("dedupe", [True, False])
+def test_contract_stub_models_drive_pipeline(spark, dedupe):
     """build_pipeline consumes ONLY the documented contract methods: with
-    stub models every scored row carries the stub's outputs on both the
-    fused and the staged path."""
+    stub models every scored row carries the stub's outputs, whether or not
+    the fused pass also computes the MinHash signature (``dedupe``)."""
     from dataclasses import replace
 
     from cfht2caom2_spark.config import DEFAULT_PROFILE
@@ -72,7 +63,7 @@ def test_contract_stub_models_drive_pipeline(spark, fused):
     profile = replace(DEFAULT_PROFILE, allowed_langs=("xx",),
                       max_perplexity=10.0)
     rows = build_pipeline(
-        pages, spark, profile=profile, dedupe=False, fused=fused,
+        pages, spark, profile=profile, dedupe=dedupe,
         langid_model=StubLangID(), ppl_model=StubLM(),
     ).collect()
     scored = [r for r in rows if r["extracted_sha256"] is not None

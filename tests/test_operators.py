@@ -328,8 +328,10 @@ def test_python_minhash_matches_jvm(spark):
     import numpy as np
     from cfht2caom2_spark.functions.fused import minhash_sig_py
     from cfht2caom2_spark.operators.dedup import (_perm_params,
-                                                  minhash_signature,
                                                   shingle_hash_fast)
+
+    from .reference_impl import minhash_signature
+
     texts = [
         "the quick brown fox jumps over the lazy dog again and again today",
         "one two",
@@ -832,16 +834,6 @@ def test_simhash_pairs_banded_hamming(spark):
     assert (1, 2) in got and got[(1, 2)] <= 3
     assert not any(3 in p for p in got)
 
-    # production-hash swap (hash60_fast = xxhash64 masked to 60 bits):
-    # different hash family, so exact bit margins shift on a ~240-feature
-    # doc — assert the near/far ORDERING survives at a wider cut (near-dup
-    # well under it, unrelated doc well over), the contract that matters
-    from cfht2caom2_spark.operators.dedup import hash60_fast
-    fast = {(r["id_a"], r["id_b"])
-            for r in simhash_pairs(docs, hash_fn=hash60_fast,
-                                   n_bands=12, max_hamming=10).collect()}
-    assert (1, 2) in fast and not any(3 in p for p in fast)
-
     with pytest.raises(ValueError, match="divisible"):
         simhash_pairs(docs, bits=50, n_bands=4)
     with pytest.raises(ValueError, match="overflow"):
@@ -1193,6 +1185,21 @@ def test_semantic_keep_one_kmeans_cells_bridge_sign_boundary(spark):
     assert km[2] and km[3]
 
 
+def test_embedding_neardup_pairs_centroid_mode_skips_null_bucket(spark):
+    """Centroid mode: a vector whose dimension differs from the centroids'
+    has no nearest cell (NULL bucket).  Two identical such vectors must
+    not pair — the NULL bucket is not a cell — while same-dimension
+    duplicates still do."""
+    from cfht2caom2_spark.operators.similarity import embedding_neardup_pairs
+
+    rows = [(0, [1.0, 0.0]), (1, [1.0, 0.0]),
+            (2, [1.0, 0.0, 0.0]), (3, [1.0, 0.0, 0.0])]
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    pairs = {(r["id_a"], r["id_b"]) for r in embedding_neardup_pairs(
+        df, threshold=0.95, centroids=[[1.0, 0.0], [0.0, 1.0]]).collect()}
+    assert pairs == {(0, 1)}
+
+
 def test_repetition_ladder_fast_parity(spark):
     """repetition_ladder_stats_fast (the batch-counting mapInPandas twin)
     equals the 9 Column-expression ladder rungs bitwise on adversarial
@@ -1238,9 +1245,13 @@ def test_simhash_pairs_null_text_parity(spark):
     """NULL-text docs sign as simhash 0 (the fold's otherwise(-1) branch
     fires for every bit), so they are hamming-0 pairs of each other — the
     md5 fast frame must reproduce that, not drop the rows (round-6 review
-    catch).  Wrapping hash60 in a lambda forces the expression path for
-    the cross-check."""
-    from cfht2caom2_spark.operators.dedup import hash60, simhash_pairs
+    catch).  The cross-check brute-forces the pairs from the expression
+    ``simhash`` signatures."""
+    from itertools import combinations
+
+    from cfht2caom2_spark.operators.dedup import (hash60, simhash,
+                                                  simhash_pairs,
+                                                  word_shingles)
 
     docs = spark.createDataFrame(
         [(1, None), (2, None), (3, "regular text that is unlike others "
@@ -1249,9 +1260,13 @@ def test_simhash_pairs_null_text_parity(spark):
     fast = {(r["id_a"], r["id_b"], r["hamming"])
             for r in simhash_pairs(docs, bits=60, n_bands=4,
                                    max_hamming=3).collect()}
-    expr = {(r["id_a"], r["id_b"], r["hamming"])
-            for r in simhash_pairs(docs, bits=60, n_bands=4, max_hamming=3,
-                                   hash_fn=lambda c: hash60(c)).collect()}
+    sig = {r["doc_id"]: r["sh"] for r in docs.select(
+        "doc_id",
+        simhash(F.col("text"), bits=60, features_fn=word_shingles,
+                hash_fn=hash60).alias("sh")).collect()}
+    expr = {(a, b, bin(sig[a] ^ sig[b]).count("1"))
+            for a, b in combinations(sorted(sig), 2)}
+    expr = {p for p in expr if p[2] <= 3}
     assert fast == expr
     assert (1, 2, 0) in fast
 

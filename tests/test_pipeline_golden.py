@@ -114,21 +114,6 @@ def test_near_dup_clusters_resolved(actual):
         assert len(dups) == len(rows) - 1, (century, [r["rules"] for r in rows])
 
 
-def test_fused_equals_unfused(spark):
-    """The single-Arrow-pass fusion must be result-identical to the staged
-    path (same kernels, different plumbing)."""
-    pages = synth_pages(spark, 200)
-    a = build_pipeline(pages, spark, dedupe=False, fused=True)
-    b = build_pipeline(pages, spark, dedupe=False, fused=False)
-    rows_a = {(r["url"], r["warc_ts"]): (r["extracted_sha256"], r["keep"],
-                                          tuple(r["rules"]), r["ppl"])
-              for r in a.collect()}
-    rows_b = {(r["url"], r["warc_ts"]): (r["extracted_sha256"], r["keep"],
-                                          tuple(r["rules"]), r["ppl"])
-              for r in b.collect()}
-    assert rows_a == rows_b
-
-
 def test_host_backfill_adopts_consensus_in_pipeline(spark):
     """profile.host_lang_backfill wires hostnorm into the main visit (the
     reference runs sibling-backfill inside the visit, instruments.py:1951-2019):
