@@ -1,9 +1,10 @@
 """URL identity columns — pure string projections.
 
 Reference analogue: file-name identity parsing — ``remove_extensions``
-(cfht_name.py:433-444), ``sequence_number`` regex prefix (cfht_name.py:231-242),
-``get_obs_id`` suffix stripping (cfht_name.py:407-431).  All become built-in
-Column expressions so Catalyst folds/fuses them; no Python crossing.
+normalizes the storage name before identity is assigned
+(cfht_name.py:433-444).  Here the host (the skew/blocklist key) and the
+canonical url are built-in Column expressions, so Catalyst folds/fuses them;
+no Python crossing.
 """
 
 from __future__ import annotations
@@ -15,16 +16,6 @@ from pyspark.sql import functions as F
 def host(url: Column) -> Column:
     """Registered host of the url (the skew/salting key, SURVEY.md §4)."""
     return F.parse_url(url, F.lit("HOST"))
-
-
-def path(url: Column) -> Column:
-    return F.parse_url(url, F.lit("PATH"))
-
-
-def doc_id_from_url(url: Column) -> Column:
-    """Stable content key: path with a trailing .html/.htm/.php stripped —
-    the ``remove_extensions`` analogue (cfht_name.py:433-444)."""
-    return F.regexp_replace(path(url), r"\.(html?|php|aspx?)$", "")
 
 
 # The unambiguous tracking set only: campaign/click identifiers that never
@@ -67,20 +58,3 @@ def canonical_url(url: Column,
     return F.when(F.size(kept) > 0,
                   F.concat(base, F.lit("?"), F.array_join(kept, "&"))) \
         .otherwise(base)
-
-
-def payload_info(html: Column) -> Column:
-    """struct<n_bytes, md5> of the raw payload — the FileInfo probe (S6,
-    reference cfht_name.py:528-529: size/md5/type per file), used for
-    change detection and idempotent re-stores."""
-    return F.struct(
-        F.coalesce(F.length(html), F.lit(0)).cast("bigint").alias("n_bytes"),
-        F.md5(html).alias("md5"),
-    )
-
-
-def salted_key(url: Column, n_salts: int = 16) -> Column:
-    """host + deterministic salt bucket — used to repartition ahead of
-    per-host windows so one hot host cannot pin a single task (SURVEY.md §4
-    skew row; north_rule 'salted repartition for skewed hosts')."""
-    return F.concat_ws("#", host(url), F.pmod(F.xxhash64(url), F.lit(n_salts)).cast("string"))

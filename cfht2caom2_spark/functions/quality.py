@@ -386,60 +386,16 @@ def has_curly_brace(text: Column) -> Column:
     return F.contains(text, F.lit("{"))
 
 
-def char_run_sq_sum(text: Column) -> Column:
-    """Sum over distinct characters of count², as exact BIGINT — the
-    numerator of the Simpson (Herfindahl) character-concentration index.
-    ONE fold over the SORTED char array (longest-equal-run bookkeeping, same
-    shape as the repetition-stats fold): zero shuffle, stays in codegen, and
-    the integer result means the index later needs exactly one double
-    division — bitwise-safe under the DuckDB oracle no matter the
-    summation order."""
-    # split('', '') yields [''] (not []) — drop it so empty text folds to 0
-    sorted_c = F.array_sort(
-        F.filter(F.split(text, ""), lambda c: c != F.lit("")))
-    acc0 = F.struct(F.lit("").alias("prev"),
-                    F.lit(0).cast("bigint").alias("run"),
-                    F.lit(0).cast("bigint").alias("acc"))
-
-    def step(acc, x):
-        is_run = x == acc["prev"]
-        run = F.when(is_run, acc["run"] + 1).otherwise(F.lit(1).cast("bigint"))
-        # retire the finished run's run² when the char changes
-        acc_out = F.when(is_run, acc["acc"]) \
-            .otherwise(acc["acc"] + acc["run"] * acc["run"])
-        return F.struct(x.alias("prev"), run.alias("run"),
-                        acc_out.alias("acc"))
-
-    return F.aggregate(sorted_c, acc0, step,
-                       lambda a: a["acc"] + a["run"] * a["run"])
-
-
-def char_simpson(text: Column) -> Column:
-    """Simpson/Herfindahl concentration of the document's character
-    distribution: sum_c (count_c / n)², range (0, 1], 1 = one repeated
-    character.  The ALGEBRAIC stand-in for character entropy (monotone
-    transform of Rényi-2 entropy, which needs log — not identically rounded
-    across libms; see the quality-score sigmoid note).  High values flag
-    ascii-art / padding / single-char spam that token-level stats miss."""
-    n = F.length(text)
-    return F.when(n <= 0, F.lit(0.0)).otherwise(
-        char_run_sq_sum(text).cast("double") / (n * n).cast("double"))
-
-
-def distinct_char_frac(text: Column) -> Column:
-    """Distinct characters over total characters — the companion diversity
-    signal (low for repetitive junk, high for dense prose)."""
-    n = F.length(text)
-    return F.when(n <= 0, F.lit(0.0)).otherwise(
-        F.size(F.array_distinct(F.split(text, ""))).cast("double")
-        / n.cast("double"))
-
-
 def char_stats_fast(df: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text") -> DataFrame:
     """(id, n_chars_text, char_sq_sum, char_simpson, distinct_char_frac)
-    via one vectorized mapInPandas crossing — the batch twin of the
-    char_run_sq_sum / char_simpson / distinct_char_frac Column folds.
+    via one vectorized mapInPandas crossing.  The Column-fold references it
+    must match bitwise live in tests/reference_impl.py.
+
+    ``char_simpson`` = sum_c (count_c / n)², the algebraic stand-in for
+    character entropy (a monotone transform of Rényi-2 entropy; log is not
+    identically rounded across libms): high values flag ascii-art, padding
+    and single-char spam that token-level stats miss.
 
     Round-6 motivation is not just speed but DETERMINISM of speed: the
     expression form's per-codepoint array_sort + struct fold is big enough

@@ -14,7 +14,7 @@ the very same patterns.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..config import PII_PATTERNS
@@ -47,12 +47,3 @@ def scrub_rules_fired(text: Column) -> Column:
     # where the alternation found something PII-shaped
     return F.when(text.rlike(_ANY_PII), arr).otherwise(
         F.array().cast("array<string>"))
-
-
-def with_scrub(df: DataFrame, text_col: str = "extracted_text") -> DataFrame:
-    """Append ``scrubbed_text`` + ``scrub_rules`` (order: declared chain)."""
-    text = F.col(text_col)
-    return df.withColumns({
-        "scrubbed_text": scrubbed(text),
-        "scrub_rules": scrub_rules_fired(text),
-    })

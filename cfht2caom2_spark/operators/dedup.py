@@ -1,4 +1,5 @@
-"""Deduplication family: exact, MinHash+LSH, SimHash, n-gram Jaccard.
+"""Deduplication family: MinHash+LSH, SimHash, connected components,
+duplication weights.
 
 Reference analogue: duplicate-destination elimination preferring the canonical
 form (reference cfht_name.py:370-380) and obsolete-artifact cleanup
@@ -13,8 +14,8 @@ Scale notes (the part that matters at 10^12 docs):
   * the ONLY wide op is the band-bucket self-join; band keys are high-entropy
     (md5-derived), so buckets are balanced by construction and AQE skew-join
     covers residual hot buckets (e.g. boilerplate-identical pages);
-  * candidate pairs are Jaccard-verified before any row is dropped, so LSH
-    banding parameters trade recall, never precision;
+  * candidate pairs are verified (MinHash agreement estimate) before any row
+    is dropped, so LSH banding parameters trade recall, never precision;
   * winner selection is "earliest wins" (min sort key), the reference's W2
     first-wins semantics (cfht_name.py:370-380), made deterministic by a total
     ordering (order_col, id_col).
@@ -22,7 +23,8 @@ Scale notes (the part that matters at 10^12 docs):
 Dropping policy: a doc is removed if it is near-duplicate of ANY doc with a
 smaller sort key (pair-dominance, not transitive closure).  This is the
 standard one-pass policy for web-scale dedup — transitive closure needs
-iterative joins; ``connected_components_small`` provides it for modest inputs.
+iterative joins; ``minhash_losers_from_sig(policy="clusters")`` provides it
+via ``connected_components``.
 """
 
 from __future__ import annotations
@@ -32,20 +34,6 @@ from pyspark.sql import functions as F
 
 from ..functions.kernels import MERSENNE_31
 from ..functions.tokens import md5_fingerprint
-
-
-# --- exact -------------------------------------------------------------------
-
-def exact_dedup(df: DataFrame, text_col: str, order_cols: list[str]) -> DataFrame:
-    """Keep the first row (by order_cols) per normalized-text md5 — W2."""
-    w = Window.partitionBy(md5_fingerprint(F.col(text_col))).orderBy(
-        *[F.col(c) for c in order_cols]
-    )
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
 
 
 # --- shingles / minhash --------------------------------------------------------
@@ -184,79 +172,6 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
         .distinct()
     )
     return pairs
-
-
-def jaccard(df_pairs: DataFrame, df: DataFrame, id_col: str, text_col: str,
-            k: int = 3, carry_cols: tuple = ()) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs (verification stage).
-
-    ``carry_cols``: extra df columns carried onto the pair as <col>_a/_b —
-    lets callers fold e.g. the ordering key into this join instead of paying
-    two more joins later.
-    """
-    sh = df.select(F.col(id_col).alias("_jid"),
-                   word_shingles(F.col(text_col), k).alias("_sh"),
-                   *[F.col(c) for c in carry_cols])
-
-    def side(suffix):
-        s = sh.withColumnRenamed("_jid", f"id_{suffix}") \
-              .withColumnRenamed("_sh", f"_sh_{suffix}")
-        for c in carry_cols:
-            s = s.withColumnRenamed(c, f"{c}_{suffix}")
-        return s
-
-    out = (
-        df_pairs
-        .join(side("a"), "id_a")
-        .join(side("b"), "id_b")
-        .withColumn("_inter", F.size(F.array_intersect("_sh_a", "_sh_b")).cast("double"))
-        .withColumn("_union", F.size(F.array_union("_sh_a", "_sh_b")).cast("double"))
-        .withColumn("jaccard", F.col("_inter") / F.greatest(F.col("_union"), F.lit(1.0)))
-        .drop("_sh_a", "_sh_b", "_inter", "_union")
-    )
-    return out
-
-
-def minhash_dedup_losers(df: DataFrame, id_col: str, text_col: str,
-                         order_col: str, bands: int = 8, rows_per_band: int = 2,
-                         k: int = 3, threshold: float = 0.8,
-                         hash_fn=None) -> DataFrame:
-    """ids to drop: near-dup (verified Jaccard >= threshold) of an earlier doc.
-
-    'Earlier' = smaller (order_col, id_col); the winner of every verified pair
-    survives.  Returns a one-column DataFrame ``loser_id``.
-    """
-    keyed = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(order_col).alias("_ord"),
-        F.col(text_col).alias("_txt"),
-    )
-    # one row per id: the FIRST arrival's content/timestamp represents the id
-    # (re-arrivals of the same url must not create self-pairs or ambiguous
-    # ordering — the store_modified_files_only discipline, config.yml:33-36)
-    w = Window.partitionBy("_id").orderBy("_ord")
-    keyed = (
-        keyed.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1).drop("_rn")
-    )
-    # keyed feeds four scans (both band-join sides, both verify sides):
-    # persist so the upstream window/UDF work runs once
-    from pyspark import StorageLevel
-
-    keyed = keyed.persist(StorageLevel.MEMORY_AND_DISK)
-    pairs = lsh_candidate_pairs(keyed, "_id", "_txt", bands, rows_per_band, k,
-                                hash_fn)
-    # the ordering key rides the verify join (no extra joins afterwards)
-    verified = jaccard(pairs, keyed, "_id", "_txt", k,
-                       carry_cols=("_ord",)).filter(
-        F.col("jaccard") >= threshold
-    )
-    losers = verified.select(
-        F.when((F.col("_ord_a") < F.col("_ord_b"))
-               | ((F.col("_ord_a") == F.col("_ord_b")) & (F.col("id_a") < F.col("id_b"))),
-               F.col("id_b")).otherwise(F.col("id_a")).alias("loser_id")
-    ).distinct()
-    return losers
 
 
 # --- simhash -------------------------------------------------------------------
@@ -598,11 +513,6 @@ def connected_components(pairs: DataFrame, max_rounds: int = 10,
     return labels.union(roots)
 
 
-def connected_components_small(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
-    """Back-compat alias — the star-contraction version is safe at any size."""
-    return connected_components(pairs, max_rounds=max_iter)
-
-
 def cluster_losers(pairs: DataFrame, keyed: DataFrame,
                    id_col: str = "_id", ord_col: str = "_ord",
                    max_rounds: int = 10) -> DataFrame:
@@ -643,7 +553,6 @@ def minhash_losers_from_sig(df: DataFrame, id_col: str, order_col: str,
     shingle Jaccard: with 32 permutations the estimate has sigma ~0.07 at
     J=0.8, the same verification large-scale dedup pipelines use, and it
     touches only the 32-element signature arrays (no second pass over text).
-    The exact-Jaccard verifier remains available via minhash_dedup_losers.
 
     Plan shape: slim (id, ord, sig) projection -> first-arrival-per-id window
     -> band explode of (surrogate-id, band, key) ONLY -> self-join on
@@ -753,11 +662,7 @@ def duplication_weights(df: DataFrame, id_col: str = "doc_id",
     One window over the content fingerprint — the same shuffle key as the
     exact-dedup collapse; no joins.  Returns (id, dup_count, dup_weight).
     """
-    from pyspark.sql import Window as _W
-
-    from ..functions.tokens import md5_fingerprint
-
-    w = _W.partitionBy(md5_fingerprint(F.col(text_col)))
+    w = Window.partitionBy(md5_fingerprint(F.col(text_col)))
     n = F.count(F.lit(1)).over(w)
     return df.select(
         F.col(id_col),

@@ -21,6 +21,7 @@ writes contract the reference's retry loop provides (config.yml:100-102).
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -69,11 +70,27 @@ def write_lineage(lineage: DataFrame, path: str) -> None:
     lineage.write.mode("append").parquet(path)
 
 
-def read_lineage(spark: SparkSession, path: str) -> DataFrame:
+def read_store(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet store at ``path``, or None if nothing was written yet.
+
+    Only a missing store, or one with no data file (a first write that
+    crashed mid-commit leaves only the committer's ``_temporary``), means
+    "empty".  Any other failure (a corrupt store) raises: treating it as
+    empty would silently redo finished work and duplicate its output."""
     try:
         return spark.read.parquet(path)
-    except Exception:
+    except AnalysisException as e:
+        if e.getCondition() not in ("PATH_NOT_FOUND",
+                                    "UNABLE_TO_INFER_SCHEMA"):
+            raise
+        return None
+
+
+def read_lineage(spark: SparkSession, path: str) -> DataFrame:
+    lineage = read_store(spark, path)
+    if lineage is None:
         return spark.createDataFrame([], LINEAGE_SCHEMA)
+    return lineage
 
 
 def pending_work(pages: DataFrame, lineage: DataFrame,

@@ -13,9 +13,9 @@ visitor list for run and run_state (composable.py:83-88), and so do we.
 2. ``stream_pages`` — Structured Streaming over the table's data directory
    (file source discovers new parquet files = new snapshots), with
    ``foreachBatch`` applying the batch plan, checkpointed offsets replacing
-   the bookmark, and a watermarked tumbling-window metrics aggregate for the
-   late-data story (SURVEY §2.8: watermark needed only for windowed metrics;
-   files are immutable so there is no late-update semantics to handle).
+   the bookmark.  A 1-day watermark bounds ``dropDuplicatesWithinWatermark``
+   on url, so re-arrivals inside that horizon are dropped before the plan
+   (files are immutable, so there is no late-update semantics to handle).
 """
 
 from __future__ import annotations
@@ -23,7 +23,6 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -82,18 +81,10 @@ def process_increment(spark: SparkSession, table: SnapshotTable, out_dir: str,
         # tick's output once, so the fused pass still runs once
         # (operators/compact.py).
         from ..operators.compact import demote_against_history
+        from ..operators.resume import read_store
 
-        try:
-            history = spark.read.parquet(f"{out_dir}/decisions")
-        except AnalysisException as e:
-            # only "nothing written yet" means no history: a missing store
-            # (first tick), or one with no data file (a first tick that
-            # crashed mid-write leaves only the committer's _temporary).
-            # Anything else must not silently skip the dedup.
-            if e.getCondition() not in ("PATH_NOT_FOUND",
-                                        "UNABLE_TO_INFER_SCHEMA"):
-                raise
-            history = None
+        # a corrupt store raises rather than silently skipping the dedup
+        history = read_store(spark, f"{out_dir}/decisions")
         if history is not None:
             decisions = demote_against_history(decisions, history)
     # metrics ride the write action — one execution per tick, not two
@@ -146,15 +137,3 @@ def stream_pages(spark: SparkSession, table: SnapshotTable, out_dir: str,
         writer = writer.trigger(availableNow=True)
     return writer.start()
 
-
-def windowed_metrics(decisions: DataFrame, window: str = "1 day") -> DataFrame:
-    """Watermarked tumbling-window keep/drop counts (A6 metrics shape) —
-    usable identically on a static or streaming decisions frame."""
-    df = decisions
-    if decisions.isStreaming:
-        df = df.withWatermark("warc_ts", window)
-    return (
-        df.groupBy(F.window("warc_ts", window).alias("w"), F.col("keep"))
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .select(F.col("w.start").alias("window_start"), "keep", "n_docs")
-    )

@@ -12,10 +12,11 @@ engine — those are plain functions unit-tested separately; everything the
 Spark expression layer does (tokenization, stats, rules, minhash dedup) is
 re-derived here with independent code.
 
-The Spark expression references at the bottom (``minhash_signature``,
-``gram_set``) are not part of the labeler: they are the JVM side of the
-word-shingle kernel parity tests and build on the engine's Column-level
-``word_shingles`` and shingle hashes.
+The Spark expression references at the bottom are not part of the labeler:
+``minhash_signature`` and ``gram_set`` are the JVM side of the word-shingle
+kernel parity tests and build on the engine's Column-level ``word_shingles``
+and shingle hashes; ``char_run_sq_sum``, ``char_simpson`` and
+``distinct_char_frac`` are the Column folds ``char_stats_fast`` must match.
 """
 
 from __future__ import annotations
@@ -307,3 +308,55 @@ def gram_set(text, k: int = 3, hash_fn=None):
 
     return F.array_distinct(
         F.transform(word_shingles(text, k), hash_fn or shingle_hash))
+
+
+# --- Spark expression references of the character statistics ---------------
+# quality.char_stats_fast computes these in one Python crossing; the Column
+# folds below are its bitwise reference (test_char_stats_fast_parity).
+
+def char_run_sq_sum(text):
+    """Sum over distinct characters of count², as exact BIGINT — the
+    numerator of the Simpson (Herfindahl) character-concentration index.
+    ONE fold over the SORTED char array (longest-equal-run bookkeeping):
+    the integer result means the index needs exactly one double division,
+    bitwise-safe under the DuckDB oracle whatever the summation order."""
+    from pyspark.sql import functions as F
+
+    # split('', '') yields [''] (not []) — drop it so empty text folds to 0
+    sorted_c = F.array_sort(
+        F.filter(F.split(text, ""), lambda c: c != F.lit("")))
+    acc0 = F.struct(F.lit("").alias("prev"),
+                    F.lit(0).cast("bigint").alias("run"),
+                    F.lit(0).cast("bigint").alias("acc"))
+
+    def step(acc, x):
+        is_run = x == acc["prev"]
+        run = F.when(is_run, acc["run"] + 1).otherwise(F.lit(1).cast("bigint"))
+        # retire the finished run's run² when the char changes
+        acc_out = F.when(is_run, acc["acc"]) \
+            .otherwise(acc["acc"] + acc["run"] * acc["run"])
+        return F.struct(x.alias("prev"), run.alias("run"),
+                        acc_out.alias("acc"))
+
+    return F.aggregate(sorted_c, acc0, step,
+                       lambda a: a["acc"] + a["run"] * a["run"])
+
+
+def char_simpson(text):
+    """sum_c (count_c / n)², range (0, 1], 1 = one repeated character;
+    0.0 for empty text."""
+    from pyspark.sql import functions as F
+
+    n = F.length(text)
+    return F.when(n <= 0, F.lit(0.0)).otherwise(
+        char_run_sq_sum(text).cast("double") / (n * n).cast("double"))
+
+
+def distinct_char_frac(text):
+    """Distinct characters over total characters; 0.0 for empty text."""
+    from pyspark.sql import functions as F
+
+    n = F.length(text)
+    return F.when(n <= 0, F.lit(0.0)).otherwise(
+        F.size(F.array_distinct(F.split(text, ""))).cast("double")
+        / n.cast("double"))

@@ -1,4 +1,5 @@
-"""Operator-level tests: dedup family, similarity, backfill, merge.
+"""Operator-level tests: dedup family, similarity, decontamination, spans,
+sampling, packing, clustering.
 
 The analogue of the reference's per-operator unit layer (storage-name parsing
 tests, /root/reference/cfht2caom2/tests/test_storage_name.py) on tiny frames.
@@ -10,11 +11,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from cfht2caom2_spark.operators.backfill import (backfill_from_group,
-                                                 first_wins, last_wins_merge)
-from cfht2caom2_spark.operators.dedup import (connected_components_small,
-                                              exact_dedup,
-                                              minhash_dedup_losers, simhash,
+from cfht2caom2_spark.operators.dedup import (connected_components,
+                                              minhash_losers_from_sig,
+                                              minhash_sig_frame, simhash,
                                               word_shingles)
 from cfht2caom2_spark.operators.similarity import cosine_topk, lsh_ann
 
@@ -36,14 +35,11 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id bigint, text string, ord bigint")
 
 
-def test_exact_dedup(docs):
-    out = exact_dedup(docs, "text", ["ord"])
-    assert sorted(r["doc_id"] for r in out.collect()) == [1, 2, 3, 4]
-
-
 def test_minhash_losers(docs):
-    losers = minhash_dedup_losers(docs, "doc_id", "text", "ord",
-                                  threshold=0.7)
+    sigs = minhash_sig_frame(docs, "doc_id", "text", num_perms=32,
+                             out_id="doc_id", out_sig="minhash_sig")
+    losers = minhash_losers_from_sig(docs.join(sigs, "doc_id"), "doc_id",
+                                     "ord", threshold=0.7)
     got = sorted(r["loser_id"] for r in losers.collect())
     assert got == [2, 3, 5]  # 1 wins (lowest ord); 4 unrelated
 
@@ -67,41 +63,19 @@ def test_connected_components(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a bigint, id_b bigint")
     comp = {r["node"]: r["component"]
-            for r in connected_components_small(pairs).collect()}
+            for r in connected_components(pairs).collect()}
     assert comp[1] == comp[2] == comp[3] == 1
     assert comp[10] == comp[11] == 10
 
 
 def test_identity_projections(spark):
-    """P1-P4/S6: url identity columns and the FileInfo probe are pure
-    deterministic projections."""
-    import hashlib
+    """P1-P4: the url host is a pure deterministic projection."""
+    from cfht2caom2_spark.functions.identity import host
 
-    from cfht2caom2_spark.functions.identity import (doc_id_from_url, host,
-                                                     payload_info, salted_key)
-
-    df = spark.createDataFrame(
-        [("https://example.com/a/page.html", b"payload"),
-         ("https://example.com/b/doc.php", None)],
-        "url string, html binary")
-    out = df.select(
-        host(F.col("url")).alias("h"),
-        doc_id_from_url(F.col("url")).alias("d"),
-        payload_info(F.col("html")).alias("pi"),
-        salted_key(F.col("url"), 16).alias("sk"),
-    ).collect()
+    df = spark.createDataFrame([("https://example.com/a/page.html",)],
+                               "url string")
+    out = df.select(host(F.col("url")).alias("h")).collect()
     assert out[0]["h"] == "example.com"
-    assert out[0]["d"] == "/a/page"          # extension stripped
-    assert out[1]["d"] == "/b/doc"
-    assert out[0]["pi"]["n_bytes"] == len(b"payload")
-    assert out[0]["pi"]["md5"] == hashlib.md5(b"payload").hexdigest()
-    assert out[1]["pi"]["n_bytes"] == 0 and out[1]["pi"]["md5"] is None
-    assert out[0]["sk"].startswith("example.com#")
-    salt = int(out[0]["sk"].split("#")[1])
-    assert 0 <= salt < 16
-    # deterministic: same url -> same salt on re-evaluation
-    again = df.select(salted_key(F.col("url"), 16).alias("sk")).collect()
-    assert again[0]["sk"] == out[0]["sk"]
 
 
 def test_remove_boilerplate_lines(spark):
@@ -260,28 +234,6 @@ def test_lsh_ann_subset_of_bucket(emb):
     for r in out:
         b = sum((1 << i) for i in range(4) if vecs[r["vec_id"]][i] > 0)
         assert b == bucket0
-
-
-def test_backfill_from_group(spark):
-    df = spark.createDataFrame(
-        [(1, 1, None), (1, 2, "x"), (1, 3, None), (2, 1, None)],
-        "grp bigint, ord bigint, v string")
-    out = backfill_from_group(df, ["grp"], ["ord"], ["v"])
-    got = {(r["grp"], r["ord"]): r["v_filled"] for r in out.collect()}
-    assert got[(1, 1)] == "x" and got[(1, 3)] == "x"
-    assert got[(2, 1)] is None
-
-
-def test_first_wins_and_merge(spark):
-    df = spark.createDataFrame(
-        [(1, 1, "a"), (1, 2, "b"), (2, 1, "c")], "k bigint, v bigint, p string")
-    fw = first_wins(df, ["k"], ["v"])
-    assert {(r["k"], r["p"]) for r in fw.collect()} == {(1, "a"), (2, "c")}
-    old = spark.createDataFrame([(1, 1, "old")], "k bigint, v bigint, p string")
-    new = spark.createDataFrame([(1, 2, "new"), (3, 1, "n3")],
-                                "k bigint, v bigint, p string")
-    merged = last_wins_merge(old, new, ["k"], "v")
-    assert {(r["k"], r["p"]) for r in merged.collect()} == {(1, "new"), (3, "n3")}
 
 
 def test_host_lang_consensus_backfill(spark):
@@ -1328,6 +1280,8 @@ def test_char_stats_fast_parity(spark):
 
     from cfht2caom2_spark.functions import quality as Q
 
+    from . import reference_impl as R
+
     rows = [(0, "aaaa"), (1, "abcabc"), (2, ""), (3, "a"),
             (4, "the quick brown fox " * 3), (5, "zz  zz\tzz\nzz")]
     docs = spark.createDataFrame(rows, "doc_id bigint, text string")
@@ -1335,9 +1289,9 @@ def test_char_stats_fast_parity(spark):
     expr = {r["doc_id"]: r.asDict() for r in docs.select(
         "doc_id",
         F.length(text).cast("bigint").alias("n_chars_text"),
-        Q.char_run_sq_sum(text).alias("char_sq_sum"),
-        Q.char_simpson(text).alias("char_simpson"),
-        Q.distinct_char_frac(text).alias("distinct_char_frac"),
+        R.char_run_sq_sum(text).alias("char_sq_sum"),
+        R.char_simpson(text).alias("char_simpson"),
+        R.distinct_char_frac(text).alias("distinct_char_frac"),
     ).collect()}
     fast = {r["doc_id"]: r.asDict()
             for r in Q.char_stats_fast(docs, id_col="doc_id",

