@@ -554,41 +554,44 @@ def minhash_losers_from_sig(df: DataFrame, id_col: str, order_col: str,
     J=0.8, the same verification large-scale dedup pipelines use, and it
     touches only the 32-element signature arrays (no second pass over text).
 
-    Plan shape: slim (id, ord, sig) projection -> first-arrival-per-id window
-    -> band explode of (surrogate-id, band, key) ONLY -> self-join on
-    (band, key) -> distinct candidate pairs -> fetch both REAL ids +
-    signatures per PAIR -> estimator filter -> earliest-wins.  Text never
-    moves; the full 32-perm signature ships once per candidate pair instead
-    of once per banded row, and the ×bands explode carries an 8-byte
-    xxhash64 surrogate instead of the url (together ~12× less band-join
-    traffic than the round-1 shape — SCALE_RUNBOOK.md §3); candidate pairs
-    colliding in several bands are estimated once, not once per collision.
+    Precondition: ``df`` holds ONE row per id (``build_pipeline`` passes
+    one canonical row per url).  Nothing here re-ranks: a second row for an
+    id would enter the bands as its own document.
+
+    Plan shape: slim (id, ord, sig) projection, materialized once (eager
+    ``localCheckpoint``: it fans out to both sides of the band self-join
+    and both signature fetches, and a lazy persist would cost one cache-read
+    job per branch) -> band explode of (surrogate-id, band, key) ONLY ->
+    self-join on (band, key) -> distinct candidate pairs -> fetch both REAL
+    ids + signatures per PAIR -> estimator filter -> earliest-wins.  No
+    window, so the band self-join is the only shuffle of the signatures.
+    Text never moves; the full 32-perm signature ships once per candidate
+    pair instead of once per banded row, and the ×bands explode carries an
+    8-byte xxhash64 surrogate instead of the url (together ~12× less
+    band-join traffic than the round-1 shape — SCALE_RUNBOOK.md §3);
+    candidate pairs colliding in several bands are estimated once, not once
+    per collision.  The checkpoint lives in executor block storage: on
+    preemptible executors switch to ``checkpoint()`` with a checkpoint dir
+    (``connected_components``' deployment note).
+
+    ``persist_tracker`` is accepted and unused: nothing here persists.  It
+    stays because existing callers still pass it.
 
     ``policy``: ``"pairs"`` (default) drops a doc that is near-dup of ANY
-    earlier doc — one-pass, fully lazy.  ``"clusters"`` labels connected
-    components of the verified-pair graph and keeps only the earliest doc
-    per component (more aggressive on chains; see ``cluster_losers``).
-    NOTE: the clusters policy runs the star-contraction iterations EAGERLY
-    (each round materializes via localCheckpoint), so the upstream plan
-    executes when this function is CALLED, not at the caller's action —
-    upstream frames should be persisted (build_pipeline does this).
+    earlier doc — one pass after the checkpoint.  ``"clusters"`` labels
+    connected components of the verified-pair graph and keeps only the
+    earliest doc per component (more aggressive on chains; see
+    ``cluster_losers``); its star-contraction rounds also run EAGERLY.
+    Either way the upstream plan executes when this function is CALLED, not
+    at the caller's action — upstream frames should be materialized
+    (build_pipeline does this).
     """
-    from pyspark import StorageLevel
-
     num_perms = bands * rows_per_band
     keyed = df.select(
         F.col(id_col).alias("_id"),
         F.col(order_col).alias("_ord"),
         F.col(sig_col).alias("_sig"),
-    ).filter(F.col("_sig").isNotNull())
-    w = Window.partitionBy("_id").orderBy("_ord")
-    keyed = (
-        keyed.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1).drop("_rn")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    if persist_tracker is not None:
-        persist_tracker.append(keyed)
+    ).filter(F.col("_sig").isNotNull()).localCheckpoint(eager=True)
     # the banding/pair stages use an 8-byte xxhash64 SURROGATE of the id
     # (urls average 60-100 B — the id would dominate the banded row,
     # SCALE_RUNBOOK.md §3).  Collision accounting: a collision between

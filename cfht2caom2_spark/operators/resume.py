@@ -5,12 +5,16 @@ skip-unchanged-files gate — the reference records per-run outcomes
 (config/config.yml:50-84, asserted at tests/test_composable.py:187-190) and
 skips work whose md5 matches what was already stored
 (config/config.yml:33-36).  Recast: a ``lineage`` table with one row per
-completed work partition; a restarted run LEFT ANTI JOINs the input against it
-and recomputes nothing that finished (P15).
+completed work partition; a restarted run filters out the input rows of the
+days it lists and recomputes nothing that finished (P15).
 
 Work-partition key: the ``warc_ts`` day (the table's physical partition key),
-so resume granularity == storage partition granularity and the anti-join
-prunes whole directories at scan time (partition pruning, no data read).
+so resume granularity == storage partition granularity.  The done days are
+collected to the driver (one string per day) and applied as a literal
+``NOT IN`` filter on ``date_format(warc_ts)``.  That is a row-level filter,
+not partition pruning: the input's ``p_day`` column is dropped before the
+pipeline, so completed days are still scanned, then filtered out before the
+fused pass.  A fresh output has no lineage store and no filter at all.
 
 Idempotence under retries: lineage rows are written AFTER the decision rows
 for a day land (write-then-commit ordering); re-running a day overwrites its
@@ -95,16 +99,19 @@ def read_lineage(spark: SparkSession, path: str) -> DataFrame:
 
 def pending_work(pages: DataFrame, lineage: DataFrame,
                  snapshot_id: int | None = None, ts_col: str = "warc_ts") -> DataFrame:
-    """Input minus completed partitions — the resume anti-join (P15).
+    """Input minus completed partitions (P15).
 
-    The predicate is on the partition column, so with day-partitioned storage
-    Catalyst turns this into partition pruning, not a row-level scan."""
+    Collects the done day ids (the lineage store holds one short row per
+    completed day and run: thousands of strings on the driver, not data;
+    deduplicated here, which spares the collect a shuffle) and filters the
+    input by a literal ``NOT IN``; rows with a NULL day pass, as no lineage
+    row can name them.  A literal filter keeps ``pages``' plan free of a
+    join, so every later action over the result costs no broadcast job."""
     done = lineage
     if snapshot_id is not None:
         done = done.filter(F.col("input_snapshot_id") == snapshot_id)
-    done = done.select("partition_id").distinct()
-    return (
-        pages.withColumn("_pid", partition_id_col(ts_col))
-        .join(F.broadcast(done), F.col("_pid") == F.col("partition_id"), "left_anti")
-        .drop("_pid")
-    )
+    days = sorted({r[0] for r in done.select("partition_id").collect()})
+    if not days:
+        return pages
+    pid = partition_id_col(ts_col)
+    return pages.filter(pid.isNull() | ~pid.isin(days))

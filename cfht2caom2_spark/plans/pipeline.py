@@ -10,14 +10,17 @@ visit_data -> write -> store), recast as ONE declarative DataFrame graph
          (one mapInPandas pass, broadcast models; S4/S5)     [narrow]
       -> heuristic stats (built-in exprs; P11)               [narrow]
       -> scrub (regexp chains; P10)                          [narrow]
-      -> minhash dedup flag (J8)                             [the one wide op]
+      -> exact + minhash dedup flags (J8)                    [the wide ops]
       -> decision (P14)                                      [narrow]
       -> decisions sink + lineage rows (A6)
 
 Everything upstream of dedup pipelines in one stage per partition (the
 single-visit fusion lesson, composable.py:90-98).  At 100 TB the plan's cost
-is: 1 scan + 1 fused Arrow pass + 1 band-bucket shuffle + 1 small agg; no
-other data movement.
+is: 1 scan + 1 fused Arrow pass + the dedup's slim shuffles + 1 loser
+join-back; no other data movement (SCALE_RUNBOOK.md §3).  The dedup ranks
+its slim (url, ts, sha, signature) rows ONCE: the url and content-hash
+windows each shuffle once into a checkpoint that the exact losers and the
+banded MinHash self-join both read.
 """
 
 from __future__ import annotations
@@ -33,7 +36,7 @@ from ..functions.quality import with_quality_score, with_quality_stats
 from ..functions.scrub import scrub_rules_fired, scrubbed
 from ..operators.decision import with_decision
 from ..operators.dedup import minhash_losers_from_sig
-from ..operators.resume import lineage_rows, pending_work, read_lineage, write_lineage
+from ..operators.resume import lineage_rows, pending_work, read_store, write_lineage
 
 OUTPUT_COLUMNS = [
     "url", "warc_ts", "extracted_sha256", "lang_pred", "lang_conf",
@@ -85,7 +88,7 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
     df = pages
     if profile.canonicalize_urls:
         # identity normalization FIRST: every downstream consumer of the id
-        # (exact-dup url ranking, host consensus, resume anti-join, the
+        # (exact-dup url ranking, host consensus, resume filter, the
         # sha-folded derived-frame keys) sees the canonical form, so
         # campaign variants of one page are one identity everywhere
         from ..functions.identity import canonical_url
@@ -383,11 +386,22 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
         # exact duplicate.
         alive = base.select(*slim_cols).filter(
             F.col("extracted_sha256").isNotNull())
-        w_url = _W.partitionBy(id_col).orderBy(order_col)
+        # the content hash breaks (url, warc_ts) ties: two arrivals of one
+        # url may share both with different content (_row_key), and an
+        # arbitrary pick would make the url's exact_duplicate flag depend
+        # on partition order
+        w_url = _W.partitionBy(id_col).orderBy(order_col, "extracted_sha256")
         canonical = alive.withColumn("_url_rn", F.row_number().over(w_url)) \
             .filter(F.col("_url_rn") == 1).drop("_url_rn")
         w_sha = _W.partitionBy("extracted_sha256").orderBy(order_col, id_col)
-        ranked = canonical.withColumn("_sha_rn", F.row_number().over(w_sha))
+        # both windows run ONCE: the exact losers and the minhash candidates
+        # read the same ranked rows.  Left lazy, each branch would re-run
+        # both window shuffles; a lazy persist would cost one cache-read job
+        # per branch.  Same preemption caveat as the CC rounds
+        # (operators/dedup.py): on preemptible executors switch to
+        # checkpoint() with a checkpoint dir.
+        ranked = canonical.withColumn("_sha_rn", F.row_number().over(w_sha)) \
+            .localCheckpoint(eager=True)
         exact_losers = ranked.filter(F.col("_sha_rn") > 1).select(
             F.col(id_col), F.lit("exact").alias("_dup_kind"))
 
@@ -399,7 +413,6 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
             bands=profile.minhash_bands,
             rows_per_band=profile.minhash_rows_per_band,
             threshold=profile.dedup_jaccard,
-            persist_tracker=persist_tracker,
             policy=profile.dedup_policy,
         )
         near_losers = losers.select(
@@ -434,20 +447,25 @@ def run_batch(spark: SparkSession, pages: DataFrame, out_dir: str,
               benchmark: DataFrame | None = None,
               quality_weights: dict | None = None,
               ppl_model=None) -> dict:
-    """Materializing driver: resume anti-join -> pipeline -> decisions +
+    """Materializing driver: resume filter -> pipeline -> decisions +
     previews + lineage.  Decisions are written partitioned by day with
     dynamic partition overwrite, so re-running a day is idempotent
     (exactly-once effect under at-least-once execution — SURVEY §7.4 hard
     part (4)).  Previews (S11 derived artifacts) are projected from the
-    just-written day partitions — a narrow read-back, no pipeline recompute."""
+    just-written day partitions — a narrow read-back, no pipeline recompute.
+
+    Every fixed step runs once: the row count, the kept count and the list
+    of days written ride the write's Observation, so ``work`` is evaluated
+    by the write alone.  Only a resume against an existing lineage store
+    probes ``work`` first, so a run with nothing left to do stays cheap."""
     lineage_path = f"{out_dir}/lineage"
     decisions_path = f"{out_dir}/decisions"
     work = pages
-    if resume:
-        lineage = read_lineage(spark, lineage_path)
+    lineage = read_store(spark, lineage_path) if resume else None
+    if lineage is not None:
         work = pending_work(pages, lineage, snapshot_id=snapshot_id)
-    if work.isEmpty():
-        return {"processed": 0, "partitions": 0}
+        if work.isEmpty():
+            return {"processed": 0, "partitions": 0}
 
     from pyspark.sql import Observation
 
@@ -460,12 +478,15 @@ def run_batch(spark: SparkSession, pages: DataFrame, out_dir: str,
     decisions = decisions.withColumn(
         "p_day", F.date_format(F.col("warc_ts"), "yyyy-MM-dd")
     )
-    # free metrics riding the write action (A6) — no second pass over the data
+    # free metrics riding the write action (A6) — no second pass over the
+    # data.  collect_set skips NULL, so rows with no day are flagged apart.
     obs = Observation("pipeline_metrics")
     decisions = decisions.observe(
         obs,
         F.count(F.lit(1)).alias("n"),
         F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("kept"),
+        F.collect_set("p_day").alias("days"),
+        F.bool_or(F.col("p_day").isNull()).alias("null_day"),
     )
     (decisions.write.mode("overwrite")
      .option("partitionOverwriteMode", "dynamic")  # scoped to THIS write
@@ -473,14 +494,15 @@ def run_batch(spark: SparkSession, pages: DataFrame, out_dir: str,
     metrics = obs.get
     for df_p in persisted:
         df_p.unpersist()
+    if metrics["n"] == 0:
+        return {"processed": 0, "partitions": 0}
 
     # read-back restricted to the days just written: p_day is the partition
     # column, so the isin filter partition-prunes at planning time and the
     # downstream aggregates column-prune to the few columns they touch
-    written = spark.read.parquet(decisions_path)
-    done_days = [r["p_day"] for r in work.select(
-        F.date_format("warc_ts", "yyyy-MM-dd").alias("p_day")).distinct().collect()]
-    fresh = written.filter(F.col("p_day").isin(done_days))
+    done_days = metrics["days"]
+    fresh = spark.read.parquet(decisions_path).filter(
+        F.col("p_day").isin(done_days))
     if previews:
         from ..operators.preview import write_previews
 
@@ -488,4 +510,4 @@ def run_batch(spark: SparkSession, pages: DataFrame, out_dir: str,
     lin = lineage_rows(fresh, profile, snapshot_id)
     write_lineage(lin, lineage_path)
     return {"processed": metrics["n"], "kept": metrics["kept"],
-            "partitions": len(done_days)}
+            "partitions": len(done_days) + bool(metrics["null_day"])}

@@ -315,6 +315,32 @@ def test_decontam_same_url_ts_different_text_not_cross_flagged(spark):
     assert sorted(flags.values()) == [False, True]
 
 
+def test_url_canonical_tie_broken_by_content_hash(spark):
+    """Two arrivals of one url legally sharing warc_ts with different text:
+    the url's canonical row is chosen by content hash, not by arrival
+    order.  _CLEAN_A also sits on an earlier url, so tie.com is an exact
+    duplicate only when its canonical is the _CLEAN_A row; the decisions
+    must not depend on how the input is partitioned."""
+    rows = [
+        ("https://early.com/x", 0, _CLEAN_A),
+        ("https://tie.com/a", 10, _CLEAN_A),
+        ("https://tie.com/a", 10, _CLEAN_B),
+    ]
+
+    def decisions(pages):
+        return sorted((r["url"], r["extracted_sha256"], r["keep"],
+                       tuple(r["rules"]))
+                      for r in build_pipeline(pages, spark,
+                                              has_html=False).collect())
+
+    want = decisions(_mk_pages(spark, rows).repartition(1))
+    assert decisions(_mk_pages(spark, rows[::-1]).repartition(1)) == want
+    assert decisions(
+        _mk_pages(spark, rows).repartition(4, "warc_ts")) == want
+    assert decisions(
+        _mk_pages(spark, rows[::-1]).repartition(4, "warc_ts")) == want
+
+
 def test_boilerplate_duplicate_rows_reassemble_one_copy(spark):
     """Duplicated (url, warc_ts, text) rows share a reassembly id by
     construction; the line-deduped reassembly must hand BOTH carrier rows

@@ -84,6 +84,59 @@ def test_dedup_loser_join_has_no_mandatory_broadcast(spark):
         full._jdf.queryExecution().analyzed().toString()
 
 
+def test_dedup_ranks_once_before_the_plan(spark):
+    """The url and content-hash windows run once, into a frame that the
+    exact losers and the minhash candidates both read: the returned plan
+    holds no Window.  A Window here means each dedup branch re-runs both
+    window shuffles at the write."""
+    from cfht2caom2_spark.plans.pipeline import build_pipeline
+    from cfht2caom2_spark.sources.pages import synth_pages
+
+    df = build_pipeline(synth_pages(spark, 200), spark, dedupe=True)
+    assert "Window" not in df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_minhash_losers_do_not_rerank(spark):
+    """minhash_losers_from_sig takes one row per id (its precondition): no
+    per-id window ranks its input again."""
+    from cfht2caom2_spark.operators.dedup import minhash_losers_from_sig
+
+    sigs = spark.createDataFrame(
+        [(f"u{i}", i, [i % 3] * 8) for i in range(12)],
+        "url string, ord int, minhash_sig array<bigint>")
+    losers = minhash_losers_from_sig(sigs, "url", "ord", bands=2,
+                                     rows_per_band=4, threshold=0.8)
+    assert "Window" not in \
+        losers._jdf.queryExecution().optimizedPlan().toString()
+    assert sorted(r[0] for r in losers.collect()) == \
+        sorted(f"u{i}" for i in range(3, 12))
+
+
+# Spark jobs one run_batch call launched over 300 synthetic pages with a
+# fresh output, under the test session (8 cores, 8 shuffle partitions)
+RUN_BATCH_JOBS = 18
+
+
+def test_run_batch_job_count(spark, tmp_path):
+    """Every fixed step of run_batch runs once: one rank of the dedup
+    frame, no emptiness probe or resume join on a fresh output, and the
+    day list from the write's Observation.  Each extra job is fixed cost
+    on every batch."""
+    from cfht2caom2_spark.plans.pipeline import run_batch
+    from cfht2caom2_spark.sources.pages import synth_pages
+
+    sc = spark.sparkContext
+    pages = synth_pages(spark, 300)
+    sc.setJobGroup("test_run_batch_job_count", "run_batch job count")
+    try:
+        res = run_batch(spark, pages, str(tmp_path / "out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res["processed"] == 300
+    jobs = sc.statusTracker().getJobIdsForGroup("test_run_batch_job_count")
+    assert len(jobs) <= RUN_BATCH_JOBS, len(jobs)
+
+
 def test_flagship_plan_shape_under_production_conf(spark):
     """The plan invariants must hold under the checked-in 100-TB conf
     (conf/spark-100tb.conf): shuffle.partitions=2000 + AQE on.  Guards

@@ -66,6 +66,45 @@ def test_partial_lineage_resumes_missing_days_only(spark, store):
     assert dec.count() == N
 
 
+def test_fresh_output_empty_input(spark, tmp_path):
+    """A fresh output has no lineage store, so run_batch skips the
+    emptiness probe: an empty input must still report nothing done and
+    record no lineage rows."""
+    from cfht2caom2_spark.operators.resume import read_lineage
+    from cfht2caom2_spark.sources.pages import PAGES_SCHEMA
+
+    out = str(tmp_path / "out")
+    empty = spark.createDataFrame([], PAGES_SCHEMA)
+    assert run_batch(spark, empty, out) == {"processed": 0, "partitions": 0}
+    assert read_lineage(spark, f"{out}/lineage").count() == 0
+
+
+def test_crash_between_writes_reruns_identically(spark, store):
+    """A crash after the decisions write but before the lineage write
+    leaves no record of the run: the rerun redoes every day and must leave
+    the same decisions, byte for byte, with one lineage row per day."""
+    import shutil
+
+    table, sid, root = store
+    out = f"{root}/out_crash"
+
+    def decisions():
+        return sorted(spark.read.parquet(f"{out}/decisions").collect(),
+                      key=repr)
+
+    run_batch(spark, table.read(spark, sid).drop("p_day"), out,
+              snapshot_id=sid)
+    first = decisions()
+    shutil.rmtree(f"{out}/lineage")
+    r2 = run_batch(spark, table.read(spark, sid).drop("p_day"), out,
+                   snapshot_id=sid)
+    assert r2["processed"] == N and r2["partitions"] == 5
+    assert decisions() == first
+    lineage = spark.read.parquet(f"{out}/lineage")
+    assert lineage.count() == 5
+    assert lineage.agg(F.sum("n_in")).collect()[0][0] == N
+
+
 def test_snapshot_incremental_state_mode(spark, store, tmp_path):
     table, sid, root = store
     s2 = table.append(
