@@ -27,8 +27,7 @@ from pyspark.sql import functions as F
 
 def remove_boilerplate_lines(df: DataFrame, text_col: str = "text",
                              id_col: str = "doc_id",
-                             min_doc_freq: int = 3,
-                             checkpoint: bool = True) -> DataFrame:
+                             min_doc_freq: int = 3) -> DataFrame:
     """Strip lines whose trimmed form appears in >= min_doc_freq distinct
     docs; returns (id_col, cleaned_text) with surviving lines rejoined in
     original order.  Docs whose every line is boilerplate drop out (same
@@ -36,16 +35,14 @@ def remove_boilerplate_lines(df: DataFrame, text_col: str = "text",
     NULL-text docs (no lines to survive) — run this on rows that passed the
     empty_payload gate, or left-join the result back by id to keep them.
 
-    ``checkpoint`` (round 6, guide §2.4): the exploded line stream feeds
+    Pinned stream (round 6, guide §2.4): the exploded line stream feeds
     both the document-frequency groupBy and the anti-join probe; a lazy
     localCheckpoint pins it so the split+explode runs once, not once per
     consumer (the span/decontam pay-once discipline)."""
     lines = df.select(
         F.col(id_col),
         F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
-    )
-    if checkpoint:
-        lines = lines.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     norm = F.trim(F.col("line"))
     boiler = (
         lines.filter(norm != "")

@@ -95,7 +95,7 @@ def compact_decisions(spark: SparkSession, decisions_path: str,
 # ---------------------------------------------------------------------------
 # online cross-increment dedup (one left join against the history's shas)
 #
-# The increment is the tick's un-persisted pipeline output: every plan
+# The increment is the tick's unpinned pipeline output: every plan
 # branch that references it re-runs the fused MapInPandas pass.  So the
 # demotion references it once and never filters on ``keep`` — such a
 # filter is pushed below the pipeline's decision projection, where

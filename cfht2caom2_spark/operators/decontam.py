@@ -118,8 +118,7 @@ def decontaminate(docs: DataFrame, bench: DataFrame,
                   id_col: str = "doc_id", text_col: str = "text",
                   k: int = 3, min_overlap: int = 5,
                   hash_fn=None, hint_broadcast: bool = False,
-                  prefilter_bits: int = 1 << 22,
-                  checkpoint: bool = True) -> DataFrame:
+                  prefilter_bits: int = 1 << 22) -> DataFrame:
     """Per-doc contamination flags: (id, n_grams, n_overlap, contaminated).
 
     ``n_overlap`` counts the doc's distinct grams that appear anywhere in the
@@ -137,21 +136,18 @@ def decontaminate(docs: DataFrame, bench: DataFrame,
     bit-identical with the filter on or off (exact join downstream; the
     bitmap has no false negatives).
 
-    ``checkpoint`` (round 6, guide §2.4): the per-doc gram table feeds the
-    exploded overlap stream AND the final n_grams projection, and the bench
-    gram table feeds the bitmap AND the overlap join — Catalyst reuses
-    neither subtree across the differently-pruned consumers, so the
+    Pinned gram frames (round 6, guide §2.4): the per-doc gram table
+    feeds the exploded overlap stream AND the final n_grams projection, and
+    the bench gram table feeds the bitmap AND the overlap join — Catalyst
+    reuses neither subtree across the differently-pruned consumers, so the
     tokenize + shingle + hash work (the dominant cost; md5 in oracle mode)
     was evaluated once per branch.  Lazy localCheckpoints pin both slim
     gram frames so every consumer reads the blocks (sf1.0: 15.2 s -> ~5 s).
-    ``checkpoint=False`` keeps full lineage for plan inspection.
     """
-    grams = gram_set_frame(docs, id_col, text_col, k, hash_fn)
-    if checkpoint:
-        grams = grams.localCheckpoint(eager=False)
-    bench_g = benchmark_grams(bench, text_col=text_col, k=k, hash_fn=hash_fn)
-    if checkpoint:
-        bench_g = bench_g.localCheckpoint(eager=False)
+    grams = gram_set_frame(docs, id_col, text_col, k, hash_fn) \
+        .localCheckpoint(eager=False)
+    bench_g = benchmark_grams(bench, text_col=text_col, k=k,
+                              hash_fn=hash_fn).localCheckpoint(eager=False)
     if hint_broadcast:
         bench_g = F.broadcast(bench_g)
 
@@ -257,8 +253,7 @@ def fuzzy_decontaminate(docs: DataFrame, bench: DataFrame,
 def decontam_report(docs: DataFrame, bench: DataFrame,
                     id_col: str = "doc_id", text_col: str = "text",
                     k: int = 3, min_overlap: int = 5,
-                    hash_fn=None, prefilter_bits: int = 1 << 22,
-                    checkpoint: bool = True) -> DataFrame:
+                    hash_fn=None, prefilter_bits: int = 1 << 22) -> DataFrame:
     """Per-EVAL-doc contamination audit: for each benchmark doc, how many
     training docs share >= min_overlap distinct k-grams with IT, and the
     deepest such overlap.  The doc-level pass (``decontaminate``) answers
@@ -276,11 +271,10 @@ def decontam_report(docs: DataFrame, bench: DataFrame,
         id_col, F.explode("_grams").alias("_g"))
     bench_gd = gram_set_frame(bench, id_col, text_col, k, hash_fn).select(
         F.col(id_col).alias("_bid"), F.explode("_grams").alias("_g"))
-    if checkpoint:
-        # bench_gd feeds the bitmap AND the pair join (decontaminate's
-        # recompute pattern); the corpus stream is consumed once, so only
-        # the bench side is pinned
-        bench_gd = bench_gd.localCheckpoint(eager=False)
+    # bench_gd feeds the bitmap AND the pair join (decontaminate's
+    # recompute pattern); the corpus stream is consumed once, so only the
+    # bench side is pinned
+    bench_gd = bench_gd.localCheckpoint(eager=False)
     if prefilter_bits:
         bitmap = bench_gram_bitmap(
             bench_gd.select(F.col("_g").alias("bench_gram")).distinct(),

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..functions.kernels import MERSENNE_31
 from ..functions.tokens import md5_fingerprint
+from ..session import release
 
 
 # --- shingles / minhash --------------------------------------------------------
@@ -312,7 +313,7 @@ def simhash_pairs(docs: DataFrame, id_col: str = "doc_id",
     # shingle+hash+fold signature from the scan (2x the dominant cost);
     # materialize the slim (id, 8-byte simhash) frame once — at corpus
     # scale this is the same pay-once discipline as the minhash signature
-    # persist in the pipeline
+    # pin in the pipeline
     sh = sh.localCheckpoint(eager=False)
     bands = sh.select(
         "_id", "_sh",
@@ -418,15 +419,12 @@ def connected_components(pairs: DataFrame, max_rounds: int = 10,
     convergence ``.count()`` job: each round materializes via localCheckpoint
     (which also truncates the iterative plan's lineage) and the convergence
     probe — "no dst is still a src", i.e. the graph is a star forest — is a
-    left-semi ``isEmpty`` over those cached edges.
+    left-semi ``isEmpty`` over those checkpointed edges.
 
-    Cluster deployment note: ``localCheckpoint`` stores round results in
-    executor block storage, which is NOT replayable — losing an executor
-    mid-algorithm fails the job (a retry is correct, never corrupt).  On a
-    large cluster with preemptible executors, set
-    ``spark.sparkContext.setCheckpointDir`` and swap ``localCheckpoint()``
-    for ``checkpoint()`` — reliable storage, same semantics, one extra
-    write per round.
+    Each round's checkpoint is released once its successor is
+    materialized, so only the final round stays pinned (the returned frame
+    reads it; Spark's cleaner frees it with the frame).  Preemption
+    caveat: ``session.release``.
 
     Returns (node, component) with component = min node id of the cluster;
     nodes absent from ``pairs`` (singletons) are not returned.
@@ -468,16 +466,20 @@ def connected_components(pairs: DataFrame, max_rounds: int = 10,
         # (node, min-id component) labeling in one collect.  The iterative
         # path below remains THE scale path; equivalence is pinned by
         # tests/test_operators.py::test_connected_components_paths_agree.
-        return _cc_driver_small(pairs.sparkSession, edges)
+        small = _cc_driver_small(pairs.sparkSession, edges)
+        release([edges])
+        return small
     # defaultParallelism as the ceiling, not edges.rdd.getNumPartitions():
     # the .rdd handle would force a DF->RDD conversion just to read a number
     cur = edges.sparkSession.sparkContext.defaultParallelism
     target = max(1, min(cur, n_edges // 50_000 + 1))
     if target < cur:
-        edges = edges.repartition(target).localCheckpoint()
+        edges, prev = edges.repartition(target).localCheckpoint(), edges
+        release([prev])
     converged = False
     for _ in range(max_rounds):
-        edges = _small_star(_large_star(edges)).localCheckpoint()
+        edges, prev = _small_star(_large_star(edges)).localCheckpoint(), edges
+        release([prev])
         # converged iff the edge set IS a star forest: every src points to
         # exactly one dst AND no dst is itself a src.  (The second condition
         # alone is NOT sufficient — a node attached to two different roots
@@ -570,12 +572,12 @@ def minhash_losers_from_sig(df: DataFrame, id_col: str, order_col: str,
     8-byte xxhash64 surrogate instead of the url (together ~12× less
     band-join traffic than the round-1 shape — SCALE_RUNBOOK.md §3);
     candidate pairs colliding in several bands are estimated once, not once
-    per collision.  The checkpoint lives in executor block storage: on
-    preemptible executors switch to ``checkpoint()`` with a checkpoint dir
-    (``connected_components``' deployment note).
+    per collision.  The checkpoint lives in executor block storage
+    (preemption caveat: ``session.release``).
 
-    ``persist_tracker`` is accepted and unused: nothing here persists.  It
-    stays because existing callers still pass it.
+    ``persist_tracker``: optional list the pinned signature frame is
+    appended to, for the caller to ``session.release`` once the losers
+    have been read.
 
     ``policy``: ``"pairs"`` (default) drops a doc that is near-dup of ANY
     earlier doc — one pass after the checkpoint.  ``"clusters"`` labels
@@ -592,6 +594,8 @@ def minhash_losers_from_sig(df: DataFrame, id_col: str, order_col: str,
         F.col(order_col).alias("_ord"),
         F.col(sig_col).alias("_sig"),
     ).filter(F.col("_sig").isNotNull()).localCheckpoint(eager=True)
+    if persist_tracker is not None:
+        persist_tracker.append(keyed)
     # the banding/pair stages use an 8-byte xxhash64 SURROGATE of the id
     # (urls average 60-100 B — the id would dominate the banded row,
     # SCALE_RUNBOOK.md §3).  Collision accounting: a collision between

@@ -129,8 +129,7 @@ def feature_weights(feats: DataFrame, min_count: int,
 def importance_weights(docs: DataFrame, target_pred: Column,
                        id_col: str = "doc_id", text_col: str = "text",
                        n_max: int = 2, min_count: int = 5,
-                       hash_buckets: int | None = None,
-                       checkpoint: bool = True) -> DataFrame:
+                       hash_buckets: int | None = None) -> DataFrame:
     """Per-document DSIR importance: (id, n_feats, importance_scaled,
     importance).
 
@@ -141,7 +140,7 @@ def importance_weights(docs: DataFrame, target_pred: Column,
     end.  Out-of-vocabulary features contribute 0 (documented DSIR
     behavior: unseen features carry no evidence either way).
 
-    ``checkpoint`` (round 6; VERDICT r5 item 6): the exploded (id,
+    Pinned stream (round 6; VERDICT r5 item 6): the exploded (id,
     is_target, feature) stream feeds BOTH the weight-table aggregation and
     the scoring join; weights must be complete before scoring, so two jobs
     are inherent.  In HASHED mode the stream is folded to its bucket id
@@ -160,8 +159,7 @@ def importance_weights(docs: DataFrame, target_pred: Column,
             "feature",
             F.pmod(F.xxhash64("feature"),
                    F.lit(hash_buckets)).cast("string"))
-        if checkpoint:
-            feats = feats.localCheckpoint(eager=False)
+        feats = feats.localCheckpoint(eager=False)
     lam = feature_weights(feats, min_count=min_count,
                           hash_buckets=hash_buckets, pre_hashed=True)
     scoring = feats

@@ -65,8 +65,7 @@ def global_shuffle(df: DataFrame, id_col: str = "doc_id", seed: int = 0,
 def pack_blocks(docs: DataFrame, id_col: str | list[str] = "doc_id",
                 text_col: str = "text", block_tokens: int = 1024,
                 count_fn=ws_token_count, order_col: str | None = None,
-                num_partitions: int | None = None,
-                checkpoint: bool = True) -> DataFrame:
+                num_partitions: int | None = None) -> DataFrame:
     """Assign every document its token span in the concatenate-and-chop
     packing: docs are laid end-to-end in ``order_col`` order (default: the
     id itself; pass a ``global_shuffle`` key column for shuffled epochs) and
@@ -85,46 +84,14 @@ def pack_blocks(docs: DataFrame, id_col: str | list[str] = "doc_id",
     contiguous range split: the running sum restarts at 0 in every
     partition and the broadcast prefix adds back everything to its left.
     """
-    from pyspark.sql.types import (IntegerType, LongType, StructField,
-                                   StructType)
-
     ids = [id_col] if isinstance(id_col, str) else list(id_col)
-    order = order_col or ids[0]
-    sel = [*[F.col(c) for c in ids], F.col(order).alias("_ord"),
-           count_fn(F.col(text_col)).alias("n_tokens")]
-    slim = docs.select(*sel)
-    if num_partitions:
-        slim = slim.repartitionByRange(num_partitions, "_ord", *ids)
-    else:
-        slim = slim.repartitionByRange("_ord", *ids)
-    slim = slim.sortWithinPartitions("_ord", *ids)
-
-    # fresh StructType — StructType.add MUTATES, and slim.schema is the
-    # DataFrame's cached schema object
-    out_schema = StructType(list(slim.schema.fields)
-                            + [StructField("_pid", IntegerType()),
-                               StructField("_local_cum", LongType())])
-
-    def _running_sum(batches):
-        from pyspark import TaskContext
-        pid = TaskContext.get().partitionId()
-        run = 0
-        for pdf in batches:
-            c = pdf["n_tokens"].cumsum() + run
-            if len(c):
-                run = int(c.iloc[-1])
-            yield pdf.assign(_pid=pid, _local_cum=c.astype("int64"))
-
-    with_local = slim.mapInPandas(_running_sum, out_schema)
     # pin the sampled range boundaries AND run the Arrow pass once: the
     # totals build and the final probe must see the same pid assignment
     # (see module docstring); lazy like the dedup signature frames, so no
-    # job runs at plan-build time.  checkpoint=False is an inspection seam
-    # ONLY (tests/test_plan_shape.py reads the full lineage through it) —
-    # executing with it off could legally resample range boundaries
-    # between the two consumers.
-    if checkpoint:
-        with_local = with_local.localCheckpoint(eager=False)
+    # job runs at plan-build time
+    with_local = _running_sums(docs, ids, order_col or ids[0], text_col,
+                               count_fn, num_partitions) \
+        .localCheckpoint(eager=False)
 
     # per-partition totals = the last running sum of each partition; the
     # partial agg is map-side, so the exchange carries n_partitions rows
@@ -152,6 +119,44 @@ def pack_blocks(docs: DataFrame, id_col: str | list[str] = "doc_id",
                 F.when(F.col("n_tokens") > 0, last - first + 1)
                  .otherwise(F.lit(0)).cast("bigint").alias("n_blocks"),
             ))
+
+
+def _running_sums(docs: DataFrame, ids: list[str], order: str,
+                  text_col: str, count_fn,
+                  num_partitions: int | None) -> DataFrame:
+    """The corpus side of ``pack_blocks``, before its pin: range-partition
+    the slim (ids, _ord, n_tokens) rows by the order key, sort within each
+    partition, and add (_pid, _local_cum), the running token sum that
+    restarts at 0 in every partition."""
+    from pyspark.sql.types import (IntegerType, LongType, StructField,
+                                   StructType)
+
+    sel = [*[F.col(c) for c in ids], F.col(order).alias("_ord"),
+           count_fn(F.col(text_col)).alias("n_tokens")]
+    slim = docs.select(*sel)
+    if num_partitions:
+        slim = slim.repartitionByRange(num_partitions, "_ord", *ids)
+    else:
+        slim = slim.repartitionByRange("_ord", *ids)
+    slim = slim.sortWithinPartitions("_ord", *ids)
+
+    # fresh StructType — StructType.add MUTATES, and slim.schema is the
+    # DataFrame's cached schema object
+    out_schema = StructType(list(slim.schema.fields)
+                            + [StructField("_pid", IntegerType()),
+                               StructField("_local_cum", LongType())])
+
+    def _running_sum(batches):
+        from pyspark import TaskContext
+        pid = TaskContext.get().partitionId()
+        run = 0
+        for pdf in batches:
+            c = pdf["n_tokens"].cumsum() + run
+            if len(c):
+                run = int(c.iloc[-1])
+            yield pdf.assign(_pid=pid, _local_cum=c.astype("int64"))
+
+    return slim.mapInPandas(_running_sum, out_schema)
 
 
 def materialize_blocks(docs: DataFrame, packed: DataFrame,

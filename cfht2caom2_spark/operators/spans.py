@@ -214,8 +214,7 @@ def _span_intervals(stream: DataFrame, id_col: str, k: int,
 
 def repeated_spans(docs: DataFrame, id_col: str = "doc_id",
                    text_col: str = "text", k: int = 50,
-                   key_fn=None, min_count: int = 2,
-                   checkpoint: bool = True) -> DataFrame:
+                   key_fn=None, min_count: int = 2) -> DataFrame:
     """Per-doc duplicated-span summary:
     (id, n_tokens, n_spans, dup_token_count, dup_token_frac).
 
@@ -226,20 +225,18 @@ def repeated_spans(docs: DataFrame, id_col: str = "doc_id",
     doc appears exactly once (ids assumed unique, as elsewhere in the
     dedup family).
 
-    ``checkpoint`` (round 6, guide §2.4): the (id, pos, key) stream feeds
+    Pinned stream (round 6, guide §2.4): the (id, pos, key) stream feeds
     BOTH sides of the duplicated-key detection (the groupBy and the marking
     probe), and Catalyst plans no ReusedExchange across those differently-
     shaped consumers — without materialization the tokenize + window-build
     subtree (the dominant per-row cost) evaluates once per branch.  A lazy
     ``localCheckpoint`` pins the slim stream so every consumer reads the
     blocks; measured at sf1.0 this took the registry query from ~20 s to
-    ~7 s.  ``checkpoint=False`` is the full-lineage inspection seam for
-    plan-shape tests (the pack_blocks pattern)."""
+    ~7 s."""
     stream = _window_stream(docs, id_col, text_col, k)
     if key_fn is not None:
         stream = stream.withColumn("_k", key_fn(F.col("_k")))
-    if checkpoint:
-        stream = stream.localCheckpoint(eager=False)
+    stream = stream.localCheckpoint(eager=False)
     spans = _span_intervals(stream, id_col, k, min_count,
                             exempt_first=False)
 
@@ -269,8 +266,7 @@ def repeated_spans(docs: DataFrame, id_col: str = "doc_id",
 def remove_repeated_spans(docs: DataFrame, id_col: str = "doc_id",
                           text_col: str = "text", k: int = 50,
                           key_fn=None, min_count: int = 2,
-                          order_col: str | None = None,
-                          checkpoint: bool = True) -> DataFrame:
+                          order_col: str | None = None) -> DataFrame:
     """ExactSubstr REMOVAL (Lee et al. §4.1 keep-one semantics, window-
     granular): for every duplicated K-window key, its FIRST occurrence —
     ordered by (order_col, id, pos); id order when order_col is None —
@@ -284,10 +280,10 @@ def remove_repeated_spans(docs: DataFrame, id_col: str = "doc_id",
     Scale shape = repeated_spans plus one map-side-combinable min_by per
     key (the exemption) — still three slim shuffles, no corpus text
     through any of them; the text rides only the final join-back, keyed by
-    the unique doc id.  ``checkpoint`` materializes the slim (id, ord, pos,
-    key) stream once (see repeated_spans — the exemption shape consumes the
-    stream twice, so the win is the same); the reassembly branch prunes to
-    tokenize-only.
+    the unique doc id.  A lazy localCheckpoint materializes the slim (id,
+    ord, pos, key) stream once (see repeated_spans — the exemption shape
+    consumes the stream twice, so the win is the same); the reassembly
+    branch prunes to tokenize-only.
     """
     ord_expr = F.col(order_col) if order_col else F.col(id_col)
     # ORIGINAL-case tokens for reconstruction (keys lower-case only for
@@ -299,8 +295,7 @@ def remove_repeated_spans(docs: DataFrame, id_col: str = "doc_id",
     stream = _window_stream(docs, id_col, text_col, k, ord_expr=ord_expr)
     if key_fn is not None:
         stream = stream.withColumn("_k", key_fn(F.col("_k")))
-    if checkpoint:
-        stream = stream.localCheckpoint(eager=False)
+    stream = stream.localCheckpoint(eager=False)
     spans = _span_intervals(stream, id_col, k, min_count, exempt_first=True)
 
     joined = base.join(spans, on=id_col, how="left")

@@ -37,6 +37,7 @@ from ..functions.scrub import scrub_rules_fired, scrubbed
 from ..operators.decision import with_decision
 from ..operators.dedup import minhash_losers_from_sig
 from ..operators.resume import lineage_rows, pending_work, read_store, write_lineage
+from ..session import release
 
 OUTPUT_COLUMNS = [
     "url", "warc_ts", "extracted_sha256", "lang_pred", "lang_conf",
@@ -81,10 +82,14 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
     ``dedupe``) run in ONE Arrow pass (functions/fused.py; single-visit
     fusion, composable.py:90-98 analogue).
 
-    ``persist_tracker``: optional list the builder appends every persisted
-    DataFrame to, so the caller can unpersist after its terminal action
-    (persists are otherwise leaked in long-lived sessions).
+    ``persist_tracker``: optional list the builder appends every frame it
+    pins to: the post-UDF frame, the span input, the ranked dedup frame and
+    ``minhash_losers_from_sig``'s signature frame (each a
+    ``localCheckpoint``).  The caller passes the list to
+    ``session.release`` once its terminal action has run; untracked pins
+    wait for Spark's cleaner.
     """
+    pins = [] if persist_tracker is None else persist_tracker
     df = pages
     if profile.canonicalize_urls:
         # identity normalization FIRST: every downstream consumer of the id
@@ -106,34 +111,28 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
     # below — they must describe the text the corpus actually trains on
 
     # raw payloads are consumed by extraction; everything downstream works on
-    # extracted_text — dropping them here keeps the cache and any shuffle
+    # extracted_text — dropping them here keeps the pin and any shuffle
     # payload-free (html is the fat column; column pruning can't help once
     # we're past the scan)
     df = df.drop(*[c for c in ("html", "text") if c in df.columns])
 
     # dedup, host-backfill and boilerplate removal all fan the plan out (slim
     # dedup projections / the consensus aggregate / the line-frequency
-    # subtree + the main branch): persist the post-UDF frame so extraction +
+    # subtree + the main branch): pin the post-UDF frame so extraction +
     # model scoring execute ONCE, not once per subtree (the reference's
     # headers-fetched-once discipline, cfht_name.py:525-548; SURVEY §4
     # "cache the post-extraction DataFrame before fanning out")
     if (dedupe or profile.host_lang_backfill or profile.boilerplate_removal
             or profile.span_removal or benchmark is not None):
-        from pyspark import StorageLevel
-
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        if persist_tracker is not None:
-            persist_tracker.append(df)
-        # materialize the cache NOW with one fully-parallel action.  Left
-        # lazy, AQE launches the fan-out subtrees concurrently and their
-        # tasks serialize on the cache-population lock per partition
-        # (measured: 3 blocked 8-task stages, ~45% idle cores at 1M rows x 8
-        # cores); a warm cache restores full parallelism downstream.  One
-        # count() pays one extra pass of NOTHING — the cache node
-        # materializes all columns regardless of projection.
-        df.count()
+        # the pin is EAGER: one fully-parallel job materializes it now.
+        # Left lazy, AQE launches the fan-out subtrees concurrently and
+        # their tasks serialize on the block-population lock per partition
+        # (measured: 3 blocked 8-task stages, ~45% idle cores at 1M rows x
+        # 8 cores); pinned blocks restore full parallelism downstream
+        df = df.localCheckpoint(eager=True)
+        pins.append(df)
     # dedup keys/signatures and the boilerplate line frequencies read the
-    # persisted pre-backfill frame
+    # pinned pre-backfill frame
     base = df
 
     if profile.boilerplate_removal:
@@ -188,10 +187,8 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
         # full text (no ReusedExchange across differently-pruned
         # aggregates).  A lazy localCheckpoint materializes the slim
         # (id, ord, text) frame once and both branches read the blocks —
-        # at corpus scale that's one text shuffle instead of two.  Same
-        # preemption caveat as the CC rounds (operators/dedup.py): on
-        # preemptible executors switch to checkpoint() with a checkpoint
-        # dir.
+        # at corpus scale that's one text shuffle instead of two
+        # (preemption caveat: session.release)
         span_input = (
             df.withColumn("_sp_id", row_key)
             .select("_sp_id", F.col(order_col).alias("_sp_ord"),
@@ -200,6 +197,7 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
             .dropDuplicates(["_sp_id"])
             .localCheckpoint(eager=False)
         )
+        pins.append(span_input)
         span_cleaned = remove_repeated_spans(
             span_input,
             id_col="_sp_id", text_col="extracted_text",
@@ -397,11 +395,10 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
         # both windows run ONCE: the exact losers and the minhash candidates
         # read the same ranked rows.  Left lazy, each branch would re-run
         # both window shuffles; a lazy persist would cost one cache-read job
-        # per branch.  Same preemption caveat as the CC rounds
-        # (operators/dedup.py): on preemptible executors switch to
-        # checkpoint() with a checkpoint dir.
+        # per branch (preemption caveat: session.release)
         ranked = canonical.withColumn("_sha_rn", F.row_number().over(w_sha)) \
             .localCheckpoint(eager=True)
+        pins.append(ranked)
         exact_losers = ranked.filter(F.col("_sha_rn") > 1).select(
             F.col(id_col), F.lit("exact").alias("_dup_kind"))
 
@@ -414,6 +411,7 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
             rows_per_band=profile.minhash_rows_per_band,
             threshold=profile.dedup_jaccard,
             policy=profile.dedup_policy,
+            persist_tracker=pins,
         )
         near_losers = losers.select(
             F.col("loser_id").alias(id_col), F.lit("near").alias("_dup_kind"))
@@ -469,31 +467,35 @@ def run_batch(spark: SparkSession, pages: DataFrame, out_dir: str,
 
     from pyspark.sql import Observation
 
-    persisted: list = []
-    decisions = build_pipeline(work, spark, profile, dedupe=dedupe,
-                               persist_tracker=persisted,
-                               benchmark=benchmark,
-                               quality_weights=quality_weights,
-                               ppl_model=ppl_model)
-    decisions = decisions.withColumn(
-        "p_day", F.date_format(F.col("warc_ts"), "yyyy-MM-dd")
-    )
-    # free metrics riding the write action (A6) — no second pass over the
-    # data.  collect_set skips NULL, so rows with no day are flagged apart.
-    obs = Observation("pipeline_metrics")
-    decisions = decisions.observe(
-        obs,
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("kept"),
-        F.collect_set("p_day").alias("days"),
-        F.bool_or(F.col("p_day").isNull()).alias("null_day"),
-    )
-    (decisions.write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")  # scoped to THIS write
-     .partitionBy("p_day").parquet(decisions_path))
-    metrics = obs.get
-    for df_p in persisted:
-        df_p.unpersist()
+    # the pins are taken while the plan is built and read by the write
+    # alone; they are released even when the build or the write fails
+    pinned: list = []
+    try:
+        decisions = build_pipeline(work, spark, profile, dedupe=dedupe,
+                                   persist_tracker=pinned,
+                                   benchmark=benchmark,
+                                   quality_weights=quality_weights,
+                                   ppl_model=ppl_model)
+        decisions = decisions.withColumn(
+            "p_day", F.date_format(F.col("warc_ts"), "yyyy-MM-dd")
+        )
+        # free metrics riding the write action (A6) — no second pass over
+        # the data.  collect_set skips NULL, so rows with no day are
+        # flagged apart.
+        obs = Observation("pipeline_metrics")
+        decisions = decisions.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("kept"),
+            F.collect_set("p_day").alias("days"),
+            F.bool_or(F.col("p_day").isNull()).alias("null_day"),
+        )
+        (decisions.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")  # scoped to THIS write
+         .partitionBy("p_day").parquet(decisions_path))
+        metrics = obs.get
+    finally:
+        release(pinned)
     if metrics["n"] == 0:
         return {"processed": 0, "partitions": 0}
 

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -67,3 +67,23 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def release(pinned: list[DataFrame]) -> None:
+    """Drop the executor blocks under each pinned frame.
+
+    ``localCheckpoint`` is the package's one way to pin a frame; whoever
+    pins one releases it once its last reader has run.  The blocks back the
+    ``LogicalRDD`` at the root of the pinned plan, which
+    ``DataFrame.unpersist()`` does not reach, so this unpersists that RDD.
+    An unreleased pin waits for Spark's ContextCleaner (a driver JVM GC).
+
+    Preemption caveat, for every pin in the package: checkpoint blocks are
+    not replayable, so losing an executor fails the job that reads them.
+    A retry is correct, never corrupt (``run_batch`` and
+    ``process_increment`` overwrite, so a rerun is idempotent).  On
+    preemptible executors, ``setCheckpointDir`` and ``checkpoint()`` give
+    reliable storage with the same semantics, one extra write per pin.
+    """
+    for df in pinned:
+        df._jdf.queryExecution().logical().rdd().unpersist(False)

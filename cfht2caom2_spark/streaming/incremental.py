@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..config import DEFAULT_PROFILE, RuleProfile
 from ..plans.pipeline import build_pipeline
+from ..session import release
 from ..sources.pages import PAGES_SCHEMA
 from ..sources.table import SnapshotTable
 
@@ -71,32 +72,34 @@ def process_increment(spark: SparkSession, table: SnapshotTable, out_dir: str,
     from pyspark.sql import Observation
 
     inc = table.incremental(spark, after=last, until=current)
-    persisted: list = []
-    decisions = build_pipeline(inc.drop("p_day"), spark, profile,
-                               dedupe=dedupe, persist_tracker=persisted)
-    if history_dedup:
-        # online cross-increment exact dedup: content already kept by a
-        # PRIOR tick demotes now instead of waiting for the offline
-        # compaction rewrite.  The store's distinct kept shas left-join the
-        # tick's output once, so the fused pass still runs once
-        # (operators/compact.py).
-        from ..operators.compact import demote_against_history
-        from ..operators.resume import read_store
+    # pins taken while the plan is built are released even on a failure
+    pinned: list = []
+    try:
+        decisions = build_pipeline(inc.drop("p_day"), spark, profile,
+                                   dedupe=dedupe, persist_tracker=pinned)
+        if history_dedup:
+            # online cross-increment exact dedup: content already kept by a
+            # PRIOR tick demotes now instead of waiting for the offline
+            # compaction rewrite.  The store's distinct kept shas left-join
+            # the tick's output once, so the fused pass still runs once
+            # (operators/compact.py).
+            from ..operators.compact import demote_against_history
+            from ..operators.resume import read_store
 
-        # a corrupt store raises rather than silently skipping the dedup
-        history = read_store(spark, f"{out_dir}/decisions")
-        if history is not None:
-            decisions = demote_against_history(decisions, history)
-    # metrics ride the write action — one execution per tick, not two
-    obs = Observation("tick_metrics")
-    decisions = decisions.observe(obs, F.count(F.lit(1)).alias("n"))
-    since = -1 if last is None else last
-    (decisions.withColumn("p_day", F.date_format("warc_ts", "yyyy-MM-dd"))
-     .write.mode("overwrite").partitionBy("p_day")
-     .parquet(f"{out_dir}/decisions/since_snapshot={since}"))
-    n = obs.get["n"]
-    for df_p in persisted:
-        df_p.unpersist()
+            # a corrupt store raises rather than silently skipping the dedup
+            history = read_store(spark, f"{out_dir}/decisions")
+            if history is not None:
+                decisions = demote_against_history(decisions, history)
+        # metrics ride the write action — one execution per tick, not two
+        obs = Observation("tick_metrics")
+        decisions = decisions.observe(obs, F.count(F.lit(1)).alias("n"))
+        since = -1 if last is None else last
+        (decisions.withColumn("p_day", F.date_format("warc_ts", "yyyy-MM-dd"))
+         .write.mode("overwrite").partitionBy("p_day")
+         .parquet(f"{out_dir}/decisions/since_snapshot={since}"))
+        n = obs.get["n"]
+    finally:
+        release(pinned)
     write_bookmark(bookmark_path, current)
     return {"processed": n, "snapshot": current}
 

@@ -11,3 +11,11 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def pinned_rdds(spark):
+    """A callable returning the ids of the RDDs that hold blocks in
+    executor storage (checkpointed or cached)."""
+    jsc = spark.sparkContext._jsc.sc()
+    return lambda: {r.id() for r in jsc.getRDDStorageInfo()}

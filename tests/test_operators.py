@@ -68,6 +68,23 @@ def test_connected_components(spark):
     assert comp[10] == comp[11] == 10
 
 
+def test_connected_components_releases_superseded_rounds(spark, pinned_rdds):
+    """Each star round's checkpoint supersedes the previous round's, which
+    is released once the new one is materialized: a chain that needs
+    several rounds leaves only the final round pinned (the result reads
+    it).  The small-graph path collects its edges and keeps none."""
+    chain = spark.createDataFrame([(i, i + 1) for i in range(40)],
+                                  "id_a bigint, id_b bigint")
+    before = pinned_rdds()
+    comp = connected_components(chain, small_graph_threshold=0).collect()
+    assert len(comp) == 41 and {r["component"] for r in comp} == {0}
+    assert len(pinned_rdds() - before) <= 1
+    before = pinned_rdds()
+    comp = connected_components(chain).collect()
+    assert len(comp) == 41 and {r["component"] for r in comp} == {0}
+    assert pinned_rdds() <= before
+
+
 def test_identity_projections(spark):
     """P1-P4: the url host is a pure deterministic projection."""
     from cfht2caom2_spark.functions.identity import host

@@ -114,7 +114,7 @@ def test_minhash_losers_do_not_rerank(spark):
 
 # Spark jobs one run_batch call launched over 300 synthetic pages with a
 # fresh output, under the test session (8 cores, 8 shuffle partitions)
-RUN_BATCH_JOBS = 18
+RUN_BATCH_JOBS = 16
 
 
 def test_run_batch_job_count(spark, tmp_path):
@@ -271,18 +271,22 @@ def test_pack_blocks_single_partition_window_only_over_totals(spark):
     partition: the only Exchange SinglePartition allowed in the plan is the
     one feeding the n_partitions-row per-partition-totals prefix window.
     The corpus side rides a range repartition + per-partition window."""
-    from cfht2caom2_spark.operators.packing import pack_blocks
+    from cfht2caom2_spark.functions.tokens import ws_token_count
+    from cfht2caom2_spark.operators.packing import _running_sums, pack_blocks
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    # checkpoint=False: inspection seam that keeps the full lineage visible
-    # (the production checkpoint truncates the plan at Scan ExistingRDD)
-    plan = plan_of(pack_blocks(docs, "doc_id", "text", block_tokens=128,
-                               checkpoint=False))
-    # the corpus path: range exchange(s), then narrow sort + the Arrow
-    # running-sum crossing (a Window.partitionBy(_pid) here would force an
-    # EXTRA corpus-sized hash exchange — the regression this pins: the only
-    # hash exchange allowed is the tiny map-side-combined totals aggregate)
-    assert "rangepartitioning" in plan.lower()
+    # the corpus path, read before pack_blocks pins it (the pin truncates
+    # the plan at Scan ExistingRDD): range exchange(s), then narrow sort +
+    # the Arrow running-sum crossing (a Window.partitionBy(_pid) here would
+    # force an EXTRA corpus-sized hash exchange — the regression this pins)
+    corpus = plan_of(_running_sums(docs, ["doc_id"], "doc_id", "text",
+                                   ws_token_count, None))
+    assert "rangepartitioning" in corpus.lower()
+    assert "Exchange hashpartitioning" not in corpus
+    assert "Exchange SinglePartition" not in corpus
+    plan = plan_of(pack_blocks(docs, "doc_id", "text", block_tokens=128))
+    # the only hash exchange allowed is the tiny map-side-combined totals
+    # aggregate
     assert plan.count("Exchange hashpartitioning") == 1
     totals_region = plan[plan.index("Exchange hashpartitioning"):]
     assert "HashAggregate" in totals_region.splitlines()[1]

@@ -8,6 +8,7 @@ success/skip accounting (:147-196).
 from __future__ import annotations
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from cfht2caom2_spark.plans.pipeline import run_batch
@@ -77,6 +78,29 @@ def test_fresh_output_empty_input(spark, tmp_path):
     empty = spark.createDataFrame([], PAGES_SCHEMA)
     assert run_batch(spark, empty, out) == {"processed": 0, "partitions": 0}
     assert read_lineage(spark, f"{out}/lineage").count() == 0
+
+
+def test_run_batch_releases_its_pins(spark, pinned_rdds, tmp_path):
+    """run_batch pins the post-UDF frame and the dedup frames while it
+    builds the plan; once it returns, executor storage holds none of them.
+    A pin left behind stays resident for the rest of the session."""
+    before = pinned_rdds()
+    res = run_batch(spark, synth_pages(spark, N), str(tmp_path / "out"))
+    assert res["processed"] == N
+    assert pinned_rdds() <= before
+
+
+def test_run_batch_releases_its_pins_when_the_write_fails(
+        spark, pinned_rdds, tmp_path):
+    """A regular file where the output directory should be: the pins are
+    taken while the plan is built, then the write raises.  The pins are
+    released all the same."""
+    blocker = tmp_path / "blocker"
+    blocker.write_text("not a directory")
+    before = pinned_rdds()
+    with pytest.raises(Py4JJavaError):
+        run_batch(spark, synth_pages(spark, N), str(blocker))
+    assert pinned_rdds() <= before
 
 
 def test_crash_between_writes_reruns_identically(spark, store):
