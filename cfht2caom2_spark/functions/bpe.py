@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .tokens import word_tokens
+
 # marks the word boundary as its own symbol so merges cannot cross words and
 # word-final subwords stay distinct from word-internal ones (Sennrich §3.2)
 END_OF_WORD = "</w>"
@@ -55,8 +57,7 @@ def corpus_word_counts(docs: DataFrame, text_col: str = "text",
     """Top-V (word, count) from one map-side-combined wordcount, ordered by
     (count desc, word asc).  Tokenization matches q_vocab_counts: lowercased
     whitespace tokens.  The collect is bounded at vocab_top_k rows."""
-    toks = F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-                    lambda t: t != F.lit(""))
+    toks = word_tokens(F.lower(F.col(text_col)))
     counts = (
         docs.select(F.explode(toks).alias("word"))
         .groupBy("word").agg(F.count(F.lit(1)).alias("n"))

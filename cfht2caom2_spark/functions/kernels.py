@@ -3,9 +3,11 @@
 Every vectorized Python crossing that tokenizes words or signs word
 k-shingles (the fused stage's MinHash, the dedup/decontam signature
 frames, span windows, the repetition ladder, the driver's token arrays)
-calls these pure functions, so the rule cannot drift between copies.  The
-Spark expression forms (``operators.dedup.word_shingles``/``simhash``) are
-the JVM side of the same rule; parity is pinned by the DuckDB oracles and
+calls these pure functions, so the rule cannot drift between copies.
+``functions/tokens.py`` (``word_tokens``, ``word_ngrams``) is the JVM side
+of the same rule, which every Spark expression that tokenizes or builds
+word n-grams calls (``operators.dedup.word_shingles``/``simhash`` among
+them); parity is pinned by the DuckDB oracles and
 ``tests/test_kernel_parity.py``.
 
 The rule: tokens are runs of non-whitespace under Java's default ``\\s``

@@ -19,16 +19,11 @@ from pyspark.sql import functions as F
 
 from ..config import STOPWORDS, TOXICITY_WORDS, RuleProfile
 from ..corpora import ZH_STOP_CHARS
+from .tokens import word_ngrams, word_tokens
 
 # Symbols counted for the Gopher symbol-to-char ratio (ASCII-only on purpose:
 # identical semantics in Java regex and RE2, and CJK text is not penalized).
 SYMBOL_CLASS = "[#@$%^&*+=~|]"
-
-
-def tokens(text: Column) -> Column:
-    """Whitespace tokens with empties removed (identical to the SQL oracle's
-    list_filter(regexp_split_to_array(trim(x),'\\s+'), t->t<>''))."""
-    return F.filter(F.split(F.trim(text), r"\s+"), lambda t: t != F.lit(""))
 
 
 def zh_chars(text: Column) -> Column:
@@ -151,16 +146,6 @@ REP_LADDER_TOP_NS: tuple[int, ...] = (2, 3, 4)
 REP_LADDER_DUP_NS: tuple[int, ...] = (5, 6, 7, 8, 9, 10)
 
 
-def ngrams(toks: Column, n: int) -> Column:
-    """Word n-grams as single-space-joined strings; [] for docs with fewer
-    than ``n`` tokens.  Gram i (1-based) covers tokens i..i+n-1."""
-    win = F.size(toks) - (n - 1)
-    return F.when(win >= 1, F.transform(
-        F.sequence(F.lit(1), win),
-        lambda i: F.array_join(F.slice(toks, i, n), " "))
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def total_token_chars(toks: Column) -> Column:
     return F.aggregate(toks, F.lit(0).cast("bigint"),
                        lambda a, t: a + F.length(t))
@@ -175,7 +160,7 @@ def top_ngram_char_frac(toks: Column, n: int) -> Column:
     Ties on (count, char length) keep the lexicographically smallest gram
     (= first in sort order), which the SQL oracle mirrors with ORDER BY
     cnt DESC, len DESC, gram ASC.  ONE fold over the sorted gram array."""
-    sorted_g = F.array_sort(ngrams(toks, n))
+    sorted_g = F.array_sort(word_ngrams(toks, n))
     acc0 = F.struct(F.lit("").alias("prev"),
                     F.lit(0).cast("bigint").alias("run"),
                     F.lit(0).cast("bigint").alias("best"),
@@ -207,12 +192,11 @@ def dup_ngram_char_frac(toks: Column, n: int) -> Column:
     the duplicated start positions, one interval-merge fold (same walk as
     the span-removal gap fold, operators/spans.py) sums the union's token
     chars — O(T·n + G log G + D·n) per doc, D = duplicated starts."""
-    pairs = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))),
-        lambda i: F.struct(F.array_join(F.slice(toks, i, n), " ").alias("g"),
-                           i.cast("bigint").alias("pos")))
-    sorted_p = F.when(F.size(toks) >= n, F.array_sort(pairs)) \
-        .otherwise(F.array().cast("array<struct<g:string,pos:bigint>>"))
+    # (gram, 1-based start) pairs; [] for docs with fewer than n tokens
+    sorted_p = F.array_sort(F.transform(
+        word_ngrams(toks, n),
+        lambda g, i: F.struct(g.alias("g"),
+                              (i + 1).cast("bigint").alias("pos"))))
     acc0 = F.struct(F.lit("").alias("prev"),
                     F.lit(0).cast("bigint").alias("prev_pos"),
                     F.lit(0).cast("bigint").alias("run"),
@@ -273,7 +257,7 @@ def repetition_ladder_stats_fast(df: DataFrame, id_col: str = "doc_id",
     import numpy as np
     import pandas as pd
 
-    from .kernels import word_tokens
+    from . import kernels
 
     top_ns, dup_ns = REP_LADDER_TOP_NS, REP_LADDER_DUP_NS
     frac_cols = [f"top_{n}gram_char_frac" for n in top_ns] + \
@@ -281,7 +265,7 @@ def repetition_ladder_stats_fast(df: DataFrame, id_col: str = "doc_id",
 
     def ladder_batches(batches):
         def doc_stats(text):
-            toks = word_tokens(text or "")
+            toks = kernels.word_tokens(text or "")
             T = len(toks)
             lens = np.fromiter((len(t) for t in toks), dtype="int64",
                                count=T)
@@ -347,7 +331,7 @@ def with_repetition_ladder(df: DataFrame, text_col: str = "extracted_text",
     text = F.col(text_col)
     is_zh = (F.col(lang_col) == "zh") if lang_col else F.lit(False)
     df = df.withColumn("_toks", F.when(is_zh, zh_chars(text))
-                       .otherwise(tokens(text)))
+                       .otherwise(word_tokens(text)))
     t = F.col("_toks")
     cols = {f"top_{n}gram_char_frac": top_ngram_char_frac(t, n)
             for n in REP_LADDER_TOP_NS}
@@ -458,7 +442,7 @@ def with_quality_stats(df: DataFrame, text_col: str = "extracted_text",
     """
     text = F.col(text_col)
     is_zh = (F.col(lang_col) == "zh") if lang_col else F.lit(False)
-    toks = F.when(is_zh, zh_chars(text)).otherwise(tokens(text))
+    toks = F.when(is_zh, zh_chars(text)).otherwise(word_tokens(text))
     df = df.withColumn("_toks", toks)
     t = F.col("_toks")
     sw = (stopword_frac_by_lang(t, t, F.col(lang_col)) if lang_col

@@ -19,8 +19,10 @@ no driver-side loops.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from .resume import partition_id_col
 
 
 def demote_cross_increment_duplicates(decisions: DataFrame,
@@ -43,22 +45,25 @@ def demote_cross_increment_duplicates(decisions: DataFrame,
         F.col("keep") & F.col("extracted_sha256").isNotNull(), F.lit(False))
     w = Window.partitionBy("extracted_sha256").orderBy(
         F.col(order_col), F.col(id_col))
-    demote = F.col("_demote")
-    demoted = (
+    demoted = _demoted(
         decisions.filter(contested)
-        .withColumn("_demote", F.row_number().over(w) > 1)
-        .withColumn("rules",
-                    F.when(demote, F.array_sort(F.array_union(
-                        F.col("rules"), F.array(F.lit("exact_duplicate")))))
-                    .otherwise(F.col("rules")))
-        # contested rows were all kept; the loser flips to dropped
-        .withColumn("keep", ~demote)
-        .withColumn("scrubbed_text",
-                    F.when(demote, F.lit(None).cast("string"))
-                    .otherwise(F.col("scrubbed_text")))
-        .drop("_demote")
-    )
+        .withColumn("_demote", F.row_number().over(w) > 1),
+        F.col("_demote")).drop("_demote")
     return decisions.filter(~contested).unionByName(demoted)
+
+
+def _demoted(decisions: DataFrame, demote: Column) -> DataFrame:
+    """The demotion contract, on the rows where ``demote`` holds: rules +=
+    exact_duplicate, keep -> false, scrubbed_text -> NULL (stored
+    artifacts are for kept docs only).  Other rows pass through."""
+    return decisions.withColumns({
+        "rules": F.when(demote, F.array_sort(F.array_union(
+            F.col("rules"), F.array(F.lit("exact_duplicate")))))
+        .otherwise(F.col("rules")),
+        "keep": F.when(demote, F.lit(False)).otherwise(F.col("keep")),
+        "scrubbed_text": F.when(demote, F.lit(None).cast("string"))
+        .otherwise(F.col("scrubbed_text")),
+    })
 
 
 def compact_decisions(spark: SparkSession, decisions_path: str,
@@ -84,8 +89,7 @@ def compact_decisions(spark: SparkSession, decisions_path: str,
         .alias("demoted"),
     ).drop("_was_kept")
     if "p_day" not in compacted.columns:
-        compacted = compacted.withColumn(
-            "p_day", F.date_format("warc_ts", "yyyy-MM-dd"))
+        compacted = compacted.withColumn("p_day", partition_id_col())
     (compacted.write.mode("overwrite").partitionBy("p_day")
      .parquet(out_path))
     m = obs.get
@@ -114,9 +118,9 @@ def demote_against_history(increment: DataFrame,
     Plan shape: the history's kept, non-null shas are read once (column
     pruned), reduced with ``distinct()`` so several history copies of one
     content never multiply increment rows, and left-joined to the
-    increment.  One projection applies the demotion contract of
-    demote_cross_increment_duplicates (rules += exact_duplicate, keep
-    flips, scrubbed_text nulls) to rows that are kept AND matched; every
+    increment.  One projection applies the demotion contract
+    (``_demoted``: rules += exact_duplicate, keep flips, scrubbed_text
+    nulls) to rows that are kept AND matched; every
     other row, NULL-keep and NULL-hash rows included, passes through
     unchanged.  The increment is referenced once, so its fused Python pass
     runs once per tick."""
@@ -126,15 +130,5 @@ def demote_against_history(increment: DataFrame,
         .withColumn("_hist", F.lit(True))
     )
     demote = F.coalesce(F.col("keep") & F.col("_hist"), F.lit(False))
-    return (
-        increment.join(hist_shas, "extracted_sha256", "left")
-        .withColumns({
-            "rules": F.when(demote, F.array_sort(F.array_union(
-                F.col("rules"), F.array(F.lit("exact_duplicate")))))
-            .otherwise(F.col("rules")),
-            "keep": F.when(demote, F.lit(False)).otherwise(F.col("keep")),
-            "scrubbed_text": F.when(demote, F.lit(None).cast("string"))
-            .otherwise(F.col("scrubbed_text")),
-        })
-        .select(*increment.columns)
-    )
+    return _demoted(increment.join(hist_shas, "extracted_sha256", "left"),
+                    demote).select(*increment.columns)

@@ -217,7 +217,7 @@ def fuzzy_decontaminate(docs: DataFrame, bench: DataFrame,
     1/num_perms), exact-rational in both engines so the DuckDB twin matches
     bitwise.
     """
-    from .dedup import banded_keys, minhash_sig_frame
+    from .dedup import banded_keys, minhash_sig_frame, signature_agreement
 
     num_perms = bands * rows_per_band
     sig_d = minhash_sig_frame(docs, id_col, text_col, num_perms, k,
@@ -232,13 +232,10 @@ def fuzzy_decontaminate(docs: DataFrame, bench: DataFrame,
         band_b = F.broadcast(band_b)
     cand = band_d.join(band_b, ["band", "key"]).select("_id", "_bid").distinct()
 
-    agree = F.aggregate(
-        F.zip_with(F.col("_sig"), F.col("_bsig"),
-                   lambda x, y: (x == y).cast("int")),
-        F.lit(0), lambda acc, x: acc + x)
     scored = (
         cand.join(sig_d, "_id").join(sig_b, "_bid")
-        .withColumn("_ej", agree / F.lit(float(num_perms)))
+        .withColumn("_ej", signature_agreement(F.col("_sig"), F.col("_bsig"),
+                                               num_perms))
         .filter(F.col("_ej") >= min_est_jaccard)
     )
     return (

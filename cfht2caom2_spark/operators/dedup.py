@@ -33,31 +33,20 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.kernels import MERSENNE_31
-from ..functions.tokens import md5_fingerprint
+from ..functions.tokens import md5_fingerprint, word_ngrams, word_tokens
 from ..session import release
 
 
 # --- shingles / minhash --------------------------------------------------------
 
 def word_shingles(text: Column, k: int = 3) -> Column:
-    """Distinct word k-shingles of whitespace-normalized lowercase text.
-
-    Built from k shifted slices zipped together — strictly linear.  (The
-    index-lambda formulation ``transform(sequence(...), i ->
-    element_at(toks, i+j))`` re-evaluates the inline token expression per
-    element: O(n^2) per document, a real 50x slowdown at 200+ tokens.)
-    """
-    toks = F.filter(F.split(F.lower(F.trim(text)), r"\s+"), lambda t: t != F.lit(""))
-    n = F.size(toks)
-    win = F.greatest(n - (k - 1), F.lit(1))
-    sh = F.slice(toks, 1, win)
-    for j in range(1, k):
-        sh = F.zip_with(sh, F.slice(toks, j + 1, win),
-                        lambda a, b: F.concat_ws(" ", a, b))
-    # shorter-than-k docs: the whole text is the single shingle
+    """Distinct word k-shingles of the lower-cased text: the JVM form of
+    ``kernels.shingles`` (``tokens.word_tokens`` + ``tokens.word_ngrams``).
+    Docs with fewer than k tokens give the single whole-text shingle."""
+    toks = word_tokens(F.lower(text))
     return F.array_distinct(
-        F.when(n >= k, sh).otherwise(F.array(F.array_join(toks, " ")))
-    )
+        F.when(F.size(toks) >= k, word_ngrams(toks, k))
+        .otherwise(F.array(F.array_join(toks, " "))))
 
 
 def shingle_hash(shingle: Column) -> Column:
@@ -132,20 +121,52 @@ def banded_keys(sig: DataFrame, id_col: str,
                 bands: int, rows_per_band: int,
                 sig_col: str = "_sig") -> DataFrame:
     """(id, band, key) LSH bucket rows from a (id, signature-array) frame —
-    one explode (rows -> rows×bands); band keys concatenate the band's
-    minhashes.  Shared by the near-dup self-join (lsh_candidate_pairs) and
-    the corpus×eval fuzzy-decontamination join (decontam.fuzzy_decontaminate)."""
+    one explode (rows -> rows×bands) of an array of literal band structs,
+    which codegens (a ``transform(sequence(...))`` form would not); band
+    keys concatenate the band's minhashes.  Every MinHash LSH join uses
+    it: the near-dup self-joins (``minhash_losers_from_sig``,
+    ``lsh_candidate_pairs``) and the corpus×eval fuzzy-decontamination join
+    (``decontam.fuzzy_decontaminate``)."""
     return sig.select(
         id_col,
-        F.explode(F.transform(F.sequence(F.lit(0), F.lit(bands - 1)), lambda b:
+        F.explode(F.array(*[
             F.struct(
-                b.alias("band"),
+                F.lit(b).alias("band"),
                 F.concat_ws("_", *[
-                    F.element_at(F.col(sig_col), (b * rows_per_band + r + 1).cast("int"))
+                    F.element_at(F.col(sig_col), b * rows_per_band + r + 1)
                     for r in range(rows_per_band)
                 ]).alias("key"),
-            ))).alias("bk"),
+            ) for b in range(bands)
+        ])).alias("bk"),
     ).select(id_col, "bk.band", "bk.key")
+
+
+def _candidate_pairs(banded: DataFrame, id_col: str,
+                     out_a: str, out_b: str) -> DataFrame:
+    """Distinct (out_a < out_b) id pairs sharing a (band, key) bucket —
+    the band self-join, the one shuffle of the signatures."""
+    l, r = banded.alias("l"), banded.alias("r")
+    return (
+        l.join(r, ["band", "key"])
+        .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
+        .select(F.col(f"l.{id_col}").alias(out_a),
+                F.col(f"r.{id_col}").alias(out_b))
+        .distinct()
+    )
+
+
+def signature_agreement(sig_a: Column, sig_b: Column,
+                        num_perms: int) -> Column:
+    """The MinHash Jaccard estimate (Broder 1997): the fraction of the
+    ``num_perms`` signature components on which two signatures agree, as a
+    double of granularity 1/num_perms."""
+    return (
+        F.size(F.filter(
+            F.zip_with(sig_a, sig_b,
+                       lambda a, b: F.when(a == b, 1).otherwise(0)),
+            lambda x: x == 1,
+        )).cast("double") / F.lit(float(num_perms))
+    )
 
 
 def lsh_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
@@ -163,16 +184,8 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
     # work from the input otherwise — materialize the slim (id, 32-long)
     # signature frame once (same pay-once discipline as simhash_pairs)
     sig = sig.localCheckpoint(eager=False)
-    banded = banded_keys(sig, "_id", bands, rows_per_band)
-    left = banded.alias("l")
-    right = banded.alias("r")
-    pairs = (
-        left.join(right, ["band", "key"])
-        .filter(F.col("l._id") < F.col("r._id"))
-        .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
-        .distinct()
-    )
-    return pairs
+    return _candidate_pairs(banded_keys(sig, "_id", bands, rows_per_band),
+                            "_id", "id_a", "id_b")
 
 
 # --- simhash -------------------------------------------------------------------
@@ -207,9 +220,7 @@ def simhash(text: Column, bits: int = 16, features_fn=None,
     ordering matters and all 60 hash bits carry signal."""
     if features_fn is None:
         def features_fn(t):
-            return F.array_distinct(
-                F.filter(F.split(F.lower(F.trim(t)), r"\s+"),
-                         lambda x: x != F.lit("")))
+            return F.array_distinct(word_tokens(F.lower(t)))
     hashes = F.transform(features_fn(text), hash_fn or shingle_hash)
     # ONE fold over the hash array accumulating all per-bit counters (per-bit
     # separate folds would re-evaluate the token/md5 pipeline `bits` times)
@@ -606,25 +617,8 @@ def minhash_losers_from_sig(df: DataFrame, id_col: str, order_col: str,
     # P = 2^-64, i.e. ~5e-9 expected misses even at 10^11 true dup pairs —
     # quantified, not zero.  Real ids come back at the signature fetch.
     keyed_s = keyed.withColumn("_sid", F.xxhash64(F.col("_id")))
-    banded = keyed_s.select(
-        "_sid",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws("_", *[
-                    F.element_at(F.col("_sig"), b * rows_per_band + r + 1)
-                    for r in range(rows_per_band)
-                ]).alias("key"),
-            ) for b in range(bands)
-        ])).alias("bk"),
-    ).select("_sid", "bk.band", "bk.key")
-    l, r = banded.alias("l"), banded.alias("r")
-    pairs = (
-        l.join(r, ["band", "key"])
-        .filter(F.col("l._sid") < F.col("r._sid"))
-        .select(F.col("l._sid").alias("sid_a"), F.col("r._sid").alias("sid_b"))
-        .distinct()
-    )
+    pairs = _candidate_pairs(banded_keys(keyed_s, "_sid", bands, rows_per_band),
+                             "_sid", "sid_a", "sid_b")
     sigs_a = keyed_s.select(F.col("_sid").alias("sid_a"),
                             F.col("_id").alias("id_a"),
                             F.col("_ord").alias("_ord_a"),
@@ -633,13 +627,7 @@ def minhash_losers_from_sig(df: DataFrame, id_col: str, order_col: str,
                             F.col("_id").alias("id_b"),
                             F.col("_ord").alias("_ord_b"),
                             F.col("_sig").alias("_sig_b"))
-    est = (
-        F.size(F.filter(
-            F.zip_with(F.col("_sig_a"), F.col("_sig_b"),
-                       lambda a, b: F.when(a == b, 1).otherwise(0)),
-            lambda x: x == 1,
-        )).cast("double") / F.lit(float(num_perms))
-    )
+    est = signature_agreement(F.col("_sig_a"), F.col("_sig_b"), num_perms)
     verified = (
         pairs.join(sigs_a, "sid_a").join(sigs_b, "sid_b")
         .filter(est >= threshold)

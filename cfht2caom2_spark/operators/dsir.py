@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.tokens import word_ngrams, word_tokens
+
 # fixed-point scale for the per-feature contrast; 1e6 keeps full single-count
 # resolution while |doc importance| stays far below 2^62 for any real doc
 LAMBDA_SCALE = 1_000_000
@@ -55,21 +57,13 @@ SMOOTH_ALPHA = 1
 
 
 def doc_features(text: Column, n_max: int = 2) -> Column:
-    """Word 1..n_max-gram features (lowercased whitespace tokens, space-joined
-    n-grams), multiplicity KEPT — DSIR scores the bag, not the set.  Pure
-    array expressions; stays in whole-stage codegen."""
-    toks = F.filter(F.split(F.lower(F.trim(text)), r"\s+"),
-                    lambda t: t != F.lit(""))
-    feats = toks
-    for n in range(2, n_max + 1):
-        win = F.greatest(F.size(toks) - (n - 1), F.lit(0))
-        sliced = [F.slice(toks, j + 1, win) for j in range(n)]
-        gram = sliced[0]
-        for nxt in sliced[1:]:
-            gram = F.zip_with(gram, nxt,
-                              lambda a, b: F.concat_ws(" ", a, b))
-        feats = F.concat(feats, gram)
-    return feats
+    """Word 1..n_max-gram features: ``tokens.word_ngrams`` over the
+    lower-cased ``tokens.word_tokens``, unigrams first, then bigrams, ...;
+    multiplicity KEPT — DSIR scores the bag, not the set.  Pure array
+    expressions, no Python crossing.  NULL text gives NULL (one NULL
+    feature row under ``explode_outer``, filtered before counting)."""
+    toks = word_tokens(F.lower(text))
+    return F.concat(*[word_ngrams(toks, n) for n in range(1, n_max + 1)])
 
 
 def _exploded_features(docs: DataFrame, id_col: str, text_col: str,

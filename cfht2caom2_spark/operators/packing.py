@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.tokens import ws_token_count
+from ..functions.tokens import word_tokens, ws_token_count
 from .dedup import hash60
 
 
@@ -189,8 +189,7 @@ def materialize_blocks(docs: DataFrame, packed: DataFrame,
     count_fn used to silently mis-slice every block.
     """
     ids = [id_col] if isinstance(id_col, str) else list(id_col)
-    toks = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"),
-                    lambda t: t != F.lit(""))
+    toks = word_tokens(F.col(text_col))
     lit_b = F.lit(int(block_tokens))
     src = docs.select(*[F.col(c) for c in ids], toks.alias("_toks")) \
               .join(packed.filter(F.col("n_tokens") > 0), ids)

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .resume import partition_id_col
+
 SNIPPET_CHARS = 200
 
 
@@ -29,7 +31,7 @@ def preview_rows(decisions: DataFrame, snippet_chars: int = SNIPPET_CHARS) -> Da
     (same derivation as compact_decisions) so ``write_previews`` can always
     partition by it."""
     p_day = (F.col("p_day") if "p_day" in decisions.columns
-             else F.date_format("warc_ts", "yyyy-MM-dd"))
+             else partition_id_col())
     return decisions.filter(F.col("keep")).select(
         "url", "warc_ts",
         F.substring("scrubbed_text", 1, snippet_chars).alias("snippet"),

@@ -44,6 +44,9 @@ LINEAGE_SCHEMA = T.StructType([
 
 
 def partition_id_col(ts_col: str = "warc_ts") -> F.Column:
+    """The day key: the page store's and every decisions write's ``p_day``,
+    the lineage ``partition_id`` and ``pending_work``'s filter.  Resume is
+    only correct while all of them use this one expression."""
     return F.date_format(F.col(ts_col), "yyyy-MM-dd")
 
 

@@ -14,21 +14,22 @@ the known-bad part is a token range and the flag is per-span.
 Spark-first decomposition (suffix arrays do not distribute; the standard
 scalable recast is window-hash voting):
 
-  1. per doc, all K-token window keys as ONE array expression (the
-     word_shingles zip cascade — k-1 zips, O(n*k) total, no explode yet);
-  2. posexplode to a slim (doc, pos, key) stream — same shape as the
-     decontamination gram stream;
-  3. duplicated keys = groupBy(key) HAVING count > 1 — map-side-combined
+  1. per doc, every K-token window key (lower-cased tokens, single-space
+     joined — ``kernels.word_tokens``, the Python side of the word rule),
+     emitted as a slim (doc, pos, key) stream by one vectorized Python
+     crossing — same shape as the decontamination gram stream;
+  2. duplicated keys = groupBy(key) HAVING count > 1 — map-side-combined
      wordcount, the only wide aggregation, high-entropy key;
-  4. inner join the stream against the duplicated-key set (AQE-decided;
+  3. inner join the stream against the duplicated-key set (AQE-decided;
      both sides slim) -> marked window starts per doc;
-  5. per-doc span assembly: sort the marked starts, ONE fold merges
+  4. per-doc span assembly: sort the marked starts, ONE fold merges
      overlapping [p, p+K-1] windows into maximal spans (gaps-and-islands,
      O(marks) per doc, no further shuffle).
 
-Steps 2-5 are shared by the summary (``repeated_spans``) and the removal
-(``remove_repeated_spans``) through ``_span_intervals`` — one fold, one
-merge rule, impossible for the two surfaces to drift apart.
+Steps 1-4 are shared by the summary (``repeated_spans``) and the removal
+(``remove_repeated_spans``) through ``_window_stream`` and
+``_span_intervals`` — one window rule, one fold, one merge rule,
+impossible for the two surfaces to drift apart.
 
 A span of duplicated text of length L >= K produces L-K+1 consecutive
 marked windows that merge back into exactly one [start, end] interval, so
@@ -50,60 +51,21 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _tokens(text: Column, lower: bool = True) -> Column:
-    """Whitespace tokens, empties removed; NULL text -> empty array (so
-    every downstream size() is 0, never -1/NULL — the oracle twins
-    coalesce identically)."""
-    t = F.coalesce(text, F.lit(""))
-    if lower:
-        t = F.lower(t)
-    return F.filter(F.split(F.trim(t), r"\s+"), lambda x: x != F.lit(""))
-
-
-def window_keys(text: Column, k: int) -> Column:
-    """All K-token window strings of ``text`` in position order (NOT
-    distinct — position i of the array is the window starting at token i).
-    Lower-cased whitespace tokens, matching operators.dedup.word_shingles;
-    docs with < k tokens yield an empty array (no window is a full K-run).
-
-    Two builders, chosen by K (measured at sf0.1, steady state):
-
-      * zip cascade (word_shingles' form): k-1 array passes that EXTEND the
-        accumulated window string — O(k^2) chars copied per window, but
-        minimal per-element overhead.  Wins small K (k=8: 1.7 s vs 3.7 s).
-      * flat transform(sequence, i -> array_join(slice(toks, i, k))): each
-        window built exactly once, O(k) chars — wins the production K
-        (k=50: 1.7 s vs 6.2 s) and keeps the codegen unit CONSTANT-size
-        where the cascade's k-1-deep tree pays ~4 s of one-time compile.
-    """
-    toks = _tokens(text)
-    n = F.size(toks)
-    if k <= 12:
-        win = F.greatest(n - (k - 1), F.lit(1))
-        sh = F.slice(toks, 1, win)
-        for j in range(1, k):
-            sh = F.zip_with(sh, F.slice(toks, j + 1, win),
-                            lambda a, b: F.concat_ws(" ", a, b))
-    else:
-        sh = F.transform(
-            F.sequence(F.lit(1), n - (k - 1)),
-            lambda i: F.array_join(F.slice(toks, i, k), " "))
-    return F.when(n >= k, sh).otherwise(
-        F.array().cast("array<string>"))
+from ..functions.tokens import word_tokens
 
 
 def _window_stream(docs: DataFrame, id_col: str, text_col: str, k: int,
                    ord_expr: Column | None = None) -> DataFrame:
     """The exploded (id[, _ord], pos, key-string) window stream built in one
     vectorized Python crossing (round 6, guide §4.2) — byte-identical
-    strings to ``posexplode(window_keys(text, k))``: lower-cased space-only-
-    trimmed ASCII-whitespace tokens, K-token windows single-space-joined,
-    docs with < k tokens (or NULL text) emitting nothing.  The zip-cascade
-    expression built each window through k-1 interpreted array passes and
-    its generated code was large enough to hit the per-JVM JIT lottery;
-    a str.join per window is both faster and deterministic.  Carried
-    columns (id, optional _ord) keep their input types."""
+    strings to ``posexplode(word_ngrams(word_tokens(lower(text)), k))``:
+    lower-cased space-only-trimmed ASCII-whitespace tokens, K-token windows
+    single-space-joined, docs with < k tokens (or NULL text) emitting
+    nothing.  The zip-cascade expression built each window through k-1
+    interpreted array passes and its generated code was large enough to
+    hit the per-JVM JIT lottery; a str.join per window is both faster and
+    deterministic.  Carried columns (id, optional _ord) keep their input
+    types."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import (IntegerType, StringType, StructField,
@@ -241,10 +203,12 @@ def repeated_spans(docs: DataFrame, id_col: str = "doc_id",
                             exempt_first=False)
 
     # counts derive from the interval array — same fold as the removal path;
-    # this branch prunes down to tokenize-only (no window build)
+    # this branch prunes down to tokenize-only (no window build).  NULL
+    # text counts 0 tokens, never -1/NULL (the oracle twins coalesce too)
     n_tokens_df = docs.select(
         F.col(id_col),
-        F.size(_tokens(F.col(text_col))).cast("bigint").alias("n_tokens"))
+        F.size(word_tokens(F.coalesce(F.col(text_col), F.lit(""))))
+        .cast("bigint").alias("n_tokens"))
     n_spans = F.size("_spans").cast("bigint")
     dup_tokens = F.aggregate(
         "_spans", F.lit(0).cast("bigint"),
@@ -288,9 +252,9 @@ def remove_repeated_spans(docs: DataFrame, id_col: str = "doc_id",
     ord_expr = F.col(order_col) if order_col else F.col(id_col)
     # ORIGINAL-case tokens for reconstruction (keys lower-case only for
     # matching; lower() never changes whitespace, so indices line up)
-    base = docs.select(F.col(id_col), F.col(text_col),
-                       ord_expr.alias("_ord"),
-                       _tokens(F.col(text_col), lower=False).alias("_toks"))
+    base = docs.select(
+        F.col(id_col), F.col(text_col), ord_expr.alias("_ord"),
+        word_tokens(F.coalesce(F.col(text_col), F.lit(""))).alias("_toks"))
 
     stream = _window_stream(docs, id_col, text_col, k, ord_expr=ord_expr)
     if key_fn is not None:

@@ -52,6 +52,10 @@ def _t_wide(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 _SW_EN = ",".join(f"'{w}'" for w in STOPWORDS["en"])
 _TOKS = r"list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '')"
+# the lower-cased token list: every shingle oracle tokenizes with it, as the
+# engine's word_shingles / kernels.shingles lower-case before shingling
+_LTOKS = (r"list_filter(regexp_split_to_array(lower(trim(text)), '\s+'), "
+          r"x -> x <> '')")
 _SHINGLE_HASH = "(('0x' || substr(md5({s}), 1, 15))::BIGINT % 2147483647)"
 
 
@@ -69,7 +73,7 @@ def _shingles_sql(toks: str = "toks", k: int = 3) -> str:
 # --------------------------------------------------------------------------
 
 def _with_toks_pandas(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Append ``_toks`` (the exact Q.tokens array: space-only-trimmed,
+    """Append ``_toks`` (the exact TK.word_tokens array: space-only-trimmed,
     ASCII-whitespace split, empties removed) via one vectorized Python
     crossing: ``kernels.word_tokens``, the split every vectorized operator
     in the engine uses (equivalence pinned by this query's DuckDB oracle);
@@ -187,12 +191,10 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressions — the per-doc "most frequent" comes from ONE fold over the
     sorted 2-gram array (longest equal run), no explode/shuffle."""
     docs = _t_wide(spark, sf_dir, "documents")
-    docs = docs.withColumn("_toks", Q.tokens(F.col("text")))
+    docs = docs.withColumn("_toks", TK.word_tokens(F.col("text")))
     t = F.col("_toks")
     n = F.size(t)
-    win = F.greatest(n - 1, F.lit(1))
-    grams = F.zip_with(F.slice(t, 1, win), F.slice(t, 2, win),
-                       lambda a, b: F.concat_ws(" ", a, b))
+    grams = TK.word_ngrams(t, 2)
     sorted_g = F.array_sort(grams)
     acc0 = F.struct(F.lit("").alias("prev"),
                     F.lit(0).cast("bigint").alias("run"),
@@ -542,7 +544,7 @@ def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q_JACCARD_PAIRS_SQL = f"""
 WITH t AS (
-  SELECT doc_id, source, {_shingles_sql(_TOKS, 3)} AS sh FROM documents
+  SELECT doc_id, source, {_shingles_sql(_LTOKS, 3)} AS sh FROM documents
 )
 SELECT a.doc_id AS id_a, b.doc_id AS id_b,
   len(list_intersect(a.sh, b.sh))::DOUBLE
@@ -579,7 +581,7 @@ def _minhash_sql() -> str:
     )
     return f"""
 WITH t AS (
-  SELECT doc_id, {_shingles_sql(_TOKS, 3)} AS sh FROM documents
+  SELECT doc_id, {_shingles_sql(_LTOKS, 3)} AS sh FROM documents
 ),
 sig AS (
   SELECT doc_id, [{mh_exprs}] AS s FROM t
@@ -673,9 +675,6 @@ SELECT doc_id, simhash16 FROM sh
 # --------------------------------------------------------------------------
 
 SH_BITS, SH_BANDS, SH_MAX_HAMMING = 60, 4, 3
-
-_LTOKS = (r"list_filter(regexp_split_to_array(lower(trim(text)), '\s+'), "
-          r"x -> x <> '')")
 
 
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1073,7 +1072,7 @@ def q_langid_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     asc; zero hits -> 'und').  The production trigram model lives in
     functions/langid.py; this is its SQL-checkable little sibling."""
     docs = _t_wide(spark, sf_dir, "documents")
-    toks = Q.tokens(F.col("text"))
+    toks = TK.word_tokens(F.col("text"))
     docs = docs.withColumn("_toks", toks)
 
     def in_sw(lg: str):
@@ -1229,7 +1228,7 @@ def q_pipeline_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t_wide(spark, sf_dir, "documents")
     text = F.col("text")
-    stats = docs.withColumn("_toks", Q.tokens(text)).select(
+    stats = docs.withColumn("_toks", TK.word_tokens(text)).select(
         "doc_id", "text",
         Q.n_words(F.col("_toks")).alias("n_words"),
         Q.mean_word_len(F.col("_toks")).alias("mean_word_len"),
@@ -1626,7 +1625,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 Q_DECONTAMINATE_SQL = f"""
 WITH g AS (
   SELECT doc_id,
-         list_distinct(list_transform({_shingles_sql(_TOKS, DECONTAM_K)},
+         list_distinct(list_transform({_shingles_sql(_LTOKS, DECONTAM_K)},
                                       s -> {_SHINGLE_HASH.format(s='s')}))
          AS grams
   FROM documents
@@ -1785,7 +1784,7 @@ def _fuzzy_decontam_sql() -> str:
     )
     return f"""
 WITH t AS (
-  SELECT doc_id, {_shingles_sql(_TOKS, 3)} AS sh FROM documents
+  SELECT doc_id, {_shingles_sql(_LTOKS, 3)} AS sh FROM documents
 ),
 sig AS (
   SELECT doc_id, [{mh_exprs}] AS s FROM t
@@ -2114,7 +2113,7 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t_wide(spark, sf_dir, "documents")
     text = F.col("text")
-    docs = docs.withColumn("_toks", Q.tokens(text))
+    docs = docs.withColumn("_toks", TK.word_tokens(text))
     t = F.col("_toks")
     stats = docs.select(
         "doc_id",
@@ -2180,7 +2179,7 @@ def q_quality_score_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t_wide(spark, sf_dir, "documents")
     text = F.col("text")
-    docs = docs.withColumn("_toks", Q.tokens(text))
+    docs = docs.withColumn("_toks", TK.word_tokens(text))
     t = F.col("_toks")
     stats = docs.select(
         "doc_id",
@@ -2269,18 +2268,11 @@ def q_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is vocab^2-sized — production prunes with a count threshold
     (HAVING n >= K) before any window; the top-k here is report-sized."""
     docs = _t_wide(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-                    lambda t: t != F.lit(""))
-    docs = docs.withColumn("_toks", toks)
-    t = F.col("_toks")
-    n = F.size(t)
-    win = F.greatest(n - 1, F.lit(1))
-    pairs = F.zip_with(F.slice(t, 1, win), F.slice(t, 2, win),
-                       lambda a, b: F.concat_ws(" ", a, b))
-    bigrams = F.when(n >= 2, pairs).otherwise(
-        F.array().cast("array<string>"))
+    docs = docs.withColumn("_toks", TK.word_tokens(F.lower(F.col("text"))))
     counts = (
-        docs.select("lang", F.explode(bigrams).alias("bigram"))
+        docs.select("lang",
+                    F.explode(TK.word_ngrams(F.col("_toks"), 2))
+                    .alias("bigram"))
         .groupBy("lang", "bigram")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -2329,10 +2321,9 @@ def q_vocab_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     n >= K) so the unbounded singleton tail — most of a crawl's distinct
     tokens — never reaches the top-k window; deterministic tie-break."""
     docs = _t_wide(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-                    lambda t: t != F.lit(""))
     counts = (
-        docs.select(F.explode(toks).alias("token"))
+        docs.select(F.explode(TK.word_tokens(F.lower(F.col("text"))))
+                    .alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") >= VOCAB_MIN_COUNT)
@@ -2469,9 +2460,6 @@ def q_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return select_top_k(w, DSIR_TOP_K)
 
 
-_DSIR_TOKS = (r"list_filter(regexp_split_to_array(lower(trim(text)), "
-              r"'\s+'), x -> x <> '')")
-
 # features = unigrams || bigrams, multiplicity kept (the BAG, not the set)
 _DSIR_FEATS_CTE = f"""
   SELECT doc_id, lang = 'en' AS is_target,
@@ -2479,7 +2467,7 @@ _DSIR_FEATS_CTE = f"""
                   list_transform(generate_series(1, len(toks) - 1),
                                  i -> toks[i] || ' ' || toks[i+1])
                 ELSE []::VARCHAR[] END) AS feature
-  FROM (SELECT doc_id, lang, {_DSIR_TOKS} AS toks FROM documents)
+  FROM (SELECT doc_id, lang, {_LTOKS} AS toks FROM documents)
 """
 
 # operation order mirrors operators/dsir.py EXACTLY: every arithmetic step
@@ -2979,7 +2967,7 @@ def q_decontam_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 Q_DECONTAM_REPORT_SQL = f"""
 WITH g AS (
   SELECT doc_id,
-         list_distinct(list_transform({_shingles_sql(_TOKS, DECONTAM_K)},
+         list_distinct(list_transform({_shingles_sql(_LTOKS, DECONTAM_K)},
                                       s -> {_SHINGLE_HASH.format(s='s')}))
          AS grams
   FROM documents

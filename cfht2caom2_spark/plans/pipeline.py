@@ -36,7 +36,8 @@ from ..functions.quality import with_quality_score, with_quality_stats
 from ..functions.scrub import scrub_rules_fired, scrubbed
 from ..operators.decision import with_decision
 from ..operators.dedup import minhash_losers_from_sig
-from ..operators.resume import lineage_rows, pending_work, read_store, write_lineage
+from ..operators.resume import (lineage_rows, partition_id_col, pending_work,
+                                read_store, write_lineage)
 from ..session import release
 
 OUTPUT_COLUMNS = [
@@ -476,9 +477,7 @@ def run_batch(spark: SparkSession, pages: DataFrame, out_dir: str,
                                    benchmark=benchmark,
                                    quality_weights=quality_weights,
                                    ppl_model=ppl_model)
-        decisions = decisions.withColumn(
-            "p_day", F.date_format(F.col("warc_ts"), "yyyy-MM-dd")
-        )
+        decisions = decisions.withColumn("p_day", partition_id_col())
         # free metrics riding the write action (A6) — no second pass over
         # the data.  collect_set skips NULL, so rows with no day are
         # flagged apart.

@@ -39,7 +39,8 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from ..operators.resume import partition_id_col
 
 
 class SnapshotTable:
@@ -86,7 +87,7 @@ class SnapshotTable:
         """Write df as a new snapshot, partitioned by day(ts_col)."""
         before = self._all_data_files()
         (
-            df.withColumn("p_day", F.date_format(F.col(ts_col), "yyyy-MM-dd"))
+            df.withColumn("p_day", partition_id_col(ts_col))
             .write.mode("append")
             .partitionBy("p_day")
             .parquet(self.data_dir)

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_PROFILE, RuleProfile
+from ..operators.resume import partition_id_col, read_store
 from ..plans.pipeline import build_pipeline
 from ..session import release
 from ..sources.pages import PAGES_SCHEMA
@@ -84,7 +85,6 @@ def process_increment(spark: SparkSession, table: SnapshotTable, out_dir: str,
             # the tick's output once, so the fused pass still runs once
             # (operators/compact.py).
             from ..operators.compact import demote_against_history
-            from ..operators.resume import read_store
 
             # a corrupt store raises rather than silently skipping the dedup
             history = read_store(spark, f"{out_dir}/decisions")
@@ -94,7 +94,7 @@ def process_increment(spark: SparkSession, table: SnapshotTable, out_dir: str,
         obs = Observation("tick_metrics")
         decisions = decisions.observe(obs, F.count(F.lit(1)).alias("n"))
         since = -1 if last is None else last
-        (decisions.withColumn("p_day", F.date_format("warc_ts", "yyyy-MM-dd"))
+        (decisions.withColumn("p_day", partition_id_col())
          .write.mode("overwrite").partitionBy("p_day")
          .parquet(f"{out_dir}/decisions/since_snapshot={since}"))
         n = obs.get["n"]
@@ -128,7 +128,7 @@ def stream_pages(spark: SparkSession, table: SnapshotTable, out_dir: str,
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         decisions = build_pipeline(batch_df, spark, profile, dedupe=False)
-        (decisions.withColumn("p_day", F.date_format("warc_ts", "yyyy-MM-dd"))
+        (decisions.withColumn("p_day", partition_id_col())
          .write.mode("overwrite").partitionBy("p_day")
          .parquet(f"{out_dir}/decisions/epoch={epoch_id}"))
 

@@ -1,11 +1,13 @@
-"""Word-shingle kernel parity and single-home guards.
+"""Word-rule kernel parity and single-home guards.
 
-Every Python crossing that signs word shingles goes through
-``functions/kernels.py``.  Here each signature frame is compared, bit for
-bit, with its Spark expression reference on hypothesis-drawn batches of
+Every Python crossing that tokenizes or signs word shingles goes through
+``functions/kernels.py``, and every Spark expression that tokenizes or
+builds word n-grams goes through ``functions/tokens.py``.  Here the two
+homes are compared with each other, and each signature frame with its
+Spark expression reference, bit for bit, on hypothesis-drawn batches of
 adversarial text (NULL, empty, whitespace-only, non-ASCII whitespace,
-non-ASCII case), and static checks keep the tokenizer regex and the MinHash
-modulus from being re-forked into other modules.
+non-ASCII case); static checks keep the tokenizer, the n-gram join, the
+day key and the MinHash modulus from being re-forked into other modules.
 """
 
 from __future__ import annotations
@@ -21,6 +23,8 @@ from hypothesis import strategies as st
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cfht2caom2_spark.functions import kernels
+from cfht2caom2_spark.functions.tokens import word_ngrams, word_tokens
 from cfht2caom2_spark.operators.decontam import gram_set_frame
 from cfht2caom2_spark.operators.dedup import (_simhash_md5_frame, hash60,
                                               hash60_fast, minhash_sig_frame,
@@ -31,6 +35,7 @@ from .reference_impl import gram_set, minhash_signature
 
 PKG = Path(__file__).resolve().parent.parent / "cfht2caom2_spark"
 KERNELS = PKG / "functions" / "kernels.py"
+TOKENS = PKG / "functions" / "tokens.py"
 
 # ASCII whitespace (Java's \s), the characters Java's \s does NOT match but
 # str.split() does (\x1c, NBSP, U+3000, U+2028), and non-ASCII case pairs
@@ -98,6 +103,36 @@ def test_signature_frames_match_expression_references(spark, texts, k):
         (k, texts)
 
 
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(texts=st.lists(_TEXT, min_size=1, max_size=16))
+@example(texts=_ADVERSARIAL)
+def test_word_rule_expressions_match_kernels(spark, texts):
+    """tokens.word_tokens, plain and over F.lower, equals
+    kernels.word_tokens of the text and of its Python lower(); and
+    tokens.word_ngrams(toks, n) for n = 1..5 equals the space-joined
+    Python windows, [] when there are fewer than n tokens.  NULL text
+    gives NULL everywhere.  One Spark job per batch."""
+    rows = spark.sparkContext.parallelize(list(enumerate(texts)), 2)
+    df = spark.createDataFrame(rows, "id bigint, t string")
+    toks = word_tokens(F.col("t"))
+    ns = range(1, 6)
+    got = {r["id"]: r for r in df.select(
+        "id", toks.alias("toks"),
+        word_tokens(F.lower(F.col("t"))).alias("ltoks"),
+        *[word_ngrams(toks, n).alias(f"g{n}") for n in ns]).collect()}
+    for i, text in enumerate(texts):
+        want = None if text is None else kernels.word_tokens(text)
+        want_grams = {f"g{n}": None if want is None else
+                      [" ".join(want[j:j + n])
+                       for j in range(len(want) - n + 1)] for n in ns}
+        assert got[i].asDict() == {
+            "id": i, "toks": want,
+            "ltoks": None if text is None else kernels.word_tokens(
+                text.lower()),
+            **want_grams}, repr(text)
+
+
 def test_unsupported_hash_raises(spark):
     """Only the crc32 and md5 families have a Python kernel; any other
     hash fails on the driver instead of silently changing the plan."""
@@ -156,6 +191,38 @@ def test_ascii_whitespace_tokenizer_lives_only_in_kernels():
                 homes.append(f"{path.relative_to(PKG)}:{node.lineno}")
     assert homes and all(h.startswith("functions/kernels.py:")
                          for h in homes), homes
+
+
+def _call_name(node) -> str | None:
+    f = node.func
+    return f.attr if isinstance(f, ast.Attribute) else \
+        f.id if isinstance(f, ast.Name) else None
+
+
+def _const_args(node) -> list:
+    return [a.value if isinstance(a, ast.Constant) else None
+            for a in node.args]
+
+
+def test_word_rule_and_day_key_live_in_one_place():
+    """The Spark-side word rule has one home, functions/tokens.py: no other
+    module splits on ``\\s+`` or joins tokens with ``concat_ws(" ", ...)``.
+    The day key ``'yyyy-MM-dd'`` is spelled once in the package
+    (``resume.partition_id_col``), so the write's p_day, the lineage id and
+    the resume filter cannot drift apart."""
+    forks, days = [], []
+    for path, tree in _package_modules():
+        site = str(path.relative_to(PKG))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Constant) and node.value == "yyyy-MM-dd":
+                days.append(f"{site}:{node.lineno}")
+            if not isinstance(node, ast.Call) or path == TOKENS:
+                continue
+            name, args = _call_name(node), _const_args(node)
+            if (name == "split" and r"\s+" in args) or (
+                    name == "concat_ws" and args[:1] == [" "]):
+                forks.append(f"{site}:{node.lineno} {name}")
+    assert not forks and len(days) == 1, (forks, days)
 
 
 def test_mersenne_modulus_defined_only_in_kernels():

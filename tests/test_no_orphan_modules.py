@@ -1,11 +1,14 @@
-"""Every package module is reachable from a shipped entry point.
+"""Every package module is reachable from a shipped entry point, and every
+top-level package function or class is referenced somewhere.
 
-Static check, no Spark session: walk the import graph (module-level,
+Static checks, no Spark session: walk the import graph (module-level,
 function-local and relative imports alike) from the shipped roots — the CLI
 (``__main__``), the Spark entry point (``__spark_entry__.py``), ``bench.py``,
 ``bench_extra.py``, ``scripts/`` and ``perfbench/`` — through the package.
 A module only tests import is dead weight every reader and test run pays
 for; delete it, or move a test-only oracle to ``tests/reference_impl.py``.
+A function nothing names at all — no package module, shipped root or test —
+is dead weight too.
 """
 
 from __future__ import annotations
@@ -75,3 +78,31 @@ def test_every_package_module_has_a_shipped_caller():
     orphans = sorted(str(p.relative_to(REPO)) for p in PKG.rglob("*.py")
                      if p.name != "__init__.py" and p not in reachable)
     assert not orphans, f"no shipped path imports: {orphans}"
+
+
+def _referenced_names(paths) -> set[str]:
+    """Every name ``paths`` use: AST names, attributes and imported names
+    (a definition's own name is none of these)."""
+    out: set[str] = set()
+    for path in paths:
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Name):
+                out.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                out.add(node.attr)
+            elif isinstance(node, ast.alias):
+                out.add(node.name.rsplit(".", 1)[-1])
+    return out
+
+
+def test_every_package_function_has_a_reference():
+    modules = sorted(PKG.rglob("*.py"))
+    used = _referenced_names(modules + _roots()
+                             + sorted((REPO / "tests").glob("*.py")))
+    dead = [f"{p.relative_to(PKG)}:{node.name}"
+            for p in modules
+            for node in ast.parse(p.read_text(), str(p)).body
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef))
+            and node.name not in used]
+    assert not dead, f"nothing references: {dead}"

@@ -1178,6 +1178,7 @@ def test_repetition_ladder_fast_parity(spark):
     from pyspark.sql import functions as F
 
     from cfht2caom2_spark.functions import quality as Q
+    from cfht2caom2_spark.functions.tokens import word_tokens
 
     rows = [
         (0, "spam spam spam spam spam spam spam spam spam spam spam spam"),
@@ -1191,7 +1192,7 @@ def test_repetition_ladder_fast_parity(spark):
         (8, "x " * 30 + "copy me twice copy me twice copy me twice"),
     ]
     docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    docs = docs.withColumn("_toks", Q.tokens(F.col("text")))
+    docs = docs.withColumn("_toks", word_tokens(F.col("text")))
     t = F.col("_toks")
     cols = [F.col("doc_id")]
     for n in Q.REP_LADDER_TOP_NS:

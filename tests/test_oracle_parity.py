@@ -35,9 +35,8 @@ def test_all_queries_have_oracles_or_are_declared():
 
 
 def test_repeated_spans_flat_builder_parity_k13(spark):
-    """Round-4 self-review: the production-k window builder (the flat
-    transform path, chosen for k>12) gets its own DuckDB parity check —
-    the registry query runs k=8 and would never exercise it."""
+    """A window size past the registry query's k=8 gets its own DuckDB
+    parity check."""
     import duckdb
 
     from cfht2caom2_spark.operators.spans import repeated_spans
@@ -85,3 +84,45 @@ def test_trained_weights_score_parity_is_bitwise(spark):
     import struct
     for u, v in spark_scores.items():
         assert struct.pack("<d", v) == struct.pack("<d", duck_scores[u]), u
+
+
+# Capitalised documents: a doc in mixed case, its lower-case twin and a
+# mixed-case copy, in one source; bench members (doc_id % 97 == 0) among
+# them; a doc whose repeats differ only in case.  The shared test tables
+# are all lower case, so only these show an oracle that does not
+# lower-case before shingling as the engine does.
+_CAPITALISED = [
+    (0, "src0", "The Quick Brown Fox Jumps Over The Lazy Dog Near The River"),
+    (1, "src0", "the quick brown fox jumps over the lazy dog near the river"),
+    (2, "src0", "the QUICK brown FOX jumps over THE lazy dog near the RIVER"),
+    (3, "src1", "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+    (4, "src1", "Repeat Words repeat words Repeat Words repeat words again"),
+    (97, "src1", "Alpha Beta Gamma Delta Epsilon Zeta Eta Theta Iota Kappa"),
+]
+# q_dedup_clusters' oracle embeds q_minhash_pairs'
+SHINGLE_QUERIES = ("q_jaccard_pairs", "q_minhash_pairs", "q_dedup_clusters",
+                   "q_decontaminate", "q_fuzzy_decontaminate",
+                   "q_decontam_report")
+
+
+@pytest.fixture(scope="module")
+def capitalised(tmp_path_factory):
+    import duckdb
+    import pandas as pd
+
+    sf = tmp_path_factory.mktemp("capitalised")
+    pd.DataFrame(
+        [(i, t, "en", src, len(t)) for i, src, t in _CAPITALISED],
+        columns=["doc_id", "text", "lang", "source", "n_chars"],
+    ).to_parquet(sf / "documents.parquet")
+    c = duckdb.connect()
+    c.execute("CREATE VIEW documents AS SELECT * FROM "
+              f"read_parquet('{sf}/documents.parquet')")
+    yield str(sf), c
+    c.close()
+
+
+@pytest.mark.parametrize("name", SHINGLE_QUERIES)
+def test_shingle_oracles_lower_case_like_the_engine(name, spark, capitalised):
+    sf, c = capitalised
+    assert compare(name, QUERIES[name](spark, sf), ORACLES[name], c) == []

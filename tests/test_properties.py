@@ -156,13 +156,14 @@ def test_repetition_ladder_matches_python_reference(spark, data):
     from pyspark.sql import functions as F
 
     from cfht2caom2_spark.functions import quality as Q
+    from cfht2caom2_spark.functions.tokens import word_tokens
 
     word = st.sampled_from(["aa", "bbb", "c", "dd"])
     doc = st.lists(word, min_size=0, max_size=40).map(" ".join)
     docs = [(i, data.draw(doc)) for i in range(data.draw(st.integers(2, 4)))]
     n = data.draw(st.sampled_from([2, 3, 5, 7]))
     df = spark.createDataFrame(docs, "doc_id bigint, text string") \
-        .withColumn("_toks", Q.tokens(F.col("text")))
+        .withColumn("_toks", word_tokens(F.col("text")))
     got = {r["doc_id"]: (r["top"], r["dup"]) for r in df.select(
         "doc_id",
         Q.top_ngram_char_frac(F.col("_toks"), n).alias("top"),
