@@ -157,9 +157,9 @@ def encode_text(text: str,
 
 
 def with_bpe_tokens(df: DataFrame, merges: list[tuple[str, str]],
-                    text_col: str = "text",
-                    out_col: str = "bpe_tokens") -> DataFrame:
-    """Append ``out_col: array<string>`` — the BPE encoding of ``text_col``.
+                    text_col: str = "text") -> DataFrame:
+    """Append ``bpe_tokens: array<string>`` — the BPE encoding of
+    ``text_col``.
 
     Iterator-form pandas UDF: the merge-rank dict is built ONCE per python
     worker (not per batch), and a per-task word cache collapses Zipf-repeated
@@ -173,7 +173,7 @@ def with_bpe_tokens(df: DataFrame, merges: list[tuple[str, str]],
             yield s.map(lambda t: None if t is None
                         else encode_text(t, ranks, cache))
 
-    return df.withColumn(out_col, _encode(F.col(text_col)))
+    return df.withColumn("bpe_tokens", _encode(F.col(text_col)))
 
 
 # --------------------------------------------------------------------------

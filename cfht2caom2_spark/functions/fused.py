@@ -61,12 +61,12 @@ def minhash_sig_py(text: str | None, A, B, k: int = 3):
 def with_extract_and_scores(df: DataFrame, spark: SparkSession,
                             langid_model: TrigramLangID | None = None,
                             ppl_model: BigramLM | None = None,
-                            html_col: str = "html", text_col: str = "text",
                             has_html: bool = True,
                             minhash_perms: int = 0,
                             shingle_k: int = 3) -> DataFrame:
     """Append extraction + all model scores (+ optional MinHash signature)
-    in a single Arrow pass."""
+    in a single Arrow pass, extracting from ``html`` (``text`` where the
+    html is empty, or always when not ``has_html``)."""
     bc = spark.sparkContext.broadcast(
         (langid_model or TrigramLangID(), ppl_model or BigramLM())
     )
@@ -74,7 +74,7 @@ def with_extract_and_scores(df: DataFrame, spark: SparkSession,
     # consumed there — returning them would ship every page body back across
     # Arrow a second time for a downstream .drop(); exclude them from the
     # output schema instead (halves UDF serialization traffic)
-    consumed = {html_col, text_col}
+    consumed = {"html", "text"}
     kept_fields = [f for f in df.schema.fields if f.name not in consumed]
     fields = kept_fields + _OUT_FIELDS
     if minhash_perms:
@@ -92,15 +92,15 @@ def with_extract_and_scores(df: DataFrame, spark: SparkSession,
             if has_html:
                 texts = [
                     extract_html(h) if h is not None and len(h) > 0 else t
-                    for h, t in zip(pdf[html_col], pdf[text_col])
+                    for h, t in zip(pdf["html"], pdf["text"])
                 ]
             else:
-                texts = [t for t in pdf[text_col]]
+                texts = [t for t in pdf["text"]]
             # whole-batch model scoring: one np.unique + segment-reduceat per
             # Arrow batch instead of ~135 us/doc of per-doc numpy fixed cost
             langs, confs = lid.predict_batch(texts)
             ppls = lm.perplexity_batch(texts, langs)
-            out = pdf.drop(columns=[c for c in (html_col, text_col)
+            out = pdf.drop(columns=[c for c in ("html", "text")
                                     if c in pdf.columns])
             out["extracted_text"] = pd.Series(texts, index=pdf.index, dtype=object)
             out["extracted_sha256"] = out["extracted_text"].map(

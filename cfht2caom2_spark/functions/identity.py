@@ -21,14 +21,12 @@ def host(url: Column) -> Column:
 # The unambiguous tracking set only: campaign/click identifiers that never
 # select content.  Bare "ref" is deliberately ABSENT — on many sites it is
 # functional (?ref=<branch> on code hosts, ?ref=<page> pagination) and
-# stripping it merges genuinely distinct pages before dedup; deployments
-# wanting aggressive stripping pass their own set via ``tracking_params``.
+# stripping it merges genuinely distinct pages before dedup.
 TRACKING_PARAMS = ("utm_source", "utm_medium", "utm_campaign", "utm_term",
                    "utm_content", "gclid", "fbclid")
 
 
-def canonical_url(url: Column,
-                  tracking_params: tuple[str, ...] = TRACKING_PARAMS) -> Column:
+def canonical_url(url: Column) -> Column:
     """Canonical form for crawl identity: drop the fragment, strip the
     well-known tracking query params (UTM family, click ids — ALL
     occurrences), drop a then-empty query, and strip one trailing slash
@@ -50,7 +48,7 @@ def canonical_url(url: Column,
     no_frag = F.regexp_replace(url, r"#.*$", "")
     base = F.regexp_replace(no_frag, r"\?.*$", "")          # scheme+host+path
     query = F.regexp_extract(no_frag, r"\?(.*)$", 1)        # '' when no '?'
-    tracking = "|".join(tracking_params)
+    tracking = "|".join(TRACKING_PARAMS)
     kept = F.filter(
         F.split(query, "&"),
         lambda kv: (kv != F.lit("")) & ~kv.rlike(f"^(?:{tracking})="))

@@ -45,12 +45,11 @@ class TrigramLangID:
     UNSEEN_LOGPROB = -9.0
     SAMPLE_CHARS = 600  # classification saturates well below this
 
-    def __init__(self, corpora: dict[str, str] | None = None):
-        corpora = corpora or CORPORA
-        self.langs: list[str] = sorted(corpora)
+    def __init__(self):
+        self.langs: list[str] = sorted(CORPORA)
         self.logprob: dict[str, dict[str, float]] = {}
         self.floor: dict[str, float] = {}
-        for lang, corpus in corpora.items():
+        for lang, corpus in CORPORA.items():
             text = _normalize(corpus)
             counts = Counter(text[i : i + 3] for i in range(len(text) - 2))
             total = sum(counts.values())

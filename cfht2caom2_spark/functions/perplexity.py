@@ -298,25 +298,25 @@ def char_bigram_counts(df, text_col: str = "extracted_text",
             .agg(F.sum("n").alias("n")))
 
 
-def char_unigram_counts(df, text_col: str = "extracted_text",
-                        lang_col: str = "lang_pred"):
-    """(lang, char, n) over the same normalized padded text."""
+def char_unigram_counts(df, text_col: str = "extracted_text"):
+    """(lang, char, n) over the same normalized padded text, by
+    ``lang_pred``."""
     norm = F.concat(
         F.lit(" "),
         F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "),
         F.lit(" "))
     base = (df.filter(F.col(text_col).isNotNull()
-                      & F.col(lang_col).isNotNull())
-            .select(F.col(lang_col).alias("lang"), norm.alias("_n")))
+                      & F.col("lang_pred").isNotNull())
+            .select(F.col("lang_pred").alias("lang"), norm.alias("_n")))
     chars = base.select(
         "lang", F.explode(F.split("_n", "")).alias("ch")
     ).filter(F.col("ch") != "")
     return chars.groupBy("lang", "ch").agg(F.count(F.lit(1)).alias("n"))
 
 
-def train_bigram_lm(df, text_col: str = "extracted_text",
-                    lang_col: str = "lang_pred") -> "BigramLM":
-    """Train the perplexity LM FROM the corpus (the CCNet recipe: fit the
+def train_bigram_lm(df) -> "BigramLM":
+    """Train the perplexity LM FROM the corpus' ``extracted_text`` by
+    ``lang_pred`` (the CCNet recipe: fit the
     LM on your own kept text, score against it) — the same close-the-loop
     discipline as train_quality_weights: counting is distributed
     (map-side-combined aggregations whose shuffle is bounded by charset²),
@@ -325,17 +325,17 @@ def train_bigram_lm(df, text_col: str = "extracted_text",
     trained on one document equals BigramLM(corpora={lang: doc}) exactly
     (pytest-pinned).  The result drops into build_pipeline(ppl_model=...) /
     batch --lm-counts with no plan change."""
-    return BigramLM(counts=corpus_lm_counts(df, text_col, lang_col))
+    return BigramLM(counts=corpus_lm_counts(df))
 
 
-def corpus_lm_counts(df, text_col: str = "extracted_text",
-                     lang_col: str = "lang_pred") -> dict:
-    """Run both count jobs and assemble {lang: (bigram->n, char->n)} on the
-    driver — the serializable intermediate the train-lm CLI prints."""
+def corpus_lm_counts(df, text_col: str = "extracted_text") -> dict:
+    """Run both count jobs and assemble {lang: (bigram->n, char->n)} by
+    ``lang_pred`` on the driver — the serializable intermediate the
+    train-lm CLI prints."""
     counts: dict[str, tuple[Counter, Counter]] = {}
-    for r in char_bigram_counts(df, text_col, lang_col).collect():
+    for r in char_bigram_counts(df, text_col).collect():
         counts.setdefault(r["lang"], (Counter(), Counter()))[0][r["bigram"]] = r["n"]
-    for r in char_unigram_counts(df, text_col, lang_col).collect():
+    for r in char_unigram_counts(df, text_col).collect():
         counts.setdefault(r["lang"], (Counter(), Counter()))[1][r["ch"]] = r["n"]
     return counts
 

@@ -582,10 +582,7 @@ def with_quality_score(df: DataFrame,
         F.col("repeated_line_frac"), weights=weights))
 
 
-def train_quality_weights(decisions: DataFrame,
-                          label_col: str = "keep",
-                          max_iter: int = 50,
-                          reg_param: float = 0.0) -> dict[str, float]:
+def train_quality_weights(decisions: DataFrame) -> dict[str, float]:
     """Fit the promised trained classifier for the quality score: a Spark ML
     logistic regression over the SAME six features ``quality_score``
     consumes, returned as a QUALITY_WEIGHTS-shaped dict so it drops
@@ -593,12 +590,13 @@ def train_quality_weights(decisions: DataFrame,
     (the DCLM/FineWeb recipe — train on labeled keep/drop decisions, score
     the corpus, mix by score bucket; operators/sampling.py).
 
-    Input: any frame with the stat columns + a boolean label (a decisions
-    store read works as-is).  Rows with null stats (empty payloads) are
-    excluded — they carry no trainable signal and the pipeline gates them
-    deterministically anyway.  Training is JVM-side (pyspark.ml), one pass
-    shape: assemble -> L-BFGS; fine at corpus scale (each iteration is one
-    map-reduce over the slim feature projection).
+    Input: any frame with the stat columns + the boolean ``keep`` label (a
+    decisions store read works as-is).  Rows with null stats (empty
+    payloads) are excluded — they carry no trainable signal and the
+    pipeline gates them deterministically anyway.  Training is JVM-side
+    (pyspark.ml), one pass shape: assemble -> unregularized L-BFGS, at most
+    50 iterations; fine at corpus scale (each iteration is one map-reduce
+    over the slim feature projection).
     """
     from pyspark.ml.classification import LogisticRegression
     from pyspark.ml.feature import VectorAssembler
@@ -611,16 +609,15 @@ def train_quality_weights(decisions: DataFrame,
     prepared = (
         decisions
         .filter(F.col("n_words").isNotNull()
-                & F.col(label_col).isNotNull())
+                & F.col("keep").isNotNull())
         .select(
             *[expr.alias(name) for name, expr in feat_exprs.items()],
-            F.col(label_col).cast("double").alias("label"),
+            F.col("keep").cast("double").alias("label"),
         )
     )
     assembled = VectorAssembler(inputCols=feats, outputCol="features") \
         .transform(prepared)
-    model = LogisticRegression(maxIter=max_iter, regParam=reg_param) \
-        .fit(assembled)
+    model = LogisticRegression(maxIter=50, regParam=0.0).fit(assembled)
     out = {"bias": float(model.intercept)}
     out.update({name: float(c) for name, c in zip(feats, model.coefficients)})
     return out

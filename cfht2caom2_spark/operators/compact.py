@@ -25,11 +25,9 @@ from pyspark.sql import functions as F
 from .resume import partition_id_col
 
 
-def demote_cross_increment_duplicates(decisions: DataFrame,
-                                      id_col: str = "url",
-                                      order_col: str = "warc_ts") -> DataFrame:
+def demote_cross_increment_duplicates(decisions: DataFrame) -> DataFrame:
     """Among KEPT rows sharing an extracted_sha256, keep the earliest by
-    (order_col, id_col); demote the rest: rules += exact_duplicate,
+    (warc_ts, url); demote the rest: rules += exact_duplicate,
     keep = false, scrubbed_text = null (stored artifacts are for kept docs
     only).  Dropped rows and null-hash rows pass through unchanged.
 
@@ -44,7 +42,7 @@ def demote_cross_increment_duplicates(decisions: DataFrame,
     contested = F.coalesce(
         F.col("keep") & F.col("extracted_sha256").isNotNull(), F.lit(False))
     w = Window.partitionBy("extracted_sha256").orderBy(
-        F.col(order_col), F.col(id_col))
+        F.col("warc_ts"), F.col("url"))
     demoted = _demoted(
         decisions.filter(contested)
         .withColumn("_demote", F.row_number().over(w) > 1),

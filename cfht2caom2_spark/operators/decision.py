@@ -62,18 +62,14 @@ def blocked_domain_rule(url: Column, blocked_hosts: tuple[str, ...]) -> Column:
 
 
 def with_decision(df: DataFrame, profile: RuleProfile,
-                  text_col: str = "extracted_text",
-                  lang_col: str | None = "lang_pred",
-                  include_model_rules: bool = True,
                   near_dup_col: str | None = None,
                   exact_dup_col: str | None = None,
                   contaminated_col: str | None = None,
-                  contaminated_fuzzy_col: str | None = None,
-                  url_col: str | None = "url") -> DataFrame:
+                  contaminated_fuzzy_col: str | None = None) -> DataFrame:
     """Append ``rules array<string>`` + ``keep boolean``.
 
-    Expects the quality-stat columns (functions.quality.with_quality_stats)
-    and, when include_model_rules, lang_pred/lang_conf/ppl.
+    Expects url, extracted_text, the quality-stat columns
+    (functions.quality.with_quality_stats) and lang_pred/lang_conf/ppl.
     ``near_dup_col`` / ``exact_dup_col``: optional boolean columns marking
     MinHash losers / byte-identical-content losers.
     """
@@ -82,18 +78,17 @@ def with_decision(df: DataFrame, profile: RuleProfile,
         from ..functions.quality import repetition_ladder_rules
 
         rules.update(repetition_ladder_rules(profile))
-    if profile.blocked_hosts and url_col is not None and url_col in df.columns:
+    if profile.blocked_hosts:
         rules["blocked_domain"] = blocked_domain_rule(
-            F.col(url_col), profile.blocked_hosts)
+            F.col("url"), profile.blocked_hosts)
     # rule-profile dispatch (P13): word-length rules are meaningless for
     # space-free CJK where tokens are single characters — gate them off.
-    if lang_col is not None:
-        not_zh = F.col(lang_col) != "zh"
-        for r in ("word_len_low", "word_len_high"):
-            rules[r] = rules[r] & not_zh
-    rules["empty_payload"] = F.col(text_col).isNull() | (F.length(text_col) == 0)
-    if include_model_rules:
-        rules.update(model_rules(profile))
+    not_zh = F.col("lang_pred") != "zh"
+    for r in ("word_len_low", "word_len_high"):
+        rules[r] = rules[r] & not_zh
+    rules["empty_payload"] = (F.col("extracted_text").isNull()
+                              | (F.length("extracted_text") == 0))
+    rules.update(model_rules(profile))
     if near_dup_col is not None:
         rules["near_duplicate"] = F.col(near_dup_col)
     if exact_dup_col is not None:

@@ -13,8 +13,9 @@ Scale shape (10^12 training docs, ~10^6 benchmark docs):
     distinct-gram table is genuinely broadcastable — this is the one join in
     the engine where a broadcast hint is correct by construction, not by
     runtime luck.  ~10^8 grams x 8 B ≈ 1 GB worst case; below executor
-    memory, and the hint is still left to AQE by default (``hint_broadcast``)
-    so a pathological suite degrades to a shuffle join instead of an OOM.
+    memory, and the join strategy is still left to AQE (no hint on the
+    table itself, only on its fixed-size bitmap) so a pathological suite
+    degrades to a shuffle join instead of an OOM.
   * the training side explodes to (id, gram_hash) — slim 16-B rows — but the
     inner join against the benchmark grams filters that stream map-side
     (broadcast) BEFORE any shuffle: only matching grams (a tiny fraction of
@@ -36,14 +37,16 @@ from pyspark.sql import functions as F
 
 from .dedup import shingle_hash
 
+# bench bitmap size: 2^22 bits, at most 2^16 broadcast rows (512 KiB)
+PREFILTER_BITS = 1 << 22
+
 
 def gram_set_frame(docs: DataFrame, id_col: str, text_col: str,
-                   k: int = 3, hash_fn=None,
-                   out_col: str = "_grams") -> DataFrame:
-    """(id, distinct hashed k-gram array) built in one vectorized Python
-    crossing (``kernels.gram_hashes``) for the md5 (default /
-    ``shingle_hash``) or crc32 (``shingle_hash_fast``) hash; any other
-    ``hash_fn`` raises ValueError.  Bit-identical to the expression
+                   k: int = 3, hash_fn=None) -> DataFrame:
+    """(id, ``_grams``): the distinct hashed k-gram array, built in one
+    vectorized Python crossing (``kernels.gram_hashes``) for the md5
+    (default / ``shingle_hash``) or crc32 (``shingle_hash_fast``) hash; any
+    other ``hash_fn`` raises ValueError.  Bit-identical to the expression
     ``array_distinct(transform(word_shingles(text, k), hash))``
     (tests/reference_impl.py ``gram_set``): first-occurrence order, hashes
     reduced mod 2^31-1 and de-duplicated post-hash (collisions collapse).
@@ -60,13 +63,13 @@ def gram_set_frame(docs: DataFrame, id_col: str, text_col: str,
         for pdf in batches:
             yield pd.DataFrame({
                 id_col: pdf[id_col].to_numpy(),
-                out_col: pd.Series([[None] if t is None
+                "_grams": pd.Series([[None] if t is None
                                     else gram_hashes(t, k, h)
                                     for t in pdf[text_col]], dtype=object),
             })
 
     return docs.select(id_col, text_col).mapInPandas(
-        run, schema=f"{id_col} {id_type}, {out_col} array<bigint>")
+        run, schema=f"{id_col} {id_type}, _grams array<bigint>")
 
 
 def benchmark_grams(bench: DataFrame, text_col: str = "text", k: int = 3,
@@ -117,8 +120,8 @@ def bench_gram_bitmap(bench_g: DataFrame, bits: int) -> DataFrame:
 def decontaminate(docs: DataFrame, bench: DataFrame,
                   id_col: str = "doc_id", text_col: str = "text",
                   k: int = 3, min_overlap: int = 5,
-                  hash_fn=None, hint_broadcast: bool = False,
-                  prefilter_bits: int = 1 << 22) -> DataFrame:
+                  hash_fn=None,
+                  prefilter_bits: int = PREFILTER_BITS) -> DataFrame:
     """Per-doc contamination flags: (id, n_grams, n_overlap, contaminated).
 
     ``n_overlap`` counts the doc's distinct grams that appear anywhere in the
@@ -148,8 +151,6 @@ def decontaminate(docs: DataFrame, bench: DataFrame,
         .localCheckpoint(eager=False)
     bench_g = benchmark_grams(bench, text_col=text_col, k=k,
                               hash_fn=hash_fn).localCheckpoint(eager=False)
-    if hint_broadcast:
-        bench_g = F.broadcast(bench_g)
 
     doc_grams = grams.select(id_col, F.explode("_grams").alias("_g"))
     if prefilter_bits:
@@ -189,7 +190,7 @@ def fuzzy_decontaminate(docs: DataFrame, bench: DataFrame,
                         id_col: str = "doc_id", text_col: str = "text",
                         bands: int = 8, rows_per_band: int = 2, k: int = 3,
                         min_est_jaccard: float = 0.5,
-                        hash_fn=None, hint_broadcast: bool = False) -> DataFrame:
+                        hash_fn=None) -> DataFrame:
     """Near-duplicate (fuzzy) decontamination: flag training docs whose
     MinHash signature collides with an eval-suite doc in any LSH band AND
     whose signature agreement estimates Jaccard >= ``min_est_jaccard``.
@@ -203,8 +204,8 @@ def fuzzy_decontaminate(docs: DataFrame, bench: DataFrame,
 
     Scale shape (10^12 training docs, ~10^6 eval docs):
       * eval side is BOUNDED: its banded-key table is (bands × n_eval) slim
-        rows — genuinely broadcastable (``hint_broadcast``; left to AQE by
-        default), so the corpus band stream is pruned map-side with NO
+        rows — broadcastable, and left to AQE, which broadcasts it while it
+        fits, so the corpus band stream is pruned map-side with NO
         corpus-side shuffle beyond the candidate distinct.
       * corpus side pays one signature fold (shared discipline with the
         dedup family: the slim (id, 16-long) sig frame is materialized once
@@ -228,8 +229,6 @@ def fuzzy_decontaminate(docs: DataFrame, bench: DataFrame,
 
     band_d = banded_keys(sig_d, "_id", bands, rows_per_band)
     band_b = banded_keys(sig_b, "_bid", bands, rows_per_band, sig_col="_bsig")
-    if hint_broadcast:
-        band_b = F.broadcast(band_b)
     cand = band_d.join(band_b, ["band", "key"]).select("_id", "_bid").distinct()
 
     scored = (
@@ -250,7 +249,7 @@ def fuzzy_decontaminate(docs: DataFrame, bench: DataFrame,
 def decontam_report(docs: DataFrame, bench: DataFrame,
                     id_col: str = "doc_id", text_col: str = "text",
                     k: int = 3, min_overlap: int = 5,
-                    hash_fn=None, prefilter_bits: int = 1 << 22) -> DataFrame:
+                    hash_fn=None) -> DataFrame:
     """Per-EVAL-doc contamination audit: for each benchmark doc, how many
     training docs share >= min_overlap distinct k-grams with IT, and the
     deepest such overlap.  The doc-level pass (``decontaminate``) answers
@@ -272,19 +271,18 @@ def decontam_report(docs: DataFrame, bench: DataFrame,
     # recompute pattern); the corpus stream is consumed once, so only the
     # bench side is pinned
     bench_gd = bench_gd.localCheckpoint(eager=False)
-    if prefilter_bits:
-        bitmap = bench_gram_bitmap(
-            bench_gd.select(F.col("_g").alias("bench_gram")).distinct(),
-            prefilter_bits)
-        doc_g = (
-            doc_g
-            .withColumn("_bkt", F.pmod(F.col("_g"), F.lit(prefilter_bits)))
-            .withColumn("word_idx", F.floor(F.col("_bkt") / 64))
-            .join(F.broadcast(bitmap), "word_idx", "inner")
-            .filter(F.expr(
-                "(word & shiftleft(1L, CAST(_bkt % 64 AS INT))) != 0"))
-            .drop("_bkt", "word_idx", "word")
-        )
+    bitmap = bench_gram_bitmap(
+        bench_gd.select(F.col("_g").alias("bench_gram")).distinct(),
+        PREFILTER_BITS)
+    doc_g = (
+        doc_g
+        .withColumn("_bkt", F.pmod(F.col("_g"), F.lit(PREFILTER_BITS)))
+        .withColumn("word_idx", F.floor(F.col("_bkt") / 64))
+        .join(F.broadcast(bitmap), "word_idx", "inner")
+        .filter(F.expr(
+            "(word & shiftleft(1L, CAST(_bkt % 64 AS INT))) != 0"))
+        .drop("_bkt", "word_idx", "word")
+    )
     pair = (
         doc_g.join(bench_gd, "_g")
         .groupBy(id_col, "_bid")

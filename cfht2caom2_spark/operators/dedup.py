@@ -29,6 +29,8 @@ via ``connected_components``.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -278,12 +280,11 @@ def _simhash_md5_frame(docs: DataFrame, id_col: str, text_col: str,
         sig_batches, schema=f"_id {id_type}, _sh bigint")
 
 
-def simhash_pairs(docs: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text", bits: int = 60,
-                  n_bands: int = 4, max_hamming: int = 3,
-                  shingle_k: int = 3) -> DataFrame:
+def simhash_pairs(docs: DataFrame, bits: int = 60,
+                  n_bands: int = 4, max_hamming: int = 3) -> DataFrame:
     """SimHash near-dup pairs via banded Hamming LSH — the third member of
-    the near-dup family (exact sha / MinHash Jaccard / SimHash Hamming).
+    the near-dup family (exact sha / MinHash Jaccard / SimHash Hamming),
+    over the word 3-shingles of a (doc_id, text) frame.
 
     Pigeonhole guarantee: with ``n_bands`` equal-width bands and
     ``max_hamming <= n_bands - 1``, any pair within the Hamming threshold
@@ -319,7 +320,7 @@ def simhash_pairs(docs: DataFrame, id_col: str = "doc_id",
     # evals); one mapInPandas crossing computes the identical signature
     # with hashlib md5 + one numpy bit-matrix per doc, pinned by the
     # brute-force DuckDB oracle
-    sh = _simhash_md5_frame(docs, id_col, text_col, bits, shingle_k)
+    sh = _simhash_md5_frame(docs, "doc_id", "text", bits, 3)
     # both sides of the banded self-join would otherwise re-run the whole
     # shingle+hash+fold signature from the scan (2x the dominant cost);
     # materialize the slim (id, 8-byte simhash) frame once — at corpus
@@ -418,8 +419,27 @@ def _cc_driver_small(spark, edges: DataFrame) -> DataFrame:
     return spark.createDataFrame(out, schema)
 
 
-def connected_components(pairs: DataFrame, max_rounds: int = 10,
-                         small_graph_threshold: int = 2_000_000) -> DataFrame:
+# star-contraction rounds before connected_components gives up converging
+_CC_MAX_ROUNDS = 10
+# driver cost of one union-find edge: ~16 B in the Arrow batch plus a
+# ~200 B parent-dict entry for each of its (worst case two) endpoints
+_UNION_FIND_EDGE_BYTES = 16 + 2 * 200
+_MEM_UNITS = {"": 1 << 20, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30,
+              "t": 1 << 40}
+
+
+def _union_find_edge_bound(driver_memory: str) -> int:
+    """The most edges ``connected_components`` collects to its driver-side
+    union-find: a tenth of ``driver_memory`` (a ``spark.driver.memory``
+    string; no unit means MiB) at ``_UNION_FIND_EDGE_BYTES`` per edge.
+    The 8g default gives ~2.06M edges, 1g an eighth of that."""
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", driver_memory.strip().lower())
+    if m is None:
+        raise ValueError(f"not a memory size: {driver_memory!r}")
+    return int(m[1]) * _MEM_UNITS[m[2]] // 10 // _UNION_FIND_EDGE_BYTES
+
+
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Transitive closure of near-dup pairs at scale: alternating large-star /
     small-star contraction (Kiveris et al. 2014).  Converges to a star forest
     in O(log n) rounds w.h.p.; every round is two shuffles over the EDGE set
@@ -440,20 +460,19 @@ def connected_components(pairs: DataFrame, max_rounds: int = 10,
     Returns (node, component) with component = min node id of the cluster;
     nodes absent from ``pairs`` (singletons) are not returned.
 
-    Adaptive branch: when the materialized edge count is <=
-    ``small_graph_threshold`` (default 2M edges), a driver-side union-find
-    replaces the iteration: each star round costs ~3 fixed Spark jobs
-    (contract + checkpoint + fused convergence probe), pure scheduling
-    overhead at that size — at sf1.0's 369k-edge minhash graph the
-    iterative path spent ~5 s on ~4 rounds of jobs the union-find does in
-    under a second.  Driver memory at the default threshold, honestly:
-    the Arrow batch is ~16 B/edge (~32 MB), but the Python parent DICT
-    dominates at ~200 B per distinct endpoint — worst case ~4M nodes ≈
-    0.8 GB transient, sized against this engine's 8g default driver
-    (session.get_spark); on a memory-tight driver pass a smaller
-    threshold.  Identical labeling (paths-agree test); the star
-    contraction below remains the scale path and every algorithmic test
-    pins it via ``small_graph_threshold=0``.
+    Adaptive branch: when the materialized edge count is within
+    ``_union_find_edge_bound`` of the session's ``spark.driver.memory``
+    (~2M edges at the 8g default, session.get_spark), a driver-side
+    union-find replaces the iteration: each star round costs ~3 fixed
+    Spark jobs (contract + checkpoint + fused convergence probe), pure
+    scheduling overhead at that size — at sf1.0's 369k-edge minhash graph
+    the iterative path spent ~5 s on ~4 rounds of jobs the union-find does
+    in under a second.  Driver memory at the bound, honestly: the Arrow
+    batch is ~16 B/edge, but the Python parent DICT dominates at ~200 B
+    per distinct endpoint — worst case two endpoints per edge, a tenth of
+    the driver memory transient.  Identical labeling (paths-agree test);
+    the star contraction below remains the scale path and every
+    algorithmic test pins it by patching the bound to 0.
     """
     edges = pairs.select(
         F.greatest("id_a", "id_b").alias("src"),
@@ -466,14 +485,16 @@ def connected_components(pairs: DataFrame, max_rounds: int = 10,
     # per-round probe scans; post-shuffle task counts remain AQE-decided
     # (coalescePartitions only shrinks to default parallelism).
     n_edges = edges.count()
-    if n_edges <= small_graph_threshold:
+    driver_memory = edges.sparkSession.sparkContext.getConf().get(
+        "spark.driver.memory", "1g")
+    if n_edges <= _union_find_edge_bound(driver_memory):
         # adaptive small-graph path (the AQE-broadcast analogue, decided
         # from the MEASURED edge count, which is already on the driver):
         # each star round costs a fixed ~3 Spark jobs (contract + checkpoint
         # + fused convergence probe) — pure scheduling overhead when the
         # edge set fits one Arrow batch.  A bounded driver-side union-find
         # (~16 B/edge Arrow + ~200 B/node dict; see the docstring's honest
-        # worst case vs the 8g driver) produces the identical
+        # worst case vs the driver memory) produces the identical
         # (node, min-id component) labeling in one collect.  The iterative
         # path below remains THE scale path; equivalence is pinned by
         # tests/test_operators.py::test_connected_components_paths_agree.
@@ -488,7 +509,7 @@ def connected_components(pairs: DataFrame, max_rounds: int = 10,
         edges, prev = edges.repartition(target).localCheckpoint(), edges
         release([prev])
     converged = False
-    for _ in range(max_rounds):
+    for _ in range(_CC_MAX_ROUNDS):
         edges, prev = _small_star(_large_star(edges)).localCheckpoint(), edges
         release([prev])
         # converged iff the edge set IS a star forest: every src points to
@@ -511,12 +532,13 @@ def connected_components(pairs: DataFrame, max_rounds: int = 10,
     labels = edges.select(F.col("src").alias("node"),
                           F.col("dst").alias("component"))
     if not converged:
-        # max_rounds exhausted on a pathological graph: collapse residual
+        # rounds exhausted on a pathological graph: collapse residual
         # multi-parent rows to one deterministic label so callers (loser
         # joins) never see duplicate node rows.  NOTE this degraded output
         # may split a true cluster across labels (the min-node-id contract
-        # holds only at convergence — raise max_rounds if this path is hit);
-        # at convergence the collapse is skipped entirely (no extra shuffle).
+        # holds only at convergence — raise _CC_MAX_ROUNDS if this path is
+        # hit); at convergence the collapse is skipped entirely (no extra
+        # shuffle).
         labels = labels.groupBy("node").agg(
             F.min("component").alias("component"))
     roots = (edges.select(F.col("dst").alias("node")).distinct()
@@ -527,8 +549,7 @@ def connected_components(pairs: DataFrame, max_rounds: int = 10,
 
 
 def cluster_losers(pairs: DataFrame, keyed: DataFrame,
-                   id_col: str = "_id", ord_col: str = "_ord",
-                   max_rounds: int = 10) -> DataFrame:
+                   id_col: str = "_id", ord_col: str = "_ord") -> DataFrame:
     """Transitive-closure loser selection: every doc in a near-dup component
     except its earliest member (min (ord, id)) is dropped.
 
@@ -541,7 +562,7 @@ def cluster_losers(pairs: DataFrame, keyed: DataFrame,
     ``keyed``: (id_col, ord_col) one row per id, supplies the ordering.
     Returns a one-column DataFrame ``loser_id``.
     """
-    comp = connected_components(pairs, max_rounds)
+    comp = connected_components(pairs)
     labeled = comp.join(
         keyed.select(F.col(id_col).alias("node"), F.col(ord_col).alias("_o")),
         "node")
@@ -554,12 +575,12 @@ def cluster_losers(pairs: DataFrame, keyed: DataFrame,
 
 
 def minhash_losers_from_sig(df: DataFrame, id_col: str, order_col: str,
-                            sig_col: str = "minhash_sig",
                             bands: int = 8, rows_per_band: int = 4,
                             threshold: float = 0.8,
                             persist_tracker: list | None = None,
                             policy: str = "pairs") -> DataFrame:
-    """Near-dup losers from PRECOMPUTED signatures (the production path).
+    """Near-dup losers from PRECOMPUTED ``minhash_sig`` signatures (the
+    production path).
 
     Verification uses the standard MinHash similarity estimator — the
     fraction of agreeing permutations (Broder 1997) — instead of an exact
@@ -603,7 +624,7 @@ def minhash_losers_from_sig(df: DataFrame, id_col: str, order_col: str,
     keyed = df.select(
         F.col(id_col).alias("_id"),
         F.col(order_col).alias("_ord"),
-        F.col(sig_col).alias("_sig"),
+        F.col("minhash_sig").alias("_sig"),
     ).filter(F.col("_sig").isNotNull()).localCheckpoint(eager=True)
     if persist_tracker is not None:
         persist_tracker.append(keyed)
@@ -646,8 +667,7 @@ def minhash_losers_from_sig(df: DataFrame, id_col: str, order_col: str,
     )
 
 
-def duplication_weights(df: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+def duplication_weights(df: DataFrame) -> DataFrame:
     """Soft dedup: instead of DROPPING repeated content, weight it down —
     every doc gets its content-group multiplicity and the 1/n sampling
     weight that makes each distinct content unit contribute equally to a
@@ -655,12 +675,13 @@ def duplication_weights(df: DataFrame, id_col: str = "doc_id",
     hard dedup is too aggressive, e.g. templated-but-distinct pages).
 
     One window over the content fingerprint — the same shuffle key as the
-    exact-dedup collapse; no joins.  Returns (id, dup_count, dup_weight).
+    exact-dedup collapse; no joins.  Takes (doc_id, text), returns
+    (doc_id, dup_count, dup_weight).
     """
-    w = Window.partitionBy(md5_fingerprint(F.col(text_col)))
+    w = Window.partitionBy(md5_fingerprint(F.col("text")))
     n = F.count(F.lit(1)).over(w)
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n.cast("bigint").alias("dup_count"),
         (F.lit(1.0) / n).alias("dup_weight"),
     )

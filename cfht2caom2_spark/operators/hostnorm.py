@@ -25,24 +25,24 @@ survives, but the two-phase form bounds reducer memory by construction.)
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.identity import host as host_of
 
+# phase-1 salts per host: how many reducers one hot host's rows spread over
+N_SALTS = 16
 
-def host_lang_consensus(df: DataFrame, url_col: str = "url",
-                        lang_col: str = "lang_pred",
-                        conf_col: str = "lang_conf",
-                        min_conf: float = 0.5,
-                        n_salts: int = 16) -> DataFrame:
-    """(host, consensus_lang, n_votes): majority lang among confident rows."""
+
+def host_lang_consensus(df: DataFrame, min_conf: float = 0.5) -> DataFrame:
+    """(host, consensus_lang, n_votes): majority ``lang_pred`` among rows
+    whose ``lang_conf`` is at least ``min_conf``, by ``url`` host."""
     votes = (
-        df.filter(F.col(conf_col) >= min_conf)
+        df.filter(F.col("lang_conf") >= min_conf)
         .select(
-            host_of(F.col(url_col)).alias("host"),
-            F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_salts)).alias("_salt"),
-            F.col(lang_col).alias("lang"),
+            host_of(F.col("url")).alias("host"),
+            F.pmod(F.xxhash64(F.col("url")), F.lit(N_SALTS)).alias("_salt"),
+            F.col("lang_pred").alias("lang"),
         )
     )
     partial = votes.groupBy("host", "_salt", "lang").agg(
@@ -61,10 +61,7 @@ def host_lang_consensus(df: DataFrame, url_col: str = "url",
                        F.col("_b.n_votes").alias("n_votes"))
 
 
-def with_host_lang_backfill(df: DataFrame, url_col: str = "url",
-                            lang_col: str = "lang_pred",
-                            conf_col: str = "lang_conf",
-                            min_conf: float = 0.5,
+def with_host_lang_backfill(df: DataFrame, min_conf: float = 0.5,
                             adopt_below: float = 0.3) -> DataFrame:
     """Low-confidence rows adopt their host's consensus language.
 
@@ -76,15 +73,16 @@ def with_host_lang_backfill(df: DataFrame, url_col: str = "url",
     autoBroadcastJoinThreshold (the repo-wide no-unbounded-broadcast
     invariant, tests/test_plan_shape.py).
     """
-    consensus = host_lang_consensus(df, url_col, lang_col, conf_col, min_conf)
-    joined = df.withColumn("_host", host_of(F.col(url_col))).join(
+    consensus = host_lang_consensus(df, min_conf)
+    joined = df.withColumn("_host", host_of(F.col("url"))).join(
         consensus, F.col("_host") == F.col("host"), "left"
     )
-    adopt = (F.col(conf_col) < adopt_below) & F.col("consensus_lang").isNotNull()
+    adopt = (F.col("lang_conf") < adopt_below) \
+        & F.col("consensus_lang").isNotNull()
     return (
         joined.withColumn("lang_final",
                           F.when(adopt, F.col("consensus_lang"))
-                          .otherwise(F.col(lang_col)))
+                          .otherwise(F.col("lang_pred")))
         .withColumn("lang_source",
                     F.when(adopt, F.lit("host_consensus")).otherwise(F.lit("model")))
         .drop("_host", "host", "consensus_lang", "n_votes")

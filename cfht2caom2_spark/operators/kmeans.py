@@ -71,15 +71,14 @@ def nearest_centroid(vec: Column, centroids: list[list[float]]) -> Column:
     return (F.array_position(dists, F.array_min(dists)) - 1).cast("bigint")
 
 
-def init_centroids(df: DataFrame, k: int, id_col: str = "vec_id",
-                   vec_col: str = "embedding", seed: int = 0,
+def init_centroids(df: DataFrame, k: int, seed: int = 0,
                    ) -> list[list[float]]:
-    """Deterministic seeding: the k vectors with the smallest
-    (hash60(id:seed), id) shuffle key, cluster id = key rank.  Bounded
-    collect — exactly k rows regardless of corpus size."""
+    """Deterministic seeding: the k (vec_id, embedding) vectors with the
+    smallest (hash60(id:seed), id) shuffle key, cluster id = key rank.
+    Bounded collect — exactly k rows regardless of corpus size."""
     rows = (
-        df.select(F.col(id_col).alias("_id"),
-                  F.transform(F.col(vec_col),
+        df.select(F.col("vec_id").alias("_id"),
+                  F.transform(F.col("embedding"),
                               lambda x: x.cast("double")).alias("_v"))
         .withColumn("_key", shuffle_key(F.col("_id"), seed))
         .orderBy("_key", "_id")
@@ -90,7 +89,6 @@ def init_centroids(df: DataFrame, k: int, id_col: str = "vec_id",
 
 
 def train_centroids(df: DataFrame, k: int, n_iter: int = 10,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
                     seed: int = 0) -> list[list[float]]:
     """Lloyd's algorithm: assign (narrow expression) -> per-cluster mean
     (one map-side-combined shuffle of k*dim partials) -> repeat.  Returns
@@ -98,9 +96,9 @@ def train_centroids(df: DataFrame, k: int, n_iter: int = 10,
     given (input, k, seed, n_iter) — the final-merge combine order follows
     shuffle block fetch arrival, which Spark does not guarantee, so
     borderline assignments can drift at the ulp level across runs."""
-    centroids = init_centroids(df, k, id_col, vec_col, seed)
+    centroids = init_centroids(df, k, seed)
     dim = len(centroids[0]) if centroids else 0
-    vecs = df.select(F.col(vec_col).alias("_v"))
+    vecs = df.select(F.col("embedding").alias("_v"))
     for _ in range(n_iter):
         assigned = vecs.withColumn(
             "_cell", nearest_centroid(F.col("_v"), centroids))
@@ -117,8 +115,7 @@ def train_centroids(df: DataFrame, k: int, n_iter: int = 10,
     return centroids
 
 
-def kmeans_cost(df: DataFrame, centroids: list[list[float]],
-                vec_col: str = "embedding") -> float:
+def kmeans_cost(df: DataFrame, centroids: list[list[float]]) -> float:
     """Sum of squared distances to the assigned centroid (the Lloyd's
     objective) — one narrow scan + one scalar agg.  Empty input (or an
     empty centroid list) costs 0.0: F.sum over zero rows is SQL NULL, which
@@ -126,18 +123,22 @@ def kmeans_cost(df: DataFrame, centroids: list[list[float]],
     CLI on an empty parquet)."""
     if not centroids:
         return 0.0
-    vec = F.col(vec_col)
+    vec = F.col("embedding")
     dists = F.transform(_centroid_lit(centroids), lambda c: sq_dist(vec, c))
     row = df.select(F.sum(F.array_min(dists)).alias("c")).first()
     return float(row["c"]) if row["c"] is not None else 0.0
 
 
 def assign_cells(df: DataFrame, centroids: list[list[float]],
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 out_col: str = "cell",
                  vectorized: bool | None = None) -> DataFrame:
-    """(id, cell): every vector labeled with its nearest-centroid cell —
-    the IVF index build / cluster-balanced-sampling key.
+    """(vec_id, cell): every embedding labeled with its nearest-centroid
+    cell — the IVF index build / cluster-balanced-sampling key.
+
+    Degenerate vectors label the same on both paths: a NULL vector, one
+    whose length differs from the centroids' or one with a NULL element
+    labels NULL (``zip_with`` pads the distance to NULL); one with a NaN or
+    infinite element labels cell 0 (every distance is NaN, or every one
+    +inf, and ``array_position`` finds the first).
 
     Two physical paths, same labeling (parity pinned by
     tests/test_operators.py::test_assign_cells_vectorized_parity):
@@ -171,38 +172,56 @@ def assign_cells(df: DataFrame, centroids: list[list[float]],
         vectorized = k * dim >= _VEC_KDIM_THRESHOLD
     if not vectorized:
         return df.select(
-            F.col(id_col),
-            nearest_centroid(F.col(vec_col), centroids).alias(out_col))
+            "vec_id",
+            nearest_centroid(F.col("embedding"), centroids).alias("cell"))
 
     import numpy as np
     import pandas as pd
 
     cent = np.asarray(centroids, dtype="float64")
-    cent_t = np.ascontiguousarray(cent.T)
-    c2 = (cent * cent).sum(axis=1)
-    dim = cent.shape[1]
 
     def assign_batches(batches):
         for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            cells = pd.array([None] * len(pdf), dtype="Int64")
-            # NULL / wrong-length / NULL-element vectors label NULL, like
-            # the expression path (zip_with padding NULLs the distance)
-            raw = [None if v is None or len(v) != dim
-                   else np.asarray(v, dtype="float64")
-                   for v in pdf[vec_col]]
-            ok = np.array([v is not None and not np.isnan(v).any()
-                           for v in raw])
-            if ok.any():
-                vecs = np.stack([v for v, o in zip(raw, ok) if o])
-                d2 = ((vecs * vecs).sum(axis=1)[:, None]
-                      - 2.0 * (vecs @ cent_t) + c2[None, :])
-                cells[np.flatnonzero(ok)] = np.argmin(d2, axis=1)  # first min
-            yield pd.DataFrame({id_col: ids, out_col: cells})
+            yield pd.DataFrame({"vec_id": pdf["vec_id"].to_numpy(),
+                                "cell": _nearest_cells(pdf["_v"], cent)})
 
-    id_type = df.select(id_col).schema.fields[0].dataType.simpleString()
-    return df.select(id_col, vec_col).mapInPandas(
-        assign_batches, schema=f"{id_col} {id_type}, {out_col} bigint")
+    id_type = df.select("vec_id").schema.fields[0].dataType.simpleString()
+    return df.select("vec_id", _null_if_null_element()) \
+        .mapInPandas(assign_batches,
+                     schema=f"vec_id {id_type}, cell bigint")
+
+
+def _null_if_null_element() -> Column:
+    """``_v``: the embedding, NULL when it holds a NULL element — Arrow
+    hands pandas a NULL element as NaN, and the two label differently."""
+    vec = F.col("embedding")
+    return F.when(F.exists(vec, lambda x: x.isNull()), F.lit(None)) \
+        .otherwise(vec).alias("_v")
+
+
+def _nearest_cells(vectors, cent):
+    """The vectorized twin of ``nearest_centroid`` over one batch, against
+    the k x dim float64 matrix ``cent``: all k distances via
+    ||x-c||^2 = ||x||^2 - 2x.c + ||c||^2 (one matmul), first min.  NULL /
+    wrong-length vectors label NULL and NaN / infinite ones cell 0, like
+    the expression path (``assign_cells``)."""
+    import numpy as np
+    import pandas as pd
+
+    dim = cent.shape[1]
+    raw = [None if v is None or len(v) != dim
+           else np.asarray(v, dtype="float64") for v in vectors]
+    ok = np.array([v is not None for v in raw], dtype=bool)
+    cells = pd.array([None] * len(raw), dtype="Int64")
+    if ok.any():
+        vecs = np.stack([v for v in raw if v is not None])
+        with np.errstate(invalid="ignore", over="ignore"):
+            d2 = ((vecs * vecs).sum(axis=1)[:, None]
+                  - 2.0 * (vecs @ cent.T) + (cent * cent).sum(axis=1))
+        first = np.argmin(d2, axis=1)
+        first[~np.isfinite(vecs).all(axis=1)] = 0
+        cells[np.flatnonzero(ok)] = first
+    return cells
 
 
 # expression-path literal trees stay fast well past the oracle's toy size;
@@ -213,11 +232,11 @@ _VEC_KDIM_THRESHOLD = 4096
 
 def ivf_centroid_topk(corpus: DataFrame, queries: DataFrame,
                       centroids: list[list[float]],
-                      id_col: str = "vec_id", vec_col: str = "embedding",
                       k: int = 10, n_probe: int = 2) -> DataFrame:
-    """IVF ANN with trained centroid cells: corpus vectors live in their
-    nearest cell; each query probes its ``n_probe`` nearest cells and ranks
-    candidates by cosine.  Returns (query_id, vec_id, rank, cos).
+    """IVF ANN with trained centroid cells over (vec_id, embedding) frames:
+    corpus vectors live in their nearest cell; each query probes its
+    ``n_probe`` nearest cells and ranks candidates by cosine.  Returns
+    (query_id, vec_id, rank, cos).
 
     The corpus side keys on cell id only; the join fan-out is bounded by
     n_probe * |queries| rows on the broadcast side.  Recall/cost dial =
@@ -243,20 +262,20 @@ def ivf_centroid_topk(corpus: DataFrame, queries: DataFrame,
     kk = len(centroids)
     dim = len(centroids[0]) if centroids else 0
     big = kk * dim >= _VEC_KDIM_THRESHOLD
-    id_type = corpus.select(id_col).schema.fields[0] \
+    id_type = corpus.select("vec_id").schema.fields[0] \
         .dataType.simpleString()
-    vec_type = corpus.select(vec_col).schema.fields[0] \
+    vec_type = corpus.select("embedding").schema.fields[0] \
         .dataType.simpleString()
 
     if not big:
         c = corpus.select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_cv"),
-            nearest_centroid(F.col(vec_col), centroids).alias("_cell"))
+            F.col("vec_id").alias("vec_id"), F.col("embedding").alias("_cv"),
+            nearest_centroid(F.col("embedding"), centroids).alias("_cell"))
         dists = F.transform(_centroid_lit(centroids),
-                            lambda cc: sq_dist(F.col(vec_col), cc))
+                            lambda cc: sq_dist(F.col("embedding"), cc))
         q_cells = (
-            queries.select(F.col(id_col).alias("query_id"),
-                           F.col(vec_col).alias("_qv"),
+            queries.select(F.col("vec_id").alias("query_id"),
+                           F.col("embedding").alias("_qv"),
                            F.posexplode(dists).alias("_i", "_d"))
             .withColumn("_pr", F.row_number().over(
                 Window.partitionBy("query_id").orderBy("_d", "_i")))
@@ -271,29 +290,20 @@ def ivf_centroid_topk(corpus: DataFrame, queries: DataFrame,
 
         def corpus_cells(batches):
             for pdf in batches:
-                raw = [None if v is None or len(v) != dim
-                       else np.asarray(v, dtype="float64")
-                       for v in pdf[vec_col]]
-                ok = np.array([v is not None and not np.isnan(v).any()
-                               for v in raw])
-                cells = pd.array([None] * len(pdf), dtype="Int64")
-                if ok.any():
-                    vecs = np.stack([v for v, o in zip(raw, ok) if o])
-                    d2 = ((vecs * vecs).sum(axis=1)[:, None]
-                          - 2.0 * (vecs @ cent_t) + c2[None, :])
-                    cells[np.flatnonzero(ok)] = np.argmin(d2, axis=1)
-                yield pd.DataFrame({"vec_id": pdf[id_col].to_numpy(),
-                                    "_cv": pdf[vec_col],
-                                    "_cell": cells})
+                yield pd.DataFrame({
+                    "vec_id": pdf["vec_id"].to_numpy(),
+                    "_cv": pdf["embedding"],
+                    "_cell": _nearest_cells(pdf["_v"], cent)})
 
-        c = corpus.select(id_col, vec_col).mapInPandas(
+        c = corpus.select("vec_id", "embedding",
+                          _null_if_null_element()).mapInPandas(
             corpus_cells,
             schema=f"vec_id {id_type}, _cv {vec_type}, _cell bigint")
 
         def probe_cells(batches):
             for pdf in batches:
                 rows_id, rows_qv, rows_cell = [], [], []
-                for qid, v in zip(pdf[id_col], pdf[vec_col]):
+                for qid, v in zip(pdf["vec_id"], pdf["embedding"]):
                     if v is None or len(v) != dim:
                         continue
                     qv = np.asarray(v, dtype="float64")
@@ -315,7 +325,7 @@ def ivf_centroid_topk(corpus: DataFrame, queries: DataFrame,
                          "_qv": pd.Series(dtype=object),
                          "_cell": pd.Series(dtype="int64")})
 
-        q_cells = queries.select(id_col, vec_col).mapInPandas(
+        q_cells = queries.select("vec_id", "embedding").mapInPandas(
             probe_cells,
             schema=f"query_id {id_type}, _qv {vec_type}, _cell bigint")
 
@@ -361,9 +371,7 @@ def ivf_centroid_topk(corpus: DataFrame, queries: DataFrame,
 
 
 def cluster_balanced_sample(df: DataFrame, centroids: list[list[float]],
-                            cap_per_cell: int, id_col: str = "vec_id",
-                            vec_col: str = "embedding", seed: int = 0,
-                            bucket_fn=None) -> DataFrame:
+                            cap_per_cell: int, seed: int = 0) -> DataFrame:
     """Diversity-preserving downsample: each k-means cell is thinned toward
     ``cap_per_cell`` expected rows, so over-represented clusters (boilerplate
     regions, template farms) stop dominating the mixture while sparse
@@ -387,19 +395,18 @@ def cluster_balanced_sample(df: DataFrame, centroids: list[list[float]],
     # assignment via assign_cells so the production-k*dim vectorized path
     # dispatches here too (the literal-tree blowup this module documents
     # would otherwise survive on the sampling path)
-    assigned = assign_cells(df, centroids, id_col=id_col, vec_col=vec_col,
-                            out_col="cell")
+    assigned = assign_cells(df, centroids)
     # the slim (id, cell) frame feeds BOTH the cell-count aggregate and the
     # keep-filter join-back; without materialization the k*dim assignment
     # evaluates twice per row (guide §2.4 pay-once discipline)
     assigned = assigned.localCheckpoint(eager=False)
     counts = assigned.groupBy("cell").agg(
         F.count(F.lit(1)).alias("_n"))
-    bucket = (bucket_fn or sample_bucket)(
-        F.concat_ws(":", F.col(id_col).cast("string"), F.lit(str(seed))))
+    bucket = sample_bucket(
+        F.concat_ws(":", F.col("vec_id").cast("string"), F.lit(str(seed))))
     return (
         assigned.join(F.broadcast(counts), "cell")
         .filter(bucket * F.col("_n")
                 < F.lit(int(cap_per_cell) * BUCKETS).cast("bigint"))
-        .select(id_col, "cell")
+        .select("vec_id", "cell")
     )

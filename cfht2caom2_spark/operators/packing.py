@@ -52,20 +52,21 @@ def shuffle_key(id_col: Column, seed: int, hash_fn=None) -> Column:
         F.concat_ws(":", id_col.cast("string"), F.lit(str(seed))))
 
 
-def global_shuffle(df: DataFrame, id_col: str = "doc_id", seed: int = 0,
-                   hash_fn=None, key_out: str = "shuffle_key") -> DataFrame:
+def global_shuffle(df: DataFrame, id_col: str = "doc_id",
+                   seed: int = 0) -> DataFrame:
     """The corpus in deterministic pseudo-random order: sort by
-    (hash(id, seed), id) — the id tiebreak makes the order total even under
-    hash collisions.  Same seed -> byte-identical order on any cluster
-    size; a new seed is a fresh epoch permutation with zero state."""
-    return (df.withColumn(key_out, shuffle_key(F.col(id_col), seed, hash_fn))
-              .orderBy(key_out, id_col))
+    (shuffle_key = hash60(id, seed), id) — the id tiebreak makes the order
+    total even under hash collisions.  Same seed -> byte-identical order on
+    any cluster size; a new seed is a fresh epoch permutation with zero
+    state."""
+    return (df.withColumn("shuffle_key", shuffle_key(F.col(id_col), seed))
+              .orderBy("shuffle_key", id_col))
 
 
 def pack_blocks(docs: DataFrame, id_col: str | list[str] = "doc_id",
                 text_col: str = "text", block_tokens: int = 1024,
-                count_fn=ws_token_count, order_col: str | None = None,
-                num_partitions: int | None = None) -> DataFrame:
+                count_fn=ws_token_count,
+                order_col: str | None = None) -> DataFrame:
     """Assign every document its token span in the concatenate-and-chop
     packing: docs are laid end-to-end in ``order_col`` order (default: the
     id itself; pass a ``global_shuffle`` key column for shuffled epochs) and
@@ -83,6 +84,8 @@ def pack_blocks(docs: DataFrame, id_col: str | list[str] = "doc_id",
     — because prefix + local cumsum equals the global cumsum for ANY
     contiguous range split: the running sum restarts at 0 in every
     partition and the broadcast prefix adds back everything to its left.
+    The range split has ``spark.sql.shuffle.partitions`` partitions before
+    AQE coalesces them.
     """
     ids = [id_col] if isinstance(id_col, str) else list(id_col)
     # pin the sampled range boundaries AND run the Arrow pass once: the
@@ -90,7 +93,7 @@ def pack_blocks(docs: DataFrame, id_col: str | list[str] = "doc_id",
     # (see module docstring); lazy like the dedup signature frames, so no
     # job runs at plan-build time
     with_local = _running_sums(docs, ids, order_col or ids[0], text_col,
-                               count_fn, num_partitions) \
+                               count_fn) \
         .localCheckpoint(eager=False)
 
     # per-partition totals = the last running sum of each partition; the
@@ -122,8 +125,7 @@ def pack_blocks(docs: DataFrame, id_col: str | list[str] = "doc_id",
 
 
 def _running_sums(docs: DataFrame, ids: list[str], order: str,
-                  text_col: str, count_fn,
-                  num_partitions: int | None) -> DataFrame:
+                  text_col: str, count_fn) -> DataFrame:
     """The corpus side of ``pack_blocks``, before its pin: range-partition
     the slim (ids, _ord, n_tokens) rows by the order key, sort within each
     partition, and add (_pid, _local_cum), the running token sum that
@@ -133,12 +135,8 @@ def _running_sums(docs: DataFrame, ids: list[str], order: str,
 
     sel = [*[F.col(c) for c in ids], F.col(order).alias("_ord"),
            count_fn(F.col(text_col)).alias("n_tokens")]
-    slim = docs.select(*sel)
-    if num_partitions:
-        slim = slim.repartitionByRange(num_partitions, "_ord", *ids)
-    else:
-        slim = slim.repartitionByRange("_ord", *ids)
-    slim = slim.sortWithinPartitions("_ord", *ids)
+    slim = docs.select(*sel).repartitionByRange("_ord", *ids) \
+        .sortWithinPartitions("_ord", *ids)
 
     # fresh StructType — StructType.add MUTATES, and slim.schema is the
     # DataFrame's cached schema object
@@ -161,8 +159,7 @@ def _running_sums(docs: DataFrame, ids: list[str], order: str,
 
 def materialize_blocks(docs: DataFrame, packed: DataFrame,
                        id_col: str = "doc_id", text_col: str = "text",
-                       block_tokens: int = 1024,
-                       order_col: str | None = None) -> DataFrame:
+                       block_tokens: int = 1024) -> DataFrame:
     """Assemble the actual fixed-length training sequences from a
     ``pack_blocks`` map: one row per block, its text being the
     whitespace-joined token slices of every doc crossing it, in stream

@@ -24,8 +24,9 @@ from .resume import partition_id_col
 SNIPPET_CHARS = 200
 
 
-def preview_rows(decisions: DataFrame, snippet_chars: int = SNIPPET_CHARS) -> DataFrame:
-    """One preview artifact per KEPT doc: bounded snippet + display stats.
+def preview_rows(decisions: DataFrame) -> DataFrame:
+    """One preview artifact per KEPT doc: a ``SNIPPET_CHARS`` snippet +
+    display stats.
 
     p_day is passed through when present and derived from warc_ts otherwise
     (same derivation as compact_decisions) so ``write_previews`` can always
@@ -34,18 +35,17 @@ def preview_rows(decisions: DataFrame, snippet_chars: int = SNIPPET_CHARS) -> Da
              else partition_id_col())
     return decisions.filter(F.col("keep")).select(
         "url", "warc_ts",
-        F.substring("scrubbed_text", 1, snippet_chars).alias("snippet"),
+        F.substring("scrubbed_text", 1, SNIPPET_CHARS).alias("snippet"),
         F.length("scrubbed_text").cast("bigint").alias("n_chars"),
         F.col("lang_pred"),
         p_day.alias("p_day"),
     )
 
 
-def write_previews(decisions: DataFrame, path: str,
-                   snippet_chars: int = SNIPPET_CHARS) -> None:
+def write_previews(decisions: DataFrame, path: str) -> None:
     """Idempotent preview sink: day-partitioned dynamic overwrite, same
     partitioning as decisions so re-running a day replaces its previews."""
-    previews = preview_rows(decisions, snippet_chars)
+    previews = preview_rows(decisions)
     (previews.write.mode("overwrite")
      .option("partitionOverwriteMode", "dynamic")
      .partitionBy("p_day").parquet(path))

@@ -43,22 +43,23 @@ LINEAGE_SCHEMA = T.StructType([
 ])
 
 
-def partition_id_col(ts_col: str = "warc_ts") -> F.Column:
-    """The day key: the page store's and every decisions write's ``p_day``,
-    the lineage ``partition_id`` and ``pending_work``'s filter.  Resume is
-    only correct while all of them use this one expression."""
-    return F.date_format(F.col(ts_col), "yyyy-MM-dd")
+def partition_id_col() -> F.Column:
+    """The day key: the ``warc_ts`` day, the page store's and every
+    decisions write's ``p_day``, the lineage ``partition_id`` and
+    ``pending_work``'s filter.  Resume is only correct while all of them
+    use this one expression."""
+    return F.date_format(F.col("warc_ts"), "yyyy-MM-dd")
 
 
 def lineage_rows(decisions: DataFrame, profile: RuleProfile,
-                 snapshot_id: int, ts_col: str = "warc_ts") -> DataFrame:
+                 snapshot_id: int) -> DataFrame:
     """Aggregate one lineage row per completed partition (A6)."""
     versions = F.map_from_arrays(
         F.array(*[F.lit(k) for k in profile.rule_versions()]),
         F.array(*[F.lit(v) for v in profile.rule_versions().values()]),
     )
     return (
-        decisions.groupBy(partition_id_col(ts_col).alias("partition_id"))
+        decisions.groupBy(partition_id_col().alias("partition_id"))
         .agg(
             F.count(F.lit(1)).alias("n_in"),
             F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("n_keep"),
@@ -101,7 +102,7 @@ def read_lineage(spark: SparkSession, path: str) -> DataFrame:
 
 
 def pending_work(pages: DataFrame, lineage: DataFrame,
-                 snapshot_id: int | None = None, ts_col: str = "warc_ts") -> DataFrame:
+                 snapshot_id: int | None = None) -> DataFrame:
     """Input minus completed partitions (P15).
 
     Collects the done day ids (the lineage store holds one short row per
@@ -116,5 +117,5 @@ def pending_work(pages: DataFrame, lineage: DataFrame,
     days = sorted({r[0] for r in done.select("partition_id").collect()})
     if not days:
         return pages
-    pid = partition_id_col(ts_col)
+    pid = partition_id_col()
     return pages.filter(pid.isNull() | ~pid.isin(days))

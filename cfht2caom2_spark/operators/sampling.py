@@ -15,8 +15,8 @@ instrument behavior); here the per-stratum attribute selects a rate.
 
 The hash is the md5-derived oracle-portable one (functions expressible
 verbatim in DuckDB), reduced mod 1e6 for rate resolution of 1e-6.  At crawl
-scale the same construction runs with xxhash64 (JVM intrinsic) — swap
-``bucket_fn``; determinism and uniformity arguments are identical.
+scale the same construction runs with xxhash64 (JVM intrinsic,
+``sample_bucket_fast``); determinism and uniformity arguments are identical.
 """
 
 from __future__ import annotations
@@ -60,10 +60,9 @@ def stratified_sample(df: DataFrame, key_col: str, stratum_col: str,
 
 
 def split_assign(df: DataFrame, key_col: str, splits: dict[str, float],
-                 seed: int = 0, bucket_fn=None,
-                 out_col: str = "split") -> DataFrame:
+                 seed: int = 0) -> DataFrame:
     """Deterministic train/val/test assignment: every row gets exactly one
-    split label, a pure function of (key, seed) — disjoint and exhaustive
+    ``split`` label, a pure function of (key, seed) — disjoint and exhaustive
     by construction, stable across runs/partitionings/cluster sizes, and
     consistent across tables keyed by the same id (features split with
     their documents, so a doc can never leak across the boundary through a
@@ -79,7 +78,7 @@ def split_assign(df: DataFrame, key_col: str, splits: dict[str, float],
     """
     if not splits:
         raise ValueError("splits must name at least one split")
-    bucket = (bucket_fn or sample_bucket)(
+    bucket = sample_bucket(
         F.concat_ws(":", F.col(key_col).cast("string"), F.lit(str(seed))))
     names = list(splits)
     # CASE chain lowest-threshold-first so the first matching range wins,
@@ -90,14 +89,14 @@ def split_assign(df: DataFrame, key_col: str, splits: dict[str, float],
         cond = bucket < F.lit(cum)
         chain = F.when(cond, name) if chain is None \
             else chain.when(cond, name)
-    return df.withColumn(out_col, chain.otherwise(F.lit(names[-1])))
+    return df.withColumn("split", chain.otherwise(F.lit(names[-1])))
 
 
 def assemble_mixture(spark, decisions_path: str, out_path: str,
-                     rates: dict[str, float], default_rate: float = 0.0,
-                     key_col: str = "url",
-                     stratum_col: str = "lang_pred") -> dict:
-    """Corpus assembly: kept docs -> per-language deterministic sample ->
+                     rates: dict[str, float],
+                     default_rate: float = 0.0) -> dict:
+    """Corpus assembly: kept docs -> per-language deterministic sample (by
+    url, stratified on ``lang_pred``) ->
     training-mixture parquet.  The final step of the filter pipeline
     (reference analogue: the store step after all visitors pass,
     cfht_name.py:750-754) — reads the decisions store, so re-assembling a
@@ -112,7 +111,7 @@ def assemble_mixture(spark, decisions_path: str, out_path: str,
 
     decisions = spark.read.parquet(decisions_path)
     mixed = stratified_sample(
-        decisions.filter(F.col("keep")), key_col, stratum_col,
+        decisions.filter(F.col("keep")), "url", "lang_pred",
         rates, default_rate, bucket_fn=sample_bucket_fast)
     obs = Observation("mixture")
     mixed = mixed.observe(
@@ -126,16 +125,17 @@ def assemble_mixture(spark, decisions_path: str, out_path: str,
     return {"docs": got["docs"], "tokens": got["tokens"]}
 
 
+LABELS = ("head", "middle", "tail")
+
+
 def rank_buckets(df: DataFrame, value_col: str, stratum_col: str,
-                 id_col: str, n_buckets: int = 3,
-                 labels: tuple[str, ...] = ("head", "middle", "tail"),
-                 out_col: str = "bucket") -> DataFrame:
+                 id_col: str) -> DataFrame:
     """CCNet-style per-stratum rank bucketing (Wenzek et al. 2020 split
-    each language by LM perplexity into head/middle/tail): ntile over
-    (value, id) within the stratum — EXACT equal-count buckets, fully
-    deterministic through the id tiebreak.  Lower value = better = first
-    label (CCNet's convention: low perplexity is the head); pass a reversed
-    ``labels`` tuple for higher-is-better scores.
+    each language by LM perplexity into head/middle/tail): a ``bucket``
+    label from ntile over (value, id) within the stratum — EXACT
+    equal-count buckets, fully deterministic through the id tiebreak.
+    Lower value = better = first label (CCNet's convention: low perplexity
+    is the head).
 
     This is the SPEC (and the DuckDB-oracle-portable form: ntile semantics
     — equal groups, earlier groups take the remainder — are identical in
@@ -147,36 +147,30 @@ def rank_buckets(df: DataFrame, value_col: str, stratum_col: str,
     but falls to the LAST label in ``threshold_buckets`` — the one place
     the two paths would diverge); score columns in this repo are
     non-nullable by construction."""
-    if len(labels) != n_buckets:
-        raise ValueError("labels must match n_buckets")
     w = Window.partitionBy(stratum_col).orderBy(value_col, id_col)
-    t = F.ntile(n_buckets).over(w)
+    t = F.ntile(len(LABELS)).over(w)
     return df.withColumn(
-        out_col, F.element_at(F.array(*[F.lit(x) for x in labels]), t))
+        "bucket", F.element_at(F.array(*[F.lit(x) for x in LABELS]), t))
 
 
-def threshold_buckets(df: DataFrame, value_col: str, stratum_col: str,
-                      n_buckets: int = 3,
-                      labels: tuple[str, ...] = ("head", "middle", "tail"),
-                      out_col: str = "bucket",
-                      accuracy: int = 10_000) -> DataFrame:
+def threshold_buckets(df: DataFrame, value_col: str,
+                      stratum_col: str) -> DataFrame:
     """The production path for ``rank_buckets``: per-stratum
     ``percentile_approx`` cut points (one tiny map-side-combined agg — a
     bounded sketch per stratum, never a sort), broadcast back, map-side
     comparison labels.  Bucket sizes are approximate within the sketch's
-    rank error (1/accuracy); the label ORDER is exact by construction
+    rank error (1/10,000); the label ORDER is exact by construction
     (every 'head' value <= every 'middle' value within a stratum, ties
     landing on the lower bucket)."""
-    if len(labels) != n_buckets:
-        raise ValueError("labels must match n_buckets")
-    fracs = [i / n_buckets for i in range(1, n_buckets)]
+    n = len(LABELS)
+    fracs = [i / n for i in range(1, n)]
     cuts = df.groupBy(stratum_col).agg(
-        F.percentile_approx(value_col, fracs, accuracy).alias("_cuts"))
+        F.percentile_approx(value_col, fracs, 10_000).alias("_cuts"))
     v = F.col(value_col)
-    label = F.lit(labels[-1])
-    for i in range(n_buckets - 2, -1, -1):
-        label = F.when(v <= F.element_at("_cuts", i + 1), labels[i]) \
+    label = F.lit(LABELS[-1])
+    for i in range(n - 2, -1, -1):
+        label = F.when(v <= F.element_at("_cuts", i + 1), LABELS[i]) \
             .otherwise(label)
     return (df.join(F.broadcast(cuts), stratum_col)
-              .withColumn(out_col, label)
+              .withColumn("bucket", label)
               .drop("_cuts"))

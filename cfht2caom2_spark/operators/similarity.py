@@ -42,12 +42,14 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / F.greatest(l2_norm(a) * l2_norm(b), F.lit(1e-12))
 
 
-def cosine_topk(corpus: DataFrame, queries: DataFrame, id_col: str = "vec_id",
-                vec_col: str = "embedding", k: int = 10) -> DataFrame:
-    """Exact top-k neighbors per query.  Returns
-    (query_id, vec_id, rank, cos) ordered deterministically (cos desc, id)."""
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
-    c = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_cv"))
+def cosine_topk(corpus: DataFrame, queries: DataFrame,
+                k: int = 10) -> DataFrame:
+    """Exact top-k neighbors per query over (vec_id, embedding) frames.
+    Returns (query_id, vec_id, rank, cos) ordered deterministically
+    (cos desc, id)."""
+    q = queries.select(F.col("vec_id").alias("query_id"),
+                       F.col("embedding").alias("_qv"))
+    c = corpus.select("vec_id", F.col("embedding").alias("_cv"))
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("vec_id"))
         .withColumn("cos", cosine(F.col("_qv"), F.col("_cv")))
@@ -75,7 +77,6 @@ def sign_bucket(vec: Column, n_planes: int = 8) -> Column:
 
 
 def ivf_topk_grouped(corpus: DataFrame, queries: DataFrame,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
                      k: int = 10, n_planes: int = 8) -> DataFrame:
     """IVF-style ANN via grouped-map ``applyInPandas`` (SURVEY §2.9's
     grouped-map row): corpus and queries are coarse-quantized into sign
@@ -92,12 +93,12 @@ def ivf_topk_grouped(corpus: DataFrame, queries: DataFrame,
     import pandas as pd
 
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"),
-        sign_bucket(F.col(vec_col), n_planes).alias("_bucket"),
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv"),
+        sign_bucket(F.col("embedding"), n_planes).alias("_bucket"),
     )
     c = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_cv"),
-        sign_bucket(F.col(vec_col), n_planes).alias("_bucket"),
+        "vec_id", F.col("embedding").alias("_cv"),
+        sign_bucket(F.col("embedding"), n_planes).alias("_bucket"),
     )
     cells = c.join(F.broadcast(q), "_bucket")  # rows: corpus vec × query in cell
 
@@ -131,23 +132,14 @@ def ivf_topk_grouped(corpus: DataFrame, queries: DataFrame,
     )
 
 
-def embedding_neardup_pairs(df: DataFrame, id_col: str = "vec_id",
-                            vec_col: str = "embedding",
-                            threshold: float = 0.95,
-                            n_planes: int = 8,
-                            centroids: list[list[float]] | None = None,
-                            ) -> DataFrame:
+def embedding_neardup_pairs(df: DataFrame, threshold: float = 0.95,
+                            n_planes: int = 8) -> DataFrame:
     """Verified embedding near-dup pairs (id_a < id_b, cos >= threshold)
-    restricted to a shared bucket — the pair generator behind both loser-set
-    removal and SemDeDup cluster dedup.  At scale the bucketing bounds
-    candidate pairs to ~N^2/n_buckets; each vector has exactly one bucket so
-    no pair is generated twice.
-
-    Bucketing: data-oblivious LSH sign cells by default; pass ``centroids``
-    (operators/kmeans.py::train_centroids) to bucket by nearest trained
-    cell instead — the published SemDeDup shape (Abbas et al. 2023 cluster
-    on k-means cells first), which finds near-dups a sign boundary would
-    split and balances cells by data density.
+    over a (vec_id, embedding) frame, restricted to a shared data-oblivious
+    LSH sign cell — the pair generator behind both loser-set removal and
+    SemDeDup cluster dedup.  At scale the bucketing bounds candidate pairs
+    to ~N^2/n_buckets; each vector has exactly one bucket so no pair is
+    generated twice.
 
     Physical strategy (round 6, guide §4.2): ONE shuffle of the narrow
     (id, vec, bucket) frame to ``groupBy(bucket).applyInPandas``; all pair
@@ -168,17 +160,10 @@ def embedding_neardup_pairs(df: DataFrame, id_col: str = "vec_id",
     import numpy as np
     import pandas as pd
 
-    if centroids is not None:
-        from .kmeans import nearest_centroid
-        bucket = nearest_centroid(F.col(vec_col), centroids)
-    else:
-        bucket = sign_bucket(F.col(vec_col), n_planes)
-    # a NULL bucket (centroid mode: a vector whose dimension differs from
-    # the centroids') is no cell, so its vectors are nobody's neighbours
     b = df.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"),
-        bucket.alias("_bucket"),
-    ).filter(F.col("_bucket").isNotNull())
+        F.col("vec_id").alias("_id"), F.col("embedding").alias("_v"),
+        sign_bucket(F.col("embedding"), n_planes).alias("_bucket"),
+    )
     thr = float(threshold)
 
     def score_cell(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -220,15 +205,13 @@ def embedding_neardup_pairs(df: DataFrame, id_col: str = "vec_id",
                              "id_b": np.concatenate(out_b),
                              "cos": np.concatenate(out_c)})
 
-    id_type = df.select(id_col).schema.fields[0].dataType.simpleString()
+    id_type = df.select("vec_id").schema.fields[0].dataType.simpleString()
     return b.groupBy("_bucket").applyInPandas(
         score_cell,
         schema=f"id_a {id_type}, id_b {id_type}, cos double")
 
 
-def embedding_neardup_losers(df: DataFrame, id_col: str = "vec_id",
-                             vec_col: str = "embedding",
-                             threshold: float = 0.95,
+def embedding_neardup_losers(df: DataFrame, threshold: float = 0.95,
                              n_planes: int = 8) -> DataFrame:
     """Embedding-cosine near-dup removal: ids whose vector is >= threshold
     cosine-similar to an earlier (smaller-id) vector in the same sign bucket.
@@ -236,21 +219,17 @@ def embedding_neardup_losers(df: DataFrame, id_col: str = "vec_id",
     The semantic-dedup sibling of the MinHash text path: bucket (narrow) ->
     in-bucket self-join (the one shuffle) -> verify -> earliest wins.
     """
-    pairs = embedding_neardup_pairs(df, id_col, vec_col, threshold, n_planes)
+    pairs = embedding_neardup_pairs(df, threshold, n_planes)
     return pairs.select(F.col("id_b").alias("loser_id")).distinct()
 
 
-def semantic_keep_one(df: DataFrame, id_col: str = "vec_id",
-                      vec_col: str = "embedding",
-                      threshold: float = 0.95,
-                      n_planes: int = 8,
-                      centroids: list[list[float]] | None = None,
-                      ) -> DataFrame:
+def semantic_keep_one(df: DataFrame, threshold: float = 0.95,
+                      n_planes: int = 8) -> DataFrame:
     """SemDeDup-style cluster dedup (Abbas et al. 2023: group
     semantically-near docs, keep one representative per group): connected
-    components over the verified near-dup pair graph, representative = min
-    id.  Returns one row per input vector — (id, cluster, is_kept) — so
-    singletons keep themselves.
+    components over the verified near-dup pair graph of sign-cell
+    neighbours, representative = min id.  Returns one row per input
+    vector — (vec_id, cluster, is_kept) — so singletons keep themselves.
 
     Chain-correct where pair dominance isn't: A~B, B~C, A!~C still
     collapses to one kept doc (component min), the same argument as
@@ -259,30 +238,29 @@ def semantic_keep_one(df: DataFrame, id_col: str = "vec_id",
     ride the iteration."""
     from .dedup import connected_components
 
-    pairs = embedding_neardup_pairs(df, id_col, vec_col, threshold, n_planes,
-                                    centroids=centroids)
+    pairs = embedding_neardup_pairs(df, threshold, n_planes)
     comp = connected_components(pairs.select("id_a", "id_b"))
-    ids = df.select(F.col(id_col))
+    ids = df.select("vec_id")
     return (
-        ids.join(comp.withColumnRenamed("node", id_col), id_col, "left")
+        ids.join(comp.withColumnRenamed("node", "vec_id"), "vec_id", "left")
         .select(
-            F.col(id_col),
-            F.coalesce("component", F.col(id_col)).alias("cluster"),
-            (F.coalesce("component", F.col(id_col)) == F.col(id_col))
+            "vec_id",
+            F.coalesce("component", "vec_id").alias("cluster"),
+            (F.coalesce("component", "vec_id") == F.col("vec_id"))
             .alias("is_kept"))
     )
 
 
-def lsh_ann(corpus: DataFrame, queries: DataFrame, id_col: str = "vec_id",
-            vec_col: str = "embedding", k: int = 10, n_planes: int = 8) -> DataFrame:
+def lsh_ann(corpus: DataFrame, queries: DataFrame, k: int = 10,
+            n_planes: int = 8) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's sign bucket."""
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"),
-        sign_bucket(F.col(vec_col), n_planes).alias("_bucket"),
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv"),
+        sign_bucket(F.col("embedding"), n_planes).alias("_bucket"),
     )
     c = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_cv"),
-        sign_bucket(F.col(vec_col), n_planes).alias("_bucket"),
+        "vec_id", F.col("embedding").alias("_cv"),
+        sign_bucket(F.col("embedding"), n_planes).alias("_bucket"),
     )
     scored = (
         c.join(F.broadcast(q), "_bucket")

@@ -642,10 +642,11 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _simhash_cte(bits: int, out_col: str) -> str:
-    """DuckDB twin of operators.dedup.simhash at ``bits`` — CTE chain ending
-    in sh(doc_id, {out_col})."""
+    """DuckDB twin of operators.dedup.simhash at ``bits`` over lower-cased
+    word features, like its default — CTE chain ending in
+    sh(doc_id, {out_col})."""
     return f"""w AS (
-  SELECT doc_id, unnest(list_distinct({_TOKS})) AS tok FROM documents
+  SELECT doc_id, unnest(list_distinct({_LTOKS})) AS tok FROM documents
 ),
 h AS (
   SELECT doc_id, {_SHINGLE_HASH.format(s='tok')} AS hh FROM w
@@ -1434,8 +1435,7 @@ def _flagship_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _quality_score_sql(n_words: str = "n_words",
-                       weights: dict[str, float] | None = None) -> str:
+def _quality_score_sql(weights: dict[str, float] | None = None) -> str:
     """DuckDB twin of functions.quality.quality_score — same literals, same
     left-associated op order, only IEEE-exact ops (+,-,*,/,abs,sqrt), so the
     doubles match Spark's bitwise.  ``weights`` parameterizes the vector the
@@ -1448,7 +1448,7 @@ def _quality_score_sql(n_words: str = "n_words",
     from ..functions.quality import QUALITY_WEIGHTS
     Wf = weights or QUALITY_WEIGHTS
     W = {k: f"'{v!r}'::DOUBLE" for k, v in Wf.items()}
-    z = (f"({W['bias']} + {W['sqrt_n_words']} * sqrt({n_words}::DOUBLE)"
+    z = (f"({W['bias']} + {W['sqrt_n_words']} * sqrt(n_words::DOUBLE)"
          f" + {W['stopword_frac']} * stopword_frac"
          f" + {W['alpha_word_frac']} * alpha_word_frac"
          f" + {W['symbol_ratio']} * symbol_ratio"
@@ -1655,14 +1655,14 @@ MIX_RATES = {"en": 0.6, "fr": 0.35, "de": 0.35, "es": 0.35, "zh": 0.2}
 MIX_DEFAULT_RATE = 0.05
 
 
-def _mix_bucket_sql(key: str = "doc_id") -> str:
-    return (f"(('0x' || substr(md5({key}::VARCHAR), 1, 15))::BIGINT"
-            f" % 1000000)")
+def _mix_bucket_sql() -> str:
+    return ("(('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT"
+            " % 1000000)")
 
 
-def _mix_threshold_sql(stratum: str = "lang") -> str:
+def _mix_threshold_sql() -> str:
     whens = " ".join(
-        f"WHEN {stratum} = '{v}' THEN {int(round(r * 1_000_000))}"
+        f"WHEN lang = '{v}' THEN {int(round(r * 1_000_000))}"
         for v, r in MIX_RATES.items()
     )
     return f"CASE {whens} ELSE {int(round(MIX_DEFAULT_RATE * 1_000_000))} END"

@@ -50,7 +50,7 @@ OUTPUT_COLUMNS = [
 ]
 
 
-def _row_key(id_col: str, order_col: str) -> Column:
+def _row_key() -> Column:
     """Join-back key for per-row derived frames (boilerplate reassembly,
     decontam flags).  Folds the content hash in: (url, warc_ts) alone is NOT
     unique — re-crawls can legally share both — and a bare 64-bit hash of it
@@ -59,7 +59,7 @@ def _row_key(id_col: str, order_col: str) -> Column:
     the key carry identical text, so any derived value is interchangeable
     between them; a residual 2^-64 triple collision is the only corruption
     mode left (documented, accepted)."""
-    return F.xxhash64(F.col(id_col), F.col(order_col),
+    return F.xxhash64(F.col("url"), F.col("warc_ts"),
                       F.col("extracted_sha256"))
 
 
@@ -68,12 +68,9 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
                    dedupe: bool = True,
                    langid_model: TrigramLangID | None = None,
                    ppl_model: BigramLM | None = None,
-                   id_col: str = "url",
-                   order_col: str = "warc_ts",
                    has_html: bool = True,
                    persist_tracker: list | None = None,
                    benchmark: DataFrame | None = None,
-                   benchmark_text_col: str = "text",
                    quality_weights: dict | None = None) -> DataFrame:
     """Pure plan builder: pages -> decisions.  Imported by batch main,
     streaming foreachBatch, pytest, and the driver entry — the same plan runs
@@ -81,7 +78,9 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
 
     Extraction + langid + perplexity (+ the MinHash signature when
     ``dedupe``) run in ONE Arrow pass (functions/fused.py; single-visit
-    fusion, composable.py:90-98 analogue).
+    fusion, composable.py:90-98 analogue).  A page is identified by
+    ``url`` and ordered by ``warc_ts``; a ``benchmark`` frame carries its
+    eval text in ``text``.
 
     ``persist_tracker``: optional list the builder appends every frame it
     pins to: the post-UDF frame, the span input, the ranked dedup frame and
@@ -99,7 +98,7 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
         # campaign variants of one page are one identity everywhere
         from ..functions.identity import canonical_url
 
-        df = df.withColumn(id_col, canonical_url(F.col(id_col)))
+        df = df.withColumn("url", canonical_url(F.col("url")))
     df = with_extract_and_scores(
         df, spark, langid_model, ppl_model, has_html=has_html,
         # MinHash signatures ride the same Arrow pass (numpy-vectorized);
@@ -150,7 +149,7 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
         # (url, warc_ts) rows share the key ONLY when their text is
         # identical, so the merged reassembly (line-deduped in
         # remove_boilerplate_lines) is byte-correct for every carrier row
-        row_key = _row_key(id_col, order_col)
+        row_key = _row_key()
         cleaned = remove_boilerplate_lines(
             base.select(row_key.alias("_bp_id"), "extracted_text")
             .filter(F.col("extracted_text").isNotNull()),
@@ -181,7 +180,7 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
         # contract: stats + scrub downstream see the cleaned text.
         from ..operators.spans import remove_repeated_spans
 
-        row_key = _row_key(id_col, order_col)
+        row_key = _row_key()
         # the span operator fans its input into the window-key stream AND
         # the reassembly join; the branches prune different columns, so
         # Catalyst plans TWO near-identical dropDuplicates exchanges of the
@@ -192,7 +191,7 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
         # (preemption caveat: session.release)
         span_input = (
             df.withColumn("_sp_id", row_key)
-            .select("_sp_id", F.col(order_col).alias("_sp_ord"),
+            .select("_sp_id", F.col("warc_ts").alias("_sp_ord"),
                     "extracted_text")
             .filter(F.col("extracted_text").isNotNull())
             .dropDuplicates(["_sp_id"])
@@ -259,7 +258,7 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
         from ..operators.hostnorm import with_host_lang_backfill
 
         df = with_host_lang_backfill(
-            df, url_col=id_col,
+            df,
             min_conf=profile.host_backfill_min_conf,
             adopt_below=profile.host_backfill_adopt_below,
         )
@@ -302,7 +301,7 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
         from ..operators.decontam import decontaminate
         from ..operators.dedup import shingle_hash_fast
 
-        row_key = _row_key(id_col, order_col)
+        row_key = _row_key()
         contaminated_ids = decontaminate(
             # dropDuplicates: identical re-crawls share the sha-folded key;
             # without it both rows' grams enter the overlap groupBy and a
@@ -312,7 +311,7 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
             .filter(F.col("extracted_text").isNotNull())
             .dropDuplicates(["_dc_id"]),
             benchmark.select(
-                F.col(benchmark_text_col).alias("extracted_text")),
+                F.col("text").alias("extracted_text")),
             id_col="_dc_id", text_col="extracted_text",
             k=profile.decontam_k,
             min_overlap=profile.decontam_min_overlap,
@@ -338,13 +337,13 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
         from ..operators.decontam import fuzzy_decontaminate
         from ..operators.dedup import shingle_hash_fast
 
-        row_key = _row_key(id_col, order_col)
+        row_key = _row_key()
         fuzzy_ids = fuzzy_decontaminate(
             df.select(row_key.alias("_dcf_id"), "extracted_text")
             .filter(F.col("extracted_text").isNotNull())
             .dropDuplicates(["_dcf_id"]),
             benchmark.select(
-                F.col(benchmark_text_col).alias("extracted_text")
+                F.col("text").alias("extracted_text")
             ).withColumn("_dcf_id", F.monotonically_increasing_id()),
             id_col="_dcf_id", text_col="extracted_text",
             bands=profile.decontam_fuzzy_bands,
@@ -374,7 +373,7 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
         # memory always.
         from pyspark.sql import Window as _W
 
-        slim_cols = [id_col, order_col, "extracted_sha256", "minhash_sig"]
+        slim_cols = ["url", "warc_ts", "extracted_sha256", "minhash_sig"]
         # exact-duplicate collapse FIRST (by extraction sha256): every
         # exact-dup group of size m would otherwise contribute m^2/2 pairs to
         # EVERY minhash band (the one join blow-up AQE can't fully save);
@@ -389,10 +388,10 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
         # url may share both with different content (_row_key), and an
         # arbitrary pick would make the url's exact_duplicate flag depend
         # on partition order
-        w_url = _W.partitionBy(id_col).orderBy(order_col, "extracted_sha256")
+        w_url = _W.partitionBy("url").orderBy("warc_ts", "extracted_sha256")
         canonical = alive.withColumn("_url_rn", F.row_number().over(w_url)) \
             .filter(F.col("_url_rn") == 1).drop("_url_rn")
-        w_sha = _W.partitionBy("extracted_sha256").orderBy(order_col, id_col)
+        w_sha = _W.partitionBy("extracted_sha256").orderBy("warc_ts", "url")
         # both windows run ONCE: the exact losers and the minhash candidates
         # read the same ranked rows.  Left lazy, each branch would re-run
         # both window shuffles; a lazy persist would cost one cache-read job
@@ -401,13 +400,13 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
             .localCheckpoint(eager=True)
         pins.append(ranked)
         exact_losers = ranked.filter(F.col("_sha_rn") > 1).select(
-            F.col(id_col), F.lit("exact").alias("_dup_kind"))
+            F.col("url"), F.lit("exact").alias("_dup_kind"))
 
         # the single wide dependency: banded minhash self-join over one
         # canonical doc per content hash
         candidates = ranked.filter(F.col("_sha_rn") == 1).drop("_sha_rn")
         losers = minhash_losers_from_sig(
-            candidates, id_col=id_col, order_col=order_col,
+            candidates, id_col="url", order_col="warc_ts",
             bands=profile.minhash_bands,
             rows_per_band=profile.minhash_rows_per_band,
             threshold=profile.dedup_jaccard,
@@ -415,11 +414,11 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
             persist_tracker=pins,
         )
         near_losers = losers.select(
-            F.col("loser_id").alias(id_col), F.lit("near").alias("_dup_kind"))
+            F.col("loser_id").alias("url"), F.lit("near").alias("_dup_kind"))
         # near losers were drawn from exact winners, so the two sets are
         # disjoint and the union stays <=1 row per url — one join, not two
         all_losers = exact_losers.unionByName(near_losers)
-        df = (df.join(all_losers, on=id_col, how="left")
+        df = (df.join(all_losers, on="url", how="left")
               .withColumn("_exact_dup",
                           F.coalesce(F.col("_dup_kind") == "exact", F.lit(False)))
               .withColumn("_near_dup",

@@ -83,11 +83,11 @@ class SnapshotTable:
         return files
 
     # -- write path -----------------------------------------------------------
-    def append(self, df: DataFrame, ts_col: str = "warc_ts") -> int:
-        """Write df as a new snapshot, partitioned by day(ts_col)."""
+    def append(self, df: DataFrame) -> int:
+        """Write df as a new snapshot, partitioned by day(warc_ts)."""
         before = self._all_data_files()
         (
-            df.withColumn("p_day", partition_id_col(ts_col))
+            df.withColumn("p_day", partition_id_col())
             .write.mode("append")
             .partitionBy("p_day")
             .parquet(self.data_dir)
@@ -165,7 +165,7 @@ class IcebergTable:
         return snaps[-1] if snaps else None
 
     # -- write path ----------------------------------------------------------
-    def append(self, df: DataFrame, ts_col: str = "warc_ts") -> int:
+    def append(self, df: DataFrame) -> int:
         """One appended snapshot.  The table's partition spec is expected to
         be ``days(warc_ts)`` (north_rule) — created once via
         ``CREATE TABLE ... PARTITIONED BY (days(warc_ts))`` — so no derived

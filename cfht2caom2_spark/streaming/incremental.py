@@ -26,7 +26,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_PROFILE, RuleProfile
+from ..config import DEFAULT_PROFILE
 from ..operators.resume import partition_id_col, read_store
 from ..plans.pipeline import build_pipeline
 from ..session import release
@@ -50,8 +50,6 @@ def write_bookmark(path: str, snapshot_id: int) -> None:
 
 def process_increment(spark: SparkSession, table: SnapshotTable, out_dir: str,
                       bookmark_path: str,
-                      profile: RuleProfile = DEFAULT_PROFILE,
-                      dedupe: bool = False,
                       history_dedup: bool = False) -> dict:
     """One state-mode tick: rows in (bookmark, current] -> decisions.
 
@@ -63,9 +61,10 @@ def process_increment(spark: SparkSession, table: SnapshotTable, out_dir: str,
     — no duplicate rows survive.  (Plain append + bookmark-after would
     duplicate the crashed tick's rows.)
 
-    Dedup defaults off within an increment (cross-increment near-dup removal
-    belongs to a periodic batch compaction pass, as in production CC pipelines
-    where MinHash runs per-dump)."""
+    The tick runs the default profile without in-increment dedup:
+    cross-increment near-dup removal belongs to a periodic batch compaction
+    pass, as in production CC pipelines where MinHash runs per-dump, and
+    ``history_dedup`` demotes content a prior tick kept."""
     last = read_bookmark(bookmark_path)
     current = table.current_snapshot() or 0
     if last is not None and current <= last:
@@ -76,8 +75,9 @@ def process_increment(spark: SparkSession, table: SnapshotTable, out_dir: str,
     # pins taken while the plan is built are released even on a failure
     pinned: list = []
     try:
-        decisions = build_pipeline(inc.drop("p_day"), spark, profile,
-                                   dedupe=dedupe, persist_tracker=pinned)
+        decisions = build_pipeline(inc.drop("p_day"), spark,
+                                   DEFAULT_PROFILE, dedupe=False,
+                                   persist_tracker=pinned)
         if history_dedup:
             # online cross-increment exact dedup: content already kept by a
             # PRIOR tick demotes now instead of waiting for the offline
@@ -107,9 +107,9 @@ def process_increment(spark: SparkSession, table: SnapshotTable, out_dir: str,
 # -- 2. structured streaming ---------------------------------------------------
 
 def stream_pages(spark: SparkSession, table: SnapshotTable, out_dir: str,
-                 profile: RuleProfile = DEFAULT_PROFILE,
                  trigger_once: bool = True):
-    """readStream over the page store; the batch plan runs per micro-batch.
+    """readStream over the page store; the batch plan (default profile, no
+    dedup) runs per micro-batch.
 
     ``dropDuplicatesWithinWatermark`` on url covers re-arrivals inside the
     watermark horizon (the store_modified_files_only analogue,
@@ -127,7 +127,8 @@ def stream_pages(spark: SparkSession, table: SnapshotTable, out_dir: str,
     stream = stream.withWatermark("warc_ts", "1 day").dropDuplicatesWithinWatermark(["url"])
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        decisions = build_pipeline(batch_df, spark, profile, dedupe=False)
+        decisions = build_pipeline(batch_df, spark, DEFAULT_PROFILE,
+                                   dedupe=False)
         (decisions.withColumn("p_day", partition_id_col())
          .write.mode("overwrite").partitionBy("p_day")
          .parquet(f"{out_dir}/decisions/epoch={epoch_id}"))

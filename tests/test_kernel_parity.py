@@ -87,8 +87,10 @@ def test_signature_frames_match_expression_references(spark, texts, k):
                                     shingle_hash_fast, "id", "v"),
         "mh_md5": minhash_sig_frame(df, "id", "t", _PERMS, k, shingle_hash,
                                     "id", "v"),
-        "gs_md5": gram_set_frame(df, "id", "t", k, shingle_hash, "v"),
-        "gs_crc": gram_set_frame(df, "id", "t", k, shingle_hash_fast, "v"),
+        "gs_md5": gram_set_frame(df, "id", "t", k, shingle_hash).select(
+            "id", F.col("_grams").alias("v")),
+        "gs_crc": gram_set_frame(df, "id", "t", k, shingle_hash_fast).select(
+            "id", F.col("_grams").alias("v")),
         "sim": _simhash_md5_frame(df, "id", "t", _BITS, k).select(
             F.col("_id").alias("id"), F.col("_sh").alias("v")),
     }

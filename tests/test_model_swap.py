@@ -180,12 +180,16 @@ def test_train_bigram_lm_matches_seed_constructor(spark):
 def test_train_bigram_lm_scores_in_domain_lower(spark):
     """A corpus-trained LM prefers in-domain prose over character soup —
     the CCNet selection signal the trained model exists to provide."""
+    from pyspark.sql import functions as F
+
     from cfht2caom2_spark.functions.perplexity import train_bigram_lm
     from cfht2caom2_spark.sources.pages import synth_pages
     from cfht2caom2_spark.plans.pipeline import build_pipeline
 
     dec = build_pipeline(synth_pages(spark, 300), spark, dedupe=False)
-    lm = train_bigram_lm(dec.filter("keep"), text_col="scrubbed_text")
+    # the LM trains on the stored artifact of the kept docs
+    lm = train_bigram_lm(dec.filter("keep").select(
+        F.col("scrubbed_text").alias("extracted_text"), "lang_pred"))
     kept_text = dec.filter("keep").select("scrubbed_text").first()[0]
     assert lm.perplexity_one(kept_text, "en") < lm.perplexity_one(
         "qzx jkw vvq pzf xqj wkz qqq zzz xxx jjj", "en")

@@ -59,6 +59,30 @@ def test_simhash_similar_texts_close(docs):
     assert hamming(out[1], out[2]) <= 4          # near-dup: close
     assert hamming(out[1], out[4]) >= 5          # unrelated: far
 
+
+def _star_path(monkeypatch):
+    """Force connected_components onto its star-contraction path: a
+    union-find bound of 0 edges sends every non-empty graph there."""
+    from cfht2caom2_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_union_find_edge_bound", lambda _mem: 0)
+
+
+def test_union_find_bound_scales_with_driver_memory():
+    """The driver-side union-find bound is a tenth of spark.driver.memory
+    at ~416 B per edge: the 8g default stays within 10% of 2M edges, 1g
+    gets an eighth of that, and a bare number is MiB like Spark's."""
+    from cfht2caom2_spark.operators.dedup import _union_find_edge_bound
+
+    big = _union_find_edge_bound("8g")
+    assert abs(big - 2_000_000) <= 200_000
+    assert _union_find_edge_bound("1g") == big // 8
+    assert _union_find_edge_bound("1024m") == _union_find_edge_bound("1G") \
+        == _union_find_edge_bound("1024") == _union_find_edge_bound("1gb")
+    with pytest.raises(ValueError):
+        _union_find_edge_bound("lots")
+
+
 def test_connected_components(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a bigint, id_b bigint")
@@ -68,7 +92,8 @@ def test_connected_components(spark):
     assert comp[10] == comp[11] == 10
 
 
-def test_connected_components_releases_superseded_rounds(spark, pinned_rdds):
+def test_connected_components_releases_superseded_rounds(spark, pinned_rdds,
+                                                         monkeypatch):
     """Each star round's checkpoint supersedes the previous round's, which
     is released once the new one is materialized: a chain that needs
     several rounds leaves only the final round pinned (the result reads
@@ -76,7 +101,9 @@ def test_connected_components_releases_superseded_rounds(spark, pinned_rdds):
     chain = spark.createDataFrame([(i, i + 1) for i in range(40)],
                                   "id_a bigint, id_b bigint")
     before = pinned_rdds()
-    comp = connected_components(chain, small_graph_threshold=0).collect()
+    with monkeypatch.context() as m:
+        _star_path(m)
+        comp = connected_components(chain).collect()
     assert len(comp) == 41 and {r["component"] for r in comp} == {0}
     assert len(pinned_rdds() - before) <= 1
     before = pinned_rdds()
@@ -162,7 +189,7 @@ def test_pipeline_clusters_policy_resolves_cluster(spark):
         assert len(dups) == len(rows) - 1, (century, [r["rules"] for r in rows])
 
 
-def test_connected_components_two_root_counterexample(spark):
+def test_connected_components_two_root_counterexample(spark, monkeypatch):
     """Regression: after one star round the graph {(1,7),(3,7),(3,8),(2,8)}
     becomes {(3,1),(7,1),(3,2),(8,2)} — no dst is a src, yet node 3 still has
     TWO parents, so a probe checking only dst-as-src exits with the component
@@ -173,7 +200,8 @@ def test_connected_components_two_root_counterexample(spark):
 
     pairs = spark.createDataFrame(
         [(1, 7), (3, 7), (3, 8), (2, 8)], "id_a bigint, id_b bigint")
-    comp = connected_components(pairs, small_graph_threshold=0).collect()
+    _star_path(monkeypatch)
+    comp = connected_components(pairs).collect()
     labels = {}
     for r in comp:
         assert r["node"] not in labels, f"duplicate label for {r['node']}"
@@ -187,7 +215,8 @@ def test_connected_components_two_root_counterexample(spark):
     assert losers == [2, 3, 7, 8]               # earliest (1) survives
 
 
-def test_connected_components_star_contraction_random_graph(spark):
+def test_connected_components_star_contraction_random_graph(spark,
+                                                            monkeypatch):
     """Large-star/small-star vs a python union-find golden on a random graph
     (chains, cycles, crossing edges — the shapes min-label loops get slow on)."""
     import random
@@ -217,8 +246,9 @@ def test_connected_components_star_contraction_random_graph(spark):
     golden = {n: min(mem) for root, mem in want.items() for n in mem}
 
     df = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
+    _star_path(monkeypatch)
     got = {r["node"]: r["component"]
-           for r in connected_components(df, small_graph_threshold=0).collect()}
+           for r in connected_components(df).collect()}
     assert got == golden
 
 
@@ -651,7 +681,7 @@ def test_remove_repeated_spans_all_removed_and_case(spark):
     assert out[2]["cleaned_text"] == "" and out[2]["removed_token_count"] == 8
 
 
-def test_connected_components_paths_agree(spark):
+def test_connected_components_paths_agree(spark, monkeypatch):
     """The adaptive small-graph driver path (union-find) and the
     star-contraction scale path must produce identical labelings on the
     shapes the counterexample/random tests guard."""
@@ -666,8 +696,9 @@ def test_connected_components_paths_agree(spark):
     df = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
     small = {(r["node"], r["component"]) for r in
              connected_components(df).collect()}            # driver path
+    _star_path(monkeypatch)
     star = {(r["node"], r["component"]) for r in
-            connected_components(df, small_graph_threshold=0).collect()}
+            connected_components(df).collect()}
     assert small == star
 
 
@@ -706,6 +737,8 @@ def test_canonical_url_edges(spark):
         # bare 'ref' is FUNCTIONAL (branch/pagination selectors) and no
         # longer in the default tracking set
         ("https://a.com/repo?ref=main", "https://a.com/repo?ref=main"),
+        ("https://a.com/repo?ref=main&page=2",
+         "https://a.com/repo?ref=main&page=2"),
     ]
     df = spark.createDataFrame([(u,) for u, _ in cases], "url string")
     got = [r["c"] for r in
@@ -763,24 +796,6 @@ def test_blocked_domain_rule_case_insensitive(spark):
                             ("badsite.com", "MIXED.example")).alias("fired"),
     ).collect()
     assert all(r["fired"] == r["want"] for r in got)
-
-
-def test_canonical_url_custom_tracking_params(spark):
-    """Deployments opting into aggressive stripping pass their own param
-    set; the default set must NOT strip those."""
-    from cfht2caom2_spark.functions.identity import (TRACKING_PARAMS,
-                                                     canonical_url)
-
-    assert "ref" not in TRACKING_PARAMS
-    df = spark.createDataFrame(
-        [("https://a.com/repo?ref=main&page=2",)], "url string")
-    aggressive = TRACKING_PARAMS + ("ref",)
-    got = df.select(
-        canonical_url(F.col("url")).alias("default"),
-        canonical_url(F.col("url"), tracking_params=aggressive).alias("agg"),
-    ).collect()[0]
-    assert got["default"] == "https://a.com/repo?ref=main&page=2"
-    assert got["agg"] == "https://a.com/repo?page=2"
 
 
 def test_simhash_pairs_banded_hamming(spark):
@@ -864,14 +879,31 @@ def test_pack_blocks_partitioning_invariant_and_contiguous(spark):
     different range-partition counts (prefix + local cumsum == global
     cumsum for any contiguous split), spans are contiguous and gap-free,
     and empty docs occupy no span."""
-    from cfht2caom2_spark.operators.packing import pack_blocks
+    from cfht2caom2_spark.functions.tokens import ws_token_count
+    from cfht2caom2_spark.operators.packing import _running_sums, pack_blocks
 
     rows = [(i, " ".join(f"w{j}" for j in range(i % 17))) for i in range(60)]
     docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    a = {r["doc_id"]: r.asDict() for r in
-         pack_blocks(docs, block_tokens=10, num_partitions=2).collect()}
-    b = {r["doc_id"]: r.asDict() for r in
-         pack_blocks(docs, block_tokens=10, num_partitions=7).collect()}
+
+    def packed(n_partitions):
+        # the range split takes the session's shuffle partition count;
+        # AQE coalescing would merge the tiny partitions back together
+        conf = {"spark.sql.shuffle.partitions": str(n_partitions),
+                "spark.sql.adaptive.coalescePartitions.enabled": "false"}
+        before = {k: spark.conf.get(k) for k in conf}
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        try:
+            pids = _running_sums(docs, ["doc_id"], "doc_id", "text",
+                                 ws_token_count).select("_pid").distinct()
+            assert pids.count() == n_partitions
+            return {r["doc_id"]: r.asDict() for r in
+                    pack_blocks(docs, block_tokens=10).collect()}
+        finally:
+            for k, v in before.items():
+                spark.conf.set(k, v)
+
+    a, b = packed(2), packed(7)
     assert a == b
     # contiguous token stream in doc_id order: each start = prev start + n
     off = 0
@@ -1131,44 +1163,6 @@ def test_cluster_balanced_sample_caps_and_keeps_small_cells(blob_vecs):
     assert all(lbl[r["vec_id"]] == r["cell"] for r in thin.collect())
 
 
-def test_semantic_keep_one_kmeans_cells_bridge_sign_boundary(spark):
-    """Two near-identical vectors straddling the first-coordinate sign
-    boundary: sign buckets put them in different cells (pair missed),
-    trained k-means cells put them together (pair found) — the reason the
-    SemDeDup path accepts centroids."""
-    from cfht2caom2_spark.operators.kmeans import train_centroids
-    from cfht2caom2_spark.operators.similarity import semantic_keep_one
-
-    rows = [(0, [0.01, 1.0, 0.0, 0.0]), (1, [-0.01, 1.0, 0.0, 0.0]),
-            (2, [5.0, -4.0, 2.0, 1.0]), (3, [-3.0, 2.0, -4.0, 5.0])]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    sign = {r["vec_id"]: r["is_kept"]
-            for r in semantic_keep_one(df, threshold=0.95,
-                                       n_planes=4).collect()}
-    assert sign[0] and sign[1]      # boundary split: both "unique", missed
-    cents = train_centroids(df, k=3, n_iter=4, seed=2)
-    km = {r["vec_id"]: r["is_kept"]
-          for r in semantic_keep_one(df, threshold=0.95,
-                                     centroids=cents).collect()}
-    assert km[0] and not km[1]      # same cell: pair found, min id kept
-    assert km[2] and km[3]
-
-
-def test_embedding_neardup_pairs_centroid_mode_skips_null_bucket(spark):
-    """Centroid mode: a vector whose dimension differs from the centroids'
-    has no nearest cell (NULL bucket).  Two identical such vectors must
-    not pair — the NULL bucket is not a cell — while same-dimension
-    duplicates still do."""
-    from cfht2caom2_spark.operators.similarity import embedding_neardup_pairs
-
-    rows = [(0, [1.0, 0.0]), (1, [1.0, 0.0]),
-            (2, [1.0, 0.0, 0.0]), (3, [1.0, 0.0, 0.0])]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    pairs = {(r["id_a"], r["id_b"]) for r in embedding_neardup_pairs(
-        df, threshold=0.95, centroids=[[1.0, 0.0], [0.0, 1.0]]).collect()}
-    assert pairs == {(0, 1)}
-
-
 def test_repetition_ladder_fast_parity(spark):
     """repetition_ladder_stats_fast (the batch-counting mapInPandas twin)
     equals the 9 Column-expression ladder rungs bitwise on adversarial
@@ -1243,14 +1237,18 @@ def test_simhash_pairs_null_text_parity(spark):
 
 def test_assign_cells_vectorized_null_ragged_and_string_ids(spark):
     """The vectorized assignment must label NULL / wrong-length /
-    NULL-element vectors NULL like the expression path, and carry a
-    non-bigint id type through its output schema (round-6 review catch:
-    the schema used to hardcode bigint)."""
+    NULL-element vectors NULL and NaN / infinite-element vectors cell 0
+    like the expression path, and carry a non-bigint id type through its
+    output schema (round-6 review catch: the schema used to hardcode
+    bigint)."""
     from cfht2caom2_spark.operators.kmeans import assign_cells
 
+    nan, inf = float("nan"), float("inf")
     cents = [[0.0, 1.0], [1.0, 0.0]]
     rows = [("a", [0.1, 0.9]), ("b", None), ("c", [1.0, 0.0, 0.0]),
-            ("d", [None, 1.0]), ("e", [0.9, 0.2])]
+            ("d", [None, 1.0]), ("e", [0.9, 0.2]),
+            ("f", [0.9, nan]), ("g", [nan, nan]), ("h", [None, nan]),
+            ("i", [inf, 0.1]), ("j", [0.2, -inf])]
     df = spark.createDataFrame(rows, "vec_id string, embedding array<float>")
     expr = {r["vec_id"]: r["cell"]
             for r in assign_cells(df, cents, vectorized=False).collect()}
@@ -1258,7 +1256,9 @@ def test_assign_cells_vectorized_null_ragged_and_string_ids(spark):
            for r in assign_cells(df, cents, vectorized=True).collect()}
     assert expr == vec
     assert expr["b"] is None and expr["c"] is None and expr["d"] is None
+    assert expr["h"] is None
     assert expr["a"] == 0 and expr["e"] == 1
+    assert expr["f"] == expr["g"] == expr["i"] == expr["j"] == 0
 
 
 def test_ivf_centroid_topk_big_kdim_path_matches_small(spark):

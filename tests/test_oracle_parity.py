@@ -102,7 +102,7 @@ _CAPITALISED = [
 # q_dedup_clusters' oracle embeds q_minhash_pairs'
 SHINGLE_QUERIES = ("q_jaccard_pairs", "q_minhash_pairs", "q_dedup_clusters",
                    "q_decontaminate", "q_fuzzy_decontaminate",
-                   "q_decontam_report")
+                   "q_decontam_report", "q_simhash")
 
 
 @pytest.fixture(scope="module")

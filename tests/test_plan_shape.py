@@ -168,7 +168,7 @@ def test_decontam_join_strategy_left_to_aqe(spark):
     the doc-gram stream is corpus-sized: neither side may carry a mandatory
     broadcast hint by default (AQE decides from runtime sizes; a
     pathological suite degrades to a shuffle join instead of an executor
-    OOM).  hint_broadcast=True is the explicit opt-in."""
+    OOM)."""
     from pyspark.sql import functions as F
 
     from cfht2caom2_spark.operators.decontam import decontaminate
@@ -189,10 +189,6 @@ def test_decontam_join_strategy_left_to_aqe(spark):
     no_prefilter = str(decontaminate(
         docs, bench, prefilter_bits=0)._jdf.queryExecution().logical())
     assert "ResolvedHint" not in no_prefilter
-    hinted = decontaminate(docs, bench, hint_broadcast=True,
-                           prefilter_bits=0)
-    assert "broadcast" in str(
-        hinted._jdf.queryExecution().logical()).lower()
 
 
 def test_decontam_bitmap_prefilter_prunes_before_overlap_shuffle(spark):
@@ -280,7 +276,7 @@ def test_pack_blocks_single_partition_window_only_over_totals(spark):
     # the Arrow running-sum crossing (a Window.partitionBy(_pid) here would
     # force an EXTRA corpus-sized hash exchange — the regression this pins)
     corpus = plan_of(_running_sums(docs, ["doc_id"], "doc_id", "text",
-                                   ws_token_count, None))
+                                   ws_token_count))
     assert "rangepartitioning" in corpus.lower()
     assert "Exchange hashpartitioning" not in corpus
     assert "Exchange SinglePartition" not in corpus
@@ -298,9 +294,9 @@ def test_pack_blocks_single_partition_window_only_over_totals(spark):
 
 
 def test_fuzzy_decontam_no_mandatory_broadcast_default(spark):
-    """fuzzy_decontaminate leaves join strategy to AQE by default: the
-    corpus-side band table is unbounded, and the eval side is only
-    broadcast when the caller asserts boundedness via hint_broadcast."""
+    """fuzzy_decontaminate leaves join strategy to AQE: the corpus-side
+    band table is unbounded, and the eval side is broadcast only while its
+    runtime size fits."""
     from cfht2caom2_spark.operators.decontam import fuzzy_decontaminate
 
     docs = spark.read.parquet(f"{SF}/documents.parquet") \
@@ -309,9 +305,6 @@ def test_fuzzy_decontam_no_mandatory_broadcast_default(spark):
     out = fuzzy_decontaminate(docs, bench)
     assert "ResolvedHint" not in \
         out._jdf.queryExecution().analyzed().toString()
-    hinted = fuzzy_decontaminate(docs, bench, hint_broadcast=True)
-    assert "ResolvedHint" in \
-        hinted._jdf.queryExecution().analyzed().toString()
 
 
 def test_history_tick_is_single_python_pass_no_union(spark, tmp_path):

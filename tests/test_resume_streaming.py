@@ -171,25 +171,24 @@ def test_cross_increment_compaction(spark, tmp_path):
     exact_duplicate + keep=false."""
     import datetime as dt
 
-    from cfht2caom2_spark.config import RuleProfile
+    from cfht2caom2_spark.corpora import CORPORA
     from cfht2caom2_spark.operators.compact import compact_decisions
     from cfht2caom2_spark.sources.pages import PAGES_SCHEMA
 
-    prof = RuleProfile(min_words=5, min_stopword_frac=0.0)
-    text = ("the people walk to the market every morning and the children "
-            "play in the park while the old men talk about the weather")
+    # the English seed corpus passes every default-profile gate
+    text = CORPORA["en"]
     t0 = dt.datetime(2025, 6, 1)
     table = SnapshotTable(f"{tmp_path}/pages")
     out = str(tmp_path / "out")
     bm = str(tmp_path / "bm.json")
     table.append(spark.createDataFrame(
         [("https://a.com/1", t0, None, text, "en")], PAGES_SCHEMA))
-    assert process_increment(spark, table, out, bm, profile=prof)["processed"] == 1
+    assert process_increment(spark, table, out, bm)["processed"] == 1
     # same content, different url, next increment
     table.append(spark.createDataFrame(
         [("https://b.com/1", t0 + dt.timedelta(days=1), None, text, "en")],
         PAGES_SCHEMA))
-    assert process_increment(spark, table, out, bm, profile=prof)["processed"] == 1
+    assert process_increment(spark, table, out, bm)["processed"] == 1
     dec = spark.read.parquet(f"{out}/decisions")
     assert dec.filter("keep").count() == 2  # ticks never saw each other
 
