@@ -81,10 +81,12 @@ class RuleProfile:
     block_curly_brace: bool = True       # rule: curly_brace (C4 §2.2: '{' in
                                          # extracted text = leaked code/CSS)
     # Gopher dup-ngram ladder (Rae et al. 2021 Table A1), opt-in: it is the
-    # COSTLY tail of the repetition family (~9 extra array folds per doc in
-    # the stat stage), and the lines/paragraphs/2-gram gates above already
-    # catch the common template spam.  Thresholds are the published Gopher
-    # values; rules fire as dup_top_{n}gram / dup_{n}gram.
+    # costly tail of the repetition family (one more Arrow crossing of
+    # (text, lang); on 4 cores a warm run_batch over 3,000 synthetic pages
+    # took 3.7-4.3 s with it and 3.1-3.9 s without), and the
+    # lines/paragraphs/2-gram gates above already catch the common template
+    # spam.  Thresholds are the published Gopher values; rules fire as
+    # dup_top_{n}gram / dup_{n}gram.
     gopher_repetition_gates: bool = False
     max_top_ngram_char_frac: tuple[tuple[int, float], ...] = (
         (2, 0.20), (3, 0.18), (4, 0.16))

@@ -34,7 +34,7 @@ class BigramLM:
                  counts: dict[str, tuple[dict, dict]] | None = None):
         """Build from seed ``corpora`` strings (default) or directly from
         ``counts`` — {lang: (bigram->count, char->count)} as produced by
-        ``train_bigram_lm``'s Spark aggregation or any equivalent counter.
+        ``corpus_lm_counts``' Spark aggregation or any equivalent counter.
         Both routes share the SAME smoothing formula, so a model trained on
         a corpus string equals a model built from that string's counts."""
         if counts is None:
@@ -314,24 +314,18 @@ def char_unigram_counts(df, text_col: str = "extracted_text"):
     return chars.groupBy("lang", "ch").agg(F.count(F.lit(1)).alias("n"))
 
 
-def train_bigram_lm(df) -> "BigramLM":
-    """Train the perplexity LM FROM the corpus' ``extracted_text`` by
-    ``lang_pred`` (the CCNet recipe: fit the
-    LM on your own kept text, score against it) — the same close-the-loop
-    discipline as train_quality_weights: counting is distributed
-    (map-side-combined aggregations whose shuffle is bounded by charset²),
-    only the per-language count tables land on the driver, and the model
-    construction reuses the seed-corpus smoothing verbatim, so a model
-    trained on one document equals BigramLM(corpora={lang: doc}) exactly
-    (pytest-pinned).  The result drops into build_pipeline(ppl_model=...) /
-    batch --lm-counts with no plan change."""
-    return BigramLM(counts=corpus_lm_counts(df))
-
-
 def corpus_lm_counts(df, text_col: str = "extracted_text") -> dict:
     """Run both count jobs and assemble {lang: (bigram->n, char->n)} by
     ``lang_pred`` on the driver — the serializable intermediate the
-    train-lm CLI prints."""
+    train-lm CLI prints.  ``BigramLM(counts=corpus_lm_counts(df,
+    text_col=...))`` trains the perplexity LM FROM the corpus (the CCNet
+    recipe: fit the LM on your own kept text, score against it).  Counting
+    is distributed (map-side-combined aggregations whose shuffle is
+    bounded by charset²), only the per-language count tables land on the
+    driver, and the model reuses the seed-corpus smoothing verbatim, so a
+    model trained on one document equals ``BigramLM(corpora={lang: doc})``
+    exactly (pytest-pinned).  A decisions store holds the trainable text
+    in ``scrubbed_text``."""
     counts: dict[str, tuple[Counter, Counter]] = {}
     for r in char_bigram_counts(df, text_col).collect():
         counts.setdefault(r["lang"], (Counter(), Counter()))[0][r["bigram"]] = r["n"]

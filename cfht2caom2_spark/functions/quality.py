@@ -1,11 +1,16 @@
-"""Gopher/C4-style heuristic quality statistics as built-in Column exprs.
+"""Gopher/C4-style heuristic quality statistics, mostly as built-in Column
+exprs.
 
 Reference analogue: the ~40 keyword-chain getters with validity guards
 (reference instruments.py:385-653, e.g. elevation range-check 0-90 at :385-393,
 humidity guard at :439-444) — each output field is a guarded pure expression
-over the row.  Here each text statistic is one Catalyst expression over the
-token array; NO Python UDFs in this module (north_rule: vectorized only).
-WholeStageCodegen fuses the whole block into the scan stage.
+over the row.  Here each per-row text statistic of the default profile is one
+Catalyst expression over the token array, and WholeStageCodegen fuses the
+whole block into the scan stage.  Two stat blocks run as vectorized Python
+crossings instead, because their expression form needs interpreted
+sort-and-fold higher-order functions: the opt-in Gopher repetition ladder
+(``with_repetition_ladder``, one pandas UDF over (text, lang)) and the
+registry's character stats (``char_stats_fast``, one mapInPandas).
 
 Every function takes/returns ``pyspark.sql.Column`` so the same definitions are
 used by the batch pipeline, the streaming mode, and the DuckDB-oracle queries
@@ -14,12 +19,17 @@ used by the batch pipeline, the streaming mode, and the DuckDB-oracle queries
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..config import STOPWORDS, TOXICITY_WORDS, RuleProfile
 from ..corpora import ZH_STOP_CHARS
-from .tokens import word_ngrams, word_tokens
+from . import kernels
+from .tokens import word_tokens
 
 # Symbols counted for the Gopher symbol-to-char ratio (ASCII-only on purpose:
 # identical semantics in Java regex and RE2, and CJK text is not penalized).
@@ -135,209 +145,48 @@ def terminal_punct_line_frac(text: Column) -> Column:
 #
 # The repetition family beyond lines/paragraphs/2-grams (Rae et al. 2021
 # Table A1): top-{2,3,4}-gram char fraction and dup-{5..10}-gram char
-# fraction.  Character fractions are over TOKEN characters (separators
-# excluded on both sides of the ratio).  Every computed array below is
-# consumed exactly once, in ARGUMENT position (array_sort / the array being
-# folded), never element-wise inside another lambda — higher-order functions
-# re-evaluate lambda-body subtrees per element, so that discipline is what
-# keeps each stat O(T·n + G log G) per doc instead of O(T²).
+# fraction, computed by the one Python kernel (kernels.repetition_ladder)
+# behind one Arrow crossing.  As Spark expressions the same stats need a
+# sort and a struct-accumulator fold per rung, and higher-order functions
+# run interpreted: with the gates on, a warm run_batch over 3,000 synthetic
+# pages (4 cores) took 10-13.5 s with 9 expression rungs and 5.3-6.9 s with
+# the kernel.
 
-REP_LADDER_TOP_NS: tuple[int, ...] = (2, 3, 4)
-REP_LADDER_DUP_NS: tuple[int, ...] = (5, 6, 7, 8, 9, 10)
-
-
-def total_token_chars(toks: Column) -> Column:
-    return F.aggregate(toks, F.lit(0).cast("bigint"),
-                       lambda a, t: a + F.length(t))
-
-
-def top_ngram_char_frac(toks: Column, n: int) -> Column:
-    """Fraction of token characters covered by the most frequent word
-    n-gram: count × the gram's token chars / total token chars (Gopher
-    "fraction of characters contained in the most frequently-occurring
-    n-gram").  Overlapping occurrences count independently, so degenerate
-    single-token spam can exceed 1.0 — harmless for a > threshold gate.
-    Ties on (count, char length) keep the lexicographically smallest gram
-    (= first in sort order), which the SQL oracle mirrors with ORDER BY
-    cnt DESC, len DESC, gram ASC.  ONE fold over the sorted gram array."""
-    sorted_g = F.array_sort(word_ngrams(toks, n))
-    acc0 = F.struct(F.lit("").alias("prev"),
-                    F.lit(0).cast("bigint").alias("run"),
-                    F.lit(0).cast("bigint").alias("best"),
-                    F.lit(0).cast("bigint").alias("best_len"))
-
-    def step(acc, x):
-        run = F.when(x == acc["prev"], acc["run"] + 1) \
-            .otherwise(F.lit(1).cast("bigint"))
-        ln = (F.length(x) - F.lit(n - 1)).cast("bigint")
-        better = (run > acc["best"]) | ((run == acc["best"])
-                                        & (ln > acc["best_len"]))
-        return F.struct(
-            x.alias("prev"), run.alias("run"),
-            F.when(better, run).otherwise(acc["best"]).alias("best"),
-            F.when(better, ln).otherwise(acc["best_len"]).alias("best_len"))
-
-    cov = F.aggregate(sorted_g, acc0, step,
-                      lambda a: a["best"] * a["best_len"])
-    tot = total_token_chars(toks)
-    return F.when(tot <= 0, F.lit(0.0)).otherwise(
-        cov.cast("double") / tot.cast("double"))
-
-
-def dup_ngram_char_frac(toks: Column, n: int) -> Column:
-    """Fraction of token characters inside at least one DUPLICATED n-gram
-    occurrence (union of covered token positions — overlap not double-
-    counted, Gopher's "fraction of characters contained within duplicate
-    n-grams").  Shape: one fold over the sorted (gram, pos) pairs collects
-    the duplicated start positions, one interval-merge fold (same walk as
-    the span-removal gap fold, operators/spans.py) sums the union's token
-    chars — O(T·n + G log G + D·n) per doc, D = duplicated starts."""
-    # (gram, 1-based start) pairs; [] for docs with fewer than n tokens
-    sorted_p = F.array_sort(F.transform(
-        word_ngrams(toks, n),
-        lambda g, i: F.struct(g.alias("g"),
-                              (i + 1).cast("bigint").alias("pos"))))
-    acc0 = F.struct(F.lit("").alias("prev"),
-                    F.lit(0).cast("bigint").alias("prev_pos"),
-                    F.lit(0).cast("bigint").alias("run"),
-                    F.array().cast("array<bigint>").alias("dups"))
-
-    def step(acc, x):
-        run = F.when(x["g"] == acc["prev"], acc["run"] + 1) \
-            .otherwise(F.lit(1).cast("bigint"))
-        # run hits 2: the FIRST occurrence retroactively joins the dup set
-        dups = F.when(run == 2,
-                      F.concat(acc["dups"],
-                               F.array(acc["prev_pos"], x["pos"]))) \
-            .when(run > 2, F.array_append(acc["dups"], x["pos"])) \
-            .otherwise(acc["dups"])
-        return F.struct(x["g"].alias("prev"), x["pos"].alias("prev_pos"),
-                        run.alias("run"), dups.alias("dups"))
-
-    dup_starts = F.array_sort(F.aggregate(sorted_p, acc0, step,
-                                          lambda a: a["dups"]))
-    # interval-merge: each start i covers tokens [i, i+n-1]; clip to the
-    # last covered index and sum the newly covered tokens' chars
-    m0 = F.struct(F.lit(0).cast("bigint").alias("end"),
-                  F.lit(0).cast("bigint").alias("chars"))
-
-    def merge(acc, i):
-        s = F.greatest(i, acc["end"] + 1)
-        e = i + F.lit(n - 1)
-        seg = F.aggregate(
-            F.slice(toks, s.cast("int"), (e - s + 1).cast("int")),
-            F.lit(0).cast("bigint"), lambda a, t: a + F.length(t))
-        return F.struct(e.alias("end"), (acc["chars"] + seg).alias("chars"))
-
-    covered = F.aggregate(dup_starts, m0, merge, lambda a: a["chars"])
-    tot = total_token_chars(toks)
-    return F.when(tot <= 0, F.lit(0.0)).otherwise(
-        covered.cast("double") / tot.cast("double"))
-
-
-def repetition_ladder_stats_fast(df: DataFrame, id_col: str = "doc_id",
-                                 text_col: str = "text") -> DataFrame:
-    """(id, the 9 ladder fracs) via one vectorized mapInPandas crossing —
-    the batch-counting twin of the ladder's Column expressions (round 6,
-    guide §4.2).  The expression rungs each array_sort the gram array and
-    run interpreted struct-accumulator folds per doc per n (9 rungs);
-    here a Python dict per (doc, n) counts grams in one pass and numpy
-    masks the duplicated coverage.  Semantics are identical, tie-breaks
-    included: top rung picks max (count, gram char len) with the
-    lexicographically smallest joined gram among ties; dup rung covers the
-    union of duplicated occurrences; all fractions are the same
-    bigint->double divisions.  Parity is pinned by the DuckDB oracle and a
-    direct expression-vs-fast equality test
-    (tests/test_operators.py::test_repetition_ladder_fast_parity).
-
-    Edge note: NULL text yields all-zero fracs here where the expression
-    rungs propagate NULL — indistinguishable on this engine's tables (the
-    testdata generator never emits NULL text; callers that might should
-    filter first, as every other text operator here does)."""
-    import numpy as np
-    import pandas as pd
-
-    from . import kernels
-
-    top_ns, dup_ns = REP_LADDER_TOP_NS, REP_LADDER_DUP_NS
-    frac_cols = [f"top_{n}gram_char_frac" for n in top_ns] + \
-                [f"dup_{n}gram_char_frac" for n in dup_ns]
-
-    def ladder_batches(batches):
-        def doc_stats(text):
-            toks = kernels.word_tokens(text or "")
-            T = len(toks)
-            lens = np.fromiter((len(t) for t in toks), dtype="int64",
-                               count=T)
-            tot = int(lens.sum())
-            run = np.cumsum(np.concatenate(([0], lens)))
-            out = []
-            for n in top_ns:
-                cov = 0
-                if tot > 0 and T >= n:
-                    # the winner is max by (count, then charlen) — the
-                    # expression fold's final lexicographic tie-break only
-                    # picks WHICH gram wins, and every such tie shares the
-                    # same (count, charlen) product, so cov is tie-free
-                    cnt: dict = {}
-                    charlen = {}
-                    for i in range(T - n + 1):
-                        g = tuple(toks[i:i + n])
-                        cnt[g] = cnt.get(g, 0) + 1
-                        if g not in charlen:
-                            charlen[g] = int(run[i + n] - run[i])
-                    bc = max(cnt.values())
-                    bl = max(charlen[g] for g, c in cnt.items() if c == bc)
-                    cov = bc * bl
-                out.append(0.0 if tot <= 0 else float(cov) / float(tot))
-            for n in dup_ns:
-                chars = 0
-                if tot > 0 and T >= n:
-                    occ: dict = {}
-                    for i in range(T - n + 1):
-                        occ.setdefault(tuple(toks[i:i + n]), []).append(i)
-                    covered = np.zeros(T, dtype=bool)
-                    for idxs in occ.values():
-                        if len(idxs) > 1:
-                            for i in idxs:
-                                covered[i:i + n] = True
-                    chars = int(lens[covered].sum())
-                out.append(0.0 if tot <= 0 else float(chars) / float(tot))
-            return out
-
-        for pdf in batches:
-            stats = [doc_stats(t) for t in pdf[text_col]]
-            if stats:
-                res = pd.DataFrame(stats, columns=frac_cols)
-            else:
-                res = pd.DataFrame(
-                    {c: pd.Series(dtype="float64") for c in frac_cols})
-            res.insert(0, id_col, pdf[id_col].to_numpy())
-            yield res
-
-    id_type = df.select(id_col).schema.fields[0].dataType.simpleString()
-    schema = f"{id_col} {id_type}, " + ", ".join(
-        f"{c} double" for c in frac_cols)
-    return df.select(id_col, text_col).mapInPandas(ladder_batches,
-                                                   schema=schema)
+REP_LADDER_COLS: tuple[str, ...] = tuple(
+    [f"top_{n}gram_char_frac" for n in kernels.REP_LADDER_TOP_NS]
+    + [f"dup_{n}gram_char_frac" for n in kernels.REP_LADDER_DUP_NS])
 
 
 def with_repetition_ladder(df: DataFrame, text_col: str = "extracted_text",
                            lang_col: str | None = None) -> DataFrame:
     """Append the 9 ladder stats (top_{2,3,4}gram_char_frac,
-    dup_{5..10}gram_char_frac).  Same token dispatch as
-    with_quality_stats; opt-in from the pipeline via
-    RuleProfile.gopher_repetition_gates."""
-    text = F.col(text_col)
-    is_zh = (F.col(lang_col) == "zh") if lang_col else F.lit(False)
-    df = df.withColumn("_toks", F.when(is_zh, zh_chars(text))
-                       .otherwise(word_tokens(text)))
-    t = F.col("_toks")
-    cols = {f"top_{n}gram_char_frac": top_ngram_char_frac(t, n)
-            for n in REP_LADDER_TOP_NS}
-    cols.update({f"dup_{n}gram_char_frac": dup_ngram_char_frac(t, n)
-                 for n in REP_LADDER_DUP_NS})
-    return df.withColumns(cols).drop("_toks")
+    dup_{5..10}gram_char_frac) from one iterator-form pandas UDF over
+    (text, lang): only those two columns cross Arrow, and the 9 fractions
+    come back as one struct.  Same token dispatch as with_quality_stats:
+    ``lang == "zh"`` rows tokenize per code point (``zh_chars``), every
+    other row (NULL lang, or no ``lang_col``) by the word rule.  NULL text
+    gives NULL fractions, which the rules read as not fired.  Opt-in from
+    the pipeline via RuleProfile.gopher_repetition_gates."""
+    fields = [T.StructField(c, T.DoubleType()) for c in REP_LADDER_COLS]
+
+    @F.pandas_udf(T.StructType(fields))
+    def repetition_ladder(batches: Iterator[tuple[pd.Series, pd.Series]]
+                ) -> Iterator[pd.DataFrame]:
+        nulls = [None] * len(REP_LADDER_COLS)
+        for texts, langs in batches:
+            rows = [nulls if t is None else kernels.repetition_ladder(
+                        kernels.zh_tokens(t) if lg == "zh"
+                        else kernels.word_tokens(t))
+                    for t, lg in zip(texts, langs)]
+            # float64 columns: NULL rows become NaN, which Arrow writes as
+            # NULL (no fraction is ever NaN: its denominator is > 0)
+            yield pd.DataFrame(rows, columns=list(REP_LADDER_COLS),
+                               dtype="float64")
+
+    lang = F.col(lang_col) if lang_col else F.lit(None).cast("string")
+    return (df.withColumn("_ladder", repetition_ladder(F.col(text_col), lang))
+            .withColumns({c: F.col("_ladder")[c] for c in REP_LADDER_COLS})
+            .drop("_ladder"))
 
 
 def repetition_ladder_rules(profile: RuleProfile) -> dict[str, Column]:
@@ -390,8 +239,8 @@ def char_stats_fast(df: DataFrame, id_col: str = "doc_id",
     exact integers (sum of count² over codepoints, distinct codepoints)
     and the same single double divisions; parity pinned by the DuckDB
     oracle and test_char_stats_fast_parity.  NULL text yields zeros here
-    (expression form: NULL) — absent from this engine's tables, same note
-    as repetition_ladder_stats_fast."""
+    (expression form: NULL) — absent from this engine's tables (the
+    testdata generator never emits NULL text)."""
     from collections import Counter
 
     import pandas as pd

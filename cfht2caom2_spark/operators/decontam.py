@@ -23,11 +23,11 @@ Scale shape (10^12 training docs, ~10^6 benchmark docs):
   * per-doc total gram counts are computed narrow (array size), never
     shuffled.
 
-Gram identity uses the md5-derived ``shingle_hash`` (oracle-portable; the
-production swap to crc32 via ``hash_fn=shingle_hash_fast`` halves the cost,
-same as the dedup path).  Hash collisions can only ADD overlap counts
-(never lose a true overlap), and both engines hash identically, so the
-DuckDB parity check is exact.
+Every caller names the gram hash (``hash_fn``, no default): the md5-derived
+``shingle_hash`` is oracle-portable, and crc32 ``shingle_hash_fast`` halves
+the cost (the pipeline's choice, same as the dedup path).  Hash collisions
+can only ADD overlap counts (never lose a true overlap), and both engines
+hash identically, so the DuckDB parity check is exact.
 """
 
 from __future__ import annotations
@@ -35,17 +35,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import shingle_hash
-
 # bench bitmap size: 2^22 bits, at most 2^16 broadcast rows (512 KiB)
 PREFILTER_BITS = 1 << 22
 
 
 def gram_set_frame(docs: DataFrame, id_col: str, text_col: str,
-                   k: int = 3, hash_fn=None) -> DataFrame:
+                   k: int = 3, *, hash_fn) -> DataFrame:
     """(id, ``_grams``): the distinct hashed k-gram array, built in one
     vectorized Python crossing (``kernels.gram_hashes``) for the md5
-    (default / ``shingle_hash``) or crc32 (``shingle_hash_fast``) hash; any
+    (``shingle_hash``) or crc32 (``shingle_hash_fast``) hash; any
     other ``hash_fn`` raises ValueError.  Bit-identical to the expression
     ``array_distinct(transform(word_shingles(text, k), hash))``
     (tests/reference_impl.py ``gram_set``): first-occurrence order, hashes
@@ -56,7 +54,7 @@ def gram_set_frame(docs: DataFrame, id_col: str, text_col: str,
 
     from ..functions.kernels import base_hash, gram_hashes
 
-    h = base_hash(hash_fn or shingle_hash)
+    h = base_hash(hash_fn)
     id_type = docs.select(id_col).schema.fields[0].dataType.simpleString()
 
     def run(batches):
@@ -73,7 +71,7 @@ def gram_set_frame(docs: DataFrame, id_col: str, text_col: str,
 
 
 def benchmark_grams(bench: DataFrame, text_col: str = "text", k: int = 3,
-                    hash_fn=None) -> DataFrame:
+                    *, hash_fn) -> DataFrame:
     """One-column distinct gram table of the whole eval suite, from one
     vectorized Python crossing with a per-partition distinct (a set per
     task, so the exchange carries partials).  NULL-text rows are skipped:
@@ -82,7 +80,7 @@ def benchmark_grams(bench: DataFrame, text_col: str = "text", k: int = 3,
 
     from ..functions.kernels import base_hash, gram_hashes
 
-    h = base_hash(hash_fn or shingle_hash)
+    h = base_hash(hash_fn)
 
     def run(batches):
         vals: set[int] = set()
@@ -119,8 +117,8 @@ def bench_gram_bitmap(bench_g: DataFrame, bits: int) -> DataFrame:
 
 def decontaminate(docs: DataFrame, bench: DataFrame,
                   id_col: str = "doc_id", text_col: str = "text",
-                  k: int = 3, min_overlap: int = 5,
-                  hash_fn=None,
+                  k: int = 3, min_overlap: int = 5, *,
+                  hash_fn,
                   prefilter_bits: int = PREFILTER_BITS) -> DataFrame:
     """Per-doc contamination flags: (id, n_grams, n_overlap, contaminated).
 
@@ -147,7 +145,7 @@ def decontaminate(docs: DataFrame, bench: DataFrame,
     was evaluated once per branch.  Lazy localCheckpoints pin both slim
     gram frames so every consumer reads the blocks (sf1.0: 15.2 s -> ~5 s).
     """
-    grams = gram_set_frame(docs, id_col, text_col, k, hash_fn) \
+    grams = gram_set_frame(docs, id_col, text_col, k, hash_fn=hash_fn) \
         .localCheckpoint(eager=False)
     bench_g = benchmark_grams(bench, text_col=text_col, k=k,
                               hash_fn=hash_fn).localCheckpoint(eager=False)
@@ -189,8 +187,8 @@ def decontaminate(docs: DataFrame, bench: DataFrame,
 def fuzzy_decontaminate(docs: DataFrame, bench: DataFrame,
                         id_col: str = "doc_id", text_col: str = "text",
                         bands: int = 8, rows_per_band: int = 2, k: int = 3,
-                        min_est_jaccard: float = 0.5,
-                        hash_fn=None) -> DataFrame:
+                        min_est_jaccard: float = 0.5, *,
+                        hash_fn) -> DataFrame:
     """Near-duplicate (fuzzy) decontamination: flag training docs whose
     MinHash signature collides with an eval-suite doc in any LSH band AND
     whose signature agreement estimates Jaccard >= ``min_est_jaccard``.
@@ -222,9 +220,9 @@ def fuzzy_decontaminate(docs: DataFrame, bench: DataFrame,
 
     num_perms = bands * rows_per_band
     sig_d = minhash_sig_frame(docs, id_col, text_col, num_perms, k,
-                              hash_fn).localCheckpoint(eager=False)
+                              hash_fn=hash_fn).localCheckpoint(eager=False)
     sig_b = minhash_sig_frame(bench, id_col, text_col, num_perms, k,
-                              hash_fn, out_id="_bid", out_sig="_bsig"
+                              hash_fn=hash_fn, out_id="_bid", out_sig="_bsig"
                               ).localCheckpoint(eager=False)
 
     band_d = banded_keys(sig_d, "_id", bands, rows_per_band)
@@ -248,8 +246,8 @@ def fuzzy_decontaminate(docs: DataFrame, bench: DataFrame,
 
 def decontam_report(docs: DataFrame, bench: DataFrame,
                     id_col: str = "doc_id", text_col: str = "text",
-                    k: int = 3, min_overlap: int = 5,
-                    hash_fn=None) -> DataFrame:
+                    k: int = 3, min_overlap: int = 5, *,
+                    hash_fn) -> DataFrame:
     """Per-EVAL-doc contamination audit: for each benchmark doc, how many
     training docs share >= min_overlap distinct k-grams with IT, and the
     deepest such overlap.  The doc-level pass (``decontaminate``) answers
@@ -263,9 +261,11 @@ def decontam_report(docs: DataFrame, bench: DataFrame,
     that surviving grams carry the bench id through the pair groupBy
     (bench-suite sized keys, bounded).
     """
-    doc_g = gram_set_frame(docs, id_col, text_col, k, hash_fn).select(
+    doc_g = gram_set_frame(docs, id_col, text_col, k,
+                           hash_fn=hash_fn).select(
         id_col, F.explode("_grams").alias("_g"))
-    bench_gd = gram_set_frame(bench, id_col, text_col, k, hash_fn).select(
+    bench_gd = gram_set_frame(bench, id_col, text_col, k,
+                              hash_fn=hash_fn).select(
         F.col(id_col).alias("_bid"), F.explode("_grams").alias("_g"))
     # bench_gd feeds the bitmap AND the pair join (decontaminate's
     # recompute pattern); the corpus stream is consumed once, so only the

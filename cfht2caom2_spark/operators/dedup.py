@@ -75,12 +75,12 @@ def _perm_params(num_perms: int) -> list[tuple[int, int]]:
 
 
 def minhash_sig_frame(df: DataFrame, id_col: str, text_col: str,
-                      num_perms: int, k: int = 3, hash_fn=None,
+                      num_perms: int, k: int = 3, *, hash_fn,
                       out_id: str = "_id",
                       out_sig: str = "_sig") -> DataFrame:
     """(id, signature array<bigint>) built in one vectorized Python
-    crossing (``kernels.minhash_sig``) for the crc32 (default /
-    ``shingle_hash_fast``) or md5 (``shingle_hash``) base hash; any other
+    crossing (``kernels.minhash_sig``) for the crc32
+    (``shingle_hash_fast``) or md5 (``shingle_hash``) base hash; any other
     ``hash_fn`` raises ValueError (``kernels.base_hash``).  Bit-identical
     to the expression fold over ``word_shingles`` (tests/reference_impl.py
     ``minhash_signature``; pinned by tests/test_kernel_parity.py and the
@@ -173,7 +173,7 @@ def signature_agreement(sig_a: Column, sig_b: Column,
 
 def lsh_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
                         bands: int = 8, rows_per_band: int = 2,
-                        k: int = 3, hash_fn=None) -> DataFrame:
+                        k: int = 3, *, hash_fn) -> DataFrame:
     """Near-dup candidate pairs (id_a < id_b) via banded minhash buckets.
 
     One explode (rows -> rows×bands) + one self-join on (band, band_key).
@@ -181,7 +181,7 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
     shuffle of the dedup stage.
     """
     sig = minhash_sig_frame(df, id_col, text_col, bands * rows_per_band, k,
-                            hash_fn)
+                            hash_fn=hash_fn)
     # both sides of the bucket self-join would re-run the shingle+minhash
     # work from the input otherwise — materialize the slim (id, 32-long)
     # signature frame once (same pay-once discipline as simhash_pairs)

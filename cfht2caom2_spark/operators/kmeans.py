@@ -19,10 +19,13 @@ Scale design (the 100 TB story):
     lambda, so Catalyst analysis/codegen cost grows with k*dim and the
     path degrades past a few thousand literal nodes), and a vectorized
     mapInPandas numpy path for production k*dim (FAISS-like k=256,
-    dim=1024) that computes all distances as batched broadcasts with the
-    same sequential fold order — bitwise-identical labels, bounded batch
-    memory.  Ties break to the lowest cluster id on both paths, the same
-    rule the DuckDB oracle's ``ORDER BY dist, cluster`` implements.
+    dim=1024) that computes all distances with one matmul per batch
+    (bounded batch memory).  The matmul associates additions differently
+    from the expression's sequential fold, so a vector equidistant to
+    rounding between two cells may label differently on the two paths
+    (``assign_cells``' FP caveat); exact ties break to the lowest cluster
+    id on both, the same rule the DuckDB oracle's ``ORDER BY dist,
+    cluster`` implements.
   * Each Lloyd's iteration is ONE map-side-combined ``groupBy(cluster)``
     with ``dim`` avg aggregates: the shuffle carries k*dim partial
     (sum, count) pairs PER MAP TASK — never the vectors.  A 10^9-vector

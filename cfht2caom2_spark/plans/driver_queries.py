@@ -2225,7 +2225,7 @@ ORACLES["q_quality_score_trained"] = Q_QUALITY_SCORE_TRAINED_SQL
 
 def q_char_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language char-bigram counts over normalized padded text — the
-    distributed counting stage of train_bigram_lm (functions/perplexity.py):
+    distributed counting stage of corpus_lm_counts (functions/perplexity.py):
     what the perplexity LM trains on when fit from the corpus itself.  The
     shuffle carries only (lang, bigram) partial counts, bounded by charset²
     regardless of corpus size."""
@@ -2730,12 +2730,9 @@ def q_repetition_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full Gopher repetition ladder (Rae et al. 2021 Table A1) with the
     published thresholds: fraction of token chars in the most frequent
     {2,3,4}-gram and in duplicated {5..10}-grams, plus the fired
-    dup_top_{n}gram / dup_{n}gram rules.  Round 6: stats come from the
-    vectorized batch counter (quality.repetition_ladder_stats_fast — one
-    Python crossing, dict counts + numpy coverage) instead of 9 interpreted
-    array-fold rungs per doc; the Column-expression rungs remain what the
-    pipeline applies under profile.gopher_repetition_gates, with equality
-    pinned by test_repetition_ladder_fast_parity and the DuckDB oracle."""
+    dup_top_{n}gram / dup_{n}gram rules.  The stats come from
+    quality.with_repetition_ladder, the same one-crossing kernel the
+    pipeline runs under profile.gopher_repetition_gates."""
     from ..config import DEFAULT_PROFILE
 
     docs = _t_wide(spark, sf_dir, "documents").select(
@@ -2744,8 +2741,8 @@ def q_repetition_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.substring(F.col("text"), 1, 120),
             F.expr(f"repeat('{_REP_PHRASE}', cast(doc_id % 6 as int))"),
         ).alias("text"))
-    stats = Q.repetition_ladder_stats_fast(docs, id_col="doc_id",
-                                           text_col="text")
+    stats = Q.with_repetition_ladder(docs, text_col="text").select(
+        "doc_id", *Q.REP_LADDER_COLS)
     conds = Q.repetition_ladder_rules(DEFAULT_PROFILE)
     rules = F.array_sort(F.filter(
         F.array(*[F.when(c, F.lit(r)) for r, c in conds.items()]),

@@ -84,12 +84,16 @@ def test_signature_frames_match_expression_references(spark, texts, k):
     }
     frames = {
         "mh_crc": minhash_sig_frame(df, "id", "t", _PERMS, k,
-                                    shingle_hash_fast, "id", "v"),
-        "mh_md5": minhash_sig_frame(df, "id", "t", _PERMS, k, shingle_hash,
-                                    "id", "v"),
-        "gs_md5": gram_set_frame(df, "id", "t", k, shingle_hash).select(
+                                    hash_fn=shingle_hash_fast, out_id="id",
+                                    out_sig="v"),
+        "mh_md5": minhash_sig_frame(df, "id", "t", _PERMS, k,
+                                    hash_fn=shingle_hash, out_id="id",
+                                    out_sig="v"),
+        "gs_md5": gram_set_frame(df, "id", "t", k,
+                                 hash_fn=shingle_hash).select(
             "id", F.col("_grams").alias("v")),
-        "gs_crc": gram_set_frame(df, "id", "t", k, shingle_hash_fast).select(
+        "gs_crc": gram_set_frame(df, "id", "t", k,
+                                 hash_fn=shingle_hash_fast).select(
             "id", F.col("_grams").alias("v")),
         "sim": _simhash_md5_frame(df, "id", "t", _BITS, k).select(
             F.col("_id").alias("id"), F.col("_sh").alias("v")),
@@ -140,9 +144,9 @@ def test_unsupported_hash_raises(spark):
     hash fails on the driver instead of silently changing the plan."""
     df = spark.createDataFrame([(1, "a b c")], "id bigint, t string")
     with pytest.raises(ValueError, match="no Python kernel"):
-        minhash_sig_frame(df, "id", "t", 4, 3, hash60_fast)
+        minhash_sig_frame(df, "id", "t", 4, 3, hash_fn=hash60_fast)
     with pytest.raises(ValueError, match="no Python kernel"):
-        gram_set_frame(df, "id", "t", 3, hash60_fast)
+        gram_set_frame(df, "id", "t", 3, hash_fn=hash60_fast)
 
 
 def _package_modules():

@@ -137,7 +137,7 @@ def test_adapters_fail_fast_without_libs(tmp_path):
             KenLMModel({"en": str(blob)})
 
 
-def test_train_bigram_lm_matches_seed_constructor(spark):
+def test_corpus_trained_lm_matches_seed_constructor(spark):
     """Corpus-scale LM training (the train-quality discipline applied to
     the perplexity model): a model trained via the Spark counting jobs on
     one document equals BigramLM(corpora={lang: doc}) EXACTLY — same
@@ -149,8 +149,7 @@ def test_train_bigram_lm_matches_seed_constructor(spark):
     from cfht2caom2_spark.functions.perplexity import (BigramLM,
                                                        corpus_lm_counts,
                                                        lm_counts_from_json,
-                                                       lm_counts_to_json,
-                                                       train_bigram_lm)
+                                                       lm_counts_to_json)
 
     doc = ("The quick brown fox jumps over the lazy dog.  Pack my box "
            "with five dozen liquor jugs; amazingly few discotheques "
@@ -158,7 +157,8 @@ def test_train_bigram_lm_matches_seed_constructor(spark):
     seed = BigramLM(corpora={"en": doc})
     df = spark.createDataFrame([(doc, "en")],
                                "extracted_text string, lang_pred string")
-    trained = train_bigram_lm(df)
+    trained = BigramLM(counts=corpus_lm_counts(df,
+                                               text_col="extracted_text"))
 
     assert trained.floors == seed.floors
     for lang in seed._sorted:
@@ -177,19 +177,18 @@ def test_train_bigram_lm_matches_seed_constructor(spark):
         assert np.array_equal(rt._sorted[lang][1], trained._sorted[lang][1])
 
 
-def test_train_bigram_lm_scores_in_domain_lower(spark):
+def test_corpus_trained_lm_scores_in_domain_lower(spark):
     """A corpus-trained LM prefers in-domain prose over character soup —
     the CCNet selection signal the trained model exists to provide."""
-    from pyspark.sql import functions as F
-
-    from cfht2caom2_spark.functions.perplexity import train_bigram_lm
+    from cfht2caom2_spark.functions.perplexity import (BigramLM,
+                                                       corpus_lm_counts)
     from cfht2caom2_spark.sources.pages import synth_pages
     from cfht2caom2_spark.plans.pipeline import build_pipeline
 
     dec = build_pipeline(synth_pages(spark, 300), spark, dedupe=False)
     # the LM trains on the stored artifact of the kept docs
-    lm = train_bigram_lm(dec.filter("keep").select(
-        F.col("scrubbed_text").alias("extracted_text"), "lang_pred"))
+    lm = BigramLM(counts=corpus_lm_counts(dec.filter("keep"),
+                                          text_col="scrubbed_text"))
     kept_text = dec.filter("keep").select("scrubbed_text").first()[0]
     assert lm.perplexity_one(kept_text, "en") < lm.perplexity_one(
         "qzx jkw vvq pzf xqj wkz qqq zzz xxx jjj", "en")

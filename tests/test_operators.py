@@ -13,7 +13,8 @@ from pyspark.sql import functions as F
 
 from cfht2caom2_spark.operators.dedup import (connected_components,
                                               minhash_losers_from_sig,
-                                              minhash_sig_frame, simhash,
+                                              minhash_sig_frame, shingle_hash,
+                                              shingle_hash_fast, simhash,
                                               word_shingles)
 from cfht2caom2_spark.operators.similarity import cosine_topk, lsh_ann
 
@@ -37,6 +38,7 @@ def docs(spark):
 
 def test_minhash_losers(docs):
     sigs = minhash_sig_frame(docs, "doc_id", "text", num_perms=32,
+                             hash_fn=shingle_hash_fast,
                              out_id="doc_id", out_sig="minhash_sig")
     losers = minhash_losers_from_sig(docs.join(sigs, "doc_id"), "doc_id",
                                      "ord", threshold=0.7)
@@ -373,7 +375,8 @@ def test_decontaminate_flags_exact_and_spares_partial(spark):
     bench = spark.createDataFrame([(100, bench_text)],
                                   "doc_id bigint, text string")
     out = {r["doc_id"]: r for r in
-           decontaminate(train, bench, min_overlap=5).collect()}
+           decontaminate(train, bench, min_overlap=5,
+                         hash_fn=shingle_hash).collect()}
     assert out[1]["contaminated"] and out[1]["n_overlap"] == out[1]["n_grams"]
     assert not out[2]["contaminated"] and out[2]["n_overlap"] == 2
     assert not out[3]["contaminated"] and out[3]["n_overlap"] == 0
@@ -384,8 +387,6 @@ def test_decontaminate_hash_fn_swap_same_flags(spark):
     """Production crc32 hash and the md5 oracle hash agree on the flags
     (collisions can only add counts; identical texts always collide)."""
     from cfht2caom2_spark.operators.decontam import decontaminate
-    from cfht2caom2_spark.operators.dedup import (shingle_hash,
-                                                  shingle_hash_fast)
 
     docs = spark.createDataFrame(
         [(i, f"doc {i} shares this long common sentence about rivers and "
@@ -425,7 +426,8 @@ def test_fuzzy_decontaminate_flags_neardup_and_spares_disjoint(spark):
     bench = spark.createDataFrame([(100, bench_text)],
                                   "doc_id bigint, text string")
     out = {r["doc_id"]: r for r in
-           fuzzy_decontaminate(train, bench, min_est_jaccard=0.5).collect()}
+           fuzzy_decontaminate(train, bench, min_est_jaccard=0.5,
+                               hash_fn=shingle_hash_fast).collect()}
     assert out[1]["max_est_jaccard"] == 1.0
     assert 2 in out and out[2]["max_est_jaccard"] >= 0.5
     assert 3 not in out
@@ -434,7 +436,8 @@ def test_fuzzy_decontaminate_flags_neardup_and_spares_disjoint(spark):
     # misses the paraphrase — the reason the fuzzy tier exists
     from cfht2caom2_spark.operators.decontam import decontaminate
     exact = {r["doc_id"]: r for r in decontaminate(
-        train.filter("doc_id = 2"), bench, min_overlap=18).collect()}
+        train.filter("doc_id = 2"), bench, min_overlap=18,
+        hash_fn=shingle_hash).collect()}
     assert exact[2]["n_overlap"] == 15 and not exact[2]["contaminated"]
 
 
@@ -502,7 +505,8 @@ def test_decontaminate_threshold_monotone(spark):
     bench = spark.createDataFrame([(0, base)], "doc_id bigint, text string")
     sets = []
     for t in (1, 3, 6):
-        out = decontaminate(docs, bench, min_overlap=t)
+        out = decontaminate(docs, bench, min_overlap=t,
+                            hash_fn=shingle_hash)
         sets.append({r["doc_id"] for r in out.collect() if r["contaminated"]})
     assert sets[2] <= sets[1] <= sets[0]
     assert sets[0]  # at threshold 1 the overlapping prefixes flag
@@ -954,7 +958,8 @@ def test_duplication_weights_and_decontam_report(spark):
 
     bench = docs.filter("doc_id in (2, 4)")
     rep = {r["doc_id"]: r for r in
-           decontam_report(docs, bench, min_overlap=5).collect()}
+           decontam_report(docs, bench, min_overlap=5,
+                           hash_fn=shingle_hash).collect()}
     # bench doc 2 (content A): overlapped by train docs 1,2,3
     assert rep[2]["n_contaminated_docs"] == 3
     assert rep[2]["max_overlap"] == 10      # all 10 distinct 3-grams of A
@@ -1164,15 +1169,13 @@ def test_cluster_balanced_sample_caps_and_keeps_small_cells(blob_vecs):
 
 
 def test_repetition_ladder_fast_parity(spark):
-    """repetition_ladder_stats_fast (the batch-counting mapInPandas twin)
-    equals the 9 Column-expression ladder rungs bitwise on adversarial
-    inputs: repeated phrases (deep dup coverage), count-vs-charlen winner
-    conflicts in the top rung, short docs (< n tokens), empty and
-    whitespace-only text, multi-space separators."""
-    from pyspark.sql import functions as F
-
+    """with_repetition_ladder (the one batch-counting kernel behind one
+    Arrow crossing) equals the independent python model bitwise on
+    adversarial inputs: repeated phrases (deep dup coverage),
+    count-vs-charlen winner conflicts in the top rung, short docs (< n
+    tokens), empty and whitespace-only text, multi-space separators."""
     from cfht2caom2_spark.functions import quality as Q
-    from cfht2caom2_spark.functions.tokens import word_tokens
+    from tests.test_properties import _ref_ladder_fracs
 
     rows = [
         (0, "spam spam spam spam spam spam spam spam spam spam spam spam"),
@@ -1186,20 +1189,11 @@ def test_repetition_ladder_fast_parity(spark):
         (8, "x " * 30 + "copy me twice copy me twice copy me twice"),
     ]
     docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    docs = docs.withColumn("_toks", word_tokens(F.col("text")))
-    t = F.col("_toks")
-    cols = [F.col("doc_id")]
-    for n in Q.REP_LADDER_TOP_NS:
-        cols.append(Q.top_ngram_char_frac(t, n)
-                    .alias(f"top_{n}gram_char_frac"))
-    for n in Q.REP_LADDER_DUP_NS:
-        cols.append(Q.dup_ngram_char_frac(t, n)
-                    .alias(f"dup_{n}gram_char_frac"))
-    expr = {r["doc_id"]: r.asDict() for r in docs.select(*cols).collect()}
-    fast = {r["doc_id"]: r.asDict()
-            for r in Q.repetition_ladder_stats_fast(
-                docs, id_col="doc_id", text_col="text").collect()}
-    assert expr == fast
+    fast = {r["doc_id"]: r for r in
+            Q.with_repetition_ladder(docs, text_col="text").collect()}
+    assert {i: tuple(r[c] for c in Q.REP_LADDER_COLS)
+            for i, r in fast.items()} == \
+        {i: _ref_ladder_fracs(text.split()) for i, text in rows}
     # sanity: the adversarial rows actually exercise non-zero coverage
     assert fast[0]["dup_5gram_char_frac"] > 0.9
     assert fast[8]["dup_5gram_char_frac"] > 0.0

@@ -137,6 +137,30 @@ def test_run_batch_job_count(spark, tmp_path):
     assert len(jobs) <= RUN_BATCH_JOBS, len(jobs)
 
 
+def test_repetition_ladder_is_one_python_eval_over_text_and_lang(spark):
+    """With the Gopher gates on, the pipeline's ladder is exactly one
+    Python eval node whose only inputs are (extracted_text, lang_pred):
+    the 9 rungs share one Arrow crossing, and no other column crosses.
+    The default profile plans no Python eval node at all."""
+    import re
+    from dataclasses import replace
+
+    from cfht2caom2_spark.config import DEFAULT_PROFILE
+    from cfht2caom2_spark.plans.pipeline import build_pipeline
+    from cfht2caom2_spark.sources.pages import synth_pages
+
+    pages = synth_pages(spark, 200)
+    gated = plan_of(build_pipeline(
+        pages, spark,
+        profile=replace(DEFAULT_PROFILE, gopher_repetition_gates=True)))
+    evals = re.findall(r"EvalPython \[(.*?)\], \[", gated)
+    assert len(evals) == 1, gated
+    assert re.fullmatch(
+        r"repetition_ladder\(extracted_text#\d+, lang_pred#\d+\)#\d+",
+        evals[0]), evals
+    assert "EvalPython" not in plan_of(build_pipeline(pages, spark))
+
+
 def test_flagship_plan_shape_under_production_conf(spark):
     """The plan invariants must hold under the checked-in 100-TB conf
     (conf/spark-100tb.conf): shuffle.partitions=2000 + AQE on.  Guards
@@ -172,6 +196,7 @@ def test_decontam_join_strategy_left_to_aqe(spark):
     from pyspark.sql import functions as F
 
     from cfht2caom2_spark.operators.decontam import decontaminate
+    from cfht2caom2_spark.operators.dedup import shingle_hash
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     bench = docs.filter(F.col("doc_id") % 97 == 0)
@@ -183,11 +208,13 @@ def test_decontam_join_strategy_left_to_aqe(spark):
     # (fixed <= bits/64 rows by construction, operators/decontam.py): one
     # ResolvedHint, none on the bench table or doc-gram stream themselves
     default_logical = str(
-        decontaminate(docs, bench)._jdf.queryExecution().logical())
+        decontaminate(docs, bench, hash_fn=shingle_hash)
+        ._jdf.queryExecution().logical())
     assert default_logical.count("ResolvedHint") == 1
     assert "bit_or" in default_logical  # the hinted subtree IS the bitmap
     no_prefilter = str(decontaminate(
-        docs, bench, prefilter_bits=0)._jdf.queryExecution().logical())
+        docs, bench, hash_fn=shingle_hash,
+        prefilter_bits=0)._jdf.queryExecution().logical())
     assert "ResolvedHint" not in no_prefilter
 
 
@@ -199,11 +226,12 @@ def test_decontam_bitmap_prefilter_prunes_before_overlap_shuffle(spark):
     from pyspark.sql import functions as F
 
     from cfht2caom2_spark.operators.decontam import decontaminate
+    from cfht2caom2_spark.operators.dedup import shingle_hash
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     bench = docs.filter(F.col("doc_id") % 97 == 0)
 
-    on = decontaminate(docs, bench)
+    on = decontaminate(docs, bench, hash_fn=shingle_hash)
     plan = plan_of(on)
     assert "shiftleft" in plan          # the bitmap membership test
     assert "BroadcastHashJoin" in plan  # bitmap join never shuffles
@@ -213,7 +241,7 @@ def test_decontam_bitmap_prefilter_prunes_before_overlap_shuffle(spark):
     logical = str(on._jdf.queryExecution().optimizedPlan())
     assert logical.index("shiftleft") > logical.index("count(1)")
 
-    off = decontaminate(docs, bench, prefilter_bits=0)
+    off = decontaminate(docs, bench, hash_fn=shingle_hash, prefilter_bits=0)
     assert "shiftleft" not in plan_of(off)
     a = sorted(map(tuple, on.collect()))
     b = sorted(map(tuple, off.collect()))
@@ -298,11 +326,12 @@ def test_fuzzy_decontam_no_mandatory_broadcast_default(spark):
     band table is unbounded, and the eval side is broadcast only while its
     runtime size fits."""
     from cfht2caom2_spark.operators.decontam import fuzzy_decontaminate
+    from cfht2caom2_spark.operators.dedup import shingle_hash_fast
 
     docs = spark.read.parquet(f"{SF}/documents.parquet") \
         .select("doc_id", "text")
     bench = docs.filter("doc_id % 101 = 0")
-    out = fuzzy_decontaminate(docs, bench)
+    out = fuzzy_decontaminate(docs, bench, hash_fn=shingle_hash_fast)
     assert "ResolvedHint" not in \
         out._jdf.queryExecution().analyzed().toString()
 

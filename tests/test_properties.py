@@ -7,6 +7,8 @@ input, and are deterministic — a task retry must reproduce bytes exactly.
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -79,6 +81,48 @@ def test_sha256_stability(text):
     assert sha256_text(text) == sha256_text(text)
 
 
+# --- the fused crossing on adversarial payloads -----------------------------
+
+# HTML fragments with invalid UTF-8 (a lone continuation byte, a truncated
+# 2- and 3-byte sequence, an overlong encoding, a surrogate half), control
+# bytes and a latin-1 charset sniff
+_HTML_PARTS = [b"<p>", b"</p>", b"<br>", b"<script>x()</script>", b"word ",
+               b"caf\xc3\xa9 ", b"\x80", b"\xc3", b"\xe2\x82", b"\xc0\xaf",
+               b"\xed\xa0\x80", b"\xff\xfe", b"\x00\x01", b"&amp; ",
+               b'<meta charset="latin-1">', b"\n\n", b"\t "]
+# one page over 1 MB: valid markup with a few invalid bytes per line
+_BIG_HTML = (b"<html><body>"
+             + b"<p>lorem ipsum dolor \xff sit amet \xc3 consectetur</p>\n"
+             * 22_000 + b"</body></html>")
+
+
+@settings(max_examples=5, deadline=None)
+@given(st.lists(st.one_of(
+    st.binary(max_size=300),
+    st.lists(st.sampled_from(_HTML_PARTS), max_size=40).map(b"".join)),
+    min_size=1, max_size=6))
+def test_fused_extraction_matches_kernels_on_invalid_utf8(spark, payloads):
+    """with_extract_and_scores' extracted_text and extracted_sha256 equal
+    extract_html and sha256_text applied row by row, on invalid-UTF-8
+    HTML bytes and a page over 1 MB: the Arrow crossing adds nothing to,
+    and loses nothing from, the per-row kernels."""
+    from cfht2caom2_spark.functions.fused import with_extract_and_scores
+
+    assert len(_BIG_HTML) > 1 << 20
+    pages = [_BIG_HTML] + payloads
+    df = spark.createDataFrame([(f"u{i}", p, None)
+                                for i, p in enumerate(pages)],
+                               "url string, html binary, text string")
+    got = {r["url"]: (r["extracted_text"], r["extracted_sha256"])
+           for r in with_extract_and_scores(df, spark).collect()}
+    want = {}
+    for i, p in enumerate(pages):
+        text = extract_html(p)
+        want[f"u{i}"] = (text, sha256_text(text))
+    assert want["u0"][0] is not None
+    assert got == want
+
+
 # --- repeated spans vs an independent python reference ----------------------
 
 def _ref_repeated_spans(docs, k, min_count):
@@ -125,8 +169,9 @@ def test_repeated_spans_matches_python_reference(spark, data):
 
 
 def _ref_ladder(toks: list[str], n: int) -> tuple[float, float]:
-    """Independent python model of (top_ngram_char_frac,
-    dup_ngram_char_frac): counts via dict, coverage via position set."""
+    """Independent python model of the ladder's (top-n-gram, dup-n-gram)
+    char fractions of a token list: counts via dict, coverage via
+    position set."""
     tchars = sum(len(t) for t in toks)
     grams = ([" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
              if len(toks) >= n else [])
@@ -147,29 +192,54 @@ def _ref_ladder(toks: list[str], n: int) -> tuple[float, float]:
     return top, dup
 
 
+def _ref_ladder_fracs(toks: list[str]) -> tuple[float, ...]:
+    """The 9 ladder fractions in ``quality.REP_LADDER_COLS`` order."""
+    from cfht2caom2_spark.functions.kernels import (REP_LADDER_DUP_NS,
+                                                    REP_LADDER_TOP_NS)
+
+    return (tuple(_ref_ladder(toks, n)[0] for n in REP_LADDER_TOP_NS)
+            + tuple(_ref_ladder(toks, n)[1] for n in REP_LADDER_DUP_NS))
+
+
+# Java's default \s (ASCII whitespace): the word rule's separators, and
+# what zh rows strip before splitting per code point
+_ASCII_WS = "[ \t\n\x0b\f\r]"
+
+
+def _ref_tokens(text: str, lang: str | None) -> list[str]:
+    if lang == "zh":
+        return list(re.sub(_ASCII_WS, "", text))
+    return [t for t in re.split(_ASCII_WS + "+", text) if t]
+
+
 @settings(max_examples=15, deadline=None)
 @given(st.data())
 def test_repetition_ladder_matches_python_reference(spark, data):
-    """Random repetition-prone token streams: the one-fold Spark exprs for
-    the Gopher ladder must equal the independent python model bit-for-bit
-    (integer numerators/denominators, one final division on both sides)."""
-    from pyspark.sql import functions as F
-
+    """Random repetition-prone docs through with_repetition_ladder (the
+    pipeline's ladder) must equal the independent python model
+    bit-for-bit (integer numerators/denominators, one final division on
+    both sides) for all 9 rungs.  Draws cover zh rows (per-code-point
+    tokens), NULL lang (word tokens), NULL text (NULL fractions), and
+    non-ASCII whitespace (NBSP, U+3000) and a non-BMP char inside tokens,
+    which the word rule does not split on."""
     from cfht2caom2_spark.functions import quality as Q
-    from cfht2caom2_spark.functions.tokens import word_tokens
 
-    word = st.sampled_from(["aa", "bbb", "c", "dd"])
-    doc = st.lists(word, min_size=0, max_size=40).map(" ".join)
-    docs = [(i, data.draw(doc)) for i in range(data.draw(st.integers(2, 4)))]
-    n = data.draw(st.sampled_from([2, 3, 5, 7]))
-    df = spark.createDataFrame(docs, "doc_id bigint, text string") \
-        .withColumn("_toks", word_tokens(F.col("text")))
-    got = {r["doc_id"]: (r["top"], r["dup"]) for r in df.select(
-        "doc_id",
-        Q.top_ngram_char_frac(F.col("_toks"), n).alias("top"),
-        Q.dup_ngram_char_frac(F.col("_toks"), n).alias("dup"),
-    ).collect()}
-    want = {i: _ref_ladder(t.split(), n) for i, t in docs}
+    word = st.sampled_from(["aa", "bbb", "c", "dd", "e\u00a0e", "\u3000",
+                            "\U0001f600"])
+    sep = st.sampled_from([" ", "  ", "\t", "\n"])
+    doc = st.one_of(st.none(), st.lists(st.tuples(word, sep), max_size=40)
+                    .map(lambda ws: "".join(w + s for w, s in ws)))
+    lang = st.sampled_from(["en", "zh", None])
+    docs = [(i, data.draw(doc), data.draw(lang))
+            for i in range(data.draw(st.integers(2, 4)))]
+    df = spark.createDataFrame(docs, "doc_id bigint, text string, "
+                               "lang string")
+    got = {r["doc_id"]: tuple(r[c] for c in Q.REP_LADDER_COLS)
+           for r in Q.with_repetition_ladder(df, text_col="text",
+                                             lang_col="lang").collect()}
+    want = {i: (None,) * len(Q.REP_LADDER_COLS) if text is None
+            else _ref_ladder_fracs(_ref_tokens(text, lg))
+            for i, text, lg in docs}
     assert got == want
 
 
