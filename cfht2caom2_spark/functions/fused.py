@@ -1,4 +1,5 @@
-"""Fused extraction + model-scoring stage — one Arrow crossing.
+"""Fused extraction + model-scoring + heuristic-stats stage — one Arrow
+crossing.
 
 Reference analogue: single-visit fusion — when STORE/INGEST/MODIFY co-occur,
 the reference replaces the multi-executor list with ONE fused executor so the
@@ -6,14 +7,20 @@ file bytes and headers are read exactly once (composable.py:90-98 decision,
 cfht_name.py:830-903 executor choice).  Here: extraction, language-ID and
 perplexity all need the payload on the Python side, so shipping the batch
 across the Arrow boundary three times (mapInPandas + two pandas UDFs) pays
-3x serialization.  This stage does all three in one ``mapInPandas`` pass:
+3x serialization.  This stage does all of it in one ``mapInPandas`` pass:
 
     payload bytes -> extracted_text, extracted_sha256,
-                     lang_pred, lang_conf, ppl
+                     lang_pred, lang_conf, ppl,
+                     the 14 heuristic stats of (extracted_text, lang_pred)
+                     [, minhash_sig]
 
-The per-stage modules (extraction/langid/perplexity) and the word-shingle
-kernels (functions/kernels.py) are the unit-tested source of truth; this
-stage only composes their pure batch kernels.  It is the pipeline's only
+The stats ride the pass because the text is already in Python here: one
+Arrow crossing spreads its cost over the batch, while the same stats as
+Spark expressions ran ~9 interpreted higher-order lambdas per row.
+
+The per-stage modules (extraction/langid/perplexity) and the word kernels
+(functions/kernels.py) are the unit-tested source of truth; this stage
+only composes their pure batch kernels.  It is the pipeline's only
 extraction + scoring path.
 """
 
@@ -31,6 +38,7 @@ from .extraction import extract_html, sha256_text
 from .kernels import minhash_sig
 from .langid import TrigramLangID
 from .perplexity import BigramLM
+from .quality import QUALITY_STAT_FIELDS, quality_stats_frame
 
 _OUT_FIELDS = [
     T.StructField("extracted_text", T.StringType()),
@@ -64,9 +72,10 @@ def with_extract_and_scores(df: DataFrame, spark: SparkSession,
                             has_html: bool = True,
                             minhash_perms: int = 0,
                             shingle_k: int = 3) -> DataFrame:
-    """Append extraction + all model scores (+ optional MinHash signature)
-    in a single Arrow pass, extracting from ``html`` (``text`` where the
-    html is empty, or always when not ``has_html``)."""
+    """Append extraction, all model scores, the heuristic stats (+ an
+    optional MinHash signature) in a single Arrow pass, extracting from
+    ``html`` (``text`` where the html is empty, or always when not
+    ``has_html``)."""
     bc = spark.sparkContext.broadcast(
         (langid_model or TrigramLangID(), ppl_model or BigramLM())
     )
@@ -76,7 +85,7 @@ def with_extract_and_scores(df: DataFrame, spark: SparkSession,
     # output schema instead (halves UDF serialization traffic)
     consumed = {"html", "text"}
     kept_fields = [f for f in df.schema.fields if f.name not in consumed]
-    fields = kept_fields + _OUT_FIELDS
+    fields = kept_fields + _OUT_FIELDS + list(QUALITY_STAT_FIELDS)
     if minhash_perms:
         import numpy as np
 
@@ -108,6 +117,8 @@ def with_extract_and_scores(df: DataFrame, spark: SparkSession,
             out["lang_pred"] = langs
             out["lang_conf"] = pd.Series(confs, index=pdf.index, dtype="float64")
             out["ppl"] = pd.Series(ppls, index=pdf.index, dtype="float64")
+            out = pd.concat(
+                [out, quality_stats_frame(texts, langs, pdf.index)], axis=1)
             if minhash_perms:
                 out["minhash_sig"] = pd.Series(
                     [minhash_sig_py(t, A, B, shingle_k) for t in texts],

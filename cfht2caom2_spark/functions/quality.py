@@ -1,20 +1,26 @@
-"""Gopher/C4-style heuristic quality statistics, mostly as built-in Column
-exprs.
+"""Gopher/C4-style heuristic quality statistics, the rules over them, and
+the model-based quality score.
 
 Reference analogue: the ~40 keyword-chain getters with validity guards
 (reference instruments.py:385-653, e.g. elevation range-check 0-90 at :385-393,
-humidity guard at :439-444) — each output field is a guarded pure expression
-over the row.  Here each per-row text statistic of the default profile is one
-Catalyst expression over the token array, and WholeStageCodegen fuses the
-whole block into the scan stage.  Two stat blocks run as vectorized Python
-crossings instead, because their expression form needs interpreted
-sort-and-fold higher-order functions: the opt-in Gopher repetition ladder
-(``with_repetition_ladder``, one pandas UDF over (text, lang)) and the
-registry's character stats (``char_stats_fast``, one mapInPandas).
+humidity guard at :439-444) — each output field is a guarded pure function
+of the row.  Here the 14 per-row text statistics have one implementation,
+the Python kernel ``kernels.quality_stats``.  The pipeline computes them
+inside its fused extraction pass (functions/fused.py), which already holds
+the text, so they cost no Arrow crossing of their own; as Spark
+expressions they needed ~9 higher-order lambdas over the token and line
+arrays, which Spark runs interpreted, row by row.  ``with_quality_stats``
+runs the same kernel as one pandas UDF over (text, lang) for any other
+frame: the registry's documents and text the pipeline rewrote after the
+fused pass.  Two more stat blocks run as vectorized Python crossings: the
+opt-in Gopher repetition ladder (``with_repetition_ladder``) and the
+registry's character stats (``char_stats_fast``, one mapInPandas).  The
+JVM expression forms of all three live in tests/reference_impl.py as the
+bit-for-bit references.
 
-Every function takes/returns ``pyspark.sql.Column`` so the same definitions are
-used by the batch pipeline, the streaming mode, and the DuckDB-oracle queries
-(semantics are pinned by tests/test_quality.py and the driver's oracle).
+The rules (``heuristic_rules``, ``repetition_ladder_rules``) and the score
+(``quality_score``) stay Column expressions over the stat columns, shared
+by the batch pipeline, the streaming mode and the DuckDB-oracle queries.
 """
 
 from __future__ import annotations
@@ -26,119 +32,49 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..config import STOPWORDS, TOXICITY_WORDS, RuleProfile
-from ..corpora import ZH_STOP_CHARS
+from ..config import RuleProfile
 from . import kernels
-from .tokens import word_tokens
 
-# Symbols counted for the Gopher symbol-to-char ratio (ASCII-only on purpose:
-# identical semantics in Java regex and RE2, and CJK text is not penalized).
-SYMBOL_CLASS = "[#@$%^&*+=~|]"
-
-
-def zh_chars(text: Column) -> Column:
-    """Per-character tokens for space-free CJK text (rule-profile dispatch,
-    the P13 analogue: the token model is data-dependent, not subclassed)."""
-    return F.split(F.regexp_replace(text, r"\s+", ""), "")
+_LONG, _DOUBLE, _BOOL = T.LongType(), T.DoubleType(), T.BooleanType()
+QUALITY_STAT_FIELDS: tuple[T.StructField, ...] = tuple(
+    T.StructField(c, t) for c, t in zip(kernels.QUALITY_STAT_COLS, (
+        _LONG, _DOUBLE, _DOUBLE, _DOUBLE, _DOUBLE, _DOUBLE, _DOUBLE,
+        _DOUBLE, _DOUBLE, _DOUBLE, _LONG, _BOOL, _BOOL, _LONG), strict=True))
+_PANDAS_DTYPE = {_LONG: "Int64", _BOOL: "boolean", _DOUBLE: "float64"}
 
 
-def n_words(toks: Column) -> Column:
-    return F.size(toks).cast("bigint")
+def quality_stats_frame(texts, langs, index=None) -> pd.DataFrame:
+    """The 14 stat columns of a batch of (text, lang) pairs, one
+    ``kernels.quality_stats`` call per row.  Nullable dtypes keep NULL-text
+    rows NULL across Arrow (no stat is ever NaN: every denominator is
+    > 0)."""
+    rows = [kernels.quality_stats(t, lg) for t, lg in zip(texts, langs)]
+    cols = zip(*rows) if rows else [()] * len(QUALITY_STAT_FIELDS)
+    return pd.DataFrame({
+        f.name: pd.Series(c, index=index, dtype=_PANDAS_DTYPE[f.dataType])
+        for f, c in zip(QUALITY_STAT_FIELDS, cols)})
 
 
-def mean_word_len(toks: Column) -> Column:
-    # greatest(.,1) guards ANSI div-by-zero (Spark 4 default); an empty token
-    # array then yields 0.0, which the too_short rule catches anyway.
-    total = F.aggregate(toks, F.lit(0).cast("bigint"), lambda a, t: a + F.length(t))
-    return total.cast("double") / F.greatest(F.size(toks), F.lit(1)).cast("double")
+def with_quality_stats(df: DataFrame, text_col: str = "extracted_text",
+                       lang_col: str | None = None) -> DataFrame:
+    """Append (or replace) the 14 heuristic stat columns
+    (``kernels.QUALITY_STAT_COLS``) from one iterator-form pandas UDF over
+    (text, lang): only those two columns cross Arrow, and the stats come
+    back as one struct.  Without ``lang_col`` every row is read as en
+    (word tokens, en stop words), as is a NULL lang."""
 
+    @F.pandas_udf(T.StructType(list(QUALITY_STAT_FIELDS)))
+    def quality_stats(batches: Iterator[tuple[pd.Series, pd.Series]]
+                      ) -> Iterator[pd.DataFrame]:
+        for texts, langs in batches:
+            yield quality_stats_frame(texts, langs)
 
-def symbol_ratio(text: Column) -> Column:
-    n_sym = F.length(text) - F.length(F.regexp_replace(text, SYMBOL_CLASS, ""))
-    return n_sym.cast("double") / F.greatest(F.length(text), F.lit(1)).cast("double")
-
-
-def stopword_frac(toks: Column, lang: str = "en") -> Column:
-    sw = STOPWORDS.get(lang)
-    if sw is None and lang == "zh":
-        sw = ZH_STOP_CHARS
-    hits = F.size(F.filter(toks, lambda t: F.lower(t).isin(*sw)))
-    return hits.cast("double") / F.greatest(F.size(toks), F.lit(1)).cast("double")
-
-
-def stopword_frac_by_lang(toks: Column, zh_toks: Column, lang: Column) -> Column:
-    """Per-row language dispatch over the broadcast stop-word tables."""
-    expr = stopword_frac(toks, "en")  # default profile
-    for lg in ("fr", "de", "es"):
-        expr = F.when(lang == lg, stopword_frac(toks, lg)).otherwise(expr)
-    return F.when(lang == "zh", stopword_frac(zh_toks, "zh")).otherwise(expr)
-
-
-def alpha_word_frac(toks: Column) -> Column:
-    hits = F.size(F.filter(toks, lambda t: t.rlike("[A-Za-zÀ-ÿ一-鿿]")))
-    return hits.cast("double") / F.greatest(F.size(toks), F.lit(1)).cast("double")
-
-
-def lines(text: Column) -> Column:
-    return F.filter(F.split(text, "\n"), lambda l: F.trim(l) != F.lit(""))
-
-
-def repeated_line_frac(text: Column) -> Column:
-    ls = lines(text)
-    n = F.size(ls)
-    return F.when(n <= 0, F.lit(0.0)).otherwise(
-        F.lit(1.0) - F.size(F.array_distinct(ls)).cast("double") / n.cast("double")
-    )
-
-
-def paragraphs(text: Column) -> Column:
-    """Blank-line-delimited blocks with empties removed (split on \\n{2,} —
-    the regex is RE2/Java-identical so the DuckDB oracle matches)."""
-    return F.filter(F.split(text, r"\n{2,}"), lambda p: F.trim(p) != F.lit(""))
-
-
-def repeated_paragraph_frac(text: Column) -> Column:
-    """Gopher dup-paragraph gate (Rae et al. 2021 Table A1): the fraction of
-    paragraphs that are verbatim repeats of an earlier one.  Catches
-    template/spam blocks that span multiple lines (each line unique, the
-    BLOCK repeated) which repeated_line_frac misses."""
-    ps = paragraphs(text)
-    n = F.size(ps)
-    return F.when(n <= 0, F.lit(0.0)).otherwise(
-        F.lit(1.0) - F.size(F.array_distinct(ps)).cast("double") / n.cast("double")
-    )
-
-
-def bullet_line_frac(text: Column) -> Column:
-    """Fraction of non-empty lines that start with a bullet glyph (Gopher
-    Table A1: docs that are >90% bullet lists are navigation/link farms,
-    not prose)."""
-    ls = lines(text)
-    n = F.size(ls)
-    hits = F.size(F.filter(ls, lambda l: l.rlike(r"^\s*[-*•]")))
-    return F.when(n <= 0, F.lit(0.0)).otherwise(
-        hits.cast("double") / n.cast("double"))
-
-
-def ellipsis_line_frac(text: Column) -> Column:
-    """Fraction of non-empty lines ending in an ellipsis (Gopher Table A1:
-    >30% ellipsis lines marks truncated teaser/snippet pages)."""
-    ls = lines(text)
-    n = F.size(ls)
-    hits = F.size(F.filter(ls, lambda l: l.rlike(r"(\.\.\.|…)\s*$")))
-    return F.when(n <= 0, F.lit(0.0)).otherwise(
-        hits.cast("double") / n.cast("double"))
-
-
-def terminal_punct_line_frac(text: Column) -> Column:
-    """Fraction of non-empty lines ending in terminal punctuation — the
-    doc-level form of C4's line rule (Raffel et al. 2020 §2.2 keeps only
-    lines ending in . ! ? ").  Low values mark list/menu/fragment pages."""
-    ls = lines(text)
-    n = F.size(ls)
-    hits = F.size(F.filter(ls, lambda l: l.rlike(r"[.!?\"]\s*$")))
-    return F.when(n <= 0, F.lit(0.0)).otherwise(
-        hits.cast("double") / n.cast("double"))
+    lang = F.col(lang_col) if lang_col else F.lit(None).cast("string")
+    return (df.drop(*kernels.QUALITY_STAT_COLS)
+            .withColumn("_stats", quality_stats(F.col(text_col), lang))
+            .withColumns({c: F.col("_stats")[c]
+                          for c in kernels.QUALITY_STAT_COLS})
+            .drop("_stats"))
 
 
 # --- Gopher dup-ngram ladder -------------------------------------------------
@@ -163,10 +99,10 @@ def with_repetition_ladder(df: DataFrame, text_col: str = "extracted_text",
     dup_{5..10}gram_char_frac) from one iterator-form pandas UDF over
     (text, lang): only those two columns cross Arrow, and the 9 fractions
     come back as one struct.  Same token dispatch as with_quality_stats:
-    ``lang == "zh"`` rows tokenize per code point (``zh_chars``), every
-    other row (NULL lang, or no ``lang_col``) by the word rule.  NULL text
-    gives NULL fractions, which the rules read as not fired.  Opt-in from
-    the pipeline via RuleProfile.gopher_repetition_gates."""
+    ``lang == "zh"`` rows tokenize per code point (``kernels.zh_tokens``),
+    every other row (NULL lang, or no ``lang_col``) by the word rule.
+    NULL text gives NULL fractions, which the rules read as not fired.
+    Opt-in from the pipeline via RuleProfile.gopher_repetition_gates."""
     fields = [T.StructField(c, T.DoubleType()) for c in REP_LADDER_COLS]
 
     @F.pandas_udf(T.StructType(fields))
@@ -196,27 +132,6 @@ def repetition_ladder_rules(profile: RuleProfile) -> dict[str, Column]:
     for n, thr in profile.max_dup_ngram_char_frac:
         rules[f"dup_{n}gram"] = F.col(f"dup_{n}gram_char_frac") > thr
     return rules
-
-
-def sentence_count(text: Column) -> Column:
-    """Number of sentence terminators — an ASCII terminator ([.!?]) followed
-    by whitespace or end-of-text, or a CJK full-width terminator (。！？,
-    which zh prose does NOT space-separate).  C4's "at least 3 sentences"
-    page gate (Raffel et al. 2020 §2.2) needs only this count, not a
-    segmenter.  The alternation is RE2/Java-identical (no lookarounds)."""
-    return F.regexp_count(text, F.lit(r"[.!?](\s|$)|[。！？]")).cast("bigint")
-
-
-def has_lorem_ipsum(text: Column) -> Column:
-    """C4 §2.2: any page containing the placeholder phrase "lorem ipsum"
-    (case-insensitive) is an unfinished template shell."""
-    return F.contains(F.lower(text), F.lit("lorem ipsum"))
-
-
-def has_curly_brace(text: Column) -> Column:
-    """C4 §2.2: '{' in EXTRACTED text means code/CSS/JSON leaked through
-    markup removal — C4 drops the page outright."""
-    return F.contains(text, F.lit("{"))
 
 
 def char_stats_fast(df: DataFrame, id_col: str = "doc_id",
@@ -275,46 +190,6 @@ def char_stats_fast(df: DataFrame, id_col: str = "doc_id",
         schema=f"{id_col} {id_type}, n_chars_text bigint, "
                "char_sq_sum bigint, char_simpson double, "
                "distinct_char_frac double")
-
-
-def toxicity_hits(toks: Column) -> Column:
-    return F.size(F.filter(toks, lambda t: F.lower(t).isin(*TOXICITY_WORDS))).cast("bigint")
-
-
-def with_quality_stats(df: DataFrame, text_col: str = "extracted_text",
-                       lang_col: str | None = None) -> DataFrame:
-    """Append the full heuristic-stat block in one narrow projection.
-
-    Emits: n_words, mean_word_len, symbol_ratio, stopword_frac,
-    alpha_word_frac, repeated_line_frac, repeated_paragraph_frac,
-    toxicity_hits.
-    """
-    text = F.col(text_col)
-    is_zh = (F.col(lang_col) == "zh") if lang_col else F.lit(False)
-    toks = F.when(is_zh, zh_chars(text)).otherwise(word_tokens(text))
-    df = df.withColumn("_toks", toks)
-    t = F.col("_toks")
-    sw = (stopword_frac_by_lang(t, t, F.col(lang_col)) if lang_col
-          else stopword_frac(t, "en"))
-    return (
-        df.withColumns({
-            "n_words": n_words(t),
-            "mean_word_len": mean_word_len(t),
-            "symbol_ratio": symbol_ratio(text),
-            "stopword_frac": sw,
-            "alpha_word_frac": alpha_word_frac(t),
-            "repeated_line_frac": repeated_line_frac(text),
-            "repeated_paragraph_frac": repeated_paragraph_frac(text),
-            "bullet_line_frac": bullet_line_frac(text),
-            "ellipsis_line_frac": ellipsis_line_frac(text),
-            "terminal_punct_line_frac": terminal_punct_line_frac(text),
-            "sentence_count": sentence_count(text),
-            "has_lorem_ipsum": has_lorem_ipsum(text),
-            "has_curly_brace": has_curly_brace(text),
-            "toxicity_hits": toxicity_hits(t),
-        })
-        .drop("_toks")
-    )
 
 
 def heuristic_rules(profile: RuleProfile) -> dict[str, Column]:

@@ -6,6 +6,9 @@ instruments.py:222-266, invoked at :830): *repair, don't reject, when safe;
 record what was repaired*.  Here each PII pattern is one ``regexp_replace``
 link in a chain (whole-stage-codegen'd, zero Python), and each pattern that
 matched contributes a scrub-rule id so lineage can attribute every mutation.
+The rule-id array drops its unmatched slots with ``filter``, a higher-order
+function that Spark runs interpreted; it runs only on rows the one-scan
+PII gate lets through.
 
 Patterns live in config.PII_PATTERNS and are restricted to the regex subset
 with identical semantics in Java regex and RE2 — so the DuckDB oracle can run

@@ -8,8 +8,9 @@ a line occurring verbatim in many documents is template boilerplate
 (navigation, cookie banners, footers) and is stripped from every document
 before model training.
 
-This is CORPUS-level state (a line's document frequency), unlike
-``quality.repeated_line_frac`` which is within-document.
+This is CORPUS-level state (a line's document frequency), unlike the
+``repeated_line_frac`` stat (``kernels.quality_stats``), which is
+within-document.
 
 Scale shape: two shuffles, both over slim projections —
   1. groupBy(normalized line) over (doc_id, line) pairs for document
@@ -27,7 +28,9 @@ from pyspark.sql import functions as F
 
 def remove_boilerplate_lines(df: DataFrame, text_col: str = "text",
                              id_col: str = "doc_id",
-                             min_doc_freq: int = 3) -> DataFrame:
+                             min_doc_freq: int = 3,
+                             persist_tracker: list | None = None
+                             ) -> DataFrame:
     """Strip lines whose trimmed form appears in >= min_doc_freq distinct
     docs; returns (id_col, cleaned_text) with surviving lines rejoined in
     original order.  Docs whose every line is boilerplate drop out (same
@@ -38,11 +41,17 @@ def remove_boilerplate_lines(df: DataFrame, text_col: str = "text",
     Pinned stream (round 6, guide §2.4): the exploded line stream feeds
     both the document-frequency groupBy and the anti-join probe; a lazy
     localCheckpoint pins it so the split+explode runs once, not once per
-    consumer (the span/decontam pay-once discipline)."""
+    consumer (the span/decontam pay-once discipline).
+
+    ``persist_tracker``: optional list the pinned stream is appended to,
+    for the caller to ``session.release`` once the result has been read
+    (``minhash_losers_from_sig``'s contract)."""
     lines = df.select(
         F.col(id_col),
         F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
     ).localCheckpoint(eager=False)
+    if persist_tracker is not None:
+        persist_tracker.append(lines)
     norm = F.trim(F.col("line"))
     boiler = (
         lines.filter(norm != "")

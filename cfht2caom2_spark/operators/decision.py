@@ -68,8 +68,9 @@ def with_decision(df: DataFrame, profile: RuleProfile,
                   contaminated_fuzzy_col: str | None = None) -> DataFrame:
     """Append ``rules array<string>`` + ``keep boolean``.
 
-    Expects url, extracted_text, the quality-stat columns
-    (functions.quality.with_quality_stats) and lang_pred/lang_conf/ppl.
+    Expects url, extracted_text, the quality-stat columns (from the fused
+    pass, or functions.quality.with_quality_stats) and
+    lang_pred/lang_conf/ppl.
     ``near_dup_col`` / ``exact_dup_col``: optional boolean columns marking
     MinHash losers / byte-identical-content losers.
     """

@@ -119,7 +119,8 @@ def decontaminate(docs: DataFrame, bench: DataFrame,
                   id_col: str = "doc_id", text_col: str = "text",
                   k: int = 3, min_overlap: int = 5, *,
                   hash_fn,
-                  prefilter_bits: int = PREFILTER_BITS) -> DataFrame:
+                  prefilter_bits: int = PREFILTER_BITS,
+                  persist_tracker: list | None = None) -> DataFrame:
     """Per-doc contamination flags: (id, n_grams, n_overlap, contaminated).
 
     ``n_overlap`` counts the doc's distinct grams that appear anywhere in the
@@ -144,11 +145,15 @@ def decontaminate(docs: DataFrame, bench: DataFrame,
     tokenize + shingle + hash work (the dominant cost; md5 in oracle mode)
     was evaluated once per branch.  Lazy localCheckpoints pin both slim
     gram frames so every consumer reads the blocks (sf1.0: 15.2 s -> ~5 s).
+    ``persist_tracker``: optional list both pins are appended to, for the
+    caller to ``session.release`` once the flags have been read.
     """
     grams = gram_set_frame(docs, id_col, text_col, k, hash_fn=hash_fn) \
         .localCheckpoint(eager=False)
     bench_g = benchmark_grams(bench, text_col=text_col, k=k,
                               hash_fn=hash_fn).localCheckpoint(eager=False)
+    if persist_tracker is not None:
+        persist_tracker += [grams, bench_g]
 
     doc_grams = grams.select(id_col, F.explode("_grams").alias("_g"))
     if prefilter_bits:
@@ -188,7 +193,8 @@ def fuzzy_decontaminate(docs: DataFrame, bench: DataFrame,
                         id_col: str = "doc_id", text_col: str = "text",
                         bands: int = 8, rows_per_band: int = 2, k: int = 3,
                         min_est_jaccard: float = 0.5, *,
-                        hash_fn) -> DataFrame:
+                        hash_fn,
+                        persist_tracker: list | None = None) -> DataFrame:
     """Near-duplicate (fuzzy) decontamination: flag training docs whose
     MinHash signature collides with an eval-suite doc in any LSH band AND
     whose signature agreement estimates Jaccard >= ``min_est_jaccard``.
@@ -214,7 +220,8 @@ def fuzzy_decontaminate(docs: DataFrame, bench: DataFrame,
     Returns flagged docs only: (id, n_bench_matches, max_est_jaccard) —
     est_jaccard = fraction of agreeing signature components (granularity
     1/num_perms), exact-rational in both engines so the DuckDB twin matches
-    bitwise.
+    bitwise.  ``persist_tracker``: optional list both pinned signature
+    frames are appended to, for the caller to ``session.release``.
     """
     from .dedup import banded_keys, minhash_sig_frame, signature_agreement
 
@@ -224,6 +231,8 @@ def fuzzy_decontaminate(docs: DataFrame, bench: DataFrame,
     sig_b = minhash_sig_frame(bench, id_col, text_col, num_perms, k,
                               hash_fn=hash_fn, out_id="_bid", out_sig="_bsig"
                               ).localCheckpoint(eager=False)
+    if persist_tracker is not None:
+        persist_tracker += [sig_d, sig_b]
 
     band_d = banded_keys(sig_d, "_id", bands, rows_per_band)
     band_b = banded_keys(sig_b, "_bid", bands, rows_per_band, sig_col="_bsig")

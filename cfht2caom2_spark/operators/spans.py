@@ -230,7 +230,8 @@ def repeated_spans(docs: DataFrame, id_col: str = "doc_id",
 def remove_repeated_spans(docs: DataFrame, id_col: str = "doc_id",
                           text_col: str = "text", k: int = 50,
                           key_fn=None, min_count: int = 2,
-                          order_col: str | None = None) -> DataFrame:
+                          order_col: str | None = None,
+                          persist_tracker: list | None = None) -> DataFrame:
     """ExactSubstr REMOVAL (Lee et al. §4.1 keep-one semantics, window-
     granular): for every duplicated K-window key, its FIRST occurrence —
     ordered by (order_col, id, pos); id order when order_col is None —
@@ -247,7 +248,8 @@ def remove_repeated_spans(docs: DataFrame, id_col: str = "doc_id",
     the unique doc id.  A lazy localCheckpoint materializes the slim (id,
     ord, pos, key) stream once (see repeated_spans — the exemption shape
     consumes the stream twice, so the win is the same); the reassembly
-    branch prunes to tokenize-only.
+    branch prunes to tokenize-only.  ``persist_tracker``: optional list the
+    pinned stream is appended to, for the caller to ``session.release``.
     """
     ord_expr = F.col(order_col) if order_col else F.col(id_col)
     # ORIGINAL-case tokens for reconstruction (keys lower-case only for
@@ -260,6 +262,8 @@ def remove_repeated_spans(docs: DataFrame, id_col: str = "doc_id",
     if key_fn is not None:
         stream = stream.withColumn("_k", key_fn(F.col("_k")))
     stream = stream.localCheckpoint(eager=False)
+    if persist_tracker is not None:
+        persist_tracker.append(stream)
     spans = _span_intervals(stream, id_col, k, min_count, exempt_first=True)
 
     joined = base.join(spans, on=id_col, how="left")

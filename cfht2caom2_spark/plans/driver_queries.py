@@ -72,58 +72,28 @@ def _shingles_sql(toks: str = "toks", k: int = 3) -> str:
 # P11 — heuristic text statistics (documents)
 # --------------------------------------------------------------------------
 
-def _with_toks_pandas(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Append ``_toks`` (the exact TK.word_tokens array: space-only-trimmed,
-    ASCII-whitespace split, empties removed) via one vectorized Python
-    crossing: ``kernels.word_tokens``, the split every vectorized operator
-    in the engine uses (equivalence pinned by this query's DuckDB oracle);
-    every downstream stat expression is unchanged.
+def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The heuristic stats of every document, from the one stat kernel
+    (``quality.with_quality_stats``: one pandas UDF, every row read as en).
     Also serves bench.py's documented warm-up intent: the suite warm-up
     materializes q_text_stats "so per-query numbers measure the plan, not
     interpreter startup" — with the engine's hot paths now Arrow-based,
     the warm-up query must itself start the Python workers, or the first
     timed pandas query pays the ~3 s worker+import cost instead."""
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, StringType, StructField, StructType
-
-    from ..functions.kernels import word_tokens
-
-    out_schema = StructType(list(docs.schema.fields)
-                            + [StructField("_toks",
-                                           ArrayType(StringType()))])
-
-    def add_toks(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["_toks"] = pd.Series(
-                [None if t is None else word_tokens(t)
-                 for t in pdf[text_col]], index=pdf.index, dtype=object)
-            yield pdf
-
-    return docs.mapInPandas(add_toks, out_schema)
-
-
-def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t_wide(spark, sf_dir, "documents")
-    text = F.col("text")
-    docs = _with_toks_pandas(docs, "text")
-    t = F.col("_toks")
+    docs = Q.with_quality_stats(_t_wide(spark, sf_dir, "documents"),
+                                text_col="text")
     return docs.select(
-        "doc_id",
-        Q.n_words(t).alias("n_words"),
-        Q.mean_word_len(t).alias("mean_word_len"),
-        Q.symbol_ratio(text).alias("symbol_ratio"),
-        Q.stopword_frac(t, "en").alias("stopword_frac"),
-        Q.alpha_word_frac(t).alias("alpha_word_frac"),
-        Q.repeated_line_frac(text).alias("repeated_line_frac"),
-        Q.repeated_paragraph_frac(text).alias("repeated_paragraph_frac"),
-        Q.bullet_line_frac(text).alias("bullet_line_frac"),
-        Q.ellipsis_line_frac(text).alias("ellipsis_line_frac"),
-        Q.terminal_punct_line_frac(text).alias("terminal_punct_line_frac"),
-        Q.sentence_count(text).alias("sentence_count"),
-        Q.has_lorem_ipsum(text).alias("has_lorem_ipsum"),
-        Q.has_curly_brace(text).alias("has_curly_brace"),
-    )
+        "doc_id", "n_words", "mean_word_len", "symbol_ratio",
+        "stopword_frac", "alpha_word_frac", "repeated_line_frac",
+        "repeated_paragraph_frac", "bullet_line_frac", "ellipsis_line_frac",
+        "terminal_punct_line_frac", "sentence_count", "has_lorem_ipsum",
+        "has_curly_brace")
+
+
+# the six stats quality_score reads (quality.score_feature_exprs); the
+# rules of _doc_rules_array read five of them
+_SCORE_STATS = ("n_words", "mean_word_len", "symbol_ratio", "stopword_frac",
+                "alpha_word_frac", "repeated_line_frac")
 
 
 # prs: blank-line-delimited paragraphs — '\n{2,}' is literal in DuckDB
@@ -1227,17 +1197,9 @@ def q_pipeline_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the composed pipeline semantics."""
     from ..functions.tokens import md5_fingerprint
 
-    docs = _t_wide(spark, sf_dir, "documents")
-    text = F.col("text")
-    stats = docs.withColumn("_toks", TK.word_tokens(text)).select(
-        "doc_id", "text",
-        Q.n_words(F.col("_toks")).alias("n_words"),
-        Q.mean_word_len(F.col("_toks")).alias("mean_word_len"),
-        Q.symbol_ratio(text).alias("symbol_ratio"),
-        Q.stopword_frac(F.col("_toks"), "en").alias("stopword_frac"),
-        Q.alpha_word_frac(F.col("_toks")).alias("alpha_word_frac"),
-        Q.repeated_line_frac(text).alias("repeated_line_frac"),
-    )
+    stats = Q.with_quality_stats(_t_wide(spark, sf_dir, "documents"),
+                                 text_col="text").select(
+        "doc_id", "text", *_SCORE_STATS)
     w = Window.partitionBy(md5_fingerprint(F.col("text"))).orderBy("doc_id")
     out = (
         stats.withColumn("_rules", _doc_rules_array())
@@ -2111,19 +2073,9 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/sampling.py)."""
     from ..functions.quality import quality_score
 
-    docs = _t_wide(spark, sf_dir, "documents")
-    text = F.col("text")
-    docs = docs.withColumn("_toks", TK.word_tokens(text))
-    t = F.col("_toks")
-    stats = docs.select(
-        "doc_id",
-        Q.n_words(t).alias("n_words"),
-        Q.mean_word_len(t).alias("mean_word_len"),
-        Q.symbol_ratio(text).alias("symbol_ratio"),
-        Q.stopword_frac(t, "en").alias("stopword_frac"),
-        Q.alpha_word_frac(t).alias("alpha_word_frac"),
-        Q.repeated_line_frac(text).alias("repeated_line_frac"),
-    )
+    stats = Q.with_quality_stats(_t_wide(spark, sf_dir, "documents"),
+                                 text_col="text").select(
+        "doc_id", *_SCORE_STATS)
     scored = stats.withColumn("quality_score", quality_score(
         F.col("n_words"), F.col("mean_word_len"), F.col("symbol_ratio"),
         F.col("stopword_frac"), F.col("alpha_word_frac"),
@@ -2177,19 +2129,9 @@ def q_quality_score_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     the --quality-weights CLI path, exercised under the oracle."""
     from ..functions.quality import quality_score
 
-    docs = _t_wide(spark, sf_dir, "documents")
-    text = F.col("text")
-    docs = docs.withColumn("_toks", TK.word_tokens(text))
-    t = F.col("_toks")
-    stats = docs.select(
-        "doc_id",
-        Q.n_words(t).alias("n_words"),
-        Q.mean_word_len(t).alias("mean_word_len"),
-        Q.symbol_ratio(text).alias("symbol_ratio"),
-        Q.stopword_frac(t, "en").alias("stopword_frac"),
-        Q.alpha_word_frac(t).alias("alpha_word_frac"),
-        Q.repeated_line_frac(text).alias("repeated_line_frac"),
-    )
+    stats = Q.with_quality_stats(_t_wide(spark, sf_dir, "documents"),
+                                 text_col="text").select(
+        "doc_id", *_SCORE_STATS)
     scored = stats.withColumn("quality_score", quality_score(
         F.col("n_words"), F.col("mean_word_len"), F.col("symbol_ratio"),
         F.col("stopword_frac"), F.col("alpha_word_frac"),
@@ -2648,13 +2590,9 @@ def q_line_format_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the production defaults sit in RuleProfile)."""
     docs = _t(spark, sf_dir, "documents").select("doc_id")
     docs = docs.withColumn("text", _line_format_text())
-    text = F.col("text")
-    stats = docs.select(
-        "doc_id",
-        Q.bullet_line_frac(text).alias("bullet_line_frac"),
-        Q.ellipsis_line_frac(text).alias("ellipsis_line_frac"),
-        Q.terminal_punct_line_frac(text).alias("terminal_punct_line_frac"),
-    )
+    stats = Q.with_quality_stats(docs, text_col="text").select(
+        "doc_id", "bullet_line_frac", "ellipsis_line_frac",
+        "terminal_punct_line_frac")
     conds = {
         "bullet_lines": F.col("bullet_line_frac") > LINE_BULLET_THR,
         "ellipsis_lines": F.col("ellipsis_line_frac") > LINE_ELLIPSIS_THR,

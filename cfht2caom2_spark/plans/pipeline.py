@@ -6,10 +6,10 @@ visit_data -> write -> store), recast as ONE declarative DataFrame graph
 (SURVEY.md §3.1):
 
     read pages
-      -> extraction + language ID + perplexity + MinHash signature
-         (one mapInPandas pass, broadcast models; S4/S5)     [narrow]
-      -> heuristic stats (built-in exprs; P11)               [narrow]
-      -> scrub (regexp chains; P10)                          [narrow]
+      -> extraction + language ID + perplexity + heuristic stats
+         + MinHash signature
+         (one mapInPandas pass, broadcast models; S4/S5/P11) [narrow]
+      -> quality score + scrub (built-in exprs; P10)         [narrow]
       -> exact + minhash dedup flags (J8)                    [the wide ops]
       -> decision (P14)                                      [narrow]
       -> decisions sink + lineage rows (A6)
@@ -83,9 +83,11 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
     eval text in ``text``.
 
     ``persist_tracker``: optional list the builder appends every frame it
-    pins to: the post-UDF frame, the span input, the ranked dedup frame and
-    ``minhash_losers_from_sig``'s signature frame (each a
-    ``localCheckpoint``).  The caller passes the list to
+    pins to: the post-UDF frame, the span input, the ranked dedup frame,
+    and the pins of the operators it calls (``minhash_losers_from_sig``'s
+    signature frame, the boilerplate line stream, the span window stream,
+    the decontamination gram and signature frames), each a
+    ``localCheckpoint``.  The caller passes the list to
     ``session.release`` once its terminal action has run; untracked pins
     wait for Spark's cleaner.
     """
@@ -107,8 +109,10 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
                        if dedupe else 0),
         shingle_k=profile.shingle_size,
     )
-    # quality stats + scrub are appended AFTER the optional boilerplate pass
-    # below — they must describe the text the corpus actually trains on
+    # the fused pass computed the heuristic stats of the extracted text;
+    # the optional boilerplate and span passes below rewrite that text, and
+    # then the stats are recomputed — they must describe the text the
+    # corpus actually trains on
 
     # raw payloads are consumed by extraction; everything downstream works on
     # extracted_text — dropping them here keeps the pin and any shuffle
@@ -154,7 +158,7 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
             base.select(row_key.alias("_bp_id"), "extracted_text")
             .filter(F.col("extracted_text").isNotNull()),
             text_col="extracted_text", id_col="_bp_id",
-            min_doc_freq=profile.boilerplate_min_df,
+            min_doc_freq=profile.boilerplate_min_df, persist_tracker=pins,
         )
         df = (
             df.withColumn("_bp_id", row_key)
@@ -203,6 +207,7 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
             id_col="_sp_id", text_col="extracted_text",
             k=profile.span_k, min_count=profile.span_min_count,
             key_fn=lambda c: F.xxhash64(c), order_col="_sp_ord",
+            persist_tracker=pins,
         ).select("_sp_id", F.col("cleaned_text").alias("_sp_text"),
                  "removed_token_count")
         df = (
@@ -228,14 +233,17 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
         # span-off runs record an explicit zero, not a missing column
         df = df.withColumn("span_removed_tokens", F.lit(0).cast("bigint"))
 
-    # narrow JVM exprs over the (possibly cleaned) extraction — keep/drop
-    # thresholds and the stored artifact reflect trainable content only.
+    # keep/drop thresholds and the stored artifact reflect trainable
+    # content only: cleaned text gets its stats again, from the same kernel
+    # behind one pandas UDF.
     # The scrub chain runs HERE, before the dedup join: the join's Exchange
     # is a projection barrier, so the chain evaluates exactly once per row;
     # evaluating it after the decision collapses it into the decision
-    # projection and re-evaluates the stats/rules tree per reference
+    # projection and re-evaluates the rules tree per reference
     # (measured +23% job wall at 1M rows)
-    df = with_quality_stats(df, text_col="extracted_text", lang_col="lang_pred")
+    if profile.boilerplate_removal or profile.span_removal:
+        df = with_quality_stats(df, text_col="extracted_text",
+                                lang_col="lang_pred")
     if profile.gopher_repetition_gates:
         from ..functions.quality import with_repetition_ladder
 
@@ -315,7 +323,7 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
             id_col="_dc_id", text_col="extracted_text",
             k=profile.decontam_k,
             min_overlap=profile.decontam_min_overlap,
-            hash_fn=shingle_hash_fast,
+            hash_fn=shingle_hash_fast, persist_tracker=pins,
         ).filter(F.col("contaminated")).select("_dc_id").distinct()
         df = (
             df.withColumn("_dc_id", row_key)
@@ -349,7 +357,7 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
             bands=profile.decontam_fuzzy_bands,
             rows_per_band=profile.decontam_fuzzy_rows,
             min_est_jaccard=profile.decontam_fuzzy_min_jaccard,
-            hash_fn=shingle_hash_fast,
+            hash_fn=shingle_hash_fast, persist_tracker=pins,
         ).select("_dcf_id").distinct()
         df = (
             df.withColumn("_dcf_id", row_key)

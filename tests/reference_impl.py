@@ -16,7 +16,9 @@ The Spark expression references at the bottom are not part of the labeler:
 ``minhash_signature`` and ``gram_set`` are the JVM side of the word-shingle
 kernel parity tests and build on the engine's Column-level ``word_shingles``
 and shingle hashes; ``char_run_sq_sum``, ``char_simpson`` and
-``distinct_char_frac`` are the Column folds ``char_stats_fast`` must match.
+``distinct_char_frac`` are the Column folds ``char_stats_fast`` must match;
+``quality_stat_exprs`` and the 14 stat expressions it assembles are the
+JVM semantics ``kernels.quality_stats`` must match.
 """
 
 from __future__ import annotations
@@ -360,3 +362,185 @@ def distinct_char_frac(text):
     return F.when(n <= 0, F.lit(0.0)).otherwise(
         F.size(F.array_distinct(F.split(text, ""))).cast("double")
         / n.cast("double"))
+
+
+# --- Spark expression references of the heuristic stats ---------------------
+# kernels.quality_stats computes the 14 stats in Python, in the fused pass
+# and behind quality.with_quality_stats; these Column forms are the JVM
+# semantics it must reproduce bit for bit (test_kernel_parity.py).  Each is
+# one Catalyst expression over the text or its token array; the
+# higher-order ones run interpreted, which is why no shipped plan uses them.
+
+_ALPHA_CLASS = "[A-Za-zÀ-ÿ一-鿿]"
+
+
+def zh_chars(text):
+    """Per-character tokens for space-free CJK text: Java's \\s removed,
+    then a per-code-point split (``[""]`` for nothing left)."""
+    from pyspark.sql import functions as F
+
+    return F.split(F.regexp_replace(text, r"\s+", ""), "")
+
+
+def n_words(toks):
+    from pyspark.sql import functions as F
+
+    return F.size(toks).cast("bigint")
+
+
+def mean_word_len(toks):
+    from pyspark.sql import functions as F
+
+    total = F.aggregate(toks, F.lit(0).cast("bigint"),
+                        lambda a, t: a + F.length(t))
+    return total.cast("double") / F.greatest(
+        F.size(toks), F.lit(1)).cast("double")
+
+
+def symbol_ratio(text):
+    from pyspark.sql import functions as F
+
+    n_sym = F.length(text) - F.length(
+        F.regexp_replace(text, "[#@$%^&*+=~|]", ""))
+    return n_sym.cast("double") / F.greatest(
+        F.length(text), F.lit(1)).cast("double")
+
+
+def stopword_frac(toks, lang: str = "en"):
+    from pyspark.sql import functions as F
+
+    sw = ZH_STOP_CHARS if lang == "zh" else STOPWORDS[lang]
+    hits = F.size(F.filter(toks, lambda t: F.lower(t).isin(*sw)))
+    return hits.cast("double") / F.greatest(
+        F.size(toks), F.lit(1)).cast("double")
+
+
+def stopword_frac_by_lang(toks, lang):
+    """Per-row language dispatch: fr/de/es/zh their own list, every other
+    lang (NULL too) en."""
+    from pyspark.sql import functions as F
+
+    expr = stopword_frac(toks, "en")
+    for lg in ("fr", "de", "es", "zh"):
+        expr = F.when(lang == lg, stopword_frac(toks, lg)).otherwise(expr)
+    return expr
+
+
+def alpha_word_frac(toks):
+    from pyspark.sql import functions as F
+
+    hits = F.size(F.filter(toks, lambda t: t.rlike(_ALPHA_CLASS)))
+    return hits.cast("double") / F.greatest(
+        F.size(toks), F.lit(1)).cast("double")
+
+
+def lines(text):
+    from pyspark.sql import functions as F
+
+    return F.filter(F.split(text, "\n"), lambda l: F.trim(l) != F.lit(""))
+
+
+def paragraphs(text):
+    from pyspark.sql import functions as F
+
+    return F.filter(F.split(text, r"\n{2,}"),
+                    lambda p: F.trim(p) != F.lit(""))
+
+
+def _repeat_frac(parts):
+    from pyspark.sql import functions as F
+
+    n = F.size(parts)
+    return F.when(n <= 0, F.lit(0.0)).otherwise(
+        F.lit(1.0)
+        - F.size(F.array_distinct(parts)).cast("double") / n.cast("double"))
+
+
+def repeated_line_frac(text):
+    return _repeat_frac(lines(text))
+
+
+def repeated_paragraph_frac(text):
+    return _repeat_frac(paragraphs(text))
+
+
+def _line_frac(text, pattern: str):
+    from pyspark.sql import functions as F
+
+    ls = lines(text)
+    n = F.size(ls)
+    hits = F.size(F.filter(ls, lambda l: l.rlike(pattern)))
+    return F.when(n <= 0, F.lit(0.0)).otherwise(
+        hits.cast("double") / n.cast("double"))
+
+
+def bullet_line_frac(text):
+    return _line_frac(text, r"^\s*[-*•]")
+
+
+def ellipsis_line_frac(text):
+    return _line_frac(text, r"(\.\.\.|…)\s*$")
+
+
+def terminal_punct_line_frac(text):
+    return _line_frac(text, r"[.!?\"]\s*$")
+
+
+def sentence_count(text):
+    from pyspark.sql import functions as F
+
+    return F.regexp_count(
+        text, F.lit(r"[.!?](\s|$)|[。！？]")).cast("bigint")
+
+
+def has_lorem_ipsum(text):
+    from pyspark.sql import functions as F
+
+    return F.contains(F.lower(text), F.lit("lorem ipsum"))
+
+
+def has_curly_brace(text):
+    from pyspark.sql import functions as F
+
+    return F.contains(text, F.lit("{"))
+
+
+def toxicity_hits(toks):
+    from pyspark.sql import functions as F
+
+    return F.size(F.filter(
+        toks, lambda t: F.lower(t).isin(*TOXICITY_WORDS))).cast("bigint")
+
+
+def quality_stat_exprs(text, lang=None) -> dict:
+    """The 14 stats of ``text`` as Column expressions, in
+    ``kernels.QUALITY_STAT_COLS`` order: zh tokens and stop words on
+    ``lang == "zh"`` rows, word tokens otherwise; en stop words without a
+    ``lang`` column."""
+    from pyspark.sql import functions as F
+
+    from cfht2caom2_spark.functions.tokens import word_tokens
+
+    if lang is None:
+        toks = word_tokens(text)
+        sw = stopword_frac(toks, "en")
+    else:
+        toks = F.when(lang == "zh", zh_chars(text)).otherwise(
+            word_tokens(text))
+        sw = stopword_frac_by_lang(toks, lang)
+    return {
+        "n_words": n_words(toks),
+        "mean_word_len": mean_word_len(toks),
+        "symbol_ratio": symbol_ratio(text),
+        "stopword_frac": sw,
+        "alpha_word_frac": alpha_word_frac(toks),
+        "repeated_line_frac": repeated_line_frac(text),
+        "repeated_paragraph_frac": repeated_paragraph_frac(text),
+        "bullet_line_frac": bullet_line_frac(text),
+        "ellipsis_line_frac": ellipsis_line_frac(text),
+        "terminal_punct_line_frac": terminal_punct_line_frac(text),
+        "sentence_count": sentence_count(text),
+        "has_lorem_ipsum": has_lorem_ipsum(text),
+        "has_curly_brace": has_curly_brace(text),
+        "toxicity_hits": toxicity_hits(toks),
+    }

@@ -1,13 +1,14 @@
 """Word-rule kernel parity and single-home guards.
 
-Every Python crossing that tokenizes or signs word shingles goes through
-``functions/kernels.py``, and every Spark expression that tokenizes or
-builds word n-grams goes through ``functions/tokens.py``.  Here the two
-homes are compared with each other, and each signature frame with its
-Spark expression reference, bit for bit, on hypothesis-drawn batches of
-adversarial text (NULL, empty, whitespace-only, non-ASCII whitespace,
-non-ASCII case); static checks keep the tokenizer, the n-gram join, the
-day key and the MinHash modulus from being re-forked into other modules.
+Every Python crossing that tokenizes, signs word shingles or computes
+the heuristic stats goes through ``functions/kernels.py``, and every Spark
+expression that tokenizes or builds word n-grams goes through
+``functions/tokens.py``.  Here the two homes are compared with each other,
+and each signature frame and the stat kernel with its Spark expression
+reference, bit for bit, on hypothesis-drawn batches of adversarial text
+(NULL, empty, whitespace-only, non-ASCII whitespace, non-ASCII case); static
+checks keep the tokenizer, the n-gram join, the day key, the MinHash
+modulus and the heuristic stats from being re-forked into other modules.
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ from cfht2caom2_spark.operators.dedup import (_simhash_md5_frame, hash60,
                                               shingle_hash, shingle_hash_fast,
                                               simhash, word_shingles)
 
-from .reference_impl import gram_set, minhash_signature
+from .reference_impl import gram_set, minhash_signature, quality_stat_exprs
 
 PKG = Path(__file__).resolve().parent.parent / "cfht2caom2_spark"
 KERNELS = PKG / "functions" / "kernels.py"
@@ -139,6 +140,77 @@ def test_word_rule_expressions_match_kernels(spark, texts):
             **want_grams}, repr(text)
 
 
+# fragments of heuristic-stat inputs: ASCII and non-ASCII whitespace, the
+# line terminators Java's $ sits before (\r, U+0085, U+2028, U+2029),
+# ellipses and terminal punctuation, bullets, symbols, NBSP and U+3000
+# inside tokens, a non-BMP char, CJK, and case pairs (İ, Σ, capitals) for
+# the stop-word, toxicity and "lorem ipsum" matches
+_STAT_FRAGMENTS = [
+    " ", "  ", "\t", "\n", "\n\n", "\r", "\x0b", "\f", "\x85", "\u2028",
+    "\u2029", "...", "\u2026", ".", "!", "?", '"', "-", "*", "\u2022", "#",
+    "@", "{", "the", "THE", "Is", "\u0130s", "\u0130S", "\u03a3\u0391\u03a3",
+    "la", "und", "lorem", "LOREM", "ipsum", "\u0130PSUM", "badword1",
+    "BADWORD1", "x\u00a0y", "a\u3000b", "\U0001f600", "\u7684", "\u662f",
+    "\u3002", "\u00e9t\u00e9", "\u00d7", "42"]
+_STAT_TEXT = st.one_of(
+    st.none(),
+    st.lists(st.sampled_from(_STAT_FRAGMENTS), max_size=24).map("".join))
+_STAT_LANG = st.sampled_from([None, "en", "fr", "de", "es", "zh", "und"])
+_STAT_ROWS = [
+    (None, "en"), ("", "en"), ("", "zh"), ("   ", None), (" \t\n\r ", "zh"),
+    ("\t\n\t\n", "en"), ("a\tb\n\t\n\t", "fr"),
+    ("wait...\r\nmore\u2026\x85\nend.\u2028\nstop...\u2029", "en"),
+    ("So.\u2028", "en"), ("So.\x85", "en"), ("trail... \r", "en"),
+    ("- a\n\t* b\n\u2022 c\n d", "en"), ("x\u00a0y a\u3000b \U0001f600", "en"),
+    ("\u0130s THE Is \u03a3\u0391\u03a3 BADWORD1", "en"),
+    ("LOREM \u0130PSUM", "en"), ("Lorem Ipsum dolor", None),
+    ("\u7684\u662f \u5728\u3002\u4e86", "zh"), ("la LA Le und", "fr"),
+    ("p one\n\np one\n\n\n  \n\np two", "de"), ("{#@$} ~|", "es")]
+
+
+@settings(max_examples=6, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(rows=st.lists(st.tuples(_STAT_TEXT, _STAT_LANG), min_size=1,
+                     max_size=16))
+@example(rows=_STAT_ROWS)
+def test_quality_stats_kernel_matches_expression_references(spark, rows):
+    """with_quality_stats (the Python kernel behind one pandas UDF) equals
+    the JVM Column forms of all 14 stats bit for bit, with a lang column
+    and without one (every row en), NULL rules, types and Java's
+    whitespace, ``$`` and ``split(.., "")`` rules included."""
+    from cfht2caom2_spark.functions.quality import with_quality_stats
+
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(
+            [(i, t, lg) for i, (t, lg) in enumerate(rows)], 2),
+        "id bigint, t string, lang string")
+    cols = list(kernels.QUALITY_STAT_COLS)
+    for lang_col in ("lang", None):
+        lang = None if lang_col is None else F.col(lang_col)
+        want = df.select("id", *[e.alias(c) for c, e in quality_stat_exprs(
+            F.col("t"), lang).items()])
+        got = with_quality_stats(df, text_col="t", lang_col=lang_col)
+        assert got.select("id", *cols).schema == want.schema
+        assert sorted(got.select("id", *cols).collect()) == \
+            sorted(want.collect()), (lang_col, rows)
+
+
+def test_fused_pass_stats_match_expression_references(spark):
+    """The fused extraction pass emits the 14 stats of (extracted_text,
+    lang_pred) exactly as the JVM Column forms compute them."""
+    from cfht2caom2_spark.functions.fused import with_extract_and_scores
+    from cfht2caom2_spark.sources.pages import synth_pages
+
+    fused = with_extract_and_scores(synth_pages(spark, 400, 7), spark) \
+        .select("url", "extracted_text", "lang_pred",
+                *kernels.QUALITY_STAT_COLS).localCheckpoint()
+    exprs = quality_stat_exprs(F.col("extracted_text"), F.col("lang_pred"))
+    want = fused.select("url", *[e.alias(c) for c, e in exprs.items()])
+    got = fused.select("url", *kernels.QUALITY_STAT_COLS)
+    assert got.schema == want.schema
+    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+
+
 def test_unsupported_hash_raises(spark):
     """Only the crc32 and md5 families have a Python kernel; any other
     hash fails on the driver instead of silently changing the plan."""
@@ -229,6 +301,39 @@ def test_word_rule_and_day_key_live_in_one_place():
                     name == "concat_ws" and args[:1] == [" "]):
                 forks.append(f"{site}:{node.lineno} {name}")
     assert not forks and len(days) == 1, (forks, days)
+
+
+# the JVM Column forms of the heuristic stats (tests/reference_impl.py) and
+# the regexes they ran inside Spark expressions
+_STAT_FORMS = {"zh_chars", "lines", "paragraphs", "stopword_frac_by_lang",
+               *kernels.QUALITY_STAT_COLS}
+_STAT_PATTERNS = {"[#@$%^&*+=~|]", "[A-Za-zÀ-ÿ一-鿿]", r"^\s*[-*•]",
+                  r"(\.\.\.|…)\s*$", r"[.!?\"]\s*$", r"[.!?](\s|$)|[。！？]"}
+_SPARK_REGEX_CALLS = {"rlike", "regexp", "regexp_like", "regexp_count",
+                      "regexp_replace", "regexp_extract_all", "split"}
+
+
+def test_heuristic_stats_live_only_in_the_kernel():
+    """``kernels.quality_stats`` is the one implementation of the 14
+    heuristic stats: no package module defines or calls a function named
+    like a stat's Column form, and no Spark regex call runs one of the
+    stats' patterns."""
+    forks = []
+    for path, tree in _package_modules():
+        site = str(path.relative_to(PKG))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.FunctionDef) and node.name in _STAT_FORMS:
+                forks.append(f"{site}:{node.lineno} def {node.name}")
+            if not isinstance(node, ast.Call):
+                continue
+            name = _call_name(node)
+            if name in _STAT_FORMS:
+                forks.append(f"{site}:{node.lineno} {name}()")
+            if name in _SPARK_REGEX_CALLS and any(
+                    isinstance(c, ast.Constant) and c.value in _STAT_PATTERNS
+                    for c in ast.walk(node)):
+                forks.append(f"{site}:{node.lineno} {name} pattern")
+    assert not forks, forks
 
 
 def test_mersenne_modulus_defined_only_in_kernels():

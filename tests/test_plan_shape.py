@@ -8,6 +8,8 @@ here is a silent 10x at scale even when results stay correct.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 SF = "/root/testdata/sf0.01"
@@ -363,3 +365,73 @@ def test_history_tick_is_single_python_pass_no_union(spark, tmp_path):
         build_pipeline(inc, spark, dedupe=False), history))
     assert plan.count("MapInPandas") == 1
     assert "Union" not in plan
+
+
+def _lambda_bodies(plan: str) -> set[str]:
+    """Every ``lambdafunction(...)`` in a plan string, expression ids and
+    generated name suffixes stripped."""
+    out = set()
+    for m in re.finditer(r"lambdafunction\(", plan):
+        depth, i = 0, m.end() - 1
+        while True:
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            if depth == 0:
+                break
+            i += 1
+        out.add(re.sub(r"(_\d+)?#\d+L?", "", plan[m.start():i + 1]))
+    return out
+
+
+def test_default_plans_run_one_python_pass_and_no_stat_lambdas(
+        spark, tmp_path, monkeypatch):
+    """The heuristic stats ride the fused Arrow pass: over every plan the
+    default profile executes (each pinned frame's plan, captured before
+    ``localCheckpoint`` truncates it, and the returned plan), with dedup
+    on and off, and in a history tick, there is exactly one MapInPandas,
+    no Python eval node, and no higher-order lambda except those the rule
+    array (``assemble_rules``), ``scrub_rules_fired`` and the dedup's
+    MinHash estimator (``signature_agreement``) hold."""
+    from pyspark.sql import functions as F
+
+    from cfht2caom2_spark.functions.scrub import scrub_rules_fired
+    from cfht2caom2_spark.operators.compact import demote_against_history
+    from cfht2caom2_spark.operators.decision import assemble_rules
+    from cfht2caom2_spark.operators.dedup import signature_agreement
+    from cfht2caom2_spark.plans.pipeline import build_pipeline
+    from cfht2caom2_spark.sources.pages import synth_pages
+
+    sig = F.array(F.col("id"))
+    allowed = _lambda_bodies(plan_of(spark.range(1).select(
+        assemble_rules({"r": F.col("id") > 0}).alias("a"),
+        scrub_rules_fired(F.col("id").cast("string")).alias("s"),
+        signature_agreement(sig, sig, 1).alias("j"))))
+    assert allowed
+    synth_pages(spark, 200).write.parquet(str(tmp_path / "pages"))
+    pages = spark.read.parquet(str(tmp_path / "pages"))
+    build_pipeline(pages, spark, dedupe=False).write.parquet(
+        str(tmp_path / "history"))
+    history = spark.read.parquet(str(tmp_path / "history"))
+
+    pinned: list[str] = []
+    frame_cls = type(pages)
+    checkpoint = frame_cls.localCheckpoint
+
+    def capture(self, *args, **kwargs):
+        pinned.append(plan_of(self))
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", capture)
+    builds = {
+        "dedup": lambda: build_pipeline(pages, spark, dedupe=True),
+        "no dedup": lambda: build_pipeline(pages, spark, dedupe=False),
+        "tick": lambda: demote_against_history(
+            build_pipeline(pages, spark, dedupe=False), history),
+    }
+    for name, build in builds.items():
+        pinned.clear()
+        plans = [plan_of(build()), *pinned]
+        text = "\n".join(plans)
+        assert text.count("MapInPandas") == 1, name
+        assert "EvalPython" not in text, name
+        assert _lambda_bodies(text) <= allowed, \
+            (name, _lambda_bodies(text) - allowed)

@@ -90,6 +90,27 @@ def test_run_batch_releases_its_pins(spark, pinned_rdds, tmp_path):
     assert pinned_rdds() <= before
 
 
+def test_run_batch_releases_the_operator_pins(spark, pinned_rdds, tmp_path):
+    """The fan-out operators build_pipeline calls pin their own streams
+    (the boilerplate line stream, the span window stream, the
+    decontamination gram and signature frames); run_batch hands them its
+    pin list, so repeated calls leave nothing resident."""
+    from dataclasses import replace
+
+    from cfht2caom2_spark.config import DEFAULT_PROFILE
+
+    profile = replace(DEFAULT_PROFILE, boilerplate_removal=True,
+                      span_removal=True, decontam_fuzzy=True)
+    pages = synth_pages(spark, N)
+    bench = pages.limit(5).select(F.col("text"))
+    before = pinned_rdds()
+    for i in range(3):
+        res = run_batch(spark, pages, str(tmp_path / f"out{i}"),
+                        profile=profile, benchmark=bench)
+        assert res["processed"] == N
+        assert pinned_rdds() <= before, i
+
+
 def test_run_batch_releases_its_pins_when_the_write_fails(
         spark, pinned_rdds, tmp_path):
     """A regular file where the output directory should be: the pins are
