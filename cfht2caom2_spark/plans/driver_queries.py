@@ -22,11 +22,12 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..config import STOPWORDS
+from ..config import DEFAULT_PROFILE, STOPWORDS
 from ..functions import quality as Q
 from ..functions import tokens as TK
 from ..functions.scrub import scrubbed
 from ..operators import similarity as SIM
+from ..operators.decision import assemble_rules
 from ..operators.dedup import (MERSENNE_31, _perm_params, lsh_candidate_pairs,
                                shingle_hash, simhash, word_shingles)
 
@@ -230,19 +231,10 @@ _DOC_RULES = (
 
 def _doc_rules_array():
     """Fired-rule array over the q_text_stats columns (shared by the decision
-    and the per-rule report so both attribute identically)."""
-    conds = {
-        "too_short": F.col("n_words") < 50,
-        "word_len_low": F.col("mean_word_len") < 3.0,
-        "word_len_high": F.col("mean_word_len") > 10.0,
-        "symbol_ratio": F.col("symbol_ratio") > 0.10,
-        "stopword_frac": F.col("stopword_frac") < 0.01,
-        "alpha_frac": F.col("alpha_word_frac") < 0.80,
-    }
-    return F.array_sort(F.filter(
-        F.array(*[F.when(c, F.lit(r)) for r, c in conds.items()]),
-        lambda x: x.isNotNull(),
-    ))
+    and the per-rule report so both attribute identically): the pipeline's
+    rules over those stats, at the default profile's thresholds."""
+    rules = Q.heuristic_rules(DEFAULT_PROFILE)
+    return assemble_rules({r: rules[r] for r, _ in _DOC_RULES})
 
 
 def q_quality_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1426,7 +1418,6 @@ def _det_pipeline(spark: SparkSession, sf_dir: str,
     profile variants (span removal etc.)."""
     from dataclasses import replace
 
-    from ..config import DEFAULT_PROFILE
     from .pipeline import build_pipeline
 
     profile = replace(DEFAULT_PROFILE, version="2026.08.1-det",
@@ -2593,15 +2584,12 @@ def q_line_format_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = Q.with_quality_stats(docs, text_col="text").select(
         "doc_id", "bullet_line_frac", "ellipsis_line_frac",
         "terminal_punct_line_frac")
-    conds = {
+    rules = assemble_rules({
         "bullet_lines": F.col("bullet_line_frac") > LINE_BULLET_THR,
         "ellipsis_lines": F.col("ellipsis_line_frac") > LINE_ELLIPSIS_THR,
         "terminal_punct": (F.col("terminal_punct_line_frac")
                            < LINE_TERM_THR),
-    }
-    rules = F.array_sort(F.filter(
-        F.array(*[F.when(c, F.lit(r)) for r, c in conds.items()]),
-        lambda x: x.isNotNull()))
+    })
     return stats.withColumn("rules_str", F.array_join(rules, ","))
 
 
@@ -2671,8 +2659,6 @@ def q_repetition_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup_top_{n}gram / dup_{n}gram rules.  The stats come from
     quality.with_repetition_ladder, the same one-crossing kernel the
     pipeline runs under profile.gopher_repetition_gates."""
-    from ..config import DEFAULT_PROFILE
-
     docs = _t_wide(spark, sf_dir, "documents").select(
         "doc_id",
         F.concat(
@@ -2681,16 +2667,11 @@ def q_repetition_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"))
     stats = Q.with_repetition_ladder(docs, text_col="text").select(
         "doc_id", *Q.REP_LADDER_COLS)
-    conds = Q.repetition_ladder_rules(DEFAULT_PROFILE)
-    rules = F.array_sort(F.filter(
-        F.array(*[F.when(c, F.lit(r)) for r, c in conds.items()]),
-        lambda x: x.isNotNull()))
+    rules = assemble_rules(Q.repetition_ladder_rules(DEFAULT_PROFILE))
     return stats.withColumn("rules_str", F.array_join(rules, ","))
 
 
 def _ladder_sql() -> str:
-    from ..config import DEFAULT_PROFILE
-
     tops = dict(DEFAULT_PROFILE.max_top_ngram_char_frac)
     dups = dict(DEFAULT_PROFILE.max_dup_ngram_char_frac)
     ctes, fracs, cases, joins = [], [], [], []
@@ -2982,7 +2963,7 @@ ORACLES["q_block_texts"] = _BLOCK_TEXTS_SQL
 KM_K, KM_SEED, KM_NPROBE = 8, 3, 2
 # init-centroid key: the packing epoch permutation applied to seeding
 _KM_KEY = _HASH60.format(s=f"vec_id::VARCHAR || ':' || '{KM_SEED}'")
-# oracle squared-L2: same index-ordered (x-y)^2 fold as kmeans.sq_dist
+# oracle squared-L2: the index-ordered (x-y)^2 fold of kmeans_cost
 _KM_DIST = ("list_sum(list_transform(list_zip({a}, {b}),"
             " p -> (p[1] - p[2]) * (p[1] - p[2])))")
 _KM_INIT_SQL = f"""

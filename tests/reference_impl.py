@@ -18,7 +18,9 @@ kernel parity tests and build on the engine's Column-level ``word_shingles``
 and shingle hashes; ``char_run_sq_sum``, ``char_simpson`` and
 ``distinct_char_frac`` are the Column folds ``char_stats_fast`` must match;
 ``quality_stat_exprs`` and the 14 stat expressions it assembles are the
-JVM semantics ``kernels.quality_stats`` must match.
+JVM semantics ``kernels.quality_stats`` must match; ``nearest_centroid``,
+``kmeans_cost`` and the ``sq_dist`` fold under them are the k-means
+semantics ``kmeans._nearest_cells`` must match.
 """
 
 from __future__ import annotations
@@ -544,3 +546,58 @@ def quality_stat_exprs(text, lang=None) -> dict:
         "has_curly_brace": has_curly_brace(text),
         "toxicity_hits": toxicity_hits(toks),
     }
+
+
+# --- Spark expression references of the nearest-centroid kernel -------------
+# operators/kmeans.py assigns cells only through ``_nearest_cells`` (one
+# matmul per Arrow batch).  These Column folds over an inlined literal
+# centroid array are the JVM semantics it must label like, and the
+# sequential fold ``kmeans_cost`` must equal bit for bit; no shipped plan
+# uses them.
+
+def sq_dist(a, b):
+    """Index-ordered double-precision squared L2 distance (deterministic
+    fold, same shape as similarity.dot)."""
+    from pyspark.sql import functions as F
+
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") - y.cast("double")),
+        F.lit(0.0),
+        lambda acc, v: acc + v * v,
+    )
+
+
+def _centroid_lit(centroids):
+    """The k x dim centroid matrix as one literal array<array<double>>."""
+    from pyspark.sql import functions as F
+
+    return F.array(*[
+        F.array(*[F.lit(float(x)) for x in c]) for c in centroids
+    ])
+
+
+def centroid_dists(vec, centroids):
+    """array<double>: ``sq_dist`` from ``vec`` to each centroid, by id.  A
+    NULL or ragged vector, or one with a NULL element, gives NULLs."""
+    from pyspark.sql import functions as F
+
+    return F.transform(_centroid_lit(centroids), lambda c: sq_dist(vec, c))
+
+
+def nearest_centroid(vec, centroids):
+    """0-based id of the nearest centroid by squared L2; ties -> lowest id
+    (``array_position`` returns the FIRST index of the min element;
+    ``array_min`` skips NULL and ranks NaN above every number)."""
+    from pyspark.sql import functions as F
+
+    dists = centroid_dists(vec, centroids)
+    return (F.array_position(dists, F.array_min(dists)) - 1).cast("bigint")
+
+
+def kmeans_cost(df, centroids) -> float:
+    """Sum over ``df``'s embeddings of the nearest centroid's ``sq_dist``."""
+    from pyspark.sql import functions as F
+
+    row = df.select(F.sum(F.array_min(
+        centroid_dists(F.col("embedding"), centroids))).alias("c")).first()
+    return float(row["c"]) if row["c"] is not None else 0.0

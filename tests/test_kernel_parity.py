@@ -8,7 +8,8 @@ and each signature frame and the stat kernel with its Spark expression
 reference, bit for bit, on hypothesis-drawn batches of adversarial text
 (NULL, empty, whitespace-only, non-ASCII whitespace, non-ASCII case); static
 checks keep the tokenizer, the n-gram join, the day key, the MinHash
-modulus and the heuristic stats from being re-forked into other modules.
+modulus, the heuristic stats and the nearest-centroid assignment from being
+re-forked into other modules.
 """
 
 from __future__ import annotations
@@ -333,6 +334,41 @@ def test_heuristic_stats_live_only_in_the_kernel():
                     isinstance(c, ast.Constant) and c.value in _STAT_PATTERNS
                     for c in ast.walk(node)):
                 forks.append(f"{site}:{node.lineno} {name} pattern")
+    assert not forks, forks
+
+
+# the JVM Column forms of nearest-centroid assignment (tests/reference_impl.py)
+_CENTROID_FORMS = {"sq_dist", "nearest_centroid", "_centroid_lit",
+                   "centroid_dists"}
+
+
+def _is_literal_matrix(node) -> bool:
+    """An ``array(...)`` call holding an ``array(...)`` of ``lit(...)``: a
+    matrix inlined into the plan as literals."""
+    return _call_name(node) == "array" and any(
+        c is not node and isinstance(c, ast.Call) and _call_name(c) == "array"
+        and any(isinstance(x, ast.Call) and _call_name(x) == "lit"
+                for x in ast.walk(c))
+        for c in ast.walk(node))
+
+
+def test_nearest_centroid_lives_only_in_the_kernel():
+    """``kmeans._nearest_cells`` is the one nearest-centroid
+    implementation: no package module defines or calls the expression
+    fold's functions, or inlines a literal matrix into a plan."""
+    forks = []
+    for path, tree in _package_modules():
+        site = str(path.relative_to(PKG))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.FunctionDef) \
+                    and node.name in _CENTROID_FORMS:
+                forks.append(f"{site}:{node.lineno} def {node.name}")
+            if not isinstance(node, ast.Call):
+                continue
+            if _call_name(node) in _CENTROID_FORMS:
+                forks.append(f"{site}:{node.lineno} {_call_name(node)}()")
+            if _is_literal_matrix(node):
+                forks.append(f"{site}:{node.lineno} literal matrix")
     assert not forks, forks
 
 

@@ -36,9 +36,6 @@ ALLOWED = {
         "Python simhash against",
     "session:get_spark(shuffle_partitions)":
         "test sessions size their shuffle to the test data",
-    "operators.kmeans:assign_cells(vectorized)":
-        "the parity tests force each side of the k*dim dispatch; both "
-        "paths stay",
     "operators.decontam:decontaminate(prefilter_bits)":
         "prefilter_bits=0 is the unpruned reference plan the bitmap "
         "prefilter's plan-shape test compares against",

@@ -1060,6 +1060,23 @@ def test_kmeans_empty_cluster_keeps_previous_centroid(spark):
         assert any(math.dist(c, target) < 1.0 for c in trained)
 
 
+def test_train_centroids_skips_null_labels_and_empty_input(spark):
+    """Vectors that label NULL (NULL, NULL-element, ragged) join no
+    cluster, and empty input trains no centroids."""
+    from cfht2caom2_spark.operators.kmeans import (init_centroids,
+                                                   train_centroids)
+
+    rows = [(0, [0.0, 0.0]), (1, [0.5, 0.0]), (2, [10.0, 10.0]),
+            (3, [10.5, 10.0]), (4, None), (5, [1.0, None]), (6, [1.0])]
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    seed = 6  # seeds with two finite vectors, one per blob
+    assert all(len(c) == 2 and None not in c
+               for c in init_centroids(df, 2, seed))
+    assert sorted(train_centroids(df, k=2, n_iter=3, seed=seed)) == \
+        [[0.25, 0.0], [10.25, 10.0]]
+    assert train_centroids(df.limit(0), k=2) == []
+
+
 def test_ivf_centroid_probe_all_cells_matches_exact(blob_vecs):
     """With n_probe = n_cells the trained-cell IVF degrades to brute force:
     its (query, vec, rank) set must equal cosine_topk's exactly — pins the
@@ -1229,13 +1246,16 @@ def test_simhash_pairs_null_text_parity(spark):
     assert (1, 2, 0) in fast
 
 
-def test_assign_cells_vectorized_null_ragged_and_string_ids(spark):
-    """The vectorized assignment must label NULL / wrong-length /
-    NULL-element vectors NULL and NaN / infinite-element vectors cell 0
-    like the expression path, and carry a non-bigint id type through its
+def test_assign_cells_degenerate_vectors_and_string_ids_match_reference(
+        spark):
+    """assign_cells labels NULL / wrong-length / NULL-element vectors NULL
+    and NaN / infinite-element vectors cell 0, like the expression fold in
+    tests/reference_impl.py, and carries a non-bigint id type through its
     output schema (round-6 review catch: the schema used to hardcode
     bigint)."""
     from cfht2caom2_spark.operators.kmeans import assign_cells
+
+    from . import reference_impl as R
 
     nan, inf = float("nan"), float("inf")
     cents = [[0.0, 1.0], [1.0, 0.0]]
@@ -1244,10 +1264,11 @@ def test_assign_cells_vectorized_null_ragged_and_string_ids(spark):
             ("f", [0.9, nan]), ("g", [nan, nan]), ("h", [None, nan]),
             ("i", [inf, 0.1]), ("j", [0.2, -inf])]
     df = spark.createDataFrame(rows, "vec_id string, embedding array<float>")
-    expr = {r["vec_id"]: r["cell"]
-            for r in assign_cells(df, cents, vectorized=False).collect()}
+    expr = {r["vec_id"]: r["cell"] for r in df.select(
+        "vec_id", R.nearest_centroid(F.col("embedding"), cents)
+        .alias("cell")).collect()}
     vec = {r["vec_id"]: r["cell"]
-           for r in assign_cells(df, cents, vectorized=True).collect()}
+           for r in assign_cells(df, cents).collect()}
     assert expr == vec
     assert expr["b"] is None and expr["c"] is None and expr["d"] is None
     assert expr["h"] is None
@@ -1255,14 +1276,19 @@ def test_assign_cells_vectorized_null_ragged_and_string_ids(spark):
     assert expr["f"] == expr["g"] == expr["i"] == expr["j"] == 0
 
 
-def test_ivf_centroid_topk_big_kdim_path_matches_small(spark):
-    """At k*dim >= the dispatch threshold ivf_centroid_topk switches both
-    sides to the vectorized path; on clean data the output must equal the
-    expression path bitwise (cumsum == the fold; lexsort == the window
+def test_ivf_centroid_topk_matches_reference(spark):
+    """ivf_centroid_topk on clean data equals the expression fold of
+    tests/reference_impl.py bitwise: corpus cells by ``nearest_centroid``,
+    each query's n_probe nearest cells by (``sq_dist``, cell id), and the
+    candidates in those cells ranked by (cos desc, vec_id), cos being the
+    sequential float64 fold (np.cumsum == the fold; lexsort == the window
     ordering on both the probe and the rank)."""
+    import math
     import random
 
     from cfht2caom2_spark.operators import kmeans as KM
+
+    from . import reference_impl as R
 
     rng = random.Random(3)
     dim, n = 16, 120
@@ -1270,18 +1296,33 @@ def test_ivf_centroid_topk_big_kdim_path_matches_small(spark):
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
     queries = df.filter("vec_id < 3")
     cents = [[rng.uniform(-1, 1) for _ in range(dim)] for _ in range(8)]
-    small = {(r["query_id"], r["vec_id"], r["rank"], r["cos"])
-             for r in KM.ivf_centroid_topk(df, queries, cents,
-                                           k=5, n_probe=2).collect()}
-    orig = KM._VEC_KDIM_THRESHOLD
-    KM._VEC_KDIM_THRESHOLD = 8 * dim          # force the big path
-    try:
-        big = {(r["query_id"], r["vec_id"], r["rank"], r["cos"])
-               for r in KM.ivf_centroid_topk(df, queries, cents,
-                                             k=5, n_probe=2).collect()}
-    finally:
-        KM._VEC_KDIM_THRESHOLD = orig
-    assert small == big and len(small) > 0
+    got = {(r["query_id"], r["vec_id"], r["rank"], r["cos"])
+           for r in KM.ivf_centroid_topk(df, queries, cents,
+                                         k=5, n_probe=2).collect()}
+    emb = F.col("embedding")
+    ref = {r["vec_id"]: (r["v"], r["cell"], r["d"]) for r in df.select(
+        "vec_id", F.transform(emb, lambda x: x.cast("double")).alias("v"),
+        R.nearest_centroid(emb, cents).alias("cell"),
+        R.centroid_dists(emb, cents).alias("d")).collect()}
+
+    def fold(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc += x * y
+        return acc
+
+    want = set()
+    for q in range(3):
+        qv, _, d = ref[q]
+        probe = sorted(range(len(cents)), key=lambda c: (d[c], c))[:2]
+        cand = [(fold(v, qv) / max(math.sqrt(fold(v, v))
+                                   * math.sqrt(fold(qv, qv)), 1e-12), i)
+                for i, (v, cell, _) in ref.items()
+                if cell in probe and i != q]
+        for rank, (cos, i) in enumerate(
+                sorted(cand, key=lambda t: (-t[0], t[1]))[:5], 1):
+            want.add((q, i, rank, cos))
+    assert got == want and len(got) == 15
 
 
 def test_char_stats_fast_parity(spark):
@@ -1313,8 +1354,8 @@ def test_char_stats_fast_parity(spark):
 
 
 def test_kmeans_assignment_plan_is_narrow(spark):
-    """assign_cells (expression path) is a pure projection: no Exchange, no
-    Python crossing — the invariant that makes per-iteration Lloyd's cost
+    """assign_cells is one narrow Python crossing: no Exchange and exactly
+    one MapInPandas — the invariant that makes per-iteration Lloyd's cost
     one shuffle."""
     from cfht2caom2_spark.operators.kmeans import assign_cells
 
@@ -1324,21 +1365,73 @@ def test_kmeans_assignment_plan_is_narrow(spark):
     plan = assign_cells(df, [[0.0, 1.0], [1.0, 0.0]]) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
-    assert "Python" not in plan
+    assert plan.count("MapInPandas") == 1
 
 
-def test_assign_cells_vectorized_parity(spark):
-    """The production-k*dim numpy-matmul assignment path labels every
-    vector like the literal-expression path on this data: the matmul
-    identity can differ from sq_dist's sequential fold at the ulp level
-    (documented FAISS-style trade), which flips a label only for vectors
+def _centroid_lambdas(plan: str) -> list[str]:
+    """Higher-order calls over a literal array of arrays in a plan string:
+    the inlined centroid matrix, which Catalyst folds to ``[[...], ...]``."""
+    import re
+
+    return re.findall(r"\w+\(\[\[[^ ()]*\], lambdafunction", plan)
+
+
+def test_kmeans_plans_hold_no_centroid_literals(spark, monkeypatch):
+    """At k=256, dim=64 a Lloyd's iteration of train_centroids, kmeans_cost
+    and assign_cells each plan without a lambdafunction over centroid
+    literals: no plan grows with k*dim.  The probe regex is checked
+    against the expression fold's plan first."""
+    import random
+
+    from cfht2caom2_spark.operators.kmeans import (assign_cells,
+                                                   kmeans_cost,
+                                                   train_centroids)
+
+    from . import reference_impl as R
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    tiny = spark.createDataFrame([(0, [0.5, 1.5])],
+                                 "vec_id bigint, embedding array<float>")
+    assert _centroid_lambdas(plan(tiny.select(R.nearest_centroid(
+        F.col("embedding"), [[0.0, 1.0], [1.0, 0.0]]))))
+
+    rng = random.Random(5)
+    dim, k = 64, 256
+    df = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(dim)]) for i in range(300)],
+        "vec_id bigint, embedding array<float>")
+    plans = []
+    frame = type(df)
+    collect = frame.collect
+    monkeypatch.setattr(frame, "collect",
+                        lambda self: plans.append(plan(self))
+                        or collect(self))
+    cents = train_centroids(df, k=k, n_iter=1, seed=0)
+    kmeans_cost(df, cents)
+    monkeypatch.undo()
+    plans.append(plan(assign_cells(df, cents)))
+    # init_centroids' collect, one iteration, the cost, the assignment
+    assert len(plans) == 4 and len(cents) == k
+    assert not [p for p in plans if _centroid_lambdas(p)]
+
+
+def test_assign_cells_matches_reference(spark):
+    """The numpy-matmul assignment labels every vector like the expression
+    fold of tests/reference_impl.py on this data: the matmul identity can
+    differ from sq_dist's sequential fold at the ulp level (documented
+    FAISS-style trade), which flips a label only for vectors
     equidistant-to-rounding between cells — absent here by construction.
     EXACT ties are probed with duplicated centroids (tie on EVERY vector):
-    np.argmin's first-min must match array_position's lowest-cell rule."""
+    np.argmin's first-min must match array_position's lowest-cell rule.
+    Small and large k*dim run the same one-crossing plan."""
     import math
     import random
 
     from cfht2caom2_spark.operators.kmeans import assign_cells
+
+    from . import reference_impl as R
 
     rng = random.Random(7)
     dim, k, n = 19, 6, 400
@@ -1346,22 +1439,20 @@ def test_assign_cells_vectorized_parity(spark):
     cents = [[rng.uniform(-1, 1) for _ in range(dim)] for _ in range(k)]
     cents[3] = list(cents[1])           # exact duplicate -> guaranteed ties
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    expr = {r["vec_id"]: r["cell"]
-            for r in assign_cells(df, cents, vectorized=False).collect()}
+    expr = {r["vec_id"]: r["cell"] for r in df.select(
+        "vec_id", R.nearest_centroid(F.col("embedding"), cents)
+        .alias("cell")).collect()}
     vec = {r["vec_id"]: r["cell"]
-           for r in assign_cells(df, cents, vectorized=True).collect()}
+           for r in assign_cells(df, cents).collect()}
     assert expr == vec
     assert any(v == 1 for v in expr.values())  # ties resolved to cell 1
     assert not any(v == 3 for v in expr.values())
-    # auto-dispatch: small k*dim stays on the narrow expression plan,
-    # large k*dim crosses to Python
     small = assign_cells(df, cents) \
         ._jdf.queryExecution().executedPlan().toString()
-    assert "Python" not in small
     big_c = [[math.sin(i * j + 1) for j in range(256)] for i in range(64)]
     big = assign_cells(df.limit(1), big_c) \
         ._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in big
+    assert small.count("MapInPandas") == big.count("MapInPandas") == 1
 
 
 def test_train_centroids_cli_lifecycle(spark, tmp_path, monkeypatch, capsys):

@@ -243,6 +243,69 @@ def test_repetition_ladder_matches_python_reference(spark, data):
     assert got == want
 
 
+# dyadic coordinates: every k-means distance, by fold or by matmul, is
+# exact, so exact ties between cells are frequent and both sides see them
+_KM_COORD = st.sampled_from([-2.0, -1.0, -0.5, 0.0, 0.25, 0.5, 1.0, 3.0])
+_KM_CENTS = [[0.0, 1.0, -1.0], [1.0, 0.0, 0.5], [0.0, 1.0, -1.0],
+             [-2.0, 0.25, 3.0]]                  # cells 0 and 2 coincide
+_KM_VEC = st.one_of(
+    st.lists(_KM_COORD, min_size=3, max_size=3),
+    st.none(),
+    st.lists(st.one_of(_KM_COORD, st.sampled_from(
+        [None, float("nan"), float("inf"), float("-inf")])),
+        min_size=0, max_size=5))
+
+
+def _same_double(a: float, b: float) -> bool:
+    return a == b or (a != a and b != b)
+
+
+@settings(max_examples=8, deadline=None)
+@given(st.lists(_KM_VEC, min_size=1, max_size=12))
+def test_kmeans_kernel_matches_reference_fold_on_degenerate_vectors(
+        spark, vecs):
+    """Finite vectors mixed with NULL, ragged, NULL-, NaN- and
+    infinite-element ones: assign_cells labels equal the expression fold's
+    (tests/reference_impl.py), kmeans_cost equals the fold's cost bit for
+    bit (with and without the non-finite rows), and in ivf_centroid_topk
+    a degenerate query probes nothing while every finite one returns
+    rows exactly when its 2 nearest cells hold another vector."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from cfht2caom2_spark.operators.kmeans import (assign_cells,
+                                                   ivf_centroid_topk,
+                                                   kmeans_cost)
+
+    from . import reference_impl as R
+
+    df = spark.createDataFrame(list(enumerate(vecs)),
+                               "vec_id bigint, embedding array<float>")
+    emb = F.col("embedding")
+    ref = {r["vec_id"]: (r["cell"], r["d"]) for r in df.select(
+        "vec_id", R.nearest_centroid(emb, _KM_CENTS).alias("cell"),
+        R.centroid_dists(emb, _KM_CENTS).alias("d")).collect()}
+    got = {r["vec_id"]: r["cell"]
+           for r in assign_cells(df, _KM_CENTS).collect()}
+    assert got == {i: cell for i, (cell, _) in ref.items()}
+
+    finite = [i for i, v in enumerate(vecs) if v is not None
+              and len(v) == 3 and all(x is not None and math.isfinite(x)
+                                      for x in v)]
+    for part in (df, df.filter(F.col("vec_id").isin(finite))):
+        assert _same_double(kmeans_cost(part, _KM_CENTS),
+                            R.kmeans_cost(part, _KM_CENTS))
+
+    probes = {q: sorted(range(len(_KM_CENTS)),
+                        key=lambda c: (ref[q][1][c], c))[:2]
+              for q in finite}
+    want = {q for q, cells in probes.items()
+            if any(ref[i][0] in cells for i in ref if i != q)}
+    topk = ivf_centroid_topk(df, df, _KM_CENTS, k=3, n_probe=2)
+    assert {r["query_id"] for r in topk.collect()} == want
+
+
 def test_split_assign_matches_python_md5_model(spark):
     """The split label is a pure function of (id, seed) with md5 semantics —
     pinned against an independent python computation so the contract can't

@@ -150,6 +150,63 @@ def test_crash_between_writes_reruns_identically(spark, store):
     assert lineage.agg(F.sum("n_in")).collect()[0][0] == N
 
 
+class _FailOnceLM:
+    """The default LM, except that the first ``perplexity_batch`` call of a
+    run, across every Python worker, creates ``marker`` and raises."""
+
+    def __init__(self, marker: str):
+        from cfht2caom2_spark.functions.perplexity import BigramLM
+
+        self.lm = BigramLM()
+        self.marker = marker
+
+    def perplexity_batch(self, texts, langs):
+        import os
+
+        try:
+            os.close(os.open(self.marker, os.O_CREAT | os.O_EXCL))
+        except FileExistsError:
+            return self.lm.perplexity_batch(texts, langs)
+        raise RuntimeError("injected failure inside the decisions write")
+
+
+def test_failed_decisions_write_reruns_identically(spark, store, tmp_path):
+    """A task that fails inside the decisions write: with dedupe off nothing
+    pins the fused pass, so the model scores pages in the write's own
+    tasks, and the first score raises.  The failed run leaves no day
+    behind, and a rerun with the normal model leaves the decisions,
+    previews and lineage of one uninterrupted run."""
+    from pathlib import Path
+
+    table, sid, _ = store
+    pages = table.read(spark, sid).drop("p_day")
+    ref, out = str(tmp_path / "ref"), str(tmp_path / "out")
+    marker = str(tmp_path / "failed")
+
+    def snapshot(root):
+        dec = spark.read.parquet(f"{root}/decisions")
+        return (
+            sorted(dec.select("url", "extracted_sha256", "keep", "rules")
+                   .collect(), key=repr),
+            sorted(spark.read.parquet(f"{root}/previews").collect(),
+                   key=repr),
+            sorted(spark.read.parquet(f"{root}/lineage")
+                   .select("partition_id", "n_in", "n_keep", "n_drop",
+                           "input_snapshot_id").collect()),
+        )
+
+    run_batch(spark, pages, ref, snapshot_id=sid, dedupe=False)
+    with pytest.raises(Exception, match="injected failure"):
+        run_batch(spark, pages, out, snapshot_id=sid, dedupe=False,
+                  ppl_model=_FailOnceLM(marker))
+    assert Path(marker).exists()
+    assert not list(Path(out).glob("decisions/p_day=*"))
+    assert not Path(out, "lineage").exists()
+    r = run_batch(spark, pages, out, snapshot_id=sid, dedupe=False)
+    assert r["processed"] == N and r["partitions"] == 5
+    assert snapshot(out) == snapshot(ref)
+
+
 def test_snapshot_incremental_state_mode(spark, store, tmp_path):
     table, sid, root = store
     s2 = table.append(
