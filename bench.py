@@ -36,7 +36,7 @@ BENCH_QUERIES = [
     "q_text_stats", "q_quality_decision", "q_token_count", "q_fingerprint",
     "q_lang_report",
     "q_scrub_pii", "q_dedup_exact", "q_dedup_first_wins", "q_minhash_pairs",
-    "q_simhash", "q_cosine_topk", "q_ann_lsh", "q_ivf_topk",
+    "q_simhash", "q_cosine_topk", "q_ann_lsh",
     "q_embedding_neardup", "q_semantic_keep_one", "q_source_lang_consensus", "q_cube_report",
     "q_pricing_report",
     "q_revenue_by_nation", "q_window_backfill", "q_anti_join_resume",
@@ -47,7 +47,7 @@ BENCH_QUERIES = [
     "q_pipeline_heuristic", "q_pipeline_flagship_det",
     "q_pipeline_flagship_span", "q_boilerplate_lines",
     "q_decontaminate", "q_decontaminate_fast", "q_repeated_spans",
-    "q_repeated_spans_fast", "q_span_scrub", "q_span_scrub_fast",
+    "q_span_scrub",
     "q_stratified_sample", "q_mixture_report",
     "q_quality_score", "q_quality_score_trained", "q_simhash_pairs",
     "q_bigram_counts", "q_vocab_counts", "q_char_bigram_counts",

@@ -352,8 +352,7 @@ def main(argv: list[str] | None = None) -> int:
         from pyspark.sql import functions as F
 
         from .functions.tokens import bpe_ish_token_count
-        from .operators.dedup import hash60_fast
-        from .operators.packing import pack_blocks, shuffle_key
+        from .operators.packing import hash60_fast, pack_blocks, shuffle_key
 
         decisions = spark.read.parquet(args.decisions)
         # (url, warc_ts) is the row identity: re-crawls of one url with

@@ -3,14 +3,13 @@ of the per-document heuristic stats built on the same tokens.
 
 Every vectorized Python crossing that tokenizes words or signs word
 k-shingles (the fused stage's MinHash and heuristic stats, the
-dedup/decontam signature frames, span windows, the Gopher repetition
-ladder) calls these pure functions, so the rule cannot drift between
-copies.
+dedup/decontam signature frames and SimHash bit vote, span windows, the
+Gopher repetition ladder) calls these pure functions, so the rule cannot
+drift between copies.
 ``functions/tokens.py`` (``word_tokens``, ``word_ngrams``) is the JVM side
 of the same rule, which every Spark expression that tokenizes or builds
-word n-grams calls (``operators.dedup.word_shingles``/``simhash`` among
-them); parity is pinned by the DuckDB oracles and
-``tests/test_kernel_parity.py``.
+word n-grams calls (``operators.dedup.word_shingles`` among them); parity
+is pinned by the DuckDB oracles and ``tests/test_kernel_parity.py``.
 
 The rule: tokens are runs of non-whitespace under Java's default ``\\s``
 class (ASCII whitespace ONLY — ``str.split()`` would also split on NBSP,
@@ -65,7 +64,7 @@ def shingles(text: str, k: int) -> list[bytes]:
 
 def md5_60(data: bytes) -> int:
     """First 15 hex chars of md5 as an int (60 bits) == the JVM's
-    ``conv(substring(md5(x), 1, 15), 16, 10)`` (``dedup.hash60``)."""
+    ``conv(substring(md5(x), 1, 15), 16, 10)`` (``packing.hash60``)."""
     return int(hashlib.md5(data).hexdigest()[:15], 16)
 
 
@@ -102,14 +101,28 @@ def gram_hashes(text: str, k: int, h) -> list[int]:
         h(s) % MERSENNE_31 for s in dict.fromkeys(shingles(text, k))))
 
 
-def simhash60(text: str, bits: int, k: int) -> int:
-    """Charikar SimHash over the DISTINCT k-shingles' 60-bit md5 hashes:
-    bit j is set iff more shingles have hash bit j set than clear."""
-    hs = np.array([md5_60(s) for s in set(shingles(text, k))],
-                  dtype=np.int64)
+def simhash_vote(hashes, bits: int) -> int:
+    """Charikar SimHash bit vote over feature hashes (each < 2^63): bit j
+    (j < ``bits``) is set iff more hashes have bit j set than clear.  No
+    hashes give 0.  The one bit-vote kernel behind every SimHash
+    signature."""
+    hs = np.fromiter(hashes, dtype=np.int64)
     shifts = np.arange(bits, dtype=np.int64)
     counts = (2 * ((hs[:, None] >> shifts) & 1) - 1).sum(axis=0)
     return int((np.int64(1) << shifts)[counts > 0].sum())
+
+
+def simhash60(text: str, bits: int, k: int) -> int:
+    """SimHash of the DISTINCT k-shingles under their 60-bit md5 hash."""
+    return simhash_vote((md5_60(s) for s in set(shingles(text, k))), bits)
+
+
+def simhash_words(text: str, bits: int) -> int:
+    """SimHash of the DISTINCT lower-cased words under the md5 shingle
+    hash reduced mod 2^31-1 (``dedup.shingle_hash``), so ``bits`` <= 31.
+    Text with no words gives 0."""
+    return simhash_vote((md5_60(w.encode("utf-8")) % MERSENNE_31
+                         for w in set(word_tokens(text.lower()))), bits)
 
 
 # --- Gopher dup-ngram ladder -------------------------------------------------

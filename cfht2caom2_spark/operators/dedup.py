@@ -29,12 +29,14 @@ via ``connected_components``.
 
 from __future__ import annotations
 
+import operator
 import re
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.kernels import MERSENNE_31
+from ..functions.kernels import MERSENNE_31, simhash60
 from ..functions.tokens import md5_fingerprint, word_ngrams, word_tokens
 from ..session import release
 
@@ -161,14 +163,15 @@ def signature_agreement(sig_a: Column, sig_b: Column,
                         num_perms: int) -> Column:
     """The MinHash Jaccard estimate (Broder 1997): the fraction of the
     ``num_perms`` signature components on which two signatures agree, as a
-    double of granularity 1/num_perms."""
-    return (
-        F.size(F.filter(
-            F.zip_with(sig_a, sig_b,
-                       lambda a, b: F.when(a == b, 1).otherwise(0)),
-            lambda x: x == 1,
-        )).cast("double") / F.lit(float(num_perms))
-    )
+    double of granularity 1/num_perms.  A literal sum of ``num_perms``
+    element comparisons, which codegens (a ``zip_with`` + ``filter`` form
+    would run two interpreted lambdas per pair), the same shape as
+    ``banded_keys``; a missing or NULL element counts as disagreement."""
+    agree = [F.when(F.try_element_at(sig_a, F.lit(i))
+                    == F.try_element_at(sig_b, F.lit(i)), 1).otherwise(0)
+             for i in range(1, num_perms + 1)]
+    return reduce(operator.add, agree).cast("double") \
+        / F.lit(float(num_perms))
 
 
 def lsh_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
@@ -192,87 +195,26 @@ def lsh_candidate_pairs(df: DataFrame, id_col: str, text_col: str,
 
 # --- simhash -------------------------------------------------------------------
 
-def hash60(feature: Column) -> Column:
-    """Full-width oracle-portable hash: first 15 hex chars of md5 = 60 bits
-    (DuckDB twin: ``('0x' || substr(md5(x), 1, 15))::BIGINT``).  Unlike
-    shingle_hash there is NO mod-2^31 reduction — simhash reads individual
-    BITS of the feature hash, and a 31-bit hash would pin every bit above
-    30 to a constant."""
-    return F.conv(F.substring(F.md5(feature), 1, 15), 16, 10).cast("bigint")
-
-
-def hash60_fast(feature: Column) -> Column:
-    """Production 60-bit hash: xxhash64 (JVM intrinsic, no hex round-trip /
-    BigInteger) masked to the low 60 bits so downstream math stays in
-    non-negative BIGINT range.  Different hash family than hash60 (no
-    Python twin), so values differ; the packing shuffle key uses it."""
-    return F.xxhash64(feature).bitwiseAND(F.lit((1 << 60) - 1))
-
-
-def simhash(text: Column, bits: int = 16, features_fn=None,
-            hash_fn=None) -> Column:
-    """Per-row SimHash — pure array expressions, no shuffle (Charikar
-    2002).  Bit j of the output is 1 iff the sum over features of ±1
-    (feature-hash bit j) is positive.
-
-    Defaults keep the original q_simhash surface: features = distinct
-    words, hash = shingle_hash (31-bit — fine for bits <= 31).  With
-    shingle features + hash60 this is the expression reference of
-    ``_simhash_md5_frame`` (the signature ``simhash_pairs`` uses), where
-    ordering matters and all 60 hash bits carry signal."""
-    if features_fn is None:
-        def features_fn(t):
-            return F.array_distinct(word_tokens(F.lower(t)))
-    hashes = F.transform(features_fn(text), hash_fn or shingle_hash)
-    # ONE fold over the hash array accumulating all per-bit counters (per-bit
-    # separate folds would re-evaluate the token/md5 pipeline `bits` times)
-    zeros = F.array_repeat(F.lit(0).cast("bigint"), bits)
-
-    def step(acc: Column, h: Column) -> Column:
-        contrib = F.array(*[
-            F.when(F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, F.lit(1))
-            .otherwise(F.lit(-1)).cast("bigint")
-            for j in range(bits)
-        ])
-        return F.zip_with(acc, contrib, lambda a, b: a + b)
-
-    counts = F.aggregate(hashes, zeros, step)
-    # assemble the bit pattern in ONE weighted traversal of counts (indexing
-    # counts per bit would re-evaluate the aggregate per reference)
-    return F.aggregate(
-        counts,
-        F.struct(F.lit(0).cast("bigint").alias("v"),
-                 F.lit(1).cast("bigint").alias("w")),
-        lambda acc, c: F.struct(
-            (acc["v"] + F.when(c > 0, acc["w"]).otherwise(F.lit(0).cast("bigint"))).alias("v"),
-            (acc["w"] * 2).alias("w"),
-        ),
-        lambda acc: acc["v"],
-    )
-
-
-def _simhash_md5_frame(docs: DataFrame, id_col: str, text_col: str,
-                       bits: int, k: int) -> DataFrame:
-    """(_id, _sh) simhash signatures over md5-hashed word k-shingles via
-    one vectorized Python crossing (``kernels.simhash60``) — bit-identical
-    to ``simhash(features_fn=word_shingles(k), hash_fn=hash60)``: hashlib
-    md5 over UTF-8 == F.md5, first 15 hex chars == the 60-bit hash, and the
-    per-bit ±1 sums / weighted reassembly are exact integer arithmetic.
-    Pinned NULL rule: NULL text signs as 0 — the expression fold hashes
-    word_shingles(NULL) = [NULL], whose per-bit contrib hits the
-    otherwise(-1) branch for every bit, so no count goes positive (NOT a
-    NULL signature — all NULL-text docs are hamming-0 pairs of each other
-    and of any doc whose simhash is within max_hamming of 0)."""
+def simhash_frame(docs: DataFrame, id_col: str, text_col: str, sign,
+                  null_sig: int | None) -> DataFrame:
+    """(_id, _sh bigint) SimHash signatures from one vectorized Python
+    crossing: ``sign(text)`` for each non-NULL text (a ``kernels``
+    signature over ``kernels.simhash_vote``, the one bit vote),
+    ``null_sig`` for NULL text.  ``simhash_pairs`` signs 3-shingles under
+    the 60-bit md5 (``kernels.simhash60``) and NULL text as 0;
+    ``q_simhash`` signs lower-cased words (``kernels.simhash_words``) and
+    NULL text as NULL.  Both equal the JVM expression fold
+    (tests/reference_impl.py ``simhash``) bit for bit, NULL rules included:
+    hashlib md5 over UTF-8 == F.md5, and the per-bit ±1 sums and the
+    reassembly are exact integer arithmetic."""
     import pandas as pd
-
-    from ..functions.kernels import simhash60
 
     def sig_batches(batches):
         for pdf in batches:
             yield pd.DataFrame({
                 "_id": pdf[id_col].to_numpy(),
-                "_sh": pd.Series([0 if t is None else simhash60(t, bits, k)
-                                  for t in pdf[text_col]], dtype="int64"),
+                "_sh": pd.array([null_sig if t is None else sign(t)
+                                 for t in pdf[text_col]], dtype="Int64"),
             })
 
     id_type = docs.select(id_col).schema.fields[0].dataType.simpleString()
@@ -315,12 +257,13 @@ def simhash_pairs(docs: DataFrame, bits: int = 60,
             "for exact banded recall")
     band_bits = bits // n_bands
     mask = (1 << band_bits) - 1
-    # the expression form (simhash + hash60) folds a `bits`-element contrib
-    # array per shingle per doc (~bits × shingles interpreted lambda
-    # evals); one mapInPandas crossing computes the identical signature
-    # with hashlib md5 + one numpy bit-matrix per doc, pinned by the
-    # brute-force DuckDB oracle
-    sh = _simhash_md5_frame(docs, "doc_id", "text", bits, 3)
+    # one mapInPandas crossing signs every doc (hashlib md5 + one numpy
+    # bit-matrix per doc) where the expression fold would run ~bits ×
+    # shingles interpreted lambda evals per doc; NULL text signs as 0, so
+    # NULL-text docs are hamming-0 pairs of each other and of any doc
+    # within max_hamming of 0
+    sh = simhash_frame(docs, "doc_id", "text",
+                       lambda t: simhash60(t, bits, 3), 0)
     # both sides of the banded self-join would otherwise re-run the whole
     # shingle+hash+fold signature from the scan (2x the dominant cost);
     # materialize the slim (id, 8-byte simhash) frame once — at corpus

@@ -77,24 +77,18 @@ def _exploded_features(docs: DataFrame, id_col: str, text_col: str,
 
 
 def feature_weights(feats: DataFrame, min_count: int,
-                    hash_buckets: int | None = None,
-                    pre_hashed: bool = False) -> DataFrame:
+                    hash_buckets: int | None = None) -> DataFrame:
     """(feature, lambda_scaled) — the bounded importance-weight table.
 
     String mode (``hash_buckets is None``): vocabulary pruned to features
     with raw count >= min_count (the HAVING rides IN the aggregation, so the
-    singleton tail never leaves the combiner).  Hashed mode: features fold
-    to ``xxhash64 % hash_buckets`` FIRST, so the table is <= hash_buckets
-    rows by construction regardless of corpus size — the true DSIR hashing
-    trick and the production path.  ``pre_hashed`` says the caller already
-    applied the fold (importance_weights' single-pass stream); the
-    hash_buckets value then only selects the no-prune hashed-mode counting.
+    singleton tail never leaves the combiner).  Hashed mode: the caller has
+    already folded each feature to ``xxhash64 % hash_buckets``
+    (importance_weights' single-pass stream), so the table is <=
+    hash_buckets rows by construction regardless of corpus size — the true
+    DSIR hashing trick and the production path — and no bucket is pruned.
     """
     f = feats.filter(F.col("feature").isNotNull())
-    if hash_buckets is not None and not pre_hashed:
-        f = f.withColumn("feature",
-                         F.pmod(F.xxhash64("feature"),
-                                F.lit(hash_buckets)).cast("string"))
     counts = (
         f.groupBy("feature")
         .agg(F.count(F.lit(1)).alias("cr"),
@@ -155,7 +149,7 @@ def importance_weights(docs: DataFrame, target_pred: Column,
                    F.lit(hash_buckets)).cast("string"))
         feats = feats.localCheckpoint(eager=False)
     lam = feature_weights(feats, min_count=min_count,
-                          hash_buckets=hash_buckets, pre_hashed=True)
+                          hash_buckets=hash_buckets)
     scoring = feats
     per_doc = (
         scoring

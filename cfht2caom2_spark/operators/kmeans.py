@@ -34,10 +34,10 @@ Scale design (the 100 TB story):
   * Empty clusters keep their previous centroid (standard Lloyd's repair),
     so k never silently shrinks.
 
-``init_centroids`` is deterministic and oracle-portable: the k vectors with
-the smallest (hash60("<id>:<seed>"), id) key — the packing module's epoch
-permutation applied to centroid seeding, reproducible in DuckDB with the
-same md5 expression, on any cluster size.
+``init_centroids`` is deterministic and oracle-portable: the k usable
+vectors with the smallest (hash60("<id>:<seed>"), id) key — the packing
+module's epoch permutation applied to centroid seeding, reproducible in
+DuckDB with the same md5 expression, on any cluster size.
 """
 
 from __future__ import annotations
@@ -50,13 +50,22 @@ from .packing import shuffle_key
 
 def init_centroids(df: DataFrame, k: int, seed: int = 0,
                    ) -> list[list[float]]:
-    """Deterministic seeding: the k (vec_id, embedding) vectors with the
-    smallest (hash60(id:seed), id) shuffle key, cluster id = key rank.
-    Bounded collect — exactly k rows regardless of corpus size."""
+    """Deterministic seeding: the k usable (vec_id, embedding) vectors with
+    the smallest (hash60(id:seed), id) shuffle key, cluster id = key rank.
+    Usable means ``_nearest_cells`` can rank it: not NULL, no NULL element,
+    and the corpus dimension (the most common length among the other
+    usable vectors, the shortest on a tie).  So no seed is a centroid no
+    vector can join.  The registry oracle (``_KM_INIT_SQL``) seeds from
+    every row; the two agree on corpora without degenerate vectors, like
+    the testdata.  One aggregate and one bounded collect — exactly k rows
+    regardless of corpus size."""
+    vecs = df.select(F.col("vec_id").alias("_id"),
+                     F.transform(F.col("embedding"),
+                                 lambda x: x.cast("double")).alias("_v")) \
+        .filter(~F.exists("_v", lambda x: x.isNull()))
+    dim = vecs.agg(F.mode(F.size("_v"), deterministic=True)).first()[0]
     rows = (
-        df.select(F.col("vec_id").alias("_id"),
-                  F.transform(F.col("embedding"),
-                              lambda x: x.cast("double")).alias("_v"))
+        vecs.filter(F.size("_v") == F.lit(dim))
         .withColumn("_key", shuffle_key(F.col("_id"), seed))
         .orderBy("_key", "_id")
         .limit(k)

@@ -39,14 +39,28 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.tokens import word_tokens, ws_token_count
-from .dedup import hash60
+
+
+def hash60(feature: Column) -> Column:
+    """Oracle-portable 60-bit hash: the first 15 hex chars of md5 (DuckDB
+    twin: ``('0x' || substr(md5(x), 1, 15))::BIGINT``; Python twin
+    ``kernels.md5_60``)."""
+    return F.conv(F.substring(F.md5(feature), 1, 15), 16, 10).cast("bigint")
+
+
+def hash60_fast(feature: Column) -> Column:
+    """Production 60-bit hash: xxhash64 (JVM intrinsic, no hex round-trip /
+    BigInteger) masked to the low 60 bits so downstream math stays in
+    non-negative BIGINT range.  A different hash family from hash60, so
+    the values differ; the CLI's pack command keys its shuffle with it."""
+    return F.xxhash64(feature).bitwiseAND(F.lit((1 << 60) - 1))
 
 
 def shuffle_key(id_col: Column, seed: int, hash_fn=None) -> Column:
     """Deterministic pseudo-random sort key for a document id: hash of
     ``"<id>:<seed>"``.  Default ``hash_fn`` is the oracle-portable md5-based
     hash60 (identical expression in DuckDB); production swaps
-    ``dedup.hash60_fast`` (xxhash64) — same contract as the shingle-hash
+    ``hash60_fast`` (xxhash64) — same contract as the shingle-hash
     pairs used throughout the dedup family."""
     return (hash_fn or hash60)(
         F.concat_ws(":", id_col.cast("string"), F.lit(str(seed))))

@@ -35,15 +35,15 @@ A span of duplicated text of length L >= K produces L-K+1 consecutive
 marked windows that merge back into exactly one [start, end] interval, so
 the output is independent of how the span was tiled.
 
-``key_fn=None`` keeps the raw window string as the key — exact semantics,
-zero collisions, and DuckDB-portable (the oracle runs the same strings).
-Production passes ``key_fn=lambda c: F.xxhash64(c)``: 8-byte keys through
-the shuffle instead of ~8*K-byte strings; a collision can only ADD a false
-span (conservative, never loses a true duplicate).  The 64-bit space
-matters: the dedup family's crc32 hash lives mod 2^31-1, where corpus-wide
-window-key cardinality collides by the birthday bound at ~10^5 windows
-(measured: 2 false spans on the 500-doc test table) — fine for MinHash
-signatures (per-doc minima), wrong for global key identity.
+Window keys are the ``F.xxhash64`` of the window string: 8-byte keys
+through the shuffle instead of ~8*K-byte strings.  The output equals the
+string-key spec (the DuckDB oracles run the raw window strings) unless two
+distinct windows collide in 64 bits, which can only ADD a false span,
+never lose a true duplicate.  The 64-bit space matters: the dedup family's
+crc32 hash lives mod 2^31-1, where corpus-wide window-key cardinality
+collides by the birthday bound at ~10^5 windows (measured: 2 false spans
+on the 500-doc test table) — fine for MinHash signatures (per-doc minima),
+wrong for global key identity.
 """
 
 from __future__ import annotations
@@ -56,9 +56,10 @@ from ..functions.tokens import word_tokens
 
 def _window_stream(docs: DataFrame, id_col: str, text_col: str, k: int,
                    ord_expr: Column | None = None) -> DataFrame:
-    """The exploded (id[, _ord], pos, key-string) window stream built in one
-    vectorized Python crossing (round 6, guide §4.2) — byte-identical
-    strings to ``posexplode(word_ngrams(word_tokens(lower(text)), k))``:
+    """The exploded (id[, _ord], pos, _k) window stream: one vectorized
+    Python crossing (round 6, guide §4.2) builds the window strings,
+    byte-identical to ``posexplode(word_ngrams(word_tokens(lower(text)),
+    k))``, and ``_k`` is their ``xxhash64`` (module docstring):
     lower-cased space-only-trimmed ASCII-whitespace tokens, K-token windows
     single-space-joined, docs with < k tokens (or NULL text) emitting
     nothing.  The zip-cascade expression built each window through k-1
@@ -107,7 +108,8 @@ def _window_stream(docs: DataFrame, id_col: str, text_col: str, k: int,
             out["_k"] = keys
             yield out
 
-    return src.mapInPandas(gen, out_schema)
+    return src.mapInPandas(gen, out_schema) \
+        .withColumn("_k", F.xxhash64("_k"))
 
 
 def _span_intervals(stream: DataFrame, id_col: str, k: int,
@@ -176,7 +178,7 @@ def _span_intervals(stream: DataFrame, id_col: str, k: int,
 
 def repeated_spans(docs: DataFrame, id_col: str = "doc_id",
                    text_col: str = "text", k: int = 50,
-                   key_fn=None, min_count: int = 2) -> DataFrame:
+                   min_count: int = 2) -> DataFrame:
     """Per-doc duplicated-span summary:
     (id, n_tokens, n_spans, dup_token_count, dup_token_frac).
 
@@ -195,10 +197,8 @@ def repeated_spans(docs: DataFrame, id_col: str = "doc_id",
     ``localCheckpoint`` pins the slim stream so every consumer reads the
     blocks; measured at sf1.0 this took the registry query from ~20 s to
     ~7 s."""
-    stream = _window_stream(docs, id_col, text_col, k)
-    if key_fn is not None:
-        stream = stream.withColumn("_k", key_fn(F.col("_k")))
-    stream = stream.localCheckpoint(eager=False)
+    stream = _window_stream(docs, id_col, text_col, k) \
+        .localCheckpoint(eager=False)
     spans = _span_intervals(stream, id_col, k, min_count,
                             exempt_first=False)
 
@@ -229,7 +229,7 @@ def repeated_spans(docs: DataFrame, id_col: str = "doc_id",
 
 def remove_repeated_spans(docs: DataFrame, id_col: str = "doc_id",
                           text_col: str = "text", k: int = 50,
-                          key_fn=None, min_count: int = 2,
+                          min_count: int = 2,
                           order_col: str | None = None,
                           persist_tracker: list | None = None) -> DataFrame:
     """ExactSubstr REMOVAL (Lee et al. §4.1 keep-one semantics, window-
@@ -258,10 +258,8 @@ def remove_repeated_spans(docs: DataFrame, id_col: str = "doc_id",
         F.col(id_col), F.col(text_col), ord_expr.alias("_ord"),
         word_tokens(F.coalesce(F.col(text_col), F.lit(""))).alias("_toks"))
 
-    stream = _window_stream(docs, id_col, text_col, k, ord_expr=ord_expr)
-    if key_fn is not None:
-        stream = stream.withColumn("_k", key_fn(F.col("_k")))
-    stream = stream.localCheckpoint(eager=False)
+    stream = _window_stream(docs, id_col, text_col, k, ord_expr=ord_expr) \
+        .localCheckpoint(eager=False)
     if persist_tracker is not None:
         persist_tracker.append(stream)
     spans = _span_intervals(stream, id_col, k, min_count, exempt_first=True)

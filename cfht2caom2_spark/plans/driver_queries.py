@@ -29,7 +29,7 @@ from ..functions.scrub import scrubbed
 from ..operators import similarity as SIM
 from ..operators.decision import assemble_rules
 from ..operators.dedup import (MERSENNE_31, _perm_params, lsh_candidate_pairs,
-                               shingle_hash, simhash, word_shingles)
+                               shingle_hash, word_shingles)
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -599,14 +599,21 @@ FROM reach GROUP BY node
 # --------------------------------------------------------------------------
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """16-bit SimHash of each doc's distinct lower-cased words
+    (``kernels.simhash_words``) through the SimHash frame
+    ``simhash_pairs`` signs with; NULL text signs as NULL."""
+    from ..functions.kernels import simhash_words
+    from ..operators.dedup import simhash_frame
+
     docs = _t_wide(spark, sf_dir, "documents")
-    return docs.select("doc_id", simhash(F.col("text"), bits=16).alias("simhash16"))
+    return simhash_frame(docs, "doc_id", "text",
+                         lambda t: simhash_words(t, 16), None).select(
+        F.col("_id").alias("doc_id"), F.col("_sh").alias("simhash16"))
 
 
 def _simhash_cte(bits: int, out_col: str) -> str:
-    """DuckDB twin of operators.dedup.simhash at ``bits`` over lower-cased
-    word features, like its default — CTE chain ending in
-    sh(doc_id, {out_col})."""
+    """DuckDB twin of ``kernels.simhash_words`` at ``bits`` — CTE chain
+    ending in sh(doc_id, {out_col})."""
     return f"""w AS (
   SELECT doc_id, unnest(list_distinct({_LTOKS})) AS tok FROM documents
 ),
@@ -654,8 +661,8 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _simhash60_shingle_cte() -> str:
-    """DuckDB twin of simhash(bits=60, features=3-shingles, hash=hash60):
-    CTE chain ending in sh(doc_id, s60)."""
+    """DuckDB twin of ``kernels.simhash60`` at bits=60, k=3: CTE chain
+    ending in sh(doc_id, s60)."""
     return f"""t AS (
   SELECT doc_id, {_shingles_sql(_LTOKS, 3)} AS shl FROM documents
 ),
@@ -693,7 +700,7 @@ TOPK_K, TOPK_NQUERIES = 10, 5
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """VERIFICATION BASELINE, not a production path: brute-force cosine over
     every (query, vector) pair — run only at small SF to cross-check ANN
-    ranking.  The scale paths are q_ann_lsh / q_ivf_topk."""
+    ranking.  The scale path is q_ann_lsh."""
     emb = _t_wide(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < TOPK_NQUERIES)
     return SIM.cosine_topk(emb, queries, k=TOPK_K).select(
@@ -722,6 +729,8 @@ SELECT query_id, vec_id, rank FROM (
 
 
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sign-cell LSH top-k (operators/similarity.py::lsh_ann): candidates
+    restricted to the query's 8-plane sign bucket, ranked by cosine."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < TOPK_NQUERIES)
     return SIM.lsh_ann(emb, queries, k=TOPK_K, n_planes=8).select(
@@ -1131,15 +1140,6 @@ FROM documents GROUP BY CUBE (lang, source)
 """
 
 
-def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped-map (applyInPandas) IVF ANN — numpy matmul per cell; result-
-    identical to q_ann_lsh (same bucketing/ranking), so it shares its oracle."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < TOPK_NQUERIES)
-    return SIM.ivf_topk_grouped(emb, queries, k=TOPK_K, n_planes=8).select(
-        "query_id", "vec_id", "rank")
-
-
 # --------------------------------------------------------------------------
 # Cross-document boilerplate line removal (documents)
 # --------------------------------------------------------------------------
@@ -1257,7 +1257,6 @@ QUERIES: dict[str, QueryFn] = {
     "q_ann_lsh": q_ann_lsh,
     "q_embedding_neardup": q_embedding_neardup,
     "q_semantic_keep_one": q_semantic_keep_one,
-    "q_ivf_topk": q_ivf_topk,
     "q_source_lang_consensus": q_source_lang_consensus,
     "q_cube_report": q_cube_report,
     "q_pricing_report": q_pricing_report,
@@ -1300,7 +1299,6 @@ ORACLES: dict[str, str] = {
     "q_ann_lsh": Q_ANN_LSH_SQL,
     "q_embedding_neardup": Q_EMBEDDING_NEARDUP_SQL,
     "q_semantic_keep_one": Q_SEMANTIC_KEEP_ONE_SQL,
-    "q_ivf_topk": Q_ANN_LSH_SQL,
     "q_source_lang_consensus": Q_SOURCE_LANG_CONSENSUS_SQL,
     "q_cube_report": Q_CUBE_REPORT_SQL,
     "q_pricing_report": Q_PRICING_REPORT_SQL,
@@ -1781,9 +1779,10 @@ SPAN_MIN_COUNT = 2
 
 def q_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ExactSubstr-style duplicated-span summary per doc: merged >=K-token
-    runs occurring more than once anywhere in the corpus (string window
-    keys — the exact/oracle mode; production swaps key_fn=crc32, pytest
-    pins the swap equivalence)."""
+    runs occurring more than once anywhere in the corpus.  The operator
+    keys windows by xxhash64, as the pipeline's span block does; the
+    oracle runs the raw window strings, which give the same rows unless two
+    64-bit keys collide."""
     from ..operators.spans import repeated_spans
 
     docs = _t_wide(spark, sf_dir, "documents")
@@ -1926,37 +1925,6 @@ LEFT JOIN keptagg USING (doc_id)
 
 QUERIES["q_span_scrub"] = q_span_scrub
 ORACLES["q_span_scrub"] = Q_SPAN_SCRUB_SQL
-
-
-def q_repeated_spans_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production-hash twin of q_repeated_spans: ``key_fn=xxhash64`` — the
-    8-byte window keys build_pipeline ships (pipeline.py span block) —
-    instead of the oracle mode's raw window strings through the shuffle.
-    No SQL oracle (DuckDB has no xxhash64); pytest pins output equality
-    against the string-key path (hash-agnostic up to 64-bit collisions,
-    ~1e-9 at this cardinality), the same discipline as the dedup/decontam
-    ``_fast`` twins.  The bench trend line quotes THIS query's cost."""
-    from ..operators.spans import repeated_spans
-
-    docs = _t_wide(spark, sf_dir, "documents")
-    return repeated_spans(docs, id_col="doc_id", text_col="text",
-                          k=SPAN_K, min_count=SPAN_MIN_COUNT,
-                          key_fn=lambda c: F.xxhash64(c))
-
-
-def q_span_scrub_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production-hash twin of q_span_scrub (xxhash64 window keys; see
-    q_repeated_spans_fast)."""
-    from ..operators.spans import remove_repeated_spans
-
-    docs = _t_wide(spark, sf_dir, "documents")
-    return remove_repeated_spans(docs, id_col="doc_id", text_col="text",
-                                 k=SPAN_K, min_count=SPAN_MIN_COUNT,
-                                 key_fn=lambda c: F.xxhash64(c))
-
-
-NO_ORACLE_QUERIES["q_repeated_spans_fast"] = q_repeated_spans_fast
-NO_ORACLE_QUERIES["q_span_scrub_fast"] = q_span_scrub_fast
 
 
 def q_pipeline_flagship_span(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3012,7 +2980,7 @@ def q_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN over trained-centroid cells: corpus in its nearest cell,
     each query probes its KM_NPROBE nearest cells, cosine top-k within
     the probed cells (operators/kmeans.py::ivf_centroid_topk).  The
-    density-tracking sibling of q_ivf_topk's sign-bucket cells."""
+    density-tracking sibling of q_ann_lsh's sign-bucket cells."""
     from ..operators.kmeans import ivf_centroid_topk
 
     emb = _t_wide(spark, sf_dir, "embeddings")

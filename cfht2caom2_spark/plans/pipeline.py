@@ -206,7 +206,7 @@ def build_pipeline(pages: DataFrame, spark: SparkSession,
             span_input,
             id_col="_sp_id", text_col="extracted_text",
             k=profile.span_k, min_count=profile.span_min_count,
-            key_fn=lambda c: F.xxhash64(c), order_col="_sp_ord",
+            order_col="_sp_ord",
             persist_tracker=pins,
         ).select("_sp_id", F.col("cleaned_text").alias("_sp_text"),
                  "removed_token_count")

@@ -2,6 +2,9 @@
 
 The package arrives via --py-files (north_rule launch shape); this main only
 parses args and delegates to the same run_batch every other mode uses.
+``--pages`` is read the way ``python -m cfht2caom2_spark batch`` reads it
+(``sources.table.open_table``): a plain parquet dir, a SnapshotTable root
+(time travel via ``--snapshot-id``) or an Iceberg catalog identifier.
 """
 import argparse
 import json
@@ -9,6 +12,7 @@ import json
 from pyspark.sql import SparkSession
 
 from cfht2caom2_spark.plans.pipeline import run_batch
+from cfht2caom2_spark.sources.table import open_table
 
 if __name__ == "__main__":
     p = argparse.ArgumentParser()
@@ -28,7 +32,8 @@ if __name__ == "__main__":
 
     profile = replace(DEFAULT_PROFILE, dedup_policy=args.dedup_policy,
                       host_lang_backfill=args.host_backfill)
-    pages = spark.read.parquet(args.pages)
+    pages = open_table(spark, args.pages).read(
+        spark, snapshot_id=args.snapshot_id or None)
     if "p_day" in pages.columns:
         pages = pages.drop("p_day")
     print(json.dumps(run_batch(spark, pages, args.out, profile=profile,

@@ -13,9 +13,9 @@ Spark expression layer does (tokenization, stats, rules, minhash dedup) is
 re-derived here with independent code.
 
 The Spark expression references at the bottom are not part of the labeler:
-``minhash_signature`` and ``gram_set`` are the JVM side of the word-shingle
-kernel parity tests and build on the engine's Column-level ``word_shingles``
-and shingle hashes; ``char_run_sq_sum``, ``char_simpson`` and
+``minhash_signature``, ``gram_set`` and ``simhash`` are the JVM side of the
+word-shingle kernel parity tests and build on the engine's Column-level
+``word_shingles`` and shingle hashes; ``char_run_sq_sum``, ``char_simpson`` and
 ``distinct_char_frac`` are the Column folds ``char_stats_fast`` must match;
 ``quality_stat_exprs`` and the 14 stat expressions it assembles are the
 JVM semantics ``kernels.quality_stats`` must match; ``nearest_centroid``,
@@ -312,6 +312,40 @@ def gram_set(text, k: int = 3, hash_fn=None):
 
     return F.array_distinct(
         F.transform(word_shingles(text, k), hash_fn or shingle_hash))
+
+
+def simhash(text, bits: int, features_fn, hash_fn):
+    """Per-row SimHash as one expression fold (Charikar 2002): bit j is 1
+    iff the sum over ``features_fn(text)`` of ±1 (bit j of ``hash_fn`` of
+    the feature) is positive.  Distinct lower-cased words under
+    ``shingle_hash`` are ``kernels.simhash_words``; ``word_shingles`` under
+    ``packing.hash60`` is ``kernels.simhash60``.  NULL text: the word
+    features are NULL, so the signature is NULL; ``word_shingles(NULL)`` is
+    [NULL], whose contribution is -1 at every bit, so the signature is 0."""
+    from pyspark.sql import functions as F
+
+    hashes = F.transform(features_fn(text), hash_fn)
+    zeros = F.array_repeat(F.lit(0).cast("bigint"), bits)
+
+    def step(acc, h):
+        contrib = F.array(*[
+            F.when(F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, F.lit(1))
+            .otherwise(F.lit(-1)).cast("bigint")
+            for j in range(bits)
+        ])
+        return F.zip_with(acc, contrib, lambda a, b: a + b)
+
+    counts = F.aggregate(hashes, zeros, step)
+    return F.aggregate(
+        counts,
+        F.struct(F.lit(0).cast("bigint").alias("v"),
+                 F.lit(1).cast("bigint").alias("w")),
+        lambda acc, c: F.struct(
+            (acc["v"] + F.when(c > 0, acc["w"])
+             .otherwise(F.lit(0).cast("bigint"))).alias("v"),
+            (acc["w"] * 2).alias("w")),
+        lambda acc: acc["v"],
+    )
 
 
 # --- Spark expression references of the character statistics ---------------

@@ -87,7 +87,8 @@ def test_hashed_mode_table_bounded(spark):
                                                  feature_weights)
     docs = _corpus(spark)
     feats = _exploded_features(docs, "doc_id", "text",
-                               F.col("lang") == "en", 2)
+                               F.col("lang") == "en", 2).withColumn(
+        "feature", F.pmod(F.xxhash64("feature"), F.lit(7)).cast("string"))
     lam = feature_weights(feats, min_count=1, hash_buckets=7)
     assert lam.count() <= 7
 

@@ -9,7 +9,8 @@ reference, bit for bit, on hypothesis-drawn batches of adversarial text
 (NULL, empty, whitespace-only, non-ASCII whitespace, non-ASCII case); static
 checks keep the tokenizer, the n-gram join, the day key, the MinHash
 modulus, the heuristic stats and the nearest-centroid assignment from being
-re-forked into other modules.
+re-forked into other modules, and the deleted sketch twins from coming
+back.
 """
 
 from __future__ import annotations
@@ -28,16 +29,18 @@ from pyspark.sql import functions as F
 from cfht2caom2_spark.functions import kernels
 from cfht2caom2_spark.functions.tokens import word_ngrams, word_tokens
 from cfht2caom2_spark.operators.decontam import gram_set_frame
-from cfht2caom2_spark.operators.dedup import (_simhash_md5_frame, hash60,
-                                              hash60_fast, minhash_sig_frame,
+from cfht2caom2_spark.operators.dedup import (minhash_sig_frame,
                                               shingle_hash, shingle_hash_fast,
-                                              simhash, word_shingles)
+                                              simhash_frame, word_shingles)
+from cfht2caom2_spark.operators.packing import hash60, hash60_fast
 
-from .reference_impl import gram_set, minhash_signature, quality_stat_exprs
+from .reference_impl import (gram_set, minhash_signature, quality_stat_exprs,
+                             simhash)
 
 PKG = Path(__file__).resolve().parent.parent / "cfht2caom2_spark"
 KERNELS = PKG / "functions" / "kernels.py"
 TOKENS = PKG / "functions" / "tokens.py"
+SPANS = PKG / "operators" / "spans.py"
 
 # ASCII whitespace (Java's \s), the characters Java's \s does NOT match but
 # str.split() does (\x1c, NBSP, U+3000, U+2028), and non-ASCII case pairs
@@ -54,6 +57,7 @@ _ADVERSARIAL = [None, "", "   ", " \t\n\x0b\f\r ", "a b c\u3000d e",
                 "spam spam spam spam eggs ham", "x y z x y z x y z w"]
 _PERMS = 8
 _BITS = 60
+_WORD_BITS = 16
 
 
 def _as_json(name: str, value):
@@ -68,7 +72,8 @@ def _as_json(name: str, value):
 @example(texts=_ADVERSARIAL, k=1)
 def test_signature_frames_match_expression_references(spark, texts, k):
     """minhash_sig_frame (crc32, md5), gram_set_frame (md5, crc32) and
-    _simhash_md5_frame equal their expression references bit for bit,
+    simhash_frame (md5 shingles as simhash_pairs signs, lower-cased words
+    as q_simhash signs) equal their expression references bit for bit,
     NULL rules included.  Values are compared as JSON so each side is one
     Spark job: the expressions in one select, the frames in one union."""
     # two slices, not one per core: each Python task has a fixed cost
@@ -80,9 +85,11 @@ def test_signature_frames_match_expression_references(spark, texts, k):
         "mh_md5": minhash_signature(t, _PERMS, k, shingle_hash),
         "gs_md5": gram_set(t, k, shingle_hash),
         "gs_crc": gram_set(t, k, shingle_hash_fast),
-        "sim": simhash(t, bits=_BITS,
-                       features_fn=lambda c: word_shingles(c, k),
-                       hash_fn=hash60),
+        "sim": simhash(t, _BITS, lambda c: word_shingles(c, k), hash60),
+        "sim_words": simhash(
+            t, _WORD_BITS,
+            lambda c: F.array_distinct(word_tokens(F.lower(c))),
+            shingle_hash),
     }
     frames = {
         "mh_crc": minhash_sig_frame(df, "id", "t", _PERMS, k,
@@ -97,9 +104,15 @@ def test_signature_frames_match_expression_references(spark, texts, k):
         "gs_crc": gram_set_frame(df, "id", "t", k,
                                  hash_fn=shingle_hash_fast).select(
             "id", F.col("_grams").alias("v")),
-        "sim": _simhash_md5_frame(df, "id", "t", _BITS, k).select(
-            F.col("_id").alias("id"), F.col("_sh").alias("v")),
+        "sim": simhash_frame(
+            df, "id", "t", lambda x: kernels.simhash60(x, _BITS, k), 0),
+        "sim_words": simhash_frame(
+            df, "id", "t", lambda x: kernels.simhash_words(x, _WORD_BITS),
+            None),
     }
+    frames.update({n: frames[n].select(F.col("_id").alias("id"),
+                                       F.col("_sh").alias("v"))
+                   for n in ("sim", "sim_words")})
     want = {(name, r["id"]): r[name]
             for r in df.select("id", *[_as_json(n, e)
                                        for n, e in exprs.items()]).collect()
@@ -370,6 +383,25 @@ def test_nearest_centroid_lives_only_in_the_kernel():
             if _is_literal_matrix(node):
                 forks.append(f"{site}:{node.lineno} literal matrix")
     assert not forks, forks
+
+
+# twins deleted for a single path each: the BLAS copy of lsh_ann and the
+# expression SimHash fold (now tests/reference_impl.py ``simhash``)
+_DELETED_TWINS = {"ivf_topk_grouped", "simhash"}
+
+
+def test_sketch_operators_have_one_path_each():
+    """``similarity.lsh_ann`` is the one sign-cell top-k and
+    ``kernels.simhash_vote`` the one SimHash bit vote: no package module
+    defines ``ivf_topk_grouped`` or an expression ``simhash``.  The span
+    window key is always xxhash64: spans.py has no ``key_fn``."""
+    forks = [f"{path.relative_to(PKG)}:{node.lineno} def {node.name}"
+             for path, tree in _package_modules()
+             for node in ast.walk(tree)
+             if isinstance(node, ast.FunctionDef)
+             and node.name in _DELETED_TWINS]
+    assert not forks, forks
+    assert "key_fn" not in SPANS.read_text()
 
 
 def test_mersenne_modulus_defined_only_in_kernels():

@@ -14,6 +14,12 @@ keyword or by position; a ``*args`` or ``**kwargs`` splat sets every
 parameter it could reach.  A call that only forwards an unset parameter of
 its own enclosing function (``f(x=x)``) sets nothing, so the scan repeats
 until the set of unset parameters stops growing.
+
+The same holds for a default no shipped call reaches: when every shipped
+call passes a parameter, and all pass one and the same literal that differs
+from the default, the default selects a branch only tests run.  Delete the
+parameter and keep the value the callers pass, or list it in
+``ALLOWED_DEAD_DEFAULTS`` with the reason it stays.
 """
 
 from __future__ import annotations
@@ -28,12 +34,6 @@ from tests.test_no_orphan_modules import PKG, _roots
 # "module:function(param)" -> why the parameter stays although no shipped
 # caller sets it.
 ALLOWED = {
-    "operators.dedup:simhash(features_fn)":
-        "the expression reference the kernel-parity tests compare the "
-        "Python simhash against",
-    "operators.dedup:simhash(hash_fn)":
-        "the expression reference the kernel-parity tests compare the "
-        "Python simhash against",
     "session:get_spark(shuffle_partitions)":
         "test sessions size their shuffle to the test data",
     "operators.decontam:decontaminate(prefilter_bits)":
@@ -49,6 +49,10 @@ ALLOWED = {
         "KenLMModel is the kept production LM swap-in; fallback_lang "
         "picks the model for languages it has none for",
 }
+
+# "module:function(param)" -> why the default stays although every shipped
+# caller passes the same other literal.
+ALLOWED_DEAD_DEFAULTS: dict[str, str] = {}
 
 
 @cache
@@ -166,6 +170,55 @@ def unset_knobs() -> list[str]:
         unset = now
 
 
+_NOT_LITERAL = object()
+
+
+def _literal(node) -> object:
+    """``repr`` of a literal expression's value, else ``_NOT_LITERAL``."""
+    try:
+        return repr(ast.literal_eval(node))
+    except (ValueError, TypeError, SyntaxError, RecursionError):
+        return _NOT_LITERAL
+
+
+def _defaults(node) -> dict[str, ast.AST]:
+    """Parameter name -> default expression of a function definition."""
+    a = node.args
+    positional = [*a.posonlyargs, *a.args]
+    out = dict(zip([p.arg for p in positional[len(positional)
+                                              - len(a.defaults):]],
+                   a.defaults))
+    out.update((p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults)
+               if d is not None)
+    return out
+
+
+def dead_defaults() -> list[str]:
+    """Keys of the defaulted package parameters that every shipped call
+    passes, all as one literal that differs from the default."""
+    defs = _defs()
+    calls: dict[str, list[ast.Call]] = defaultdict(list)
+    for call, _ in _shipped_calls():
+        name = _call_name(call)
+        if name in defs:
+            calls[name].append(call)
+    dead = []
+    for name, entries in defs.items():
+        for node, params in entries:
+            defaults = _defaults(node)
+            for key, pname, index in params:
+                passed = {_literal(v) if isinstance(v, ast.AST)
+                          else _NOT_LITERAL
+                          for v in (_set_by(c, pname, index)
+                                    for c in calls[name])}
+                default = _literal(defaults[pname])
+                if len(passed) == 1 and _NOT_LITERAL not in passed \
+                        and default is not _NOT_LITERAL \
+                        and passed != {default}:
+                    dead.append(key)
+    return sorted(dead)
+
+
 def test_every_defaulted_parameter_has_a_shipped_caller():
     unset = unset_knobs()
     stale = sorted(set(ALLOWED) - set(unset))
@@ -175,8 +228,18 @@ def test_every_defaulted_parameter_has_a_shipped_caller():
                       f"{stale}"
 
 
+def test_no_default_is_dead_in_every_shipped_call():
+    dead = dead_defaults()
+    stale = sorted(set(ALLOWED_DEAD_DEFAULTS) - set(dead))
+    bad = [k for k in dead if k not in ALLOWED_DEAD_DEFAULTS]
+    assert not bad, f"defaults no shipped call reaches: {bad}"
+    assert not stale, f"allowlisted but reached by a shipped call, or " \
+                      f"gone: {stale}"
+
+
 if __name__ == "__main__":
     # the defaulted-parameter count and the unset ones, allowlisted or not
     unset = unset_knobs()
     print(sum(len(p) for e in _defs().values() for _, p in e), len(unset))
     print("\n".join(unset))
+    print("dead defaults:", dead_defaults())

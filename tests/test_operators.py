@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from cfht2caom2_spark.operators.dedup import (connected_components,
                                               minhash_losers_from_sig,
                                               minhash_sig_frame, shingle_hash,
-                                              shingle_hash_fast, simhash,
+                                              shingle_hash_fast, simhash_frame,
                                               word_shingles)
 from cfht2caom2_spark.operators.similarity import cosine_topk, lsh_ann
 
@@ -53,8 +53,11 @@ def test_word_shingles_short_doc(spark):
 
 
 def test_simhash_similar_texts_close(docs):
-    out = {r["doc_id"]: r["sh"] for r in docs.select(
-        "doc_id", simhash(F.col("text"), 16).alias("sh")).collect()}
+    from cfht2caom2_spark.functions.kernels import simhash_words
+
+    out = {r["_id"]: r["_sh"] for r in simhash_frame(
+        docs, "doc_id", "text", lambda t: simhash_words(t, 16),
+        None).collect()}
     def hamming(a, b):
         return bin(a ^ b).count("1")
     assert out[1] == out[5]                      # identical text
@@ -309,19 +312,6 @@ def test_host_lang_consensus_backfill(spark):
     assert out["https://b.com/1"] == ("es", "model")            # no consensus
 
 
-def test_ivf_grouped_matches_lsh_ann(spark, emb):
-    """Grouped-map numpy path and the expression path must agree on ranks
-    (same bucketing, same cosine, different physical strategy)."""
-    from cfht2caom2_spark.operators.similarity import ivf_topk_grouped
-    df, _ = emb
-    queries = df.filter(F.col("vec_id") < 3)
-    a = {(r["query_id"], r["rank"]): r["vec_id"]
-         for r in lsh_ann(df, queries, k=5, n_planes=4).collect()}
-    b = {(r["query_id"], r["rank"]): r["vec_id"]
-         for r in ivf_topk_grouped(df, queries, k=5, n_planes=4).collect()}
-    assert a == b
-
-
 def test_python_minhash_matches_jvm(spark):
     """fused.minhash_sig_py (numpy path) must equal operators.dedup.
     minhash_signature with the crc32 hash (JVM path) — the production
@@ -546,26 +536,6 @@ def test_dedup_clusters_fast_component_invariants(spark):
         assert fast_lbl.get(a) == fast_lbl.get(b) is not None, (a, b)
 
 
-def test_span_fast_twins_match_oracle_mode(spark):
-    """Production-hash span twins (q_repeated_spans_fast / q_span_scrub_fast,
-    xxhash64 window keys) must produce EXACTLY the oracle-mode (string-key)
-    output on the test table — a 64-bit collision is the only divergence
-    mode (~1e-9 at this window cardinality) and can only ADD a false span,
-    so byte-equality here is the strongest check available without SQL."""
-    from cfht2caom2_spark.plans.driver_queries import (q_repeated_spans,
-                                                      q_repeated_spans_fast,
-                                                      q_span_scrub,
-                                                      q_span_scrub_fast)
-
-    SF = "/root/testdata/sf0.001"
-    for oracle_fn, fast_fn in ((q_repeated_spans, q_repeated_spans_fast),
-                               (q_span_scrub, q_span_scrub_fast)):
-        want = {tuple(r) for r in oracle_fn(spark, SF).collect()}
-        got = {tuple(r) for r in fast_fn(spark, SF).collect()}
-        assert got == want, (oracle_fn.__name__,
-                             len(got - want), len(want - got))
-
-
 # --- exact-substring repeated spans (operators/spans.py) --------------------
 
 def _span_docs(spark, rows):
@@ -625,25 +595,6 @@ def test_repeated_spans_within_doc_and_two_islands(spark):
         docs, k=8, min_count=2).collect()}
     assert out[1]["n_spans"] == 2 and out[1]["dup_token_count"] == 16
     assert out[3]["dup_token_count"] >= 16  # both self-copies flagged
-
-
-def test_repeated_spans_hash_key_swap_matches_exact(spark):
-    """Production key_fn (xxhash64, 64-bit) reproduces the exact string-key
-    result — the oracle mode and the scale mode agree.  (crc32 mod 2^31-1,
-    the MinHash-family hash, is deliberately NOT used here: corpus-wide
-    window-key cardinality passes the 2^31 birthday bound at ~10^5 windows
-    and manufactured 2 false spans on this very table.)"""
-    from cfht2caom2_spark.operators.spans import repeated_spans
-    from cfht2caom2_spark.plans.driver_queries import (SPAN_K,
-                                                       SPAN_MIN_COUNT)
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    exact = sorted(map(tuple, repeated_spans(
-        docs, k=SPAN_K, min_count=SPAN_MIN_COUNT).collect()))
-    hashed = sorted(map(tuple, repeated_spans(
-        docs, k=SPAN_K, min_count=SPAN_MIN_COUNT,
-        key_fn=lambda c: F.xxhash64(c)).collect()))
-    assert exact == hashed
 
 
 def test_remove_repeated_spans_keep_first(spark):
@@ -1077,6 +1028,25 @@ def test_train_centroids_skips_null_labels_and_empty_input(spark):
     assert train_centroids(df.limit(0), k=2) == []
 
 
+@pytest.mark.parametrize("seed", [0, 3, 8])
+def test_init_centroids_seeds_only_from_usable_vectors(spark, seed):
+    """Seeds come only from vectors the nearest-centroid kernel can rank.
+    Among all 7 rows, seed 0 keys the [1.0, NULL] vector first (a centroid
+    no vector can join), seed 3 draws the ragged [1.0] second and seed 8
+    keys the NULL vector first; each still trains 2 non-empty cells."""
+    from cfht2caom2_spark.operators.kmeans import (assign_cells,
+                                                   train_centroids)
+
+    rows = [(0, [0.0, 0.0]), (1, [0.5, 0.0]), (2, [10.0, 10.0]),
+            (3, [10.5, 10.0]), (4, None), (5, [1.0, None]), (6, [1.0])]
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    cents = train_centroids(df, k=2, n_iter=3, seed=seed)
+    assert sorted(cents) == [[0.25, 0.0], [10.25, 10.0]]
+    cells = {r["vec_id"]: r["cell"]
+             for r in assign_cells(df, cents).collect()}
+    assert {cells[i] for i in range(4)} == {0, 1}
+
+
 def test_ivf_centroid_probe_all_cells_matches_exact(blob_vecs):
     """With n_probe = n_cells the trained-cell IVF degrades to brute force:
     its (query, vec, rank) set must equal cosine_topk's exactly — pins the
@@ -1221,12 +1191,13 @@ def test_simhash_pairs_null_text_parity(spark):
     fires for every bit), so they are hamming-0 pairs of each other — the
     md5 fast frame must reproduce that, not drop the rows (round-6 review
     catch).  The cross-check brute-forces the pairs from the expression
-    ``simhash`` signatures."""
+    fold's signatures (tests/reference_impl.py ``simhash``)."""
     from itertools import combinations
 
-    from cfht2caom2_spark.operators.dedup import (hash60, simhash,
-                                                  simhash_pairs,
-                                                  word_shingles)
+    from cfht2caom2_spark.operators.dedup import simhash_pairs
+    from cfht2caom2_spark.operators.packing import hash60
+
+    from .reference_impl import simhash
 
     docs = spark.createDataFrame(
         [(1, None), (2, None), (3, "regular text that is unlike others "
@@ -1237,8 +1208,8 @@ def test_simhash_pairs_null_text_parity(spark):
                                    max_hamming=3).collect()}
     sig = {r["doc_id"]: r["sh"] for r in docs.select(
         "doc_id",
-        simhash(F.col("text"), bits=60, features_fn=word_shingles,
-                hash_fn=hash60).alias("sh")).collect()}
+        simhash(F.col("text"), 60, word_shingles, hash60).alias("sh"))
+        .collect()}
     expr = {(a, b, bin(sig[a] ^ sig[b]).count("1"))
             for a, b in combinations(sorted(sig), 2)}
     expr = {p for p in expr if p[2] <= 3}
@@ -1412,8 +1383,9 @@ def test_kmeans_plans_hold_no_centroid_literals(spark, monkeypatch):
     kmeans_cost(df, cents)
     monkeypatch.undo()
     plans.append(plan(assign_cells(df, cents)))
-    # init_centroids' collect, one iteration, the cost, the assignment
-    assert len(plans) == 4 and len(cents) == k
+    # init_centroids' dimension aggregate and collect, one iteration, the
+    # cost, the assignment
+    assert len(plans) == 5 and len(cents) == k
     assert not [p for p in plans if _centroid_lambdas(p)]
 
 

@@ -389,22 +389,19 @@ def test_default_plans_run_one_python_pass_and_no_stat_lambdas(
     ``localCheckpoint`` truncates it, and the returned plan), with dedup
     on and off, and in a history tick, there is exactly one MapInPandas,
     no Python eval node, and no higher-order lambda except those the rule
-    array (``assemble_rules``), ``scrub_rules_fired`` and the dedup's
-    MinHash estimator (``signature_agreement``) hold."""
+    array (``assemble_rules``) and ``scrub_rules_fired`` hold; the dedup's
+    MinHash estimator (``signature_agreement``) holds none."""
     from pyspark.sql import functions as F
 
     from cfht2caom2_spark.functions.scrub import scrub_rules_fired
     from cfht2caom2_spark.operators.compact import demote_against_history
     from cfht2caom2_spark.operators.decision import assemble_rules
-    from cfht2caom2_spark.operators.dedup import signature_agreement
     from cfht2caom2_spark.plans.pipeline import build_pipeline
     from cfht2caom2_spark.sources.pages import synth_pages
 
-    sig = F.array(F.col("id"))
     allowed = _lambda_bodies(plan_of(spark.range(1).select(
         assemble_rules({"r": F.col("id") > 0}).alias("a"),
-        scrub_rules_fired(F.col("id").cast("string")).alias("s"),
-        signature_agreement(sig, sig, 1).alias("j"))))
+        scrub_rules_fired(F.col("id").cast("string")).alias("s"))))
     assert allowed
     synth_pages(spark, 200).write.parquet(str(tmp_path / "pages"))
     pages = spark.read.parquet(str(tmp_path / "pages"))

@@ -547,6 +547,35 @@ def test_cli_batch_routes_catalog_identifier(spark, tmp_path, monkeypatch):
     assert spark.read.parquet(out + "/decisions").count() == 40
 
 
+def test_batch_main_reads_pages_like_the_cli(spark, tmp_path):
+    """scripts/batch_main.py (the spark-submit main) reads ``--pages``
+    through open_table, as ``batch`` does: on a two-snapshot SnapshotTable
+    root, ``--snapshot-id`` selects the first snapshot's rows only."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
+    table = SnapshotTable(str(tmp_path / "pages"))
+    first = table.append(synth_pages(spark, 40))
+    table.append(synth_pages(spark, 30, seed=7))
+    out = str(tmp_path / "out")
+    env = dict(os.environ, PYTHONPATH=str(repo), PYSPARK_SUBMIT_ARGS=(
+        "--master local[2] --conf spark.sql.shuffle.partitions=4 "
+        "--conf spark.ui.enabled=false pyspark-shell"))
+    proc = subprocess.run(
+        [sys.executable, str(repo / "scripts" / "batch_main.py"),
+         "--pages", table.root, "--out", out,
+         "--snapshot-id", str(first), "--no-previews"],
+        env=env, capture_output=True, text=True, timeout=900)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    result = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert result["processed"] == 40
+    assert spark.read.parquet(f"{out}/decisions").count() == 40
+
+
 def _mini_decisions(spark, rows):
     """(url, warc_ts, sha, keep) -> decisions-shaped frame."""
     import datetime
