@@ -53,12 +53,12 @@ def init_centroids(df: DataFrame, k: int, seed: int = 0,
     """Deterministic seeding: the k usable (vec_id, embedding) vectors with
     the smallest (hash60(id:seed), id) shuffle key, cluster id = key rank.
     Usable means ``_nearest_cells`` can rank it: not NULL, no NULL element,
-    and the corpus dimension (the most common length among the other
-    usable vectors, the shortest on a tie).  So no seed is a centroid no
-    vector can join.  The registry oracle (``_KM_INIT_SQL``) seeds from
-    every row; the two agree on corpora without degenerate vectors, like
-    the testdata.  One aggregate and one bounded collect — exactly k rows
-    regardless of corpus size."""
+    and the corpus dimension (the most common length among the non-NULL
+    vectors with no NULL element, the shortest on a tie).  So no seed is a
+    centroid no vector can join.  The registry oracle (``_KM_INIT_SQL``)
+    seeds from every row; the two agree on corpora without degenerate
+    vectors, like the testdata.  One aggregate and one bounded collect —
+    exactly k rows regardless of corpus size."""
     vecs = df.select(F.col("vec_id").alias("_id"),
                      F.transform(F.col("embedding"),
                                  lambda x: x.cast("double")).alias("_v")) \
